@@ -375,10 +375,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the container's provisioned local[32] (the env var
-    // only exists to shrink dev runs) — a silent local[4] fallback would
-    // underreport throughput ~4x on the recorded bench.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -763,8 +761,8 @@ object Bench {
     // `"summary":true` distinguishes the records for human readers
     // (round-13 ADVICE: sum/append-style consumers like the campaign
     // scripts' grep take the FIRST match, the full record).
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"n_failed":$nFailed,"control_ratio":$ratioJson,"controls":$controlsJson,"normalized_total":$normTotalJson,"iter_probe_sec":${num(iterProbeSec, "%.3f")},"iter_control_ratio":$iterRatioJson,"graph_probe_sec":${num(graphProbeSec, "%.3f")},"graph_control_ratio":$graphRatioJson,"io_probe_sec":${num(ioProbeSec, "%.3f")},"io_control_ratio":$ioRatioJson,"pool_probe_sec":${num(poolProbeSec, "%.3f")},"boot_degraded":$bootDegraded,"build_failed":$buildFailed,"build_retried":$buildRetriedJson,"served":$servedJson,"served_position":"$servedPosition"$metricsJson$rawJson,"sf":"$sfDir"}""")
-    val summaryLine = s"""{"metric":"total","summary":true,"value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"control_ratio":$ratioJson,"normalized_total":$normTotalJson,"iter_control_ratio":$iterRatioJson,"graph_control_ratio":$graphRatioJson,"io_probe_sec":${num(ioProbeSec, "%.3f")},"io_control_ratio":$ioRatioJson,"pool_probe_sec":${num(poolProbeSec, "%.3f")},"boot_degraded":$bootDegraded,"build_failed":$buildFailed,"n_served":${served.size},"served_position":"$servedPosition","runs":$runs,"sf":"$sfDir"}"""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failed,"n_failed":$nFailed,"control_ratio":$ratioJson,"controls":$controlsJson,"normalized_total":$normTotalJson,"iter_probe_sec":${num(iterProbeSec, "%.3f")},"iter_control_ratio":$iterRatioJson,"graph_probe_sec":${num(graphProbeSec, "%.3f")},"graph_control_ratio":$graphRatioJson,"io_probe_sec":${num(ioProbeSec, "%.3f")},"io_control_ratio":$ioRatioJson,"pool_probe_sec":${num(poolProbeSec, "%.3f")},"boot_degraded":$bootDegraded,"build_failed":$buildFailed,"build_retried":$buildRetriedJson,"served":$servedJson,"served_position":"$servedPosition"$metricsJson$rawJson,"cpus":$cpus,"sf":"$sfDir"}""")
+    val summaryLine = s"""{"metric":"total","summary":true,"value":$total,"unit":"sec","n_queries":${results.size},"n_failed":$nFailed,"control_ratio":$ratioJson,"normalized_total":$normTotalJson,"iter_control_ratio":$iterRatioJson,"graph_control_ratio":$graphRatioJson,"io_probe_sec":${num(ioProbeSec, "%.3f")},"io_control_ratio":$ioRatioJson,"pool_probe_sec":${num(poolProbeSec, "%.3f")},"boot_degraded":$bootDegraded,"build_failed":$buildFailed,"n_served":${served.size},"served_position":"$servedPosition","runs":$runs,"cpus":$cpus,"sf":"$sfDir"}"""
     println("BENCHLINE:" + summaryLine)
     println(summaryLine)
     spark.stop()

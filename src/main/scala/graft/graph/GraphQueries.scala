@@ -207,17 +207,23 @@ object GraphQueries {
     * partition were lost mid-query), and the edge builder hashes both
     * endpoints in place instead of joining an id dictionary twice. A
     * 64-bit collision would merge two authors — probability ~n²/2⁶⁵,
-    * ~3e-7 even at 10M distinct authors.
+    * ~3e-7 even at 10M distinct authors. The seed's id is the same
+    * expression evaluated on the driver, so it costs no job.
     *
-    * The `authored` frame is persisted across its three uses (both sides
-    * of the co-author self-join + the name-back dictionary) and across
-    * GraphX's several materializations of its input RDDs.
+    * The template does not materialize its result: the caller's action
+    * is the only one after the kernel's size probe. The `authored`
+    * frame backs both sides of the co-author self-join, the name-back
+    * dictionary and that probe, so it is persisted for ONE request
+    * through [[graft.resolve.EntityResolution.persistServe]] and freed
+    * by [[graft.resolve.EntityResolution.releaseServeCaches]] once the
+    * caller has collected the result (`AnswerService.answer` does) —
+    * not by the template.
     */
   def coauthorReach(g: DocGraph, seed: String, maxHops: Int): DataFrame = {
     val s = g.docs.sparkSession
     import s.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val au = g.authored.persist(StorageLevel.MEMORY_AND_DISK)
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    val au = graft.resolve.EntityResolution.persistServe(g.authored)
     val a = au.as("a")
     val b = au.as("b")
     val coEdges = a
@@ -226,17 +232,12 @@ object GraphQueries {
       .distinct()
     val ids = au.select($"author").distinct()
       .select($"author", xxhash64($"author").as("vec_id"))
-    // one-row local job — the hash of the seed literal, not a corpus scan
-    val seedId = s.range(1).select(xxhash64(lit(seed))).as[Long].head()
-    val out = graft.resolve.EntityResolution
+    val seedId = new XxHash64(Seq(Literal(seed))).eval().asInstanceOf[Long]
+    graft.resolve.EntityResolution
       .bfsReach(s, ids.select($"vec_id"), coEdges, seedId, maxHops)
       .join(ids, "vec_id")
       .select($"author", $"hops")
       .orderBy($"author")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize while au is cached, then release it
-    au.unpersist(blocking = false)
-    out
   }
 
   def coauthorReach(s: SparkSession, d: String, seed: String,

@@ -51,11 +51,21 @@ object AnswerService {
   }
 
   /** Serve one request over a [[DocGraph]]: merge history the way the
-    * reference does, plan, route WITH the L2 fallback (search terms
-    * harvested from the planned params — the reference harvests them from
-    * the same LLM output), render at most `maxRows` JSON rows into the
-    * answer text. Empty result → the reference's no-data phrasing stays
-    * caller-visible rather than an empty string.
+    * reference does, plan, then answer with ONE bounded Spark action —
+    * [[Router.answerRows]] collects at most `maxRows + 1` rendered rows
+    * of the routed template (the extra row tells a truncated answer from
+    * a full one), and only when that collect comes back empty runs the
+    * L2 full-text fallback (search terms harvested from the planned
+    * params — the reference harvests them from the same LLM output)
+    * the same way. No checkpoint or emptiness probe precedes it; the
+    * only other actions are the templates' own construction-time work
+    * (the `hops=` BFS size probe). Empty result → the reference's
+    * no-data phrasing stays caller-visible rather than an empty string.
+    *
+    * Serve-scoped caches the routed template registered
+    * (`EntityResolution.persistServe`) are released once the collect
+    * returns, so a long-lived serve JVM keeps no blocks per request
+    * (`ServeCacheReleaseSpec`).
     *
     * CONCURRENCY CONTRACT — single serving thread, stated here at the
     * entry point (not only in the EntityResolution scaladoc): the
@@ -81,15 +91,8 @@ object AnswerService {
     val terms = params.get("terms")
       .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
       .getOrElse(params.valuesIterator.toSeq.sorted)
-    val df = Router.withFallback(g, family, params, terms)
     val rendered =
-      try QueryText.renderRows(df).limit(maxRows + 1).collect()
-      // reap request-scoped serve caches once the result is materialized
-      // (EntityResolution.releaseServeCaches's contract): the request
-      // loop is the one place that knows materialization happened, so a
-      // long-lived serve JVM stops accumulating MEMORY_AND_DISK blocks
-      // per request (round-12 verdict item 4; ServeCacheReleaseSpec
-      // asserts the post-release block store is empty).
+      try Router.answerRows(g, family, params, terms, maxRows + 1)
       finally graft.resolve.EntityResolution.releaseServeCaches()
     val shown = rendered.take(maxRows)
     val suffix =

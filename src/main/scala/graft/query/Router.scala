@@ -85,7 +85,10 @@ object Router {
 
   /** L2: the fallback path — graph query returned empty → full-text
     * search over abstracts/topics/addresses with the harvested terms
-    * (`neo4j_query_executor.py:340-344` lazy-fallback control flow).
+    * (`neo4j_query_executor.py:340-344` lazy-fallback control flow), as
+    * a DataFrame. Callers that need the whole routed frame use this form:
+    * the q118 registry query, `RouterSpec` and `DocGraphSpec`, and the
+    * benchmark's answer check. The serving path uses [[answerRows]].
     */
   def withFallback(g: DocGraph, family: Int,
                    params: Map[String, String],
@@ -107,4 +110,21 @@ object Router {
                    params: Map[String, String],
                    searchTerms: Seq[String]): DataFrame =
     withFallback(DocGraph.synthetic(s, sfDir), family, params, searchTerms)
+
+  /** L2 in its bounded serving form: the first `n` rows of the routed
+    * template, rendered by [[QueryText.renderRows]], in ONE collect —
+    * the limit sits under the rendering, so an ordered template plans as
+    * `TakeOrderedAndProject` — and the full-text fallback collected the
+    * same way only when that collect came back empty. Same rows as the
+    * first `n` of [[withFallback]], without its checkpoint and `isEmpty`
+    * round trip.
+    */
+  def answerRows(g: DocGraph, family: Int, params: Map[String, String],
+                 searchTerms: Seq[String], n: Int): Array[String] = {
+    val primary = QueryText.renderRows(route(g, family, params).limit(n))
+      .collect()
+    if (primary.nonEmpty) primary
+    else QueryText.renderRows(
+      GraphQueries.fallbackSearch(g, searchTerms, 100).limit(n)).collect()
+  }
 }

@@ -1217,10 +1217,12 @@ object EntityResolution {
 
   /** Serve-scoped persisted frames (batch assignments, touching pairs,
     * affected-set frames) registered by the q143/q150/q153/q155/q156
-    * serve paths. They are persisted because each is referenced by
-    * several downstream joins of ONE request's plan — but the request's
-    * caller is who materializes the result, so the functions themselves
-    * cannot safely unpersist them. A long-lived serve JVM reaps them via
+    * serve paths, and the `authored` frame of the `hops=` co-author
+    * template (`GraphQueries.coauthorReach`). They are persisted
+    * because each is referenced by several downstream joins of ONE
+    * request's plan — but the request's caller is who materializes the
+    * result, so the functions themselves cannot safely unpersist them.
+    * A long-lived serve JVM reaps them via
     * [[releaseServeCaches]] after each request's result is materialized;
     * the Bench/Verify harnesses are covered anyway by their between-query
     * persistent-RDD purge (ADVICE round 11, low 2 — previously these
@@ -1230,7 +1232,7 @@ object EntityResolution {
   private val serveCaches =
     new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
-  private def persistServe(df: DataFrame): DataFrame = {
+  private[graft] def persistServe(df: DataFrame): DataFrame = {
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     serveCaches.add(df)
     df

@@ -99,4 +99,95 @@ class AnswerServiceSpec extends AnyFunSuite {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
+
+  private lazy val servedG = DocGraph.bucketed(g, "answer_svc_eq", 4)
+
+  /** The answer the checkpoint → `isEmpty` → re-collect path renders:
+    * [[Router.withFallback]]'s frame as JSON rows (`toJSON`), the first
+    * `maxRows + 1` collected, with [[answer]]'s truncation suffix.
+    */
+  private def withFallbackAnswer(graph: DocGraph, q: String,
+                                 maxRows: Int): AnswerResponse = {
+    val (family, params) = DirectivePlanner.plan(q)
+    val terms = params.get("terms")
+      .map(_.split(";").toSeq.map(_.trim).filter(_.nonEmpty))
+      .getOrElse(params.valuesIterator.toSeq.sorted)
+    val rendered = Router.withFallback(graph, family, params, terms)
+      .toJSON.limit(maxRows + 1).collect()
+    val shown = rendered.take(maxRows)
+    val suffix =
+      if (rendered.length > maxRows) s"\n... (truncated at $maxRows rows)"
+      else ""
+    if (shown.isEmpty) AnswerResponse("No matching records found.", 0L)
+    else AnswerResponse(shown.mkString("\n") + suffix, shown.length.toLong)
+  }
+
+  test("bounded answers equal the withFallback rendering for every family") {
+    // no keyword node → the full-text fallback answers
+    val fallbackQ = "family=6 keyword=nosuchkeyword terms='merge;window'"
+    val reachQ = "family=13 author=Author_29 hops=2"
+    val reqs = Seq(
+      "family=1 title=D42", "family=2 title=D7", "family=3 title=D15",
+      "family=4 title=D100", "family=5 author=Author_29",
+      "family=6 keyword=vector", "family=7 org=Org_5",
+      "family=8 title=D123", "family=9 title=D123",
+      "family=10 keyword=vector",
+      "family=11 author=Author_29 title=D42 title2=D43",
+      "family=12 title=D7 keyword=table", "family=13 author=Author_29",
+      "family=14 keyword=small", "family=15 org=Org_3",
+      "family=16 author=Author_29", "family=17",
+      reachQ, "family=13 author=Author_29 hops=3", fallbackQ
+    ).map(_ -> 100) :+ ("family=17" -> 3)
+    // templates without an orderBy promise no row order
+    val unordered = Set(3, 4, 8, 9, 12, 17)
+    val got = reqs.map { case (q, maxRows) =>
+      val resp = answer(servedG, AnswerRequest(q), maxRows = maxRows)
+      val want = withFallbackAnswer(servedG, q, maxRows)
+      if (unordered(DirectivePlanner.plan(q)._1))
+        assert(resp.rows === want.rows &&
+          resp.answer.split("\n").sorted.toSeq ===
+            want.answer.split("\n").sorted.toSeq, q)
+      else assert(resp === want, q)
+      (q, maxRows) -> resp
+    }.toMap
+    val fallback = got(fallbackQ -> 100)
+    assert(fallback.rows > 0 && fallback.answer.contains("topics_csv"))
+    assert(got("family=17" -> 3).answer.endsWith("... (truncated at 3 rows)"))
+    // the seed's driver-side hash finds it in the graph: hop 0 is itself
+    assert(got(reachQ -> 100).answer
+      .contains("""{"author":"Author_29","hops":0}"""))
+  }
+
+  test("a family-1 answer over the bucketed binding is one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("answer_one_job") => jobs.incrementAndGet()
+          case Some("answer_one_job_marker") => markerJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerDone.countDown()
+    }
+    val req = AnswerRequest("family=1 title=D42")
+    answer(servedG, req) // plan and codegen outside the counted window
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("answer_one_job", "family-1 answer")
+      val resp = try answer(servedG, req) finally sc.clearJobGroup()
+      assert(resp.rows > 0)
+      // listener events arrive in order: once a later job's end is seen,
+      // every job start of the answer has been counted
+      sc.setJobGroup("answer_one_job_marker", "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(jobs.get() === 1)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -96,4 +96,25 @@ class ServeCacheReleaseSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.isEmpty,
       s"q142 answer serve left persisted RDDs: $leftover")
   }
+
+  test("a hops= answer over the bucketed binding leaves no cache behind") {
+    // the BFS template persists `authored` for the request; the answer's
+    // own release must free it, with nothing left in the CacheManager
+    import graft.graph.DocGraph
+    import graft.query.AnswerService
+    val g = DocGraph.bucketed(DocGraph.synthetic(spark, TestSpark.TinySf),
+      "serve_release_hops", 4)
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    val resp = AnswerService.answer(g,
+      AnswerService.AnswerRequest("family=13 author=Author_29 hops=2"))
+    assert(resp.rows > 0)
+    val left = spark.sparkContext.getPersistentRDDs
+    assert(left.isEmpty,
+      s"hops=2 answer left ${left.size} persisted RDD(s): " +
+        left.values.map(_.toString).mkString("; "))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "hops=2 answer left a cached plan in the CacheManager")
+  }
 }
