@@ -490,12 +490,9 @@ object Bench {
       "q159_tagged_er_inserts_served",
       // the snapshot-reset lifecycles: day-0 base tables build once per
       // JVM (the dedicated build pass); every measured call pays only
-      // the reset + three-day replay. Since round 15 the TAGGED
-      // lifecycles q161/q165 snapshot too (round-14 verdict item 5), so
-      // their serve medians measure the replay, not day-0 rebuild
-      // variance. q160 alone keeps the rebuild-per-call shape (its
-      // end-of-life compaction mutates the standing tables to the full
-      // universe, so a snapshot would be rebuilt every call anyway).
+      // the reset + day replay. Compaction folds into the working
+      // tables, never the snapshot, so q160's median is the replay too.
+      "q160_tagged_er_multiday",
       "q161_tagged_er_crud_lifecycle", "q165_tagged_er_crud_lifecycle_mor",
       "q167_tagged_er_mor_compact",
       "q162_er_crud_lifecycle", "q163_er_crud_lifecycle_mor",

@@ -27,6 +27,16 @@ object TaggedQueries {
     */
   val ErFixtureGlob = "/root/repo/src/test/resources/tagged_er/*/*/*.txt"
 
+  /** The tagged lifecycles' binding: the ER fixture's keyword universe
+    * at θ = 24/25, classes by md5-id mod 3. */
+  def erLifecycle(s: SparkSession): graft.resolve.Lifecycle.Binding =
+    graft.resolve.Lifecycle.ingested(() => TaggedText.ingest(s, ErFixtureGlob),
+      ErFixtureGlob, 24, 25)
+
+  /** The mixed-CRUD days of q161/q165/q167: insert class 1, update
+    * class 2, delete class 0. */
+  val ErCrudOps = Seq(("insert", 1), ("update", 2), ("delete", 0))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Full ingest pipeline: parse → format → first-wins dedup, projected
     // to scalar-only columns (arrays rendered as joined strings).
@@ -188,38 +198,36 @@ object TaggedQueries {
         24, 25)),
 
     // The MULTI-DAY insert lifecycle (q159's production sequel): day-1
-    // batch served against the day-0 (md5-id ≡ 0 mod 3) standing state,
-    // then FOLDED IN (mapping swap + bucket-aligned pair/term appends +
-    // final compaction); day-2 (≡ 2 mod 3) serves against the ADVANCED
-    // state. Converges to ER over the full universe — q104's recursive
-    // CTE again, so the advance machinery is gated by the same oracle
-    // that gates the from-scratch, encoded, and single-day insert paths.
-    "q160_tagged_er_multiday" -> ((s, _) =>
-      graft.resolve.EntityResolution.ingestedMultidayInsertServed(
-        s, () => TaggedText.ingest(s, ErFixtureGlob), ErFixtureGlob,
-        24, 25)),
+    // batch (md5-id ≡ 1 mod 3) served against the day-0 (≡ 0 mod 3)
+    // snapshot, then FOLDED IN (mapping swap + pair/term writes); day-2
+    // (≡ 2 mod 3) serves against the ADVANCED state, and the grown
+    // term/pair stores are compacted back to one file per bucket.
+    // Converges to ER over the full universe — q104's recursive CTE
+    // again, so the advance machinery is gated by the same oracle that
+    // gates the from-scratch, encoded, and single-day insert paths.
+    "q160_tagged_er_multiday" -> ((s, _) => graft.resolve.Lifecycle.run(s,
+      erLifecycle(s), graft.resolve.Lifecycle.Rewrite, "graft_q160",
+      Seq(("insert", 1), ("insert", 2)), compactAfterOps = Set(1))),
 
     // The MIXED-CRUD lifecycle (q160 generalized): day 1 INSERTS the
     // md5-id ≡ 1 (mod 3) class, day 2 UPDATES the ≡ 2 class (dimension
     // reversal), day 3 DELETES the ≡ 0 class — each day folded into the
     // standing state, so later days serve against the advanced tables.
-    // Day 0 is an immutable per-JVM snapshot since round 15 (the q162
-    // shape): each call replays reset + three days, so its bench median
-    // is the lifecycle, not day-0 rebuild variance. Final state = ER
-    // over classes {1, 2-reversed}; the oracle is q104's recursive CTE
-    // with the update CASE and delete predicate in `tn`.
-    "q161_tagged_er_crud_lifecycle" -> ((s, _) =>
-      graft.resolve.EntityResolution.ingestedMultidayCrudServed(
-        s, () => TaggedText.ingest(s, ErFixtureGlob), ErFixtureGlob,
-        24, 25)),
+    // Day 0 is an immutable per-JVM snapshot: each call replays reset +
+    // three days, so its bench median is the lifecycle, not day-0
+    // rebuild variance. Final state = ER over classes {1, 2-reversed};
+    // the oracle is q104's recursive CTE with the update CASE and delete
+    // predicate in `tn`.
+    "q161_tagged_er_crud_lifecycle" -> ((s, _) => graft.resolve.Lifecycle.run(
+      s, erLifecycle(s), graft.resolve.Lifecycle.Rewrite, "graft_q161",
+      ErCrudOps)),
 
     // q161 with merge-on-read advances (the q163 layout applied to the
     // real-ingest term/pair stores). Same oracle — the advance layout
     // must be invisible in the mapping.
     "q165_tagged_er_crud_lifecycle_mor" -> ((s, _) =>
-      graft.resolve.EntityResolution.ingestedMultidayCrudServedMor(
-        s, () => TaggedText.ingest(s, ErFixtureGlob), ErFixtureGlob,
-        24, 25)),
+      graft.resolve.Lifecycle.run(s, erLifecycle(s),
+        graft.resolve.Lifecycle.MergeOnRead, "graft_q165", ErCrudOps)),
 
     // q165 with a MID-LIFECYCLE COMPACTION on the real-ingest term/pair
     // stores (q166's maintenance-fold gate, real-ingest twin): after
@@ -228,9 +236,9 @@ object TaggedQueries {
     // runs against it. Same oracle as q161/q165: the schedule must be
     // invisible in the mapping.
     "q167_tagged_er_mor_compact" -> ((s, _) =>
-      graft.resolve.EntityResolution.ingestedMultidayCrudServedMor(
-        s, () => TaggedText.ingest(s, ErFixtureGlob), ErFixtureGlob,
-        24, 25, prefix = "graft_q167", compactAfterOps = Set(1))),
+      graft.resolve.Lifecycle.run(s, erLifecycle(s),
+        graft.resolve.Lifecycle.MergeOnRead, "graft_q167", ErCrudOps,
+        compactAfterOps = Set(1))),
 
     "q105_tagged_er_alias_docs" -> ((s, _) => {
       val ingested = TaggedText.ingest(s, ErFixtureGlob)

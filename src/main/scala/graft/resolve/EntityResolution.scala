@@ -1096,7 +1096,7 @@ object EntityResolution {
     * touching pair reaches, rebuild their connectivity from star edges +
     * the touching pairs, pass every other standing row through.
     */
-  private def mergeIncrement(s: SparkSession, standingMapping: DataFrame,
+  private[resolve] def mergeIncrement(s: SparkSession, standingMapping: DataFrame,
       batchVerts: DataFrame, touching: DataFrame): DataFrame = {
     import s.implicits._
     // the reps/affected frames feed several consumers of one request's
@@ -1371,7 +1371,7 @@ object EntityResolution {
     * set restricted to survivor endpoints, pass every clean component
     * through.
     */
-  private def mergeTombstones(s: SparkSession, standingMapping: DataFrame,
+  private[resolve] def mergeTombstones(s: SparkSession, standingMapping: DataFrame,
       allPairs: DataFrame,
       isDel: Column => Column = c => c % 10 === 5,
       delRepsPre: Option[DataFrame] = None): DataFrame = {
@@ -1409,7 +1409,7 @@ object EntityResolution {
     * 13, by the q143 insert serve, whose batch ids are likewise
     * disjoint from the standing side.
     */
-  private def updateTouchingPairs(survivors: DataFrame,
+  private[resolve] def updateTouchingPairs(survivors: DataFrame,
       updBatch: DataFrame): DataFrame = {
     val s = survivors.sparkSession
     import s.implicits._
@@ -1473,7 +1473,7 @@ object EntityResolution {
     * component is touched by definition, so the edge set is closed
     * over the CC's vertex set (affected survivors ∪ batch).
     */
-  private def mergeUpdate(s: SparkSession, standingMapping: DataFrame,
+  private[resolve] def mergeUpdate(s: SparkSession, standingMapping: DataFrame,
       allPairs: DataFrame, updVerts: DataFrame, touching: DataFrame,
       isUpd: Column => Column): DataFrame = {
     import s.implicits._
@@ -1658,7 +1658,7 @@ object EntityResolution {
           .as("vec_id"),
         termEmbedding(col("value")).as("embedding"))
 
-  private def ensureIngestedErTables(s: SparkSession,
+  private[resolve] def ensureIngestedErTables(s: SparkSession,
       ingested: () => DataFrame, sourceKey: String, num: Int, den: Int,
       prefix: String,
       keep: Column => Column = _ => lit(true)): Unit = {
@@ -1817,532 +1817,14 @@ object EntityResolution {
         .unionByName(batch.select($"vec_id", $"term")))
   }
 
-  /** MULTI-DAY insert lifecycle over the ingested term universe (q160):
-    * q159 serves every batch against frozen day-0 state — this is the
-    * production sequel, where each day's served batch is FOLDED INTO the
-    * standing tables so the next day's batch serves against the advanced
-    * state. Per day: embed the arriving batch, pair it with the
-    * batch-side exact kernel ([[epsPairsAgainst]] + batch×batch — cost
-    * sized by the batch), merge via [[mergeIncrement]], then ADVANCE:
-    *
-    *  1. swap in the merged mapping (`BucketedStore.replaceBucketed` —
-    *     fully materialized under `_next` BEFORE the old mapping is
-    *     dropped, since the merge plan reads it);
-    *  2. append the touching pairs into the standing pair set
-    *     (bucket-aligned append — write cost is the batch's pairs, not
-    *     the corpus; this must precede step 3 because the touching plan
-    *     scans the terms table);
-    *  3. append the batch terms into the standing terms table.
-    *
-    * The advance maintains the serve-matrix invariant: stored pairs =
-    * the exact ε-kernel over the stored terms (standing pairs ∪
-    * batch-endpoint pairs = all pairs of the advanced universe), so
-    * every later serve — the NEXT insert day here, or a delete/update
-    * against the advanced prefix — stays correct without rebuilding.
-    * After the last day the append-grown tables are compacted back to
-    * one sorted file per bucket ([[graft.graph.BucketedStore.compactBucketed]]).
-    *
-    * A lifecycle query mutates its standing state, so each call REPLAYS
-    * the whole sequence from a fresh day-0 build (the per-JVM guard is
-    * cleared first) — unlike the build-once/serve-many q157-q159, whose
-    * state is immutable. Converges to from-scratch ER over the full
-    * universe: the oracle is exactly q104's recursive CTE, and the
-    * day-boundary states are pinned by `IngestedErSpec`.
+  /** Ensure the shared synthetic day-0 snapshot of [[Lifecycle.synthetic]]
+    * and return its table prefix. Its content is fully determined by
+    * (source dir, inserted-class set): day 0 holds every class not later
+    * inserted and the pinned index trains on exactly that subset, so the
+    * tables are named by that key ([[sharedBaseName]]) and every
+    * same-parameter lifecycle reads one build.
     */
-  def ingestedMultidayInsertServed(s: SparkSession,
-      ingested: () => DataFrame, sourceKey: String, num: Int, den: Int,
-      prefix: String = "graft_q160",
-      day: Column => Column = c => c % 3,
-      days: Seq[Int] = Seq(1, 2),
-      // batch-scoped ingest (round-14 verdict item 1): when set, day d's
-      // batch parses ONLY daySource(d)'s documents (the arriving-batch
-      // directory) instead of filtering the full-universe parse — the
-      // full universe is then never materialized at serve time.
-      daySource: Option[Int => DataFrame] = None): DataFrame = {
-    import s.implicits._
-    erServedFrom.remove(prefix)
-    ensureIngestedErTables(s, ingested, sourceKey, num, den, prefix,
-      keep = c => day(c) === 0)
-    lazy val universe = persistServe(embedTermUniverse(ingested()))
-    days.foreach { d =>
-      val standing = graft.graph.BucketedStore.table(s, s"${prefix}_terms")
-      val mapping = graft.graph.BucketedStore.table(s, s"${prefix}_mapping")
-      val batch = persistServe(
-        daySource.map(f => embedTermUniverse(f(d))).getOrElse(universe)
-          .filter(day($"vec_id") === d))
-      val touching = persistServe(
-        batchEndpointPairs(standing, batch, num, den))
-      val merged = mergeIncrement(s, mapping, batch.select($"vec_id"), touching)
-      // the mapping swap and the PAIR append are independent (round 19,
-      // guide §2.6): the merge plan never reads the pair store, and the
-      // touching frame's eviction recompute scans the TERMS table — which
-      // neither write touches — so the two advance writes overlap. The
-      // TERMS append stays last and sequential: it writes the very table
-      // both in-flight frames would recompute through.
-      graft.graph.BucketedStore.concurrently(Seq(
-        () => graft.graph.BucketedStore.replaceBucketed(
-          merged.select($"vec_id", $"rep_id".as("component")),
-          s"${prefix}_mapping", "vec_id", 16),
-        () => graft.graph.BucketedStore.appendBucketed(
-          touching, s"${prefix}_pairs", "u", 16)))
-      graft.graph.BucketedStore.appendBucketed(
-        batch, s"${prefix}_terms", "vec_id", 16)
-    }
-    // independent tables — overlap the two compactions (guide §2.6)
-    graft.graph.BucketedStore.concurrently(Seq(
-      () => graft.graph.BucketedStore.compactBucketed(
-        s, s"${prefix}_terms", "vec_id"),
-      () => graft.graph.BucketedStore.compactBucketed(
-        s, s"${prefix}_pairs", "u")))
-    val terms = graft.graph.BucketedStore.table(s, s"${prefix}_terms")
-    val mapping = graft.graph.BucketedStore.table(s, s"${prefix}_mapping")
-    minTermMapping(mapping.select($"vec_id", $"component".as("rep_id")), terms)
-  }
-
-  /** MIXED-CRUD multi-day lifecycle over the ingested term universe
-    * (q161): the capstone of the serve matrix. q160 proves the advance
-    * for a stream of INSERT days; a production corpus also retracts and
-    * re-embeds — so here day 1 INSERTS a class of terms, day 2 UPDATES a
-    * class (deterministic re-embedding: dimension reversal, the q151/
-    * q155/q157 stand-in), and day 3 DELETES a class, each folding into
-    * the standing tables so every day serves against the advanced state.
-    *
-    * Per day, the COMPUTE is the corresponding serve kernel — cost
-    * proportional to the batch/affected set, never the corpus:
-    *  - insert: batch-side exact kernel ([[epsPairsAgainst]] +
-    *    batch×batch) + [[mergeIncrement]] (q159/q160's shape);
-    *  - update: new-embedding kernel against the non-updated survivors +
-    *    the fused [[mergeUpdate]] (q157's shape);
-    *  - delete: ZERO ε-join work — [[mergeTombstones]] restricts the
-    *    stored pair set to survivor endpoints (q158's shape).
-    *
-    * The ADVANCE differs by operation. Inserts append (write cost =
-    * the batch, as in q160). Updates and deletes must REMOVE rows —
-    * every stored pair with an updated/deleted endpoint is dead — so
-    * those days rewrite the pair and term stores via
-    * [[graft.graph.BucketedStore.replaceBucketed]]: merge-on-write, one
-    * bucketed corpus write with the same shape and cost as the
-    * `compactBucketed` maintenance q160 already schedules (at a 100 TB
-    * deployment where update/delete days dominate, the lever is
-    * merge-on-read instead — append tombstone/delta sidecars beside the
-    * bucketed files and fold them at read, compacting on a schedule;
-    * the day's COMPUTE is identical either way, so the choice here is
-    * the simpler write path, documented as such). Every advance
-    * maintains the invariant stored-pairs = exact-kernel-over-stored-
-    * terms:
-    *  - insert: standing pairs ∪ batch-endpoint pairs = all pairs of
-    *    the grown universe;
-    *  - update: pairs with both endpoints non-updated are embedding-
-    *    unchanged (kept), pairs with an updated endpoint died with the
-    *    old embedding (dropped), and every new-embedding pair has a
-    *    batch endpoint (the touching set — added);
-    *  - delete: the post-delete kernel is literally the stored subset
-    *    with both endpoints surviving.
-    *
-    * Day 0 is an immutable SNAPSHOT since round 15 (verdict item 5 —
-    * the q162 shape applied to the tagged lifecycle): the parse→embed→
-    * ε-join→CC build lands once per JVM + (source, inserted-class set)
-    * as `_base_*` bucketed tables, and each call RESETS by dropping the
-    * working tables (copy-on-advance: reads fall back to the base until
-    * a day's advance materializes the working name — the first insert
-    * day's append fuses with the base copy as one write). Replay medians
-    * therefore measure the three-day serve/advance cost, not day-0
-    * rebuild variance. The final state is ER over (day-0 ∪ inserted)
-    * terms minus the deleted class, with the updated class re-embedded —
-    * order-independent because the three classes are disjoint, so the
-    * oracle is q104's recursive CTE with the update CASE and the delete
-    * predicate applied in `tn`. The day-boundary states (which no
-    * shared-oracle path produces) are pinned by `IngestedErSpec` via
-    * the `ops` prefix parameter.
-    *
-    * `ops`: the day sequence as (operation, id-class) pairs over
-    * `cls(vec_id)`; day 0 builds over every class NOT later inserted.
-    *
-    * `daySource` (round-14 verdict item 1, the batch-scoped thunk): when
-    * set, day k's batch parses ONLY `daySource(k)`'s documents — the
-    * deployment's arriving-batch directory — instead of filtering the
-    * full-universe parse; the full universe is then never materialized
-    * at serve time, so per-day parse cost tracks the BATCH. The class
-    * filter still applies to the scoped frame, so a scoped source
-    * covering its class is result-identical to the default
-    * (`IngestedErSpec` pins it; `ProfileTaggedLifecycle` prices it).
-    */
-  def ingestedMultidayCrudServed(s: SparkSession,
-      ingested: () => DataFrame, sourceKey: String, num: Int, den: Int,
-      prefix: String = "graft_q161",
-      cls: Column => Column = c => c % 3,
-      ops: Seq[(String, Int)] =
-        Seq(("insert", 1), ("update", 2), ("delete", 0)),
-      // per-phase wall-time hook for profiling (ProfileTaggedLifecycle):
-      // called with ("day0"|"<op><i>", seconds) as each phase completes.
-      // Differencing whole replays is too noisy for per-day pricing —
-      // the repeated day-0 build's variance swamped the day costs — so
-      // the instrument lives inside one replay. No-op by default.
-      // ("day0" is the snapshot-ensure + working-table reset: the build
-      // itself on the first call in a JVM, near-zero afterwards.)
-      onPhase: (String, Double) => Unit = (_, _) => (),
-      daySource: Option[Int => DataFrame] = None): DataFrame = {
-    import s.implicits._
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      onPhase(tag, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    val inserted = ops.collect { case ("insert", k) => k }.toSet
-    // snapshot key carries EVERYTHING the day-0 build reads: source,
-    // the ε threshold, the class rule, and the inserted-class set (the
-    // q162 discipline; num/den folded in per round-15 ADVICE 1 —
-    // previously a same-prefix call with a different θ or class rule
-    // silently reused a base built under the other parameters). The
-    // class rule enters as a STRUCTURAL fingerprint of the expression
-    // itself (round-16 ADVICE 3 — the previous `clsTag` string default
-    // let a custom `cls` ride under another rule's tag), so two
-    // different rules can never share a snapshot by omission. The base
-    // tables are NAMED by this key (sharedBaseName), so q161/q165/q167
-    // — identical parameters — build ONE snapshot per JVM instead of
-    // three (round-15 verdict item 6), and a parameter change cannot
-    // alias: it is a different table name.
-    val snapKey = s"$sourceKey|eps=$num/$den|cls=${clsFingerprint(s, cls)}" +
-      s"|ins=${inserted.toSeq.sorted.mkString(",")}"
-    val basePrefix = sharedBaseName("ing", snapKey)
-    timed("day0") {
-      ensureIngestedErTables(s, ingested, snapKey, num, den,
-        basePrefix,
-        keep = c => !inserted.map(k => cls(c) === k)
-          .foldLeft(lit(false))(_ || _))
-      // copy-on-advance reset (the q162 shape): drop the working tables;
-      // reads fall back to the immutable base snapshot until a day's
-      // advance materializes the working name — so the reset writes
-      // nothing, and the first insert day's append fuses with the base
-      // copy (base ∪ delta, one write)
-      Seq("terms", "pairs", "mapping").foreach { t =>
-        graft.graph.BucketedStore.dropManagedPurging(s, s"${prefix}_$t")
-      }
-    }
-    // full-universe parse happens ONLY when some day lacks a scoped
-    // source (lazy): with `daySource` set, serve-time parse cost is
-    // each day's batch
-    lazy val universe = persistServe(embedTermUniverse(ingested()))
-    // batches derive from the INGEST (scoped or full), never the terms
-    // table: a memory-pressure recompute after a day's table swap would
-    // otherwise read back already-reversed embeddings and reverse them
-    // again. Identical rows — classes are disjoint, so class k is
-    // table-resident verbatim.
-    def batchOf(k: Int): DataFrame =
-      daySource.map(f => embedTermUniverse(f(k)))
-        .getOrElse(universe).filter(cls($"vec_id") === k)
-    // fresh catalog reads each day — the tables advance under the
-    // working names, with (shared) base-snapshot fallback before first
-    // advance. The snapshot is read-only here: every write below targets
-    // a `${prefix}_*` working name.
-    def live(t: String): Boolean = s.catalog.tableExists(s"${prefix}_$t")
-    def read(t: String): DataFrame =
-      graft.graph.BucketedStore.table(s,
-        if (live(t)) s"${prefix}_$t" else s"${basePrefix}_$t")
-    def standing = read("terms")
-    def mapping = read("mapping")
-    def pairs = read("pairs")
-    def swapMapping(merged: DataFrame): Unit =
-      graft.graph.BucketedStore.replaceBucketed(
-        merged.select($"vec_id", $"rep_id".as("component")),
-        s"${prefix}_mapping", "vec_id", 16)
-    ops.zipWithIndex.foreach { case (op, opIdx) =>
-      timed(s"${op._1}${opIdx + 1}")(op match {
-      case ("insert", k) =>
-        val batch = persistServe(batchOf(k))
-        val touching = persistServe(
-          batchEndpointPairs(standing, batch, num, den))
-        val merged =
-          mergeIncrement(s, mapping, batch.select($"vec_id"), touching)
-        if (!live("pairs") && !live("terms"))
-          // day-1 shape (round 19): fresh working targets, every
-          // replacement plan (incl. eviction recomputes of the persisted
-          // serve frames) reads only the immutable base tables — one
-          // concurrent advance, like the update/delete days (guide §2.6)
-          graft.graph.BucketedStore.replaceBucketedAll(Seq(
-            (merged.select($"vec_id", $"rep_id".as("component")),
-              s"${prefix}_mapping", "vec_id"),
-            (pairs.unionByName(touching), s"${prefix}_pairs", "u"),
-            (standing.unionByName(batch), s"${prefix}_terms", "vec_id")))
-        else {
-          // advanced working tables: appends' inputs could recompute
-          // through the tables being appended (the documented read-order
-          // hazard) — sequential bucket-aligned appends
-          swapMapping(merged)
-          if (live("pairs"))
-            graft.graph.BucketedStore.appendBucketed(
-              touching, s"${prefix}_pairs", "u", 16)
-          else
-            graft.graph.BucketedStore.writeBucketed(
-              pairs.unionByName(touching), s"${prefix}_pairs", "u", 16)
-          if (live("terms"))
-            graft.graph.BucketedStore.appendBucketed(
-              batch, s"${prefix}_terms", "vec_id", 16)
-          else
-            graft.graph.BucketedStore.writeBucketed(
-              standing.unionByName(batch), s"${prefix}_terms", "vec_id", 16)
-        }
-      case ("update", k) =>
-        val isUpd = (c: Column) => cls(c) === k
-        val batch = persistServe(
-          batchOf(k).withColumn("embedding", reverse($"embedding")))
-        val touching = persistServe(
-          batchEndpointPairs(standing.filter(!isUpd($"vec_id")), batch,
-            num, den))
-        // ONE concurrent advance for the day's three rewrites (the q162
-        // shape — round-18 verdict item 2, guide §2.6): every
-        // replacement plan reads only the OLD tables, which
-        // replaceBucketedAll keeps intact until all `_next` copies are
-        // fully materialized, so the old sequential pairs-before-terms
-        // ordering constraint is subsumed by the barrier.
-        val merged = mergeUpdate(s, mapping, pairs,
-          batch.select($"vec_id"), touching, isUpd)
-        graft.graph.BucketedStore.replaceBucketedAll(Seq(
-          (merged.select($"vec_id", $"rep_id".as("component")),
-            s"${prefix}_mapping", "vec_id"),
-          (pairs.filter(!isUpd($"u") && !isUpd($"v"))
-            .unionByName(touching), s"${prefix}_pairs", "u"),
-          (standing.filter(!isUpd($"vec_id")).unionByName(batch),
-            s"${prefix}_terms", "vec_id")))
-      case ("delete", k) =>
-        val isDel = (c: Column) => cls(c) === k
-        // same concurrent advance as the update day
-        val merged = mergeTombstones(s, mapping, pairs, isDel)
-        graft.graph.BucketedStore.replaceBucketedAll(Seq(
-          (merged.select($"vec_id", $"rep_id".as("component")),
-            s"${prefix}_mapping", "vec_id"),
-          (pairs.filter(!isDel($"u") && !isDel($"v")),
-            s"${prefix}_pairs", "u"),
-          (standing.filter(!isDel($"vec_id")),
-            s"${prefix}_terms", "vec_id")))
-      case (o, _) =>
-        throw new IllegalArgumentException(s"unknown lifecycle op: $o")
-      })
-    }
-    minTermMapping(mapping.select($"vec_id", $"component".as("rep_id")),
-      standing)
-  }
-
-  /** q161 with MERGE-ON-READ advances (q165 — the real-ingest twin of
-    * [[multidayCrudResolveServedMor]], completing MOR symmetry across
-    * both lifecycle families): identical day kernels over the tagged
-    * ingest's term universe, but update/delete days append epoch-tagged
-    * tombstone/delta sidecars to the term and pair stores instead of
-    * rewriting them ([[graft.graph.BucketedStore.appendTombstoneSidecar]]
-    * / [[graft.graph.BucketedStore.appendDeltaSidecar]]), with every
-    * standing read through [[graft.graph.BucketedStore.readMor]]. The
-    * mapping swap stays merge-on-write in both variants (the day's
-    * result), so a q161-vs-q165 cell isolates the term/pair advance —
-    * the same comparison q162-vs-q163 makes at the SF-scaled corpus,
-    * here over the production ingest path (where a real deployment's
-    * update/delete days would otherwise rewrite the term store its
-    * whole corpus wide). Day 0 is an immutable SNAPSHOT since round 15
-    * (verdict item 5, like q161): `_base_*` tables build once per JVM +
-    * (source, inserted-class set); a replay drops the sidecars and the
-    * working mapping, never the base. `daySource` scopes each day's
-    * parse to the batch exactly as in q161 (round-14 item 1);
-    * `compactAfterOps` folds the sidecars into a bucketed WORKING base
-    * mid-replay exactly as in [[multidayCrudResolveServedMor]] (q167 —
-    * the q166 compaction gate's real-ingest twin). Same oracle as
-    * q161; `IngestedErSpec` pins q165/q167 ≡ q161 bit-for-bit.
-    */
-  def ingestedMultidayCrudServedMor(s: SparkSession,
-      ingested: () => DataFrame, sourceKey: String, num: Int, den: Int,
-      prefix: String = "graft_q165",
-      cls: Column => Column = c => c % 3,
-      ops: Seq[(String, Int)] =
-        Seq(("insert", 1), ("update", 2), ("delete", 0)),
-      daySource: Option[Int => DataFrame] = None,
-      compactAfterOps: Set[Int] = Set.empty): DataFrame = {
-    import s.implicits._
-    import graft.graph.BucketedStore
-    val inserted = ops.collect { case ("insert", k) => k }.toSet
-    // full-parameter snapshot key + shared base name — see
-    // [[ingestedMultidayCrudServed]]'s snapKey note (round-15 ADVICE 1
-    // + verdict item 6, class rule as a structural fingerprint per
-    // round-16 ADVICE 3): q161/q165/q167 share ONE day-0 build per JVM
-    val snapKey = s"$sourceKey|eps=$num/$den|cls=${clsFingerprint(s, cls)}" +
-      s"|ins=${inserted.toSeq.sorted.mkString(",")}"
-    val basePrefix = sharedBaseName("ing", snapKey)
-    ensureIngestedErTables(s, ingested, snapKey, num, den,
-      basePrefix,
-      keep = c => !inserted.map(k => cls(c) === k)
-        .foldLeft(lit(false))(_ || _))
-    // replay reset: this query's sidecars + working tables + working
-    // mapping go; the base snapshot is immutable AND shared — sidecars
-    // never attach to it (they live under this prefix's host names, so
-    // another lifecycle reading the same snapshot can never see this
-    // one's advances). Working term/pair names exist only when a
-    // previous replay compacted mid-lifecycle.
-    Seq("terms", "pairs").foreach { t =>
-      BucketedStore.dropSidecars(s, s"${prefix}_$t")
-      BucketedStore.dropManagedPurging(s, s"${prefix}_$t")
-    }
-    BucketedStore.dropManagedPurging(s, s"${prefix}_mapping")
-    lazy val universe = persistServe(embedTermUniverse(ingested()))
-    def batchOf(k: Int): DataFrame =
-      daySource.map(f => embedTermUniverse(f(k)))
-        .getOrElse(universe).filter(cls($"vec_id") === k)
-    // mid-lifecycle compaction folds into the WORKING name; reads
-    // follow it once it exists (the q163/q166 shape). Sidecars ALWAYS
-    // host under the working name — before a fold they ride beside the
-    // shared snapshot (readMor's sidecarsOf), after one they are the
-    // working table's own.
-    def host(t: String): String = s"${prefix}_$t"
-    def curBase(t: String): String =
-      if (s.catalog.tableExists(host(t))) host(t)
-      else s"${basePrefix}_$t"
-    def standing = BucketedStore.readMor(s, curBase("terms"),
-      Seq("vec_id"), host("terms"))
-    def pairs = BucketedStore.readMor(s, curBase("pairs"),
-      Seq("u", "v"), host("pairs"))
-    def mapping = BucketedStore.table(s,
-      if (s.catalog.tableExists(s"${prefix}_mapping")) s"${prefix}_mapping"
-      else s"${basePrefix}_mapping")
-    def swapMapping(merged: DataFrame): Unit =
-      BucketedStore.replaceBucketed(
-        merged.select($"vec_id", $"rep_id".as("component")),
-        s"${prefix}_mapping", "vec_id", 16)
-    ops.zipWithIndex.foreach { case (op, opIdx) =>
-      val epoch = opIdx + 1
-      op match {
-        case ("insert", k) =>
-          val batch = persistServe(batchOf(k))
-          val touching = persistServe(
-            batchEndpointPairs(standing, batch, num, den))
-          swapMapping(
-            mergeIncrement(s, mapping, batch.select($"vec_id"), touching))
-          BucketedStore.appendDeltaSidecar(
-            touching, host("pairs"), "u", epoch)
-          BucketedStore.appendDeltaSidecar(
-            batch, host("terms"), "vec_id", epoch)
-        case ("update", k) =>
-          val isUpd = (c: Column) => cls(c) === k
-          // batch derives from the ingest, never the terms store (the
-          // q161 recompute-safety rationale applies unchanged)
-          val batch = persistServe(
-            batchOf(k).withColumn("embedding", reverse($"embedding")))
-          val touching = persistServe(
-            batchEndpointPairs(standing.filter(!isUpd($"vec_id")), batch,
-              num, den))
-          swapMapping(mergeUpdate(s, mapping, pairs,
-            batch.select($"vec_id"), touching, isUpd))
-          // tombstones kill the old-embedding rows (epoch < e); the
-          // same-epoch deltas carry the new rows, which they spare.
-          // batch's plan reads only the ingest, so appending its ids to
-          // the stores' own tombstone tables is conflict-free. (After a
-          // compaction the folded rows read as epoch 0 — a later epoch
-          // still kills them.)
-          BucketedStore.appendTombstoneSidecar(
-            batch.select($"vec_id"), host("pairs"), epoch)
-          BucketedStore.appendTombstoneSidecar(
-            batch.select($"vec_id"), host("terms"), epoch)
-          BucketedStore.appendDeltaSidecar(
-            touching, host("pairs"), "u", epoch)
-          BucketedStore.appendDeltaSidecar(
-            batch, host("terms"), "vec_id", epoch)
-        case ("delete", k) =>
-          val isDel = (c: Column) => cls(c) === k
-          swapMapping(mergeTombstones(s, mapping, pairs, isDel)
-            .select($"vec_id", $"rep_id"))
-          val dead = standing.filter(isDel($"vec_id")).select($"vec_id")
-          BucketedStore.appendTombstoneSidecar(
-            dead, host("pairs"), epoch)
-          // second sidecar reads the first one's just-written rows:
-          // `dead`'s plan scans the terms MOR view — including its
-          // tombstone sidecar — so appending it there directly would
-          // write a table its plan is reading (the q163 discipline)
-          BucketedStore.appendTombstoneSidecar(
-            s.table(s"${host("pairs")}_tomb")
-              .filter($"_epoch" === epoch).select($"id"),
-            host("terms"), epoch)
-        case (o, _) =>
-          throw new IllegalArgumentException(s"unknown lifecycle op: $o")
-      }
-      // explicit schedule OR the conf'd policy (round-15 verdict item 4:
-      // sidecar depth / tombstone growth — BucketedStore.compactDue;
-      // constant-false with the confs unset, so explicit-schedule
-      // callers are bit-identical)
-      if (compactAfterOps.contains(opIdx) ||
-          BucketedStore.compactDue(s, host("pairs")) ||
-          BucketedStore.compactDue(s, host("terms"))) {
-        // fold the sidecars accumulated so far (the q166 shape): first
-        // fold lands under the working name — the shared snapshot stays
-        // pristine (and other sharers unaffected) — later folds compact
-        // the working base in place
-        def compactStore(t: String, key: String,
-            endpoints: Seq[String]): Unit =
-          if (s.catalog.tableExists(host(t)))
-            BucketedStore.compactMor(s, host(t), key, endpoints)
-          else
-            BucketedStore.compactMorInto(s, s"${basePrefix}_$t",
-              host(t), key, endpoints, sidecarsOf = host(t))
-        // the two stores' folds are independent (each reads only its
-        // own base + sidecars) — overlap them (guide §2.6)
-        BucketedStore.concurrently(Seq(
-          () => compactStore("pairs", "u", Seq("u", "v")),
-          () => compactStore("terms", "vec_id", Seq("vec_id"))))
-      }
-    }
-    minTermMapping(mapping.select($"vec_id", $"component".as("rep_id")),
-      standing)
-  }
-
-  /** SYNTHETIC mixed-CRUD lifecycle over the embeddings table (q162):
-    * q161's scale twin. The real-ingest lifecycle runs on a fixed
-    * 7-term fixture, so its 10×/100× sweep cells are flat — this one
-    * folds insert/update/delete days into standing state over the
-    * SF-scaled corpus under the pinned IVF index, so the sweeps measure
-    * the advance machinery where the data actually grows.
-    *
-    * Day 0 is an immutable SNAPSHOT (built once per JVM+source, the
-    * q155 build shape over the pre-insert subset: blocked ε-pairs + CC,
-    * stored as `_base_*` bucketed tables). Each lifecycle call RESETS
-    * the working tables from the snapshot — three bucketed copies, no
-    * ε-join and no CC — then replays the days:
-    *
-    *  - day 1 INSERT (`vec_id % 10 = 9`): q143's serve kernel (cached
-    *    pinned-index batch assignment + [[updateTouchingPairs]] +
-    *    [[mergeIncrement]]), advance by bucket-aligned APPEND — write
-    *    cost is the batch;
-    *  - day 2 UPDATE (`% 10 = 7`): q155's serve kernel (re-embedded
-    *    batch assignment + fused [[mergeUpdate]]), advance by
-    *    merge-on-write REWRITE of the pair/assigned stores (every
-    *    stored pair with an updated endpoint died with the old
-    *    embedding/cell);
-    *  - day 3 DELETE (`% 10 = 5`): q158's zero-ε-join serve
-    *    ([[mergeTombstones]] over the stored pair set), advance by
-    *    rewrite minus the tombstoned rows.
-    *
-    * Every advance maintains stored-pairs = blocked-kernel-over-stored-
-    * assigned (same induction as [[ingestedMultidayCrudServed]], under
-    * the pinned index), so the final mapping equals from-scratch
-    * blocked ER over the net corpus — class 5 deleted, class 7
-    * reversed — with the index still pinned to the pre-insert rule.
-    * That is exactly the q155 oracle with the q150 delete predicate:
-    * `pinnedCcSqlWhere("vec_id % 10 <> 5", CASE ... list_reverse)`.
-    * Cross-path pins in `IncrementalErSpec`: stopping after day 1
-    * reproduces q143's served mapping bit-for-bit, and after day 2
-    * q155's — the lifecycle is the serve matrix composed, so each
-    * boundary state has an independently-gated twin.
-    */
-  /** Ensure the SHARED synthetic day-0 snapshot for the q162/q163/q166/
-    * q169 lifecycle family and return its base prefix. Round-15 verdict
-    * item 6: the three lifecycles each built an identical `_base_*`
-    * snapshot per JVM, keyed by their own prefix — ~20 s of redundant
-    * build per sweep boot. The snapshot's content is fully determined by
-    * (source dir, inserted-class set) — day 0 holds every class not
-    * later inserted, and the pinned index trains on exactly that subset
-    * (round-13 ADVICE: both DERIVED from `ops`, never hardwired) — so
-    * the tables are NAMED by that key ([[sharedBaseName]]) and every
-    * same-parameter lifecycle reads one build. Safe because the
-    * snapshot is immutable: MOW working tables and MOR sidecars live
-    * under each query's own prefix (readMor's `sidecarsOf`), pinned by
-    * `IncrementalErSpec`'s no-leak spec. The pinned-centroid cache tag
-    * is shared the same way (the cache itself revalidates `d`).
-    */
-  private def ensureSyntheticCrudBase(s: SparkSession, d: String,
+  private[resolve] def ensureSyntheticCrudBase(s: SparkSession, d: String,
       insertedCls: Set[Int]): String = {
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
@@ -2373,343 +1855,6 @@ object EntityResolution {
         snapKey
       })
     basePrefix
-  }
-
-  /** Shared pinned-centroid cache tag for the synthetic lifecycle
-    * family — keyed by the pin's own parameters (inserted-class set;
-    * the cache revalidates the source dir itself), so q162/q163/q166/
-    * q169 share one centroid collect per JVM instead of one per prefix.
-    */
-  private def synPinTag(insertedCls: Set[Int]): String =
-    s"graft_synbase|ins=${insertedCls.toSeq.sorted.mkString(",")}"
-
-  def multidayCrudResolveServed(s: SparkSession, d: String,
-      prefix: String = "graft_q162",
-      ops: Seq[(String, Int)] =
-        Seq(("insert", 9), ("update", 7), ("delete", 5))): DataFrame = {
-    import s.implicits._
-    // Index pin + day-0 membership DERIVED from `ops` (round-13 ADVICE):
-    // day 0 holds every class not later inserted, and the pinned index
-    // trains on exactly that subset — hardwiring class 9 here while
-    // `ops` is a parameter would let an insert op with a different class
-    // silently violate the disjoint-id contract epsPairsAgainst /
-    // updateTouchingPairs / mergeIncrement rely on (batch×survivor
-    // self-pairs, duplicated assigned rows). The snapshot NAME and the
-    // pinned-centroid cache tag carry the inserted-class set, so a call
-    // with different ops builds (or reuses) the matching snapshot —
-    // aliasing is unrepresentable.
-    val insertedCls = ops.collect { case ("insert", k) => k }.toSet
-    val notBatch = (c: Column) =>
-      insertedCls.map(k => c % 10 =!= k).foldLeft(lit(true))(_ && _)
-    val pinTag = synPinTag(insertedCls)
-    val basePrefix = ensureSyntheticCrudBase(s, d, insertedCls)
-    // COPY-ON-ADVANCE reset: a naive replay would copy all three base
-    // tables into working names up front — but the mapping copy is pure
-    // waste (the first day's swap overwrites it) and the pairs/assigned
-    // copies can fuse with the first day's advance (base ∪ delta is one
-    // write, vs copy-the-corpus THEN append). So the working tables are
-    // dropped here and reads fall back to the immutable base snapshot
-    // until a day's advance materializes the working name. Removes
-    // three corpus-sized writes per call; MEASURED NEUTRAL at the 100×
-    // fixture (replay 40.2 → 41.7 s, within noise) because the replay
-    // there is dominated by the three serve kernels themselves
-    // (≈ q143's 16 s + q155's 8 s + q150's 4.5 s at 100×) plus the
-    // advance swaps — the write saving only matters once the corpus
-    // bytes outgrow the fixed job overhead, which an 8-dim 200k-row
-    // fixture never does. Kept for the asymptotics, like the q143
-    // split.
-    Seq("assigned", "pairs", "mapping").foreach { t =>
-      graft.graph.BucketedStore.dropManagedPurging(s, s"${prefix}_$t")
-    }
-    def live(t: String): Boolean =
-      s.catalog.tableExists(s"${prefix}_$t")
-    def read(t: String): DataFrame =
-      graft.graph.BucketedStore.table(s,
-        if (live(t)) s"${prefix}_$t" else s"${basePrefix}_$t")
-    def assigned = read("assigned")
-    def mapping = read("mapping")
-    def pairs = read("pairs")
-    def swapMapping(m: DataFrame): Unit =
-      graft.graph.BucketedStore.replaceBucketed(
-        m.select($"vec_id", $"rep_id".as("component")),
-        s"${prefix}_mapping", "vec_id", 16)
-    ops.foreach {
-      case ("insert", k) =>
-        val batch = persistServe(graft.similarity.Similarity
-          .ivfAssignedPinnedSubsetCached(s, d, pinTag, notBatch,
-            c => c % 10 === k))
-        val touching = persistServe(updateTouchingPairs(assigned, batch))
-        val merged =
-          mergeIncrement(s, mapping, batch.select($"vec_id"), touching)
-        if (!live("pairs") && !live("assigned"))
-          // day-1 shape (round 19): all three targets are fresh working
-          // names and every replacement plan — including an eviction
-          // recompute of batch/touching — reads only the immutable BASE
-          // tables plus the persisted serve frames (the frames were
-          // constructed while `read(...)` still resolved to the base),
-          // so the three writes are independent: one concurrent advance
-          // (guide §2.6), like the update/delete days. replaceBucketed
-          // on a missing target is exactly writeBucketed + catalog
-          // rename, so the swap discipline is unchanged.
-          graft.graph.BucketedStore.replaceBucketedAll(Seq(
-            (merged.select($"vec_id", $"rep_id".as("component")),
-              s"${prefix}_mapping", "vec_id"),
-            (read("pairs").unionByName(touching), s"${prefix}_pairs", "u"),
-            (read("assigned").unionByName(batch),
-              s"${prefix}_assigned", "cid")))
-        else {
-          // a live working table means an earlier day already advanced
-          // it: the appends' input frames could (under cache eviction)
-          // recompute through the very tables being appended — the
-          // documented read-order hazard — so this branch stays
-          // sequential, bucket-aligned appends
-          swapMapping(merged)
-          if (live("pairs"))
-            graft.graph.BucketedStore.appendBucketed(
-              touching, s"${prefix}_pairs", "u", 16)
-          else
-            graft.graph.BucketedStore.writeBucketed(
-              read("pairs").unionByName(touching), s"${prefix}_pairs", "u", 16)
-          if (live("assigned"))
-            graft.graph.BucketedStore.appendBucketed(
-              batch, s"${prefix}_assigned", "cid", 16)
-          else
-            graft.graph.BucketedStore.writeBucketed(
-              read("assigned").unionByName(batch),
-              s"${prefix}_assigned", "cid", 16)
-        }
-      case ("update", k) =>
-        val isUpd = (c: Column) => c % 10 === k
-        val batch = persistServe(graft.similarity.Similarity
-          .ivfAssignedPinnedReversedSubsetCached(s, d, pinTag, notBatch,
-            isUpd))
-        val touching = persistServe(
-          updateTouchingPairs(assigned.filter(!isUpd($"vec_id")), batch))
-        // ONE concurrent advance for the day's three corpus rewrites
-        // (round-18 verdict item 2, guide §2.6): the merged mapping,
-        // the post-update pair store, and the post-update assigned
-        // store are independent replacements whose plans read only the
-        // OLD tables (which replaceBucketedAll keeps intact until every
-        // `_next` is fully materialized) plus the persisted batch/
-        // touching frames — sequentially each rewrite idled the box
-        // through the others' stragglers.
-        val merged = mergeUpdate(s, mapping, pairs,
-          batch.select($"vec_id"), touching, isUpd)
-        graft.graph.BucketedStore.replaceBucketedAll(Seq(
-          (merged.select($"vec_id", $"rep_id".as("component")),
-            s"${prefix}_mapping", "vec_id"),
-          (pairs.filter(!isUpd($"u") && !isUpd($"v"))
-            .unionByName(touching), s"${prefix}_pairs", "u"),
-          (assigned.filter(!isUpd($"vec_id")).unionByName(batch),
-            s"${prefix}_assigned", "cid")))
-      case ("delete", k) =>
-        val isDel = (c: Column) => c % 10 === k
-        // same concurrent advance as the update day
-        val merged = mergeTombstones(s, mapping, pairs, isDel)
-        graft.graph.BucketedStore.replaceBucketedAll(Seq(
-          (merged.select($"vec_id", $"rep_id".as("component")),
-            s"${prefix}_mapping", "vec_id"),
-          (pairs.filter(!isDel($"u") && !isDel($"v")),
-            s"${prefix}_pairs", "u"),
-          (assigned.filter(!isDel($"vec_id")),
-            s"${prefix}_assigned", "cid")))
-      case (op, _) =>
-        throw new IllegalArgumentException(s"unknown lifecycle op: $op")
-    }
-    mapping.select($"vec_id", $"component".as("rep_id")).orderBy($"vec_id")
-  }
-
-  /** q162 with MERGE-ON-READ advances (q163; round-13 verdict item 4 —
-    * the alternative the q161 scaladoc documented, now implemented):
-    * identical day KERNELS (q143's insert merge, q155's fused update,
-    * q150's zero-ε-join tombstone fold — compute is batch/affected-set-
-    * proportional either way), but the pair/assigned ADVANCE never
-    * rewrites the corpus. Update and delete days append
-    * [[graft.graph.BucketedStore.appendTombstoneSidecar]] rows (the
-    * day's dead ids + epoch) and insert/update days append
-    * [[graft.graph.BucketedStore.appendDeltaSidecar]] rows (the day's
-    * new pairs/assignments + epoch); every read goes through
-    * [[graft.graph.BucketedStore.readMor]], which folds
-    * (base ∪ deltas) minus strictly-newer-epoch tombstoned endpoints.
-    * So each day's WRITE cost is the day's batch — where q162's
-    * update/delete days pay a corpus-sized [[graft.graph.BucketedStore
-    * .replaceBucketed]] rewrite of the pair and assigned stores. The
-    * mapping swap stays merge-on-write in both variants (the day's
-    * result — one narrow corpus write), so a q162-vs-q163 cell isolates
-    * exactly the pair/assigned advance.
-    *
-    * The trade, paid at READ: the merged view is a union + one
-    * broadcast anti-join per endpoint, which erases the base's bucketed
-    * partitioning — the next day's kernels shuffle where q162's reads
-    * were exchange-free — and tombstones must stay broadcast-sized
-    * between compactions ([[graft.graph.BucketedStore.compactMor]] on a
-    * schedule restores the plain bucketed base; a tenant retracting a
-    * corpus-scale fraction in one day compacts immediately instead).
-    * Merge-on-read therefore wins exactly when days are update/delete-
-    * dominant and the corpus:batch ratio is large — the 100 TB shape
-    * the verdict named — and loses at small corpora where the rewrite
-    * was cheap anyway.
-    *
-    * Invariant (same induction as q162, through the MOR view): at every
-    * day boundary, readMor(pairs) = the blocked exact kernel over
-    * readMor(assigned) under the pinned index — inserts append exactly
-    * the batch-endpoint pairs; updates tombstone every old-embedding
-    * pair (an updated endpoint at a strictly older epoch) and append
-    * the new-embedding touching set at the tombstone's own epoch (which
-    * the strict comparison spares); deletes tombstone both stores. So
-    * the final mapping equals q162's bit-for-bit: same oracle
-    * (from-scratch pinned-index ER with class 5 deleted and class 7
-    * reversed), and `IncrementalErSpec` pins q163 ≡ q162 cross-path.
-    * Replays drop the sidecars and working mapping, never the immutable
-    * `_base_*` snapshot (built once per JVM+source, shared shape with
-    * q162's — but under its own prefix so the two lifecycles stay
-    * order-independent in a sweep).
-    *
-    * `compactAfterOps` (round-14 verdict item 3 — compaction oracle-
-    * gated INSIDE a lifecycle, q166): after each named op index the
-    * sidecars are folded into a fresh bucketed working base
-    * ([[graft.graph.BucketedStore.compactMorInto]] on first fold — the
-    * immutable snapshot stays pristine for the next replay's reset —
-    * [[graft.graph.BucketedStore.compactMor]] in place thereafter).
-    * Later days read the compacted store (plain bucketed scans again)
-    * and append their sidecars to IT; the final mapping must still be
-    * q162's bit-for-bit — "the advance layout is invisible in the
-    * mapping" pinned THROUGH a compaction, not only at sidecar depth 3.
-    */
-  def multidayCrudResolveServedMor(s: SparkSession, d: String,
-      prefix: String = "graft_q163",
-      ops: Seq[(String, Int)] =
-        Seq(("insert", 9), ("update", 7), ("delete", 5)),
-      compactAfterOps: Set[Int] = Set.empty,
-      // per-phase wall-time hook (ProfileMorCompaction — prices a
-      // post-compaction day against the same day at sidecar depth):
-      // ("<op><i>" | "compact<i>", seconds) as each phase completes.
-      onPhase: (String, Double) => Unit = (_, _) => ()): DataFrame = {
-    import s.implicits._
-    import graft.graph.BucketedStore
-    def timed[T](tag: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      onPhase(tag, (System.nanoTime() - t0) / 1e9)
-      r
-    }
-    // same ops-derived pin/day-0 contract as q162 (round-13 ADVICE);
-    // snapshot + pin tag SHARED across the family (round-15 item 6)
-    val insertedCls = ops.collect { case ("insert", k) => k }.toSet
-    val notBatch = (c: Column) =>
-      insertedCls.map(k => c % 10 =!= k).foldLeft(lit(true))(_ && _)
-    val pinTag = synPinTag(insertedCls)
-    val basePrefix = ensureSyntheticCrudBase(s, d, insertedCls)
-    // replay reset: this query's sidecars + working tables + working
-    // mapping go; the base snapshot is immutable AND shared — sidecars
-    // never attach to it (they host under this prefix, so another
-    // lifecycle reading the same snapshot never sees these advances).
-    // The working assigned/pairs names exist only when a previous
-    // replay compacted mid-lifecycle — they (and any sidecars they
-    // accumulated after that fold) are replay state, not snapshot.
-    Seq("assigned", "pairs").foreach { t =>
-      BucketedStore.dropSidecars(s, s"${prefix}_$t")
-      BucketedStore.dropManagedPurging(s, s"${prefix}_$t")
-    }
-    BucketedStore.dropManagedPurging(s, s"${prefix}_mapping")
-    // mid-lifecycle compaction folds into the WORKING name; reads
-    // follow it once it exists. Sidecars ALWAYS host under the working
-    // name — beside the shared snapshot before a fold (readMor's
-    // sidecarsOf), the working table's own after one.
-    def host(t: String): String = s"${prefix}_$t"
-    def curBase(t: String): String =
-      if (s.catalog.tableExists(host(t))) host(t)
-      else s"${basePrefix}_$t"
-    def assigned = BucketedStore.readMor(s,
-      curBase("assigned"), Seq("vec_id"), host("assigned"))
-    def pairs = BucketedStore.readMor(s,
-      curBase("pairs"), Seq("u", "v"), host("pairs"))
-    def mapping = BucketedStore.table(s,
-      if (s.catalog.tableExists(s"${prefix}_mapping")) s"${prefix}_mapping"
-      else s"${basePrefix}_mapping")
-    def swapMapping(m: DataFrame): Unit =
-      BucketedStore.replaceBucketed(
-        m.select($"vec_id", $"rep_id".as("component")),
-        s"${prefix}_mapping", "vec_id", 16)
-    ops.zipWithIndex.foreach { case (op, i) =>
-      timed(s"${op._1}${i + 1}")(op match {
-      case ("insert", k) =>
-        val epoch = i + 1
-        val batch = persistServe(graft.similarity.Similarity
-          .ivfAssignedPinnedSubsetCached(s, d, pinTag, notBatch,
-            c => c % 10 === k))
-        val touching = persistServe(updateTouchingPairs(assigned, batch))
-        swapMapping(
-          mergeIncrement(s, mapping, batch.select($"vec_id"), touching))
-        BucketedStore.appendDeltaSidecar(
-          touching, host("pairs"), "u", epoch)
-        BucketedStore.appendDeltaSidecar(
-          batch, host("assigned"), "cid", epoch)
-      case ("update", k) =>
-        val epoch = i + 1
-        val isUpd = (c: Column) => c % 10 === k
-        val batch = persistServe(graft.similarity.Similarity
-          .ivfAssignedPinnedReversedSubsetCached(s, d, pinTag, notBatch,
-            isUpd))
-        val touching = persistServe(
-          updateTouchingPairs(assigned.filter(!isUpd($"vec_id")), batch))
-        swapMapping(mergeUpdate(s, mapping, pairs,
-          batch.select($"vec_id"), touching, isUpd))
-        // one atomic op in MOR terms: the epoch-e tombstone kills every
-        // OLD-embedding row (epoch < e) with an updated endpoint; the
-        // same-epoch deltas carry the new rows, which it spares. (After
-        // a compaction the folded rows read as epoch 0, so a later
-        // epoch still kills them — the fold preserves the semantics.)
-        BucketedStore.appendTombstoneSidecar(
-          batch.select($"vec_id"), host("pairs"), epoch)
-        BucketedStore.appendTombstoneSidecar(
-          batch.select($"vec_id"), host("assigned"), epoch)
-        BucketedStore.appendDeltaSidecar(
-          touching, host("pairs"), "u", epoch)
-        BucketedStore.appendDeltaSidecar(
-          batch, host("assigned"), "cid", epoch)
-      case ("delete", k) =>
-        val epoch = i + 1
-        val isDel = (c: Column) => c % 10 === k
-        swapMapping(mergeTombstones(s, mapping, pairs, isDel)
-          .select($"vec_id", $"rep_id"))
-        val dead = assigned.filter(isDel($"vec_id")).select($"vec_id")
-        BucketedStore.appendTombstoneSidecar(
-          dead, host("pairs"), epoch)
-        // the second sidecar reads the FIRST one's just-written rows:
-        // `dead`'s own plan scans the assigned MOR view — including
-        // its tombstone sidecar — so appending it to that same table
-        // would write a table its plan is reading
-        BucketedStore.appendTombstoneSidecar(
-          s.table(s"${host("pairs")}_tomb")
-            .filter($"_epoch" === epoch).select($"id"),
-          host("assigned"), epoch)
-      case (o, _) =>
-        throw new IllegalArgumentException(s"unknown lifecycle op: $o")
-      })
-      // explicit schedule OR the conf'd policy (round-15 verdict item 4)
-      if (compactAfterOps.contains(i) ||
-          BucketedStore.compactDue(s, host("pairs")) ||
-          BucketedStore.compactDue(s, host("assigned")))
-        timed(s"compact${i + 1}") {
-        // fold the sidecars accumulated so far: first fold lands under
-        // the working name (compactMorInto — the shared snapshot stays
-        // untouched); later folds compact the working base in place.
-        def compactStore(t: String, key: String,
-            endpoints: Seq[String]): Unit =
-          if (s.catalog.tableExists(host(t)))
-            BucketedStore.compactMor(s, host(t), key, endpoints)
-          else
-            BucketedStore.compactMorInto(s, s"${basePrefix}_$t",
-              host(t), key, endpoints, sidecarsOf = host(t))
-        // the two stores' folds are independent (each reads only its
-        // own base + sidecars) — overlap them (guide §2.6)
-        BucketedStore.concurrently(Seq(
-          () => compactStore("pairs", "u", Seq("u", "v")),
-          () => compactStore("assigned", "cid", Seq("vec_id"))))
-      }
-    }
-    mapping.select($"vec_id", $"component".as("rep_id")).orderBy($"vec_id")
   }
 
   /** Build-once/serve-many form of [[tombstoneResolve]] (the q143
@@ -2820,6 +1965,10 @@ object EntityResolution {
         .orderBy($"vec_id")
   }
 
+  /** The synthetic lifecycles' days: insert class 9, update class 7,
+    * delete class 5. */
+  private val syntheticCrud = Seq(("insert", 9), ("update", 7), ("delete", 5))
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Tombstone-batch ER: delete vec_id%10=5 from the standing state,
     // recompute only the components a tombstone touches. The oracle is
@@ -2868,24 +2017,27 @@ object EntityResolution {
     // the advance machinery where the data actually grows. Oracle:
     // from-scratch blocked ER over the net corpus (class 5 deleted,
     // class 7 reversed), index pinned to the pre-insert rule.
-    "q162_er_crud_lifecycle" -> ((s, d) => multidayCrudResolveServed(s, d)),
+    "q162_er_crud_lifecycle" -> ((s, d) => Lifecycle.run(s,
+      Lifecycle.synthetic(d), Lifecycle.Rewrite, "graft_q162", syntheticCrud)),
     // q162 with MERGE-ON-READ advances: identical day kernels, but
     // update/delete days append tombstone/delta sidecars instead of
     // rewriting the corpus-sized pair/assigned stores — the
     // update-dominant 100 TB advance shape. Same oracle as q162 (the
     // advance layout must be invisible in the mapping).
-    "q163_er_crud_lifecycle_mor" ->
-      ((s, d) => multidayCrudResolveServedMor(s, d)),
-    // q163 with a MID-LIFECYCLE COMPACTION (round-14 verdict item 3):
+    "q163_er_crud_lifecycle_mor" -> ((s, d) => Lifecycle.run(s,
+      Lifecycle.synthetic(d), Lifecycle.MergeOnRead, "graft_q163",
+      syntheticCrud)),
+    // q163 with a MID-LIFECYCLE COMPACTION:
     // after the update day (op index 1 — both delta AND tombstone
     // sidecars live) the sidecars fold into a fresh bucketed working
     // base, and the delete day runs against the compacted store. Same
     // oracle as q162/q163 — the maintenance schedule must be invisible
     // in the mapping, pinned THROUGH a compaction.
     "q166_er_crud_lifecycle_mor_compact" ->
-      ((s, d) => multidayCrudResolveServedMor(s, d,
-        prefix = "graft_q166", compactAfterOps = Set(1))),
-    // q163 with the compaction POLICY (round-15 verdict item 4) driving
+      ((s, d) => Lifecycle.run(s, Lifecycle.synthetic(d),
+        Lifecycle.MergeOnRead, "graft_q166", syntheticCrud,
+        compactAfterOps = Set(1))),
+    // q163 with the compaction POLICY driving
     // the fold instead of an explicit schedule: sidecar depth ≥ 2
     // distinct epochs (spark.graft.mor.compactDepth=2). After the
     // update day the stores carry epochs {1,2}, so the policy fires
@@ -2902,7 +2054,8 @@ object EntityResolution {
       // where q166's manual Set(1) schedule folds
       s.conf.set(conf,
         graft.graph.BucketedStore.RecommendedCompactDepth.toString)
-      try multidayCrudResolveServedMor(s, d, prefix = "graft_q169")
+      try Lifecycle.run(s, Lifecycle.synthetic(d), Lifecycle.MergeOnRead,
+        "graft_q169", syntheticCrud)
       finally prev match {
         case Some(v) => s.conf.set(conf, v)
         case None => s.conf.unset(conf)

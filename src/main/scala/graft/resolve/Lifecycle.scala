@@ -1,0 +1,271 @@
+package graft.resolve
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+import graft.graph.BucketedStore
+import graft.similarity.Similarity
+import EntityResolution._
+
+/** Multi-day entity-resolution lifecycles (q160–q169). Each day inserts,
+  * updates or deletes one id class: the day's serve kernel runs against
+  * the standing tables at a cost sized by the batch and the components
+  * it touches, and its result is folded into those tables, so the next
+  * day serves against the advanced state. The reference rebuilds its
+  * whole alias mapping on any correction (`keyword_merger.py:134-144`,
+  * force_recompute); here only the touched state moves.
+  *
+  * A lifecycle is a [[Binding]] (what the rows are and which kernels
+  * pair them) run under an [[Advance]] policy (how a day's result is
+  * written back). Every advance keeps three invariants:
+  *  - the stored pairs are exactly the ε-kernel over the stored rows
+  *    (blocked under the pinned index for the synthetic binding). An
+  *    insert adds the batch-endpoint pairs; an update drops every pair
+  *    with an updated endpoint, which died with the old embedding, and
+  *    adds the new-embedding pairs, each of which has a batch endpoint;
+  *    a delete keeps the pairs whose endpoints both survive. By
+  *    induction the final mapping is from-scratch ER over the net rows,
+  *    bit-identical under either policy and any day order of disjoint
+  *    classes.
+  *  - the day-0 snapshot is immutable. It is built once per JVM and
+  *    parameter key, named by that key ([[EntityResolution.sharedBaseName]])
+  *    and shared by every lifecycle with equal parameters. A run resets
+  *    by dropping its own working tables; reads fall back to the
+  *    snapshot until an advance or a fold writes the working name.
+  *  - working tables and merge-on-read sidecars are hosted under the
+  *    query's own prefix, so one lifecycle's advances never reach
+  *    another's replay of the same snapshot.
+  */
+object Lifecycle {
+
+  /** Where a lifecycle's rows come from and how its day kernels read
+    * them: the row store and its bucket key, the class rule the ops
+    * select by, the day-0 snapshot (given the inserted classes; returns
+    * its table prefix), the day batches (class, re-embedded?), the
+    * touching-pair kernel (survivors, batch) and the result shape
+    * (mapping as `(vec_id, rep_id)`, rows — by name: reading a
+    * merge-on-read store can cost a job, and only some shapes need it).
+    */
+  final class Binding private[resolve] (
+      val rowStore: String, val rowKey: String,
+      val cls: Column => Column,
+      val snapshot: (SparkSession, Set[Int]) => String,
+      val batches: (SparkSession, Set[Int]) => (Int, Boolean) => DataFrame,
+      val touching: (DataFrame, DataFrame) => DataFrame,
+      val result: (DataFrame, => DataFrame) => DataFrame)
+
+  /** The embeddings corpus under the IVF index pinned to the day-0
+    * classes (class = `vec_id % 10`): rows are cell assignments bucketed
+    * by `cid`, batches are assigned against the cached pin, and a day
+    * re-embeds by reversing the dimensions before assignment.
+    */
+  def synthetic(d: String): Binding = {
+    val cls = (c: Column) => c % 10
+    new Binding("assigned", "cid", cls,
+      snapshot = (s, inserted) => ensureSyntheticCrudBase(s, d, inserted),
+      batches = (s, inserted) => {
+        val pinTag = s"graft_synbase|ins=${inserted.toSeq.sorted.mkString(",")}"
+        val pinned = (c: Column) =>
+          inserted.map(k => cls(c) =!= k).foldLeft(lit(true))(_ && _)
+        (k, reembed) => {
+          val assign =
+            if (reembed) Similarity.ivfAssignedPinnedReversedSubsetCached _
+            else Similarity.ivfAssignedPinnedSubsetCached _
+          assign(s, d, pinTag, pinned, c => cls(c) === k)
+        }
+      },
+      touching = updateTouchingPairs,
+      result = (mapping, _) => mapping.orderBy(col("vec_id")))
+  }
+
+  /** The tagged ingest's keyword universe under the exact kernel at
+    * cos ≥ num/den: rows are embedded terms bucketed by `vec_id`, and
+    * the result names each term's representative by the component's
+    * lexicographically minimal term. Batches always derive from the
+    * ingest — `daySource(k)` when given (the day's arriving documents
+    * only), else the full parse — never from the term store, so a
+    * recompute after an advance cannot re-embed a re-embedded row.
+    */
+  def ingested(ingested: () => DataFrame, sourceKey: String, num: Int,
+      den: Int, cls: Column => Column = c => c % 3,
+      daySource: Option[Int => DataFrame] = None): Binding =
+    new Binding("terms", "vec_id", cls,
+      snapshot = (s, inserted) => {
+        // the key carries everything the build reads; the class rule
+        // enters as its structural fingerprint
+        val key = s"$sourceKey|eps=$num/$den|cls=${clsFingerprint(s, cls)}" +
+          s"|ins=${inserted.toSeq.sorted.mkString(",")}"
+        val base = sharedBaseName("ing", key)
+        ensureIngestedErTables(s, ingested, key, num, den, base,
+          keep = c => !inserted.map(k => cls(c) === k)
+            .foldLeft(lit(false))(_ || _))
+        base
+      },
+      batches = (_, _) => {
+        lazy val universe = persistServe(embedTermUniverse(ingested()))
+        (k, reembed) => {
+          val batch = daySource.map(f => embedTermUniverse(f(k)))
+            .getOrElse(universe).filter(cls(col("vec_id")) === k)
+          if (reembed) batch.withColumn("embedding", reverse(col("embedding")))
+          else batch
+        }
+      },
+      touching = (survivors, batch) =>
+        batchEndpointPairs(survivors, batch, num, den),
+      result = (mapping, rows) => minTermMapping(mapping, rows))
+
+  /** How a day's result is written back to the standing tables. */
+  sealed trait Advance
+
+  /** Merge-on-write: one concurrent `_next` rewrite of mapping, pairs and
+    * rows ([[BucketedStore.replaceBucketedAll]]); an insert day on live
+    * working tables swaps the mapping and appends instead. The write
+    * cost of an update or delete day is the corpus.
+    */
+  case object Rewrite extends Advance
+
+  /** Merge-on-read: swap the mapping, then append epoch-tagged tombstone
+    * and delta sidecars beside the pair and row stores; every read folds
+    * them ([[BucketedStore.readMor]]). The write cost is the batch; the
+    * read pays a union and an anti-join per endpoint until a fold.
+    */
+  case object MergeOnRead extends Advance
+
+  /** One day's outcome: the merged `(vec_id, rep_id)` mapping, the ids
+    * whose stored rows and pairs die, and the rows and pairs it adds. */
+  private final case class Day(merged: DataFrame,
+      dead: Option[Column => Column],
+      newPairs: Option[DataFrame], newRows: Option[DataFrame])
+
+  /** Replay `ops` — `(insert|update|delete, class)` — from the day-0
+    * snapshot, which holds every class not inserted by `ops`, under
+    * `prefix`'s working tables. After each op index in
+    * `compactAfterOps`, and whenever [[BucketedStore.compactDue]] fires,
+    * the pair and row stores are folded back to one sorted file per
+    * bucket. `onPhase` receives (`day0` | `<op><i>` | `compact<i>`,
+    * seconds) as each phase completes.
+    */
+  def run(s: SparkSession, binding: Binding, advance: Advance,
+      prefix: String, ops: Seq[(String, Int)],
+      compactAfterOps: Set[Int] = Set.empty,
+      onPhase: (String, Double) => Unit = (_, _) => ()): DataFrame = {
+    import s.implicits._
+    def timed[T](tag: String)(f: => T): T = {
+      val t0 = System.nanoTime()
+      val r = f
+      onPhase(tag, (System.nanoTime() - t0) / 1e9)
+      r
+    }
+    val rowStore = binding.rowStore
+    val inserted = ops.collect { case ("insert", k) => k }.toSet
+    def host(t: String): String = s"${prefix}_$t"
+    val base = timed("day0") {
+      val base = binding.snapshot(s, inserted)
+      Seq(rowStore, "pairs").foreach { t =>
+        BucketedStore.dropSidecars(s, host(t))
+        BucketedStore.dropManagedPurging(s, host(t))
+      }
+      BucketedStore.dropManagedPurging(s, host("mapping"))
+      base
+    }
+    def live(t: String): Boolean = s.catalog.tableExists(host(t))
+    def current(t: String): String = if (live(t)) host(t) else s"${base}_$t"
+    def store(t: String, endpoints: String*): DataFrame = advance match {
+      case Rewrite => BucketedStore.table(s, current(t))
+      case MergeOnRead =>
+        BucketedStore.readMor(s, current(t), endpoints, host(t))
+    }
+    def rows = store(rowStore, "vec_id")
+    def pairs = store("pairs", "u", "v")
+    def mapping = BucketedStore.table(s, current("mapping"))
+    val batchOf = binding.batches(s, inserted)
+
+    def serve(op: (String, Int)): Day = op match {
+      case ("insert", k) =>
+        val batch = persistServe(batchOf(k, false))
+        val touching = persistServe(binding.touching(rows, batch))
+        Day(mergeIncrement(s, mapping, batch.select($"vec_id"), touching),
+          None, Some(touching), Some(batch))
+      case ("update", k) =>
+        val isUpd = (c: Column) => binding.cls(c) === k
+        val batch = persistServe(batchOf(k, true))
+        val touching = persistServe(
+          binding.touching(rows.filter(!isUpd($"vec_id")), batch))
+        Day(mergeUpdate(s, mapping, pairs, batch.select($"vec_id"),
+          touching, isUpd), Some(isUpd), Some(touching), Some(batch))
+      case ("delete", k) =>
+        val isDel = (c: Column) => binding.cls(c) === k
+        Day(mergeTombstones(s, mapping, pairs, isDel), Some(isDel), None, None)
+      case (o, _) =>
+        throw new IllegalArgumentException(s"unknown lifecycle op: $o")
+    }
+
+    def write(day: Day, epoch: Int): Unit = {
+      val merged = day.merged.select($"vec_id", $"rep_id".as("component"))
+      advance match {
+        case Rewrite if day.dead.isEmpty && live(rowStore) =>
+          // neither the mapping swap nor the pair append reads the table
+          // the other writes; the row append runs last because the
+          // touching frame's recompute scans the row store it lands in
+          BucketedStore.concurrently(Seq(
+            () => BucketedStore.replaceBucketed(merged, host("mapping"),
+              "vec_id"),
+            () => day.newPairs.foreach(
+              BucketedStore.appendBucketed(_, host("pairs"), "u"))))
+          day.newRows.foreach(
+            BucketedStore.appendBucketed(_, host(rowStore), binding.rowKey))
+        case Rewrite =>
+          def alive(df: DataFrame, ids: String*): DataFrame =
+            day.dead.fold(df)(d =>
+              df.filter(ids.map(c => !d(col(c))).reduce(_ && _)))
+          def plus(df: DataFrame, added: Option[DataFrame]): DataFrame =
+            added.fold(df)(df.unionByName)
+          BucketedStore.replaceBucketedAll(Seq(
+            (merged, host("mapping"), "vec_id"),
+            (plus(alive(pairs, "u", "v"), day.newPairs), host("pairs"), "u"),
+            (plus(alive(rows, "vec_id"), day.newRows), host(rowStore),
+              binding.rowKey)))
+        case MergeOnRead =>
+          BucketedStore.replaceBucketed(merged, host("mapping"), "vec_id")
+          // a tombstone kills rows of strictly older epochs, so the
+          // same-epoch deltas below (an update's new rows) survive it
+          day.dead.foreach { d =>
+            BucketedStore.appendTombstoneSidecar(
+              rows.filter(d($"vec_id")).select($"vec_id"), host("pairs"), epoch)
+            // read back from the pair tombstones: the dead-id plan scans
+            // the row store's view, tombstone sidecar included
+            BucketedStore.appendTombstoneSidecar(
+              s.table(s"${host("pairs")}_tomb")
+                .filter($"_epoch" === epoch).select($"id"),
+              host(rowStore), epoch)
+          }
+          day.newPairs.foreach(
+            BucketedStore.appendDeltaSidecar(_, host("pairs"), "u", epoch))
+          day.newRows.foreach(BucketedStore.appendDeltaSidecar(_,
+            host(rowStore), binding.rowKey, epoch))
+      }
+    }
+
+    def fold(t: String, key: String, endpoints: Seq[String]): () => Unit =
+      () => advance match {
+        case Rewrite => BucketedStore.compactBucketed(s, host(t), key)
+        case MergeOnRead if live(t) =>
+          BucketedStore.compactMor(s, host(t), key, endpoints)
+        case MergeOnRead =>
+          // the first fold lands under the working name, leaving the
+          // shared snapshot untouched
+          BucketedStore.compactMorInto(s, s"${base}_$t", host(t), key,
+            endpoints, sidecarsOf = host(t))
+      }
+
+    ops.zipWithIndex.foreach { case (op, i) =>
+      timed(s"${op._1}${i + 1}")(write(serve(op), i + 1))
+      if (compactAfterOps(i) || BucketedStore.compactDue(s, host("pairs")) ||
+          BucketedStore.compactDue(s, host(rowStore)))
+        timed(s"compact${i + 1}") {
+          BucketedStore.concurrently(Seq(fold("pairs", "u", Seq("u", "v")),
+            fold(rowStore, binding.rowKey, Seq("vec_id"))))
+        }
+    }
+    binding.result(mapping.select($"vec_id", $"component".as("rep_id")), rows)
+  }
+}

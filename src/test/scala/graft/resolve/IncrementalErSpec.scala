@@ -27,6 +27,9 @@ class IncrementalErSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
+  // the synthetic lifecycle's registry days (q162/q163/q166/q169)
+  private val crud = Seq(("insert", 9), ("update", 7), ("delete", 5))
+
   private def fixtureDir(): String = {
     import spark.implicits._
     def axis(i: Int): Seq[Float] =
@@ -308,15 +311,15 @@ class IncrementalErSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toSeq
       (Seq(allOps, allOps.reverse) :+ rnd.shuffle(allOps)).distinct
         .foreach { ops =>
-          val got = EntityResolution.multidayCrudResolveServed(spark, d,
-            prefix = "graft_q162_prop", ops = ops)
+          val got = Lifecycle.run(spark, Lifecycle.synthetic(d),
+            Lifecycle.Rewrite, "graft_q162_prop", ops)
             .as[(Long, Long)].collect().toSeq
           assert(got === want,
             s"lifecycle diverged at seed $seed, order ${ops.map(_._1)}")
           // the MOR-advance twin must agree under every order too — the
           // sidecar fold is the only thing that differs
-          val gotMor = EntityResolution.multidayCrudResolveServedMor(spark,
-            d, prefix = "graft_q163_prop", ops = ops)
+          val gotMor = Lifecycle.run(spark, Lifecycle.synthetic(d),
+            Lifecycle.MergeOnRead, "graft_q163_prop", ops)
             .as[(Long, Long)].collect().toSeq
           assert(gotMor === want,
             s"MOR lifecycle diverged at seed $seed, order ${ops.map(_._1)}")
@@ -338,15 +341,15 @@ class IncrementalErSpec extends AnyFunSuite {
   test("q162 lifecycle boundaries reproduce the served matrix; replay is idempotent") {
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
-    val day1 = EntityResolution.multidayCrudResolveServed(spark, d,
-      prefix = "graft_q162_d1", ops = Seq(("insert", 9)))
+    val day1 = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.Rewrite, "graft_q162_d1", Seq(("insert", 9)))
       .as[(Long, Long)].collect().toSeq
     val q143 = EntityResolution.incrementalResolveServed(spark, d,
       prefix = "graft_q162_q143ref")
       .orderBy("vec_id").as[(Long, Long)].collect().toSeq
     assert(day1 === q143)
-    val day2 = EntityResolution.multidayCrudResolveServed(spark, d,
-      prefix = "graft_q162_d2", ops = Seq(("insert", 9), ("update", 7)))
+    val day2 = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.Rewrite, "graft_q162_d2", Seq(("insert", 9), ("update", 7)))
       .as[(Long, Long)].collect().toSeq
     val q155 = EntityResolution.updateResolveServed(spark, d,
       prefix = "graft_q162_q155ref")
@@ -359,11 +362,11 @@ class IncrementalErSpec extends AnyFunSuite {
     // race (the documented single-serving-thread contract; in a sweep
     // each query runs alone, in the suite each test keeps its own
     // prefix)
-    val full1 = EntityResolution.multidayCrudResolveServed(spark, d,
-      prefix = "graft_q162_full")
+    val full1 = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.Rewrite, "graft_q162_full", crud)
       .as[(Long, Long)].collect().toSeq
-    val full2 = EntityResolution.multidayCrudResolveServed(spark, d,
-      prefix = "graft_q162_full")
+    val full2 = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.Rewrite, "graft_q162_full", crud)
       .as[(Long, Long)].collect().toSeq
     assert(full1 === full2)
     assert(full1.nonEmpty)
@@ -373,11 +376,11 @@ class IncrementalErSpec extends AnyFunSuite {
     // the MOR-advance twin (q163) produces the identical mapping — the
     // sidecar fold must be invisible in the result — and replays
     // idempotently off its immutable base + dropped sidecars
-    val mor1 = EntityResolution.multidayCrudResolveServedMor(spark, d,
-      prefix = "graft_q163_full")
+    val mor1 = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.MergeOnRead, "graft_q163_full", crud)
       .as[(Long, Long)].collect().toSeq
-    val mor2 = EntityResolution.multidayCrudResolveServedMor(spark, d,
-      prefix = "graft_q163_full")
+    val mor2 = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.MergeOnRead, "graft_q163_full", crud)
       .as[(Long, Long)].collect().toSeq
     assert(mor1 === full1 && mor2 === full1)
   }
@@ -385,28 +388,29 @@ class IncrementalErSpec extends AnyFunSuite {
   test("q166 mid-lifecycle compaction is invisible in the mapping and replays idempotently") {
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
-    val want = EntityResolution.multidayCrudResolveServed(spark, d,
-      prefix = "graft_q166_ref")
+    val want = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.Rewrite, "graft_q166_ref", crud)
       .as[(Long, Long)].collect().toSeq
     // compact after the UPDATE day (both delta and tombstone sidecars
     // live at that boundary — the hardest fold), then the delete day
     // runs against the compacted working base and appends fresh
     // sidecars to IT. The mapping must equal the never-compacted run.
-    val cmp1 = EntityResolution.multidayCrudResolveServedMor(spark, d,
-      prefix = "graft_q166_t", compactAfterOps = Set(1))
+    val cmp1 = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.MergeOnRead, "graft_q166_t", crud, compactAfterOps = Set(1))
       .as[(Long, Long)].collect().toSeq
     assert(cmp1 === want)
     // replay: the reset must drop the compacted working base + its
     // post-fold sidecars and start again from the pristine snapshot
-    val cmp2 = EntityResolution.multidayCrudResolveServedMor(spark, d,
-      prefix = "graft_q166_t", compactAfterOps = Set(1))
+    val cmp2 = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.MergeOnRead, "graft_q166_t", crud, compactAfterOps = Set(1))
       .as[(Long, Long)].collect().toSeq
     assert(cmp2 === want)
     // compacting at EVERY boundary (repeated in-place folds of the
     // working base, exercising compactMor after compactMorInto) must
     // also be invisible
-    val every = EntityResolution.multidayCrudResolveServedMor(spark, d,
-      prefix = "graft_q166_all", compactAfterOps = Set(0, 1, 2))
+    val every = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.MergeOnRead, "graft_q166_all", crud,
+      compactAfterOps = Set(0, 1, 2))
       .as[(Long, Long)].collect().toSeq
     assert(every === want)
     // after a full replay with compactAfterOps=Set(1): the delete day's
@@ -431,8 +435,8 @@ class IncrementalErSpec extends AnyFunSuite {
   test("q169 policy-fired compaction + shared-snapshot isolation") {
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
-    val want = EntityResolution.multidayCrudResolveServed(spark, d,
-      prefix = "graft_q169_ref")
+    val want = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.Rewrite, "graft_q169_ref", crud)
       .as[(Long, Long)].collect().toSeq
     // the whole family shares ONE snapshot, named by (source, ins-set)
     val base = EntityResolution.sharedBaseName("syn", s"$d|ins=9")
@@ -464,8 +468,8 @@ class IncrementalErSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet === basePairs)
     // a MOW sharer replaying from the same snapshot AFTER the MOR run
     // still reproduces the reference — no cross-query leak
-    val sharer = EntityResolution.multidayCrudResolveServed(spark, d,
-      prefix = "graft_q169_sharer")
+    val sharer = Lifecycle.run(spark, Lifecycle.synthetic(d),
+      Lifecycle.Rewrite, "graft_q169_sharer", crud)
       .as[(Long, Long)].collect().toSeq
     assert(sharer === want)
   }

@@ -121,17 +121,19 @@ class IngestedErSpec extends AnyFunSuite {
   test("q160 day-1 boundary: stopping after the first advance equals " +
       "from-scratch ER over the day-0 ∪ day-1 subset") {
     import org.apache.spark.sql.functions._
-    val oneDay = EntityResolution.ingestedMultidayInsertServed(
-      spark, () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
-      TaggedQueries.ErFixtureGlob, 24, 25,
-      prefix = "graft_q160_day1", days = Seq(1))
+    // day 0 holds every class the ops do not insert, so one insert day
+    // of class 1 stands on classes {0, 2} — q159's standing state — and
+    // serves q159's class-1 batch: the advanced mapping must reproduce
+    // q159's served merge (the synthetic `day1 === q143` pin's twin)
+    val oneDay = Lifecycle.run(spark, TaggedQueries.erLifecycle(spark),
+      Lifecycle.Rewrite, "graft_q160_day1", Seq(("insert", 1)))
       .collect().map(r => r.getString(0) -> r.getString(1)).toSet
-    // the day-2 terms are absent: the advanced state is exactly the ER
-    // of the day-0 ∪ day-1 subset — a state NO shared-oracle path
-    // produces, so this pins the advance itself, not just convergence
+    val q159 = TaggedQueries.queries("q159_tagged_er_inserts_served")(
+      spark, "").collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    assert(oneDay === q159)
+    // day 0 ∪ day 1 = classes {0, 1, 2}: the from-scratch ER over it
     val subset = EntityResolution.embedTermUniverse(
       TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob))
-      .filter(col("vec_id") % 3 =!= 2)
     val scratch = EntityResolution.aliasMapping(subset, 24, 25)
       .collect().map(r => r.getString(0) -> r.getString(1)).toSet
     assert(oneDay === scratch)
@@ -142,6 +144,31 @@ class IngestedErSpec extends AnyFunSuite {
       .groupBy((col("vec_id") % 3).as("day")).count()
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(byDay.getOrElse(0L, 0L) > 0 && byDay.getOrElse(1L, 0L) > 0)
+  }
+
+  test("q160 compaction folds the working stores to one file per bucket " +
+      "and leaves the shared snapshot untouched") {
+    val base = EntityResolution.sharedBaseName("ing",
+      s"${TaggedQueries.ErFixtureGlob}|eps=24/25" +
+        s"|cls=${EntityResolution.clsFingerprint(spark, c => c % 3)}|ins=1,2")
+    def snapshot(): Seq[(Set[String], Array[String])] =
+      Seq("terms", "pairs", "mapping").map { t =>
+        val df = spark.table(s"${base}_$t")
+        (df.collect().map(_.toString).toSet, df.inputFiles.sorted)
+      }
+    TaggedQueries.queries("q160_tagged_er_multiday")(spark, "").collect()
+    val before = snapshot()
+    TaggedQueries.queries("q160_tagged_er_multiday")(spark, "").collect()
+    Seq("graft_q160_terms", "graft_q160_pairs").foreach { t =>
+      val files = spark.table(t).inputFiles.length
+      assert(files <= 16, s"$t has $files files after the compaction")
+    }
+    assert(Seq("terms", "pairs").forall(t => Seq("_delta", "_tomb")
+      .forall(suf => !spark.catalog.tableExists(s"${base}_$t$suf"))))
+    snapshot().zip(before).foreach { case ((rows, files), (rows0, files0)) =>
+      assert(rows === rows0)
+      assert(files.toSeq === files0.toSeq)
+    }
   }
 
   // the q161 lifecycle's net universe: class 0 deleted, class 2
@@ -210,17 +237,31 @@ class IngestedErSpec extends AnyFunSuite {
       !spark.catalog.tableExists(s"${sharedBase}_terms_delta"))
   }
 
+  test("tagged lifecycle equals from-scratch ER under every day order, " +
+      "with either advance policy") {
+    val want = EntityResolution.aliasMapping(crudNetUniverse, 24, 25)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    TaggedQueries.ErCrudOps.permutations.foreach { ops =>
+      Seq(Lifecycle.Rewrite -> "graft_q161_order",
+          Lifecycle.MergeOnRead -> "graft_q165_order").foreach {
+        case (advance, prefix) =>
+          val got = Lifecycle.run(spark, TaggedQueries.erLifecycle(spark),
+            advance, prefix, ops)
+            .collect().map(r => r.getString(0) -> r.getString(1)).toSet
+          assert(got === want, s"$advance diverged at order $ops")
+      }
+    }
+  }
+
   test("q161 update-day boundary: stopping before the delete day equals " +
       "from-scratch ER over the full universe with class 2 re-embedded") {
     import org.apache.spark.sql.functions._
     // insert + update folded, delete not yet applied — a state no
     // shared-oracle path produces, pinning the UPDATE advance (pair
     // retract + touching append + term swap) in isolation
-    val twoDays = EntityResolution.ingestedMultidayCrudServed(
-      spark, () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
-      TaggedQueries.ErFixtureGlob, 24, 25,
-      prefix = "graft_q161_upd",
-      ops = Seq(("insert", 1), ("update", 2)))
+    val twoDays = Lifecycle.run(spark, TaggedQueries.erLifecycle(spark),
+      Lifecycle.Rewrite, "graft_q161_upd",
+      Seq(("insert", 1), ("update", 2)))
       .collect().map(r => r.getString(0) -> r.getString(1)).toSet
     val subset = EntityResolution.embedTermUniverse(
       TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob))
@@ -251,16 +292,15 @@ class IngestedErSpec extends AnyFunSuite {
         .select(col("term").as("keywords"))
     val want = TaggedQueries.queries("q161_tagged_er_crud_lifecycle")(
       spark, "").collect().map(r => r.getString(0) -> r.getString(1)).toSet
-    val scoped = EntityResolution.ingestedMultidayCrudServed(
-      spark, () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
-      TaggedQueries.ErFixtureGlob, 24, 25,
-      prefix = "graft_q161_scoped", daySource = Some(byCls))
+    val scopedBinding = Lifecycle.ingested(
+      () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
+      TaggedQueries.ErFixtureGlob, 24, 25, daySource = Some(byCls))
+    val scoped = Lifecycle.run(spark, scopedBinding, Lifecycle.Rewrite,
+      "graft_q161_scoped", TaggedQueries.ErCrudOps)
       .collect().map(r => r.getString(0) -> r.getString(1)).toSet
     assert(scoped === want)
-    val scopedMor = EntityResolution.ingestedMultidayCrudServedMor(
-      spark, () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
-      TaggedQueries.ErFixtureGlob, 24, 25,
-      prefix = "graft_q165_scoped", daySource = Some(byCls))
+    val scopedMor = Lifecycle.run(spark, scopedBinding,
+      Lifecycle.MergeOnRead, "graft_q165_scoped", TaggedQueries.ErCrudOps)
       .collect().map(r => r.getString(0) -> r.getString(1)).toSet
     assert(scopedMor === want)
     // the single-serve insert (q159): a scoped batch thunk must land on
@@ -283,19 +323,17 @@ class IngestedErSpec extends AnyFunSuite {
     // tag silently shared this build). The snapshot key now folds a
     // STRUCTURAL fingerprint of the rule, so the shifted rule below
     // gets its own snapshot by construction.
-    EntityResolution.ingestedMultidayCrudServed(
-      spark, () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
-      TaggedQueries.ErFixtureGlob, 24, 25,
-      prefix = "graft_q161_clsdef",
-      ops = Seq(("insert", 1), ("update", 2)))
+    Lifecycle.run(spark, TaggedQueries.erLifecycle(spark),
+      Lifecycle.Rewrite, "graft_q161_clsdef",
+      Seq(("insert", 1), ("update", 2)))
       .collect()
     val shifted: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
       c => (c + 1) % 3
-    val got = EntityResolution.ingestedMultidayCrudServed(
-      spark, () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
-      TaggedQueries.ErFixtureGlob, 24, 25,
-      prefix = "graft_q161_cls", cls = shifted,
-      ops = Seq(("insert", 1), ("update", 2)))
+    val got = Lifecycle.run(spark, Lifecycle.ingested(
+        () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
+        TaggedQueries.ErFixtureGlob, 24, 25, cls = shifted),
+      Lifecycle.Rewrite, "graft_q161_cls",
+      Seq(("insert", 1), ("update", 2)))
       .collect().map(r => r.getString(0) -> r.getString(1)).toSet
     // from-scratch truth under the SHIFTED rule: class 2' (=(id+1)%3==2)
     // re-embedded, all classes present after the insert
@@ -323,10 +361,8 @@ class IngestedErSpec extends AnyFunSuite {
     assert(net.contains("深度学习") && net.contains("深度学习 (DL)"))
     assert(net("深度学习") !== net("深度学习 (DL)"))
     // while on the insert-only boundary they share a representative
-    val merged = EntityResolution.ingestedMultidayCrudServed(
-      spark, () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
-      TaggedQueries.ErFixtureGlob, 24, 25,
-      prefix = "graft_q161_ins", ops = Seq(("insert", 1)))
+    val merged = Lifecycle.run(spark, TaggedQueries.erLifecycle(spark),
+      Lifecycle.Rewrite, "graft_q161_ins", Seq(("insert", 1)))
       .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(merged("深度学习") === merged("深度学习 (DL)"))
   }

@@ -11,8 +11,10 @@ import org.apache.spark.sql.SparkSession
 object ProfileLifecycleJobs {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -47,8 +49,8 @@ object ProfileLifecycleJobs {
       val phases = scala.collection.mutable.LinkedHashMap[String, (Double, Int)]()
       var lastJobs = jobs.get()
       val t0 = System.nanoTime()
-      EntityResolution.multidayCrudResolveServedMor(spark, d,
-        prefix = prefix,
+      Lifecycle.run(spark, Lifecycle.synthetic(d), Lifecycle.MergeOnRead,
+        prefix, Seq(("insert", 9), ("update", 7), ("delete", 5)),
         onPhase = (t, s) => {
           val j = jobs.get(); phases(t) = (s, j - lastJobs); lastJobs = j
         })

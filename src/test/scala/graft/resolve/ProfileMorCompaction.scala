@@ -24,8 +24,10 @@ import org.apache.spark.sql.SparkSession
 object ProfileMorCompaction {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/repo/bench_sf10")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.files.maxPartitionBytes", (8L * 1024 * 1024).toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -33,9 +35,9 @@ object ProfileMorCompaction {
     def replay(tag: String, prefix: String, compactAfter: Set[Int]): Unit = {
       val phases = scala.collection.mutable.LinkedHashMap[String, Double]()
       val t0 = System.nanoTime()
-      EntityResolution.multidayCrudResolveServedMor(spark, d,
-        prefix = prefix, compactAfterOps = compactAfter,
-        onPhase = (t, s) => phases(t) = s)
+      Lifecycle.run(spark, Lifecycle.synthetic(d), Lifecycle.MergeOnRead,
+        prefix, Seq(("insert", 9), ("update", 7), ("delete", 5)),
+        compactAfterOps = compactAfter, onPhase = (t, s) => phases(t) = s)
         .write.format("noop").mode("overwrite").save()
       val total = (System.nanoTime() - t0) / 1e9
       EntityResolution.releaseServeCaches()

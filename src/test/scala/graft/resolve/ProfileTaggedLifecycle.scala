@@ -3,7 +3,7 @@ package graft.resolve
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Dev-only pricing of the REAL-INGEST multi-day CRUD lifecycle (q161's
-  * `ingestedMultidayCrudServed` and its merge-on-read twin q165) at term
+  * [[Lifecycle.ingested]] binding under both advance policies) at term
   * universes the 7-term fixture cannot exercise:
   * `Test/runMain graft.resolve.ProfileTaggedLifecycle [n ...]`.
   *
@@ -21,9 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * steady-state replay — reset + three days — which is what the
   * registry's serve medians now measure.
   *
-  * Per-day cost comes from the lifecycle's own `onPhase` hook (the MOW
-  * path; MOR reports replay totals — its day kernels are identical,
-  * only the advance differs). The parse term lands in the FIRST phase
+  * Per-day cost comes from the lifecycle's own `onPhase` hook, under
+  * either advance policy. The parse term lands in the FIRST phase
   * that touches the ingest (insert1 materializes the lazily-persisted
   * universe in full mode; each scoped day parses its own directory).
   *
@@ -72,8 +71,10 @@ object ProfileTaggedLifecycle {
   def main(args: Array[String]): Unit = {
     val sizes =
       if (args.nonEmpty) args.toSeq.map(_.toInt) else Seq(30000, 100000)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -110,17 +111,14 @@ object ProfileTaggedLifecycle {
         val phases = scala.collection.mutable.LinkedHashMap[String, Double]()
         val src = if (scoped) Some(scopedSource) else None
         val t0 = System.nanoTime()
-        val out = variant match {
-          case "mow" => EntityResolution.ingestedMultidayCrudServed(spark,
-            fullIngest, sourceKey = dir, num = 24, den = 25,
-            prefix = s"graft_prof_lc_${n}_$tag",
-            ops = allOps, onPhase = (t, s) => phases(t) = s,
-            daySource = src)
-          case "mor" => EntityResolution.ingestedMultidayCrudServedMor(spark,
-            fullIngest, sourceKey = dir, num = 24, den = 25,
-            prefix = s"graft_prof_lc_${n}_$tag",
-            ops = allOps, daySource = src)
+        val advance = variant match {
+          case "mow" => Lifecycle.Rewrite
+          case "mor" => Lifecycle.MergeOnRead
         }
+        val out = Lifecycle.run(spark,
+          Lifecycle.ingested(fullIngest, dir, 24, 25, daySource = src),
+          advance, s"graft_prof_lc_${n}_$tag", allOps,
+          onPhase = (t, s) => phases(t) = s)
         out.write.format("noop").mode("overwrite").save()
         val total = (System.nanoTime() - t0) / 1e9
         EntityResolution.releaseServeCaches()
