@@ -160,42 +160,30 @@ object TaggedQueries {
         TaggedText.ingest(s, ErFixtureGlob), 24, 25)
         .orderBy(col("original"))),
 
-    // The UPDATE serve (q155's fused mergeUpdate) over the REAL ingest
-    // universe — round-11 verdict item 7: standing terms/pairs/mapping
-    // build once from the ER fixture's keywords; the serve call
-    // re-embeds the md5-id ≡ 1 (mod 3) batch (dimension reversal) and
-    // converges to from-scratch ER over the updated universe with the
-    // min-TERM representative discipline. Oracle: q104's recursive CTE
-    // with the update CASE in `tn`.
+    // The tagged lifecycle's days served alone from its shared day-0
+    // snapshots (built once per JVM), min-TERM representatives
+    // (`keyword_merger.py:222`) over the merged components — the
+    // real-ingest twins of q155/q150/q143.
+    // UPDATE: re-embed the md5-id ≡ 1 (mod 3) batch (dimension reversal)
+    // against the `ins=` snapshot and run the fused retract+reinsert
+    // merge. Oracle: q104's recursive CTE with the update CASE in `tn`.
     "q157_tagged_er_updates_served" -> ((s, _) =>
-      graft.resolve.EntityResolution.ingestedUpdateResolveServed(
-        s, () => TaggedText.ingest(s, ErFixtureGlob), ErFixtureGlob,
-        24, 25)),
+      graft.resolve.Lifecycle.serve(s, erLifecycle(s), ("update", 1))),
 
-    // The DELETE serve over the same real-ingest universe (q150's
-    // tombstone shape; completes the real-ingest serve matrix next to
-    // q157's updates): standing terms/pairs/mapping build once; the
-    // serve call retracts the md5-id ≡ 2 (mod 3) batch with zero ε-join
-    // work — post-delete pairs are the stored exact-kernel subset — and
-    // converges to from-scratch ER over the surviving universe with the
-    // min-TERM representative discipline. Oracle: q104's recursive CTE
-    // with the batch removed in `tn`.
+    // DELETE: retract the md5-id ≡ 2 (mod 3) batch from the `ins=`
+    // snapshot with zero ε-join work — post-delete pairs are the stored
+    // exact-kernel subset. Oracle: q104's recursive CTE with the batch
+    // removed in `tn`.
     "q158_tagged_er_tombstones_served" -> ((s, _) =>
-      graft.resolve.EntityResolution.ingestedTombstoneResolveServed(
-        s, () => TaggedText.ingest(s, ErFixtureGlob), ErFixtureGlob,
-        24, 25)),
+      graft.resolve.Lifecycle.serve(s, erLifecycle(s), ("delete", 2))),
 
-    // The INSERT serve — the real-ingest matrix's third cell (inserts
-    // here / deletes q158 / updates q157): standing state over the
-    // pre-insert (md5-id ≢ 1 mod 3) subset; the serve call embeds the
-    // arriving batch, pairs it with the batch-side exact kernel, and
-    // mergeIncrement converges to ER over the FULL universe — so the
-    // oracle is exactly q104's recursive CTE (a cross-path check
-    // against the q104/q128 gates).
+    // INSERT: embed the arriving md5-id ≡ 1 (mod 3) batch, pair it with
+    // the batch-side exact kernel against the `ins=1` snapshot (the one
+    // q161/q165/q167 replay) and merge, converging to ER over the FULL
+    // universe — so the oracle is exactly q104's recursive CTE (a
+    // cross-path check against the q104/q128 gates).
     "q159_tagged_er_inserts_served" -> ((s, _) =>
-      graft.resolve.EntityResolution.ingestedInsertResolveServed(
-        s, () => TaggedText.ingest(s, ErFixtureGlob), ErFixtureGlob,
-        24, 25)),
+      graft.resolve.Lifecycle.serve(s, erLifecycle(s), ("insert", 1))),
 
     // The MULTI-DAY insert lifecycle (q159's production sequel): day-1
     // batch (md5-id ≡ 1 mod 3) served against the day-0 (≡ 0 mod 3)

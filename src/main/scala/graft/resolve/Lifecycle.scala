@@ -6,7 +6,8 @@ import graft.graph.BucketedStore
 import graft.similarity.Similarity
 import EntityResolution._
 
-/** Multi-day entity-resolution lifecycles (q160–q169). Each day inserts,
+/** Multi-day entity-resolution lifecycles (q160–q169) and their
+  * single-day serves (q143, q150, q153, q155–q159). Each day inserts,
   * updates or deletes one id class: the day's serve kernel runs against
   * the standing tables at a cost sized by the batch and the components
   * it touches, and its result is folded into those tables, so the next
@@ -28,9 +29,10 @@ import EntityResolution._
   *    classes.
   *  - the day-0 snapshot is immutable. It is built once per JVM and
   *    parameter key, named by that key ([[EntityResolution.sharedBaseName]])
-  *    and shared by every lifecycle with equal parameters. A run resets
-  *    by dropping its own working tables; reads fall back to the
-  *    snapshot until an advance or a fold writes the working name.
+  *    and shared by every lifecycle and [[serve]] with equal parameters.
+  *    A run resets by dropping its own working tables; reads fall back
+  *    to the snapshot until an advance or a fold writes the working
+  *    name. A serve writes nothing.
   *  - working tables and merge-on-read sidecars are hosted under the
   *    query's own prefix, so one lifecycle's advances never reach
   *    another's replay of the same snapshot.
@@ -49,33 +51,41 @@ object Lifecycle {
       val rowStore: String, val rowKey: String,
       val cls: Column => Column,
       val snapshot: (SparkSession, Set[Int]) => String,
-      val batches: (SparkSession, Set[Int]) => (Int, Boolean) => DataFrame,
+      val batches: SparkSession => (Int, Boolean) => DataFrame,
       val touching: (DataFrame, DataFrame) => DataFrame,
       val result: (DataFrame, => DataFrame) => DataFrame)
 
-  /** The embeddings corpus under the IVF index pinned to the day-0
-    * classes (class = `vec_id % 10`): rows are cell assignments bucketed
-    * by `cid`, batches are assigned against the cached pin, and a day
-    * re-embeds by reversing the dimensions before assignment.
+  /** The embeddings corpus under the [[EntityResolution.standingPin]]
+    * IVF index, classes by `cls` (default `vec_id % 10`): rows are cell
+    * assignments bucketed by `cid`, batches are assigned against the
+    * cached pin, and a day re-embeds by reversing the dimensions before
+    * assignment. The pin is fixed, so the snapshot with no inserted
+    * class is the whole corpus under any rule; the snapshot key names
+    * the rule only when a non-default rule selects inserted classes.
     */
-  def synthetic(d: String): Binding = {
-    val cls = (c: Column) => c % 10
+  def synthetic(d: String, cls: Column => Column = lastDigit): Binding =
     new Binding("assigned", "cid", cls,
-      snapshot = (s, inserted) => ensureSyntheticCrudBase(s, d, inserted),
-      batches = (s, inserted) => {
-        val pinTag = s"graft_synbase|ins=${inserted.toSeq.sorted.mkString(",")}"
-        val pinned = (c: Column) =>
-          inserted.map(k => cls(c) =!= k).foldLeft(lit(true))(_ && _)
-        (k, reembed) => {
-          val assign =
-            if (reembed) Similarity.ivfAssignedPinnedReversedSubsetCached _
-            else Similarity.ivfAssignedPinnedSubsetCached _
-          assign(s, d, pinTag, pinned, c => cls(c) === k)
-        }
+      snapshot = (s, inserted) => {
+        lazy val rule = clsFingerprint(s, cls)
+        val ruleKey =
+          if (inserted.isEmpty || rule == clsFingerprint(s, lastDigit)) ""
+          else s"|cls=$rule"
+        ensureSyntheticCrudBase(s, d, s"$d|ins=${sorted(inserted)}$ruleKey",
+          keep = notIn(cls, inserted))
       },
+      batches = s => (k, reembed) => Similarity.ivfAssignedPinnedCached(
+        s, d, standingPin, c => cls(c) === k, reembed),
       touching = updateTouchingPairs,
       result = (mapping, _) => mapping.orderBy(col("vec_id")))
-  }
+
+  private val lastDigit: Column => Column = c => c % 10
+
+  private def sorted(classes: Set[Int]): String =
+    classes.toSeq.sorted.mkString(",")
+
+  /** Day 0's rows: every class the ops do not insert. */
+  private def notIn(cls: Column => Column, inserted: Set[Int]): Column => Column =
+    c => !inserted.map(k => cls(c) === k).foldLeft(lit(false))(_ || _)
 
   /** The tagged ingest's keyword universe under the exact kernel at
     * cos ≥ num/den: rows are embedded terms bucketed by `vec_id`, and
@@ -93,14 +103,13 @@ object Lifecycle {
         // the key carries everything the build reads; the class rule
         // enters as its structural fingerprint
         val key = s"$sourceKey|eps=$num/$den|cls=${clsFingerprint(s, cls)}" +
-          s"|ins=${inserted.toSeq.sorted.mkString(",")}"
+          s"|ins=${sorted(inserted)}"
         val base = sharedBaseName("ing", key)
         ensureIngestedErTables(s, ingested, key, num, den, base,
-          keep = c => !inserted.map(k => cls(c) === k)
-            .foldLeft(lit(false))(_ || _))
+          keep = notIn(cls, inserted))
         base
       },
-      batches = (_, _) => {
+      batches = _ => {
         lazy val universe = persistServe(embedTermUniverse(ingested()))
         (k, reembed) => {
           val batch = daySource.map(f => embedTermUniverse(f(k)))
@@ -134,7 +143,58 @@ object Lifecycle {
     * whose stored rows and pairs die, and the rows and pairs it adds. */
   private final case class Day(merged: DataFrame,
       dead: Option[Column => Column],
-      newPairs: Option[DataFrame], newRows: Option[DataFrame])
+      newPairs: Option[DataFrame], newRows: Option[DataFrame]) {
+    /** `df` without the rows whose `ids` columns hold a dead id. */
+    def alive(df: DataFrame, ids: String*): DataFrame =
+      dead.fold(df)(d => df.filter(ids.map(c => !d(col(c))).reduce(_ && _)))
+  }
+
+  private def plus(df: DataFrame, added: Option[DataFrame]): DataFrame =
+    added.fold(df)(df.unionByName)
+
+  /** One day's kernel against standing `rows`, `pairs` and `mapping`
+    * (`vec_id`, `component`); each is read only if the op needs it. */
+  private def day(s: SparkSession, binding: Binding,
+      batchOf: (Int, Boolean) => DataFrame, rows: => DataFrame,
+      pairs: => DataFrame, mapping: => DataFrame, op: (String, Int)): Day = {
+    import s.implicits._
+    op match {
+      case ("insert", k) =>
+        val batch = persistServe(batchOf(k, false))
+        val touching = persistServe(binding.touching(rows, batch))
+        Day(mergeIncrement(s, mapping, batch.select($"vec_id"), touching),
+          None, Some(touching), Some(batch))
+      case ("update", k) =>
+        val isUpd = (c: Column) => binding.cls(c) === k
+        val batch = persistServe(batchOf(k, true))
+        val touching = persistServe(
+          binding.touching(rows.filter(!isUpd($"vec_id")), batch))
+        Day(mergeUpdate(s, mapping, pairs, batch.select($"vec_id"),
+          touching, isUpd), Some(isUpd), Some(touching), Some(batch))
+      case ("delete", k) =>
+        val isDel = (c: Column) => binding.cls(c) === k
+        Day(mergeTombstones(s, mapping, pairs, isDel), Some(isDel), None, None)
+      case (o, _) =>
+        throw new IllegalArgumentException(s"unknown lifecycle op: $o")
+    }
+  }
+
+  /** Serve one op — `(insert|update|delete, class)` — against the day-0
+    * snapshot that holds every class but an inserted one, and return
+    * the binding's result over the day's merged mapping and its live
+    * rows. Nothing is written: the snapshot is built once per JVM and
+    * parameter key, so a repeated serve pays only the day's kernel.
+    */
+  def serve(s: SparkSession, binding: Binding, op: (String, Int)): DataFrame = {
+    val inserted = Set(op).collect { case ("insert", k) => k }
+    val base = binding.snapshot(s, inserted)
+    def table(t: String) = BucketedStore.table(s, s"${base}_$t")
+    val rows = table(binding.rowStore)
+    val served = day(s, binding, binding.batches(s), rows, table("pairs"),
+      table("mapping"), op)
+    binding.result(served.merged,
+      plus(served.alive(rows, "vec_id"), served.newRows))
+  }
 
   /** Replay `ops` — `(insert|update|delete, class)` — from the day-0
     * snapshot, which holds every class not inserted by `ops`, under
@@ -177,27 +237,7 @@ object Lifecycle {
     def rows = store(rowStore, "vec_id")
     def pairs = store("pairs", "u", "v")
     def mapping = BucketedStore.table(s, current("mapping"))
-    val batchOf = binding.batches(s, inserted)
-
-    def serve(op: (String, Int)): Day = op match {
-      case ("insert", k) =>
-        val batch = persistServe(batchOf(k, false))
-        val touching = persistServe(binding.touching(rows, batch))
-        Day(mergeIncrement(s, mapping, batch.select($"vec_id"), touching),
-          None, Some(touching), Some(batch))
-      case ("update", k) =>
-        val isUpd = (c: Column) => binding.cls(c) === k
-        val batch = persistServe(batchOf(k, true))
-        val touching = persistServe(
-          binding.touching(rows.filter(!isUpd($"vec_id")), batch))
-        Day(mergeUpdate(s, mapping, pairs, batch.select($"vec_id"),
-          touching, isUpd), Some(isUpd), Some(touching), Some(batch))
-      case ("delete", k) =>
-        val isDel = (c: Column) => binding.cls(c) === k
-        Day(mergeTombstones(s, mapping, pairs, isDel), Some(isDel), None, None)
-      case (o, _) =>
-        throw new IllegalArgumentException(s"unknown lifecycle op: $o")
-    }
+    val batchOf = binding.batches(s)
 
     def write(day: Day, epoch: Int): Unit = {
       val merged = day.merged.select($"vec_id", $"rep_id".as("component"))
@@ -214,15 +254,10 @@ object Lifecycle {
           day.newRows.foreach(
             BucketedStore.appendBucketed(_, host(rowStore), binding.rowKey))
         case Rewrite =>
-          def alive(df: DataFrame, ids: String*): DataFrame =
-            day.dead.fold(df)(d =>
-              df.filter(ids.map(c => !d(col(c))).reduce(_ && _)))
-          def plus(df: DataFrame, added: Option[DataFrame]): DataFrame =
-            added.fold(df)(df.unionByName)
           BucketedStore.replaceBucketedAll(Seq(
             (merged, host("mapping"), "vec_id"),
-            (plus(alive(pairs, "u", "v"), day.newPairs), host("pairs"), "u"),
-            (plus(alive(rows, "vec_id"), day.newRows), host(rowStore),
+            (plus(day.alive(pairs, "u", "v"), day.newPairs), host("pairs"), "u"),
+            (plus(day.alive(rows, "vec_id"), day.newRows), host(rowStore),
               binding.rowKey)))
         case MergeOnRead =>
           BucketedStore.replaceBucketed(merged, host("mapping"), "vec_id")
@@ -258,7 +293,8 @@ object Lifecycle {
       }
 
     ops.zipWithIndex.foreach { case (op, i) =>
-      timed(s"${op._1}${i + 1}")(write(serve(op), i + 1))
+      timed(s"${op._1}${i + 1}")(
+        write(day(s, binding, batchOf, rows, pairs, mapping, op), i + 1))
       if (compactAfterOps(i) || BucketedStore.compactDue(s, host("pairs")) ||
           BucketedStore.compactDue(s, host(rowStore)))
         timed(s"compact${i + 1}") {

@@ -319,55 +319,54 @@ object Similarity {
     emb.withColumn("cid",
       element_at(topCells(emb.sparkSession, cents, col("e"), col("nrm"), 1), 1))
 
-  /** IVF assignment of the FULL corpus against an index pinned to a
-    * SUB-corpus — the incremental-ingest shape, where the index predates
-    * the new batch: seeds are every m-th vec_id OF THE SUBSET with
-    * m = max(50, floor(sqrt(n_subset))), and every vector (standing and
-    * batch alike) is assigned to its nearest pinned cell. Production
-    * systems hold the coarse quantizer fixed across daily batches and
-    * retrain only at full-rebuild cadence, because changing the index
-    * re-cells the standing corpus and invalidates every blocked
-    * artifact derived from it (pair sets, cluster tables). Output:
-    * (vec_id, e, nrm, cid) like [[ivfAssigned]].
+  /** IVF assignment against an index pinned to a SUB-corpus — the
+    * incremental-ingest shape, where the index predates the new batch:
+    * seeds are every m-th vec_id OF `indexSubset` with
+    * m = max(50, floor(sqrt(n_subset))), and each `rowSubset` vector
+    * (standing and batch alike) is assigned to its nearest pinned cell.
+    * Production systems hold the coarse quantizer fixed across daily
+    * batches and retrain only at full-rebuild cadence, because changing
+    * the index re-cells the standing corpus and invalidates every
+    * blocked artifact derived from it (pair sets, cluster tables).
+    * `reembed` reverses the rows' embeddings before assignment — the
+    * deterministic re-embedding stand-in of the ER update path: a
+    * dimension permutation, so the norm is unchanged and both engines
+    * compute the transformed vector exactly (`functions.reverse` here,
+    * `list_reverse` in the DuckDB oracle). Output: (vec_id, e, nrm, cid)
+    * like [[ivfAssigned]].
     */
   private[graft] def ivfAssignedPinned(s: SparkSession, d: String,
-      indexSubset: Column => Column): DataFrame =
-    assignToCells(quantized(s, d), pinnedCentroids(s, d, indexSubset))
+      indexSubset: Column => Column,
+      rowSubset: Column => Column = _ => lit(true),
+      reembed: Boolean = false): DataFrame =
+    assignRows(s, d, rowSubset, reembed, pinnedCentroids(s, d, indexSubset))
 
-  /** [[ivfAssignedPinned]] restricted to a row subset — the serve-side
-    * increment shape: assign ONLY the new batch against the pinned
-    * index, never rescanning the standing corpus.
+  /** [[ivfAssignedPinned]] with the centroid collect cached per source
+    * dir in this JVM — a serve call assigns only its batch rows against
+    * the reused index instead of re-deriving it. The production analog
+    * is the persisted index table (q49's write/readIndex). An entry is
+    * reused only for the same `indexSubset` instance; any other rule
+    * recomputes and replaces it.
     */
-  private[graft] def ivfAssignedPinnedSubset(s: SparkSession, d: String,
-      indexSubset: Column => Column, rowSubset: Column => Column): DataFrame = {
-    import s.implicits._
-    assignToCells(quantized(s, d).filter(rowSubset($"vec_id")),
-      pinnedCentroids(s, d, indexSubset))
+  private[graft] def ivfAssignedPinnedCached(s: SparkSession, d: String,
+      indexSubset: Column => Column, rowSubset: Column => Column,
+      reembed: Boolean): DataFrame = {
+    val cents = pinnedCache.compute(d, (_, prev) =>
+      if (prev != null && (prev._1 eq indexSubset)) prev
+      else (indexSubset, pinnedCentroids(s, d, indexSubset)))._2
+    assignRows(s, d, rowSubset, reembed, cents)
   }
 
-  /** [[ivfAssignedPinnedSubset]] with the subset's embeddings REVERSED —
-    * the deterministic "re-embedding" stand-in for the ER update path
-    * (q151): `reverse` permutes dimensions, so the norm is unchanged and
-    * both engines compute the transformed vector exactly
-    * (`functions.reverse` here, `list_reverse` in the DuckDB oracle).
-    */
-  private[graft] def ivfAssignedPinnedReversedSubset(s: SparkSession,
-      d: String, indexSubset: Column => Column,
-      rowSubset: Column => Column): DataFrame = {
-    import s.implicits._
+  private def assignRows(s: SparkSession, d: String,
+      rowSubset: Column => Column, reembed: Boolean,
+      cents: Seq[Cent]): DataFrame = {
+    val rows = quantized(s, d).filter(rowSubset(col("vec_id")))
     assignToCells(
-      quantized(s, d).filter(rowSubset($"vec_id"))
-        .withColumn("e", reverse($"e")),
-      pinnedCentroids(s, d, indexSubset))
+      if (reembed) rows.withColumn("e", reverse(col("e"))) else rows, cents)
   }
 
-  /** Per-JVM centroid cache for the pinned index (keyed by caller tag →
-    * source dir): the production analog is the persisted index table
-    * (q49's write/readIndex); in-process the collect is simply reused,
-    * and a DIFFERENT source dir under the same tag recomputes.
-    */
-  private val pinnedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Seq[Cent])]()
+  private val pinnedCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Column => Column, Seq[Cent])]()
 
   private def pinnedCentroids(s: SparkSession, d: String,
       indexSubset: Column => Column): Seq[Cent] = {
@@ -385,37 +384,6 @@ object Similarity {
     sub.filter(pick)
       .select($"vec_id", $"e", $"nrm").as[(Long, Seq[Long], Long)]
       .collect().toSeq
-  }
-
-  /** [[ivfAssignedPinnedSubset]] with the centroid collect cached per
-    * (tag, source dir) in this JVM — the serve path's repeated calls
-    * reuse the index instead of re-deriving it.
-    */
-  private[graft] def ivfAssignedPinnedSubsetCached(s: SparkSession,
-      d: String, tag: String, indexSubset: Column => Column,
-      rowSubset: Column => Column): DataFrame = {
-    import s.implicits._
-    val cents = pinnedCache.compute(tag, (_, prev) =>
-      if (prev != null && prev._1 == d) prev
-      else (d, pinnedCentroids(s, d, indexSubset)))._2
-    assignToCells(quantized(s, d).filter(rowSubset($"vec_id")), cents)
-  }
-
-  /** [[ivfAssignedPinnedReversedSubset]] with the per-JVM centroid cache
-    * — the served update path's batch assignment (q155): only the
-    * re-embedded batch rows are read, against the cached pinned index.
-    */
-  private[graft] def ivfAssignedPinnedReversedSubsetCached(s: SparkSession,
-      d: String, tag: String, indexSubset: Column => Column,
-      rowSubset: Column => Column): DataFrame = {
-    import s.implicits._
-    val cents = pinnedCache.compute(tag, (_, prev) =>
-      if (prev != null && prev._1 == d) prev
-      else (d, pinnedCentroids(s, d, indexSubset)))._2
-    assignToCells(
-      quantized(s, d).filter(rowSubset($"vec_id"))
-        .withColumn("e", reverse($"e")),
-      cents)
   }
 
   /** Shared body of the nprobe-generalized SemDeDup queries (q136 n=2,

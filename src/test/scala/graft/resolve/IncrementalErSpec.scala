@@ -62,12 +62,12 @@ class IncrementalErSpec extends AnyFunSuite {
     val scratch = graft.SparkEntry.queries("q52_er_blocked")(spark, d)
       .as[(Long, Long)].collect().toSeq
     assert(scratch === got)
-    // the served split (q143) agrees — and serving TWICE (the second
-    // call reads the standing tables instead of rebuilding) agrees too
-    val served1 = EntityResolution.incrementalResolveServed(spark, d)
-      .as[(Long, Long)].collect().toSeq
-    val served2 = EntityResolution.incrementalResolveServed(spark, d)
-      .as[(Long, Long)].collect().toSeq
+    // the insert day served alone (q143) agrees — and serving TWICE
+    // (the second call reads the snapshot instead of rebuilding) agrees
+    val served1 = Lifecycle.serve(spark, Lifecycle.synthetic(d),
+      ("insert", 9)).as[(Long, Long)].collect().toSeq
+    val served2 = Lifecycle.serve(spark, Lifecycle.synthetic(d),
+      ("insert", 9)).as[(Long, Long)].collect().toSeq
     assert(served1 === got && served2 === got)
   }
 
@@ -110,19 +110,17 @@ class IncrementalErSpec extends AnyFunSuite {
     val scratch = graft.SparkEntry.queries("q52_er_blocked")(spark, postDir)
       .as[(Long, Long)].collect().toSeq
     assert(scratch === got)
-    // the served split (q150) agrees — and serving TWICE (the second
-    // call reads the standing pair/mapping tables) agrees too
-    val served1 = EntityResolution.tombstoneResolveServed(spark, d)
-      .as[(Long, Long)].collect().toSeq
-    val served2 = EntityResolution.tombstoneResolveServed(spark, d)
-      .as[(Long, Long)].collect().toSeq
+    // the delete day served alone (q150) agrees — and serving TWICE
+    // (the second call reads the snapshot's pair/mapping tables) agrees
+    val served1 = Lifecycle.serve(spark, Lifecycle.synthetic(d),
+      ("delete", 5)).as[(Long, Long)].collect().toSeq
+    val served2 = Lifecycle.serve(spark, Lifecycle.synthetic(d),
+      ("delete", 5)).as[(Long, Long)].collect().toSeq
     assert(served1 === got && served2 === got)
   }
 
-  /** The round-11 adjudication (q150/q153): the served tombstone path
-    * picks split-vs-force-recompute by dirty-row fraction. Both forced
-    * extremes must be bit-equal to each other and to the inline result
-    * — the threshold is a pure cost decision — and the sparse predicate
+  /** The served tombstone paths (q150/q153): the dirty-component split
+    * must be bit-equal to the inline result, and the sparse class rule
     * (q153's registered form) must equal from-scratch ER over its own
     * post-delete corpus.
     */
@@ -143,15 +141,8 @@ class IncrementalErSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
     val inline = EntityResolution.tombstoneResolve(spark, d)
       .as[(Long, Long)].collect().toSeq
-    // force threshold 0 → always the full survivors-CC from stored state
-    val forced = EntityResolution.tombstoneResolveServed(spark, d,
-      prefix = "graft_adapt_force", dirtyFractionFallback = 0.0)
+    val split = graft.SparkEntry.queries("q150_er_tombstones_served")(spark, d)
       .as[(Long, Long)].collect().toSeq
-    // threshold > 1 → always the dirty-component split
-    val split = EntityResolution.tombstoneResolveServed(spark, d,
-      prefix = "graft_adapt_split", dirtyFractionFallback = 1.1)
-      .as[(Long, Long)].collect().toSeq
-    assert(forced === inline, "force-recompute path diverged from inline")
     assert(split === inline, "split path diverged from inline")
 
     // sparse predicate (q153): only vec 5 matches (ids < 50) — the rep
@@ -209,12 +200,12 @@ class IncrementalErSpec extends AnyFunSuite {
     val scratch = graft.SparkEntry.queries("q52_er_blocked")(spark, postDir)
       .as[(Long, Long)].collect().toSeq
     assert(scratch === got)
-    // the served split (q155) agrees — and serving TWICE (the second
-    // call reads the standing assigned/pair/mapping tables) agrees too
-    val served1 = EntityResolution.updateResolveServed(spark, d)
-      .as[(Long, Long)].collect().toSeq
-    val served2 = EntityResolution.updateResolveServed(spark, d)
-      .as[(Long, Long)].collect().toSeq
+    // the update day served alone (q155) agrees — and serving TWICE
+    // (the second call reads the snapshot's tables) agrees too
+    val served1 = Lifecycle.serve(spark, Lifecycle.synthetic(d),
+      ("update", 7)).as[(Long, Long)].collect().toSeq
+    val served2 = Lifecycle.serve(spark, Lifecycle.synthetic(d),
+      ("update", 7)).as[(Long, Long)].collect().toSeq
     assert(served1 === got && served2 === got,
       "served update path diverged from inline")
   }
@@ -344,16 +335,14 @@ class IncrementalErSpec extends AnyFunSuite {
     val day1 = Lifecycle.run(spark, Lifecycle.synthetic(d),
       Lifecycle.Rewrite, "graft_q162_d1", Seq(("insert", 9)))
       .as[(Long, Long)].collect().toSeq
-    val q143 = EntityResolution.incrementalResolveServed(spark, d,
-      prefix = "graft_q162_q143ref")
-      .orderBy("vec_id").as[(Long, Long)].collect().toSeq
+    val q143 = Lifecycle.serve(spark, Lifecycle.synthetic(d), ("insert", 9))
+      .as[(Long, Long)].collect().toSeq
     assert(day1 === q143)
     val day2 = Lifecycle.run(spark, Lifecycle.synthetic(d),
       Lifecycle.Rewrite, "graft_q162_d2", Seq(("insert", 9), ("update", 7)))
       .as[(Long, Long)].collect().toSeq
-    val q155 = EntityResolution.updateResolveServed(spark, d,
-      prefix = "graft_q162_q155ref")
-      .orderBy("vec_id").as[(Long, Long)].collect().toSeq
+    val q155 = Lifecycle.serve(spark, Lifecycle.synthetic(d), ("update", 7))
+      .as[(Long, Long)].collect().toSeq
     assert(day2 === q155)
     // own prefix, NOT the registry default: suites run in parallel on
     // the shared session, and ServeCacheReleaseSpec replays the q162

@@ -303,14 +303,11 @@ class IngestedErSpec extends AnyFunSuite {
       Lifecycle.MergeOnRead, "graft_q165_scoped", TaggedQueries.ErCrudOps)
       .collect().map(r => r.getString(0) -> r.getString(1)).toSet
     assert(scopedMor === want)
-    // the single-serve insert (q159): a scoped batch thunk must land on
-    // the same mapping as the default full-universe filter
+    // the single-day insert serve (q159): a scoped batch thunk must land
+    // on the same mapping as the default full-universe filter
     val wantIns = TaggedQueries.queries("q159_tagged_er_inserts_served")(
       spark, "").collect().map(r => r.getString(0) -> r.getString(1)).toSet
-    val scopedIns = EntityResolution.ingestedInsertResolveServed(
-      spark, () => TaggedText.ingest(spark, TaggedQueries.ErFixtureGlob),
-      TaggedQueries.ErFixtureGlob, 24, 25,
-      prefix = "graft_q159_scoped", batchSource = Some(() => byCls(1)))
+    val scopedIns = Lifecycle.serve(spark, scopedBinding, ("insert", 1))
       .collect().map(r => r.getString(0) -> r.getString(1)).toSet
     assert(scopedIns === wantIns)
   }
