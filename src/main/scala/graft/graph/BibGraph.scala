@@ -147,16 +147,6 @@ object BibGraph {
     edges(s, d).filter(col("rel_type") === "AUTHORED")
       .select(col("src").as("author"), col("dst").as("title"))
 
-  /** (author, title, rel) for both author relations (family 11 checks). */
-  def authoredAll(s: SparkSession, d: String): DataFrame =
-    edges(s, d).filter(col("rel_type").isin("AUTHORED", "TERTIARY_AUTHORED"))
-      .select(col("src").as("author"), col("dst").as("title"), col("rel_type").as("rel"))
-
-  /** (title, kw) pairs for HAS_KEYWORD. */
-  def hasKeyword(s: SparkSession, d: String): DataFrame =
-    edges(s, d).filter(col("rel_type") === "HAS_KEYWORD")
-      .select(col("src").as("title"), col("dst").as("kw"))
-
   /** Alias mapping A3-shape over ANY frame with an `original` column:
     * original → representative = lexicographic min of the term's
     * md5-prefix bucket; identity for singletons (noise → self,
@@ -182,17 +172,6 @@ object BibGraph {
     keywordMapping(s, d).filter($"original" =!= $"representative")
       .select($"original".as("src"), $"representative".as("dst"),
         lit("ALIAS_OF").as("rel_type"))
-  }
-
-  /** J5 alias expansion of a seed keyword: the seed plus its ALIAS_OF
-    * target (`neo4j_query_executor.py:269-278` — `rel = k OR rel = alias`).
-    */
-  def aliasExpand(s: SparkSession, d: String, seed: String): DataFrame = {
-    import s.implicits._
-    keywordMapping(s, d).filter($"original" === seed)
-      .select($"representative".as("kw"))
-      .union(Seq(seed).toDF("kw"))
-      .distinct()
   }
 
   /** (title, label, topic) HAS_TOPIC frame: deterministic classifier stub

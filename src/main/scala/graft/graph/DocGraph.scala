@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import graft.enrich.Taxonomy
 
@@ -136,8 +137,12 @@ object DocGraph {
     * remaining single bucketed scan's HashPartitioning survives the
     * (alias-aware) projection into the join — the 2-hop self-join plans
     * with ZERO shuffle exchange under the join (asserted in
-    * `BucketedDocGraphSpec`). The alias mapping stays an in-memory frame:
-    * it is the broadcast side everywhere it appears.
+    * `BucketedDocGraphSpec`). The alias mapping is the eighth table,
+    * bucketed+sorted on `original`: a family-6/10 seed lookup prunes to
+    * one bucket file instead of rebuilding the mapping from the raw
+    * documents, so every family answer reads only the binding's tables.
+    * The rel_type guard is proved on the plan (no job) wherever every
+    * edge branch carries a literal rel_type.
     *
     * At 100 TB this is the difference between every co-author /
     * co-occurrence / collaborator query paying a full edge shuffle and
@@ -147,21 +152,12 @@ object DocGraph {
   def bucketed(g: DocGraph, prefix: String = "graft_g",
                buckets: Int = 16): DocGraph = {
     val s = g.docs.sparkSession
-    // every edge must land in some bucketed table: an edge type missing
-    // from RelJoinKeys would silently vanish from the bucketed binding,
-    // so fail loudly instead (same contract as epsPairsOf's size guard).
-    val known = RelJoinKeys.map(_._1).toSet
-    val unknown = g.edges.select("rel_type").distinct()
-      .collect().map(_.getString(0)).filterNot(known)
-    require(unknown.isEmpty,
-      s"DocGraph.bucketed: edge rel_type(s) ${unknown.mkString(", ")} have " +
-        s"no bucket key in RelJoinKeys — add them or they would be " +
-        s"dropped from the bucketed binding")
-    // The seven table writes are independent of each other — submit them
+    requireKnownRelTypes(g.edges)
+    // The eight table writes are independent of each other — submit them
     // CONCURRENTLY from a bounded driver pool (guide §2.6 "overlap
     // independent jobs", the GraphDump discipline): sequentially each
     // small write left the executors ~idle between tiny stages, and the
-    // ingest wall time was the SUM of seven mostly-single-task jobs
+    // ingest wall time was the SUM of eight mostly-single-task jobs
     // instead of the longest one. Await every writer, then surface the
     // first failure once nothing is in flight (fail-fast would unpersist
     // frames under surviving writers).
@@ -180,6 +176,9 @@ object DocGraph {
         } :+ Future {
           BucketedStore.writeBucketed(g.docs, s"${prefix}_docs", "title",
             buckets)
+        } :+ Future {
+          BucketedStore.writeBucketed(g.kwMapping, s"${prefix}_kw_alias",
+            "original", buckets)
         }
         val settled = Await.result(
           Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
@@ -188,19 +187,47 @@ object DocGraph {
           .foreach(throw _)
       } finally pool.shutdown()
     }
-    readBucketedBinding(s, prefix, g.kwMapping)
+    readBucketedBinding(s, prefix)
   }
 
-  /** Reassemble a [[bucketed]] binding from its catalog tables WITHOUT
-    * writing anything — the serve-side read path on its own.
+  /** Every edge must land in some bucketed table: an edge type missing
+    * from [[RelJoinKeys]] would silently vanish from the bucketed binding,
+    * so fail loudly instead (same contract as epsPairsOf's size guard).
+    * The proof is on the plan first: when every union branch carries a
+    * literal rel_type (the synthetic, ingested and bucketed bindings),
+    * constant folding and PruneFilters reduce the unknown-type filter to
+    * an empty LocalRelation and no job runs. Only a plan that cannot be
+    * proved empty pays the data probe.
     */
-  def readBucketedBinding(s: SparkSession, prefix: String,
-                          kwMapping: DataFrame): DocGraph = {
+  private[graph] def requireKnownRelTypes(edges: DataFrame): Unit = {
+    val unknownRows =
+      edges.filter(!col("rel_type").isin(RelJoinKeys.map(_._1): _*))
+    val provedEmpty = unknownRows.queryExecution.optimizedPlan match {
+      case l: LocalRelation => l.data.isEmpty
+      case _ => false
+    }
+    if (!provedEmpty) {
+      val unknown = unknownRows.select("rel_type").distinct()
+        .collect().map(_.getString(0))
+      require(unknown.isEmpty,
+        s"DocGraph.bucketed: edge rel_type(s) ${unknown.mkString(", ")} have " +
+          s"no bucket key in RelJoinKeys — add them or they would be " +
+          s"dropped from the bucketed binding")
+    }
+  }
+
+  /** Reassemble a [[bucketed]] binding from its eight catalog tables
+    * WITHOUT writing anything — the serve-side read path on its own. The
+    * alias mapping is read from `${prefix}_kw_alias` like every other
+    * frame, so the binding holds no JVM-side state.
+    */
+  def readBucketedBinding(s: SparkSession, prefix: String): DocGraph = {
     val edges = RelJoinKeys.map { case (rel, _) =>
       BucketedStore.table(s, s"${prefix}_${rel.toLowerCase}")
         .select(col("src"), col("dst"), lit(rel).as("rel_type"))
     }.reduce(_ unionAll _)
-    DocGraph(BucketedStore.table(s, s"${prefix}_docs"), edges, kwMapping)
+    DocGraph(BucketedStore.table(s, s"${prefix}_docs"), edges,
+      BucketedStore.table(s, s"${prefix}_kw_alias"))
   }
 
   /** Tracks which source dir each served prefix's tables were built from
@@ -224,7 +251,6 @@ object DocGraph {
     */
   def bucketedServed(s: SparkSession, d: String, prefix: String,
                      buckets: Int = 16): DocGraph = {
-    val proto = synthetic(s, d)
     // Record the source dir only AFTER the build succeeds: a put-before-
     // build would let a partial build (exception after some per-rel table
     // writes) or a concurrent caller arriving mid-build observe prev == d
@@ -234,14 +260,11 @@ object DocGraph {
     // until the tables exist, and a build that throws leaves the mapping
     // UNCHANGED (ConcurrentHashMap.compute's contract), so the next
     // caller rebuilds from scratch instead of serving the partial write.
-    if (servedFrom.get(prefix) == d)
-      readBucketedBinding(s, prefix, proto.kwMapping)
-    else {
+    if (servedFrom.get(prefix) != d)
       servedFrom.compute(prefix, (_, prev) => {
-        if (prev != d) bucketed(proto, prefix, buckets)
+        if (prev != d) bucketed(synthetic(s, d), prefix, buckets)
         d
       })
-      readBucketedBinding(s, prefix, proto.kwMapping)
-    }
+    readBucketedBinding(s, prefix)
   }
 }

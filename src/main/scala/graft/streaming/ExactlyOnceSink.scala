@@ -153,8 +153,9 @@ object ExactlyOnceSink {
     // pre-fold rows); and a reader resolving strictly between the DROP
     // and the RENAME sees TABLE_OR_VIEW_NOT_FOUND. The contract is
     // therefore RESOLVE-PER-REQUEST: serve-path callers re-resolve the
-    // table name on every request (as `AnswerService.answer` does via
-    // `readBucketedBinding` → `s.table(name)`), which bounds the race to
+    // table names on every request (q147/q168 route over a fresh
+    // `readBucketedBinding`, whose `s.table(name)` resolves all eight
+    // tables, the alias mapping included), which bounds the race to
     // the sub-second drop→rename window and makes it a clean retryable
     // error, never silent stale data. A metastore-backed deployment can
     // close even that window with a versioned-name + view repoint swap;
@@ -322,8 +323,7 @@ object ExactlyOnceSink {
       landBatch(reassign, 0L, dir)
       landBatch(reassign, 0L, dir) // at-least-once replay
       foldIntoBucketed(s, dir, "graft_q147_published_by", "src", 16)
-      val g = graft.graph.DocGraph.readBucketedBinding(s, "graft_q147",
-        graft.graph.DocGraph.synthetic(s, d).kwMapping)
+      val g = graft.graph.DocGraph.readBucketedBinding(s, "graft_q147")
       graft.query.Router.route(g, 7, Map("org" -> "Org_77"))
     }),
 
@@ -360,8 +360,7 @@ object ExactlyOnceSink {
       BucketedStore.compactMor(s, table, "src", Seq("src"))
       land() // replay after the fold...
       BucketedStore.compactMor(s, table, "src", Seq("src")) // ...re-fold
-      val g = graft.graph.DocGraph.readBucketedBinding(s, "graft_q168",
-        graft.graph.DocGraph.synthetic(s, d).kwMapping)
+      val g = graft.graph.DocGraph.readBucketedBinding(s, "graft_q168")
       graft.query.Router.route(g, 7, Map("org" -> "Org_77"))
     })
   )

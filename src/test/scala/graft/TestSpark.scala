@@ -23,4 +23,38 @@ object TestSpark {
 
   /** sf0.001 fixture dir — the smallest scale, for cheap integration tests. */
   val TinySf = "/root/testdata/sf0.001"
+
+  /** `body`'s result and the number of Spark jobs it submitted. A
+    * listener counts job starts under a job group; listener events arrive
+    * in order, so once a later marker job's end is seen, every job start
+    * of `body` has been counted.
+    */
+  def countJobs[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("graft_counted") => jobs.incrementAndGet()
+          case Some("graft_counted_marker") => markerJobs.add(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (markerJobs.contains(e.jobId)) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("graft_counted", "counted body")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup("graft_counted_marker", "listener barrier")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener barrier job never ended")
+      (result, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }

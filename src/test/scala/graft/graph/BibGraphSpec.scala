@@ -36,7 +36,7 @@ class BibGraphSpec extends AnyFunSuite {
   }
 
   test("alias expansion of a merged keyword includes seed and representative") {
-    val exp = BibGraph.aliasExpand(spark, TinySf, "vector")
+    val exp = DocGraph.synthetic(spark, TinySf).aliasExpand("vector")
       .as[String].collect().toSet
     assert(exp === Set("vector", "merge"))
   }

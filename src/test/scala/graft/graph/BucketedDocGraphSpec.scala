@@ -1,11 +1,14 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoinExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.ingest.{TaggedQueries, TaggedText}
 
 /** Binding 3: the bucketed DocGraph. Proves the PERF.md claim end-to-end
   * on the REAL template code (not a synthetic two-table join): the q71/q72
@@ -18,6 +21,20 @@ class BucketedDocGraphSpec extends AnyFunSuite {
 
   private lazy val base = DocGraph.synthetic(spark, TestSpark.TinySf)
   private lazy val bucketedG = DocGraph.bucketed(base, "bdg_spec", 4)
+  private lazy val ingested =
+    DocGraph.ofIngested(TaggedText.ingest(spark, TaggedQueries.FixtureGlob))
+
+  /** Sorted (original, representative) rows of an alias mapping. */
+  private def mappingRows(df: DataFrame): Seq[(String, String)] =
+    df.select("original", "representative").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+
+  /** The file scans of `df`'s statically planned executed plan. */
+  private def scansOf(df: DataFrame): Seq[FileSourceScanExec] = {
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+    finally spark.conf.unset("spark.sql.adaptive.enabled")
+  }
 
   /** Every equi-join subtree in the executed plan, with AQE disabled so
     * the tree is the statically planned one (the assertion is about what
@@ -90,6 +107,49 @@ class BucketedDocGraphSpec extends AnyFunSuite {
       DocGraph.bucketed(withAlien, "bdg_guard_spec", 4)
     }
     assert(e.getMessage.contains("ALIEN_REL"))
+  }
+
+  test("families 6 and 10 scan only the binding's tables; the alias " +
+      "lookup reads one bucket of kw_alias") {
+    Seq(GraphQueries.keywordDocs(base, "vector") ->
+        GraphQueries.keywordDocs(bucketedG, "vector"),
+      GraphQueries.keywordPerYear(base, "vector") ->
+        GraphQueries.keywordPerYear(bucketedG, "vector")).foreach {
+      case (want, got) =>
+        val scans = scansOf(got)
+        val tables = scans.map(_.tableIdentifier.map(_.table))
+        assert(scans.nonEmpty &&
+          tables.forall(_.exists(_.startsWith("bdg_spec_"))),
+          s"scans outside the binding's tables: $tables")
+        val alias = scans.filter(
+          _.tableIdentifier.exists(_.table == "bdg_spec_kw_alias"))
+        assert(alias.size === 1)
+        assert(alias.head.optionalBucketSet.map(_.cardinality()) === Some(1))
+        val files = alias.head.inputRDDs().head.partitions.toSeq.flatMap {
+          case p: FilePartition => p.files.map(_.filePath.toString).toSeq
+          case _ => Nil
+        }
+        assert(files.distinct.size === 1, files)
+        assert(got.collect().toSeq === want.collect().toSeq)
+        assert(want.collect().nonEmpty)
+    }
+  }
+
+  test("the stored kw_alias table holds the in-memory alias mapping, " +
+      "synthetic and ingested") {
+    assert(mappingRows(spark.table("bdg_spec_kw_alias")) ===
+      mappingRows(base.kwMapping))
+    DocGraph.bucketed(ingested, "bdg_ing_spec", 4)
+    val want = mappingRows(ingested.kwMapping)
+    assert(want.nonEmpty)
+    assert(mappingRows(spark.table("bdg_ing_spec_kw_alias")) === want)
+  }
+
+  test("the rel_type guard is proved on the plan: no Spark job for the " +
+      "synthetic or ingested binding") {
+    Seq(base, ingested).foreach { g =>
+      assert(TestSpark.countJobs(DocGraph.requireKnownRelTypes(g.edges))._2 === 0)
+    }
   }
 
   test("per-relation pruning leaves a single scan per view; the 2-hop " +

@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.apache.spark.sql.functions.{col, upper}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -23,19 +24,45 @@ class ServedBindingSpec extends AnyFunSuite {
     g.docs.agg(sum(crc32(col("abstract"))).cast("long")).head.getLong(0)
   }
 
+  /** The binding's stored alias mapping, as sorted (original, rep) rows. */
+  private def mapping(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
+    df.select("original", "representative").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+
+  /** Serve `d` under the spec's prefix and check that the stored alias
+    * mapping was rebuilt with the docs: it lives in the prefix's tables
+    * too, so a stale serve would answer families 6/10 from the old corpus.
+    */
+  private def served(d: String): DocGraph = {
+    val g = DocGraph.bucketedServed(spark, d, "graft_served_spec", 8)
+    assert(mapping(g.kwMapping) === mapping(BibGraph.keywordMapping(spark, d)),
+      s"stored alias mapping is not $d's")
+    g
+  }
+
   test("bucketedServed rebuilds when the same prefix points at a new source dir") {
     val d1 = TestSpark.TinySf
-    val g1 = DocGraph.bucketedServed(spark, d1, "graft_served_spec", 8)
+    val g1 = served(d1)
     val fp1 = fp(g1)
     assert(g1.docs.count() > 0)
     // second call, same dir: serves (content identical)
-    assert(fp(DocGraph.bucketedServed(spark, d1, "graft_served_spec", 8)) === fp1)
+    assert(fp(served(d1)) === fp1)
     // same prefix, different source: must NOT serve d1's tables
     val d2 = "/root/testdata/sf0.01"
-    val fp2 = fp(DocGraph.bucketedServed(spark, d2, "graft_served_spec", 8))
+    val fp2 = fp(served(d2))
     assert(fp2 !== fp1,
       "identical docs fingerprint after switching source dirs — stale serve?")
     // and switching BACK also rebuilds (the guard is last-dir, not a set)
-    assert(fp(DocGraph.bucketedServed(spark, d1, "graft_served_spec", 8)) === fp1)
+    assert(fp(served(d1)) === fp1)
+    // sf0.001 and sf0.01 share one vocabulary, so their mappings agree; a
+    // source with its own vocabulary makes a stale mapping visible
+    val d3 = java.nio.file.Files.createTempDirectory("served_vocab").toString
+    graft.Tables.documents(spark, d1)
+      .withColumn("text", upper(col("text")))
+      .write.parquet(s"$d3/documents.parquet")
+    assert(mapping(BibGraph.keywordMapping(spark, d3)) !==
+      mapping(BibGraph.keywordMapping(spark, d1)))
+    served(d3)
+    served(d1)
   }
 }

@@ -69,6 +69,26 @@ class TaggedTextSpec extends AnyFunSuite {
     assert(out === cases.map(_._2))
   }
 
+  test("parse reads a glob as its expanded file list: same provenance " +
+      "and blocks; a glob matching nothing still fails path-not-found") {
+    val glob = TaggedQueries.ErFixtureGlob
+    // what a plain glob read sees: each file's name, area and block count
+    val want = spark.read.option("wholetext", "true").text(glob)
+      .select(input_file_name(), $"value").as[(String, String)].collect()
+      .map { case (f, text) =>
+        (f, f.split("/").takeRight(3).head,
+          TaggedText.parseEntries(text).size.toLong)
+      }.toSet
+    val got = TaggedText.parse(spark, glob)
+      .groupBy($"src_file", $"area").count()
+      .as[(String, String, Long)].collect().toSet
+    assert(want.size > 1 && got === want)
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      TaggedText.parse(spark, glob.stripSuffix(".txt") + ".nomatch")
+    }
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+  }
+
   test("ingest output round-trips through the typed Dataset[DocRecord]") {
     val ds = graft.model.DocRecord.typed(
       TaggedText.ingest(spark, TaggedQueries.FixtureGlob))

@@ -159,35 +159,10 @@ class AnswerServiceSpec extends AnyFunSuite {
   }
 
   test("a family-1 answer over the bucketed binding is one Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
-      SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val markerDone = new java.util.concurrent.CountDownLatch(1)
-    val markerJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some("answer_one_job") => jobs.incrementAndGet()
-          case Some("answer_one_job_marker") => markerJobs.add(e.jobId)
-          case _ =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (markerJobs.contains(e.jobId)) markerDone.countDown()
-    }
     val req = AnswerRequest("family=1 title=D42")
     answer(servedG, req) // plan and codegen outside the counted window
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("answer_one_job", "family-1 answer")
-      val resp = try answer(servedG, req) finally sc.clearJobGroup()
-      assert(resp.rows > 0)
-      // listener events arrive in order: once a later job's end is seen,
-      // every job start of the answer has been counted
-      sc.setJobGroup("answer_one_job_marker", "listener barrier")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      assert(jobs.get() === 1)
-    } finally sc.removeSparkListener(listener)
+    val (resp, jobs) = TestSpark.countJobs(answer(servedG, req))
+    assert(resp.rows > 0)
+    assert(jobs === 1)
   }
 }
