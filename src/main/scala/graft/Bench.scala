@@ -420,7 +420,7 @@ object Bench {
     // every timed region.
     sys.env.get("SPARK_GRAFT_CC_MAX_DRIVER_EDGES")
       .foreach(v => builder.config(
-        graft.resolve.EntityResolution.MaxDriverCcEdgesConf, v))
+        graft.resolve.Kernels.MaxDriverCcEdgesConf, v))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // noop-sink materialization: unlike .count(), it cannot be optimized

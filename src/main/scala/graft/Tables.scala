@@ -27,4 +27,20 @@ object Tables {
   def events(s: SparkSession, d: String): DataFrame    = load(s, d, "events")
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+
+  /** One row per file (`value`: the whole text) under a path or glob.
+    * The glob is expanded on the driver and the explicit file list is
+    * read: a single glob path makes the file source probe it as a
+    * directory for streaming-sink metadata, which fails and logs a stack
+    * trace on every read. A glob matching nothing is read as given, so it
+    * still fails with Spark's PATH_NOT_FOUND.
+    */
+  def wholeTextFiles(s: SparkSession, pathOrGlob: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(pathOrGlob)
+    val fs = path.getFileSystem(s.sessionState.newHadoopConf())
+    val matched =
+      Option(fs.globStatus(path)).toSeq.flatten.map(_.getPath.toString)
+    s.read.option("wholetext", "true")
+      .text((if (matched.isEmpty) Seq(pathOrGlob) else matched): _*)
+  }
 }

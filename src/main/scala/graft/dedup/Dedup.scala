@@ -202,7 +202,7 @@ object Dedup {
       val pairs = text.unionByName(emb).distinct()
         .select($"d1".as("u"), $"d2".as("v"))
       val verts = Tables.documents(s, d).select($"doc_id".as("vec_id"))
-      graft.resolve.EntityResolution.connectedComponents(s, verts, pairs)
+      graft.resolve.Kernels.connectedComponents(s, verts, pairs)
         .select($"vec_id".as("doc_id"), $"component".as("rep_id"))
         .orderBy($"doc_id")
     }),
@@ -302,9 +302,9 @@ object Dedup {
     val assigned = graft.similarity.Similarity.ivfAssigned(s, d)
     val a = assigned.as("a")
     val b = assigned.as("b")
-    a.join(b, $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")
-      .withColumn("dot", VectorOps.dot($"a.e", $"b.e"))
-      .filter($"dot" > 0 && $"dot" * $"dot" * 16 >= $"a.nrm" * $"b.nrm")
+    graft.resolve.Kernels
+      .cellEps(a.join(b, $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id"),
+        1, 4)
       .select($"a.vec_id".as("v1"), $"b.vec_id".as("v2"), $"dot",
         $"a.nrm".as("na"), $"b.nrm".as("nb"))
   }

@@ -202,20 +202,22 @@ object BucketedStore {
       }
   }
 
-  /** Run independent driver-side write tasks concurrently from a bounded
-    * pool (≤3 in flight — guide §2.6: "2-3 jobs in flight is plenty"),
-    * settle ALL of them, then surface the first failure (fail-fast would
-    * tear down state under surviving writers — the DocGraph discipline).
-    * Callers guarantee independence: no task reads a table another task
-    * writes.
+  /** Run independent driver-side tasks concurrently from a pool of at
+    * most `threads` (a few jobs in flight keep the executors busy between
+    * tiny stages without swamping the driver's scheduler), settle ALL of
+    * them, then surface the first failure — failing fast would tear down
+    * state, such as persisted inputs, under surviving tasks. Returns the
+    * results in task order. Callers guarantee independence: no task
+    * reads a table another task writes.
     */
-  private[graft] def concurrently(tasks: Seq[() => Unit]): Unit =
-    if (tasks.size == 1) tasks.head()
+  private[graft] def concurrently[T](tasks: Seq[() => T],
+      threads: Int = 3): Seq[T] =
+    if (tasks.size <= 1) tasks.map(_())
     else {
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(3, tasks.size))
+        math.min(threads, tasks.size))
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
       try {
         val settled = Await.result(
@@ -224,6 +226,7 @@ object BucketedStore {
           Duration.Inf)
         settled.collectFirst { case scala.util.Failure(e) => e }
           .foreach(throw _)
+        settled.map(_.get)
       } finally pool.shutdown()
     }
 

@@ -154,39 +154,16 @@ object DocGraph {
     val s = g.docs.sparkSession
     requireKnownRelTypes(g.edges)
     // The eight table writes are independent of each other — submit them
-    // CONCURRENTLY from a bounded driver pool (guide §2.6 "overlap
-    // independent jobs", the GraphDump discipline): sequentially each
-    // small write left the executors ~idle between tiny stages, and the
-    // ingest wall time was the SUM of eight mostly-single-task jobs
-    // instead of the longest one. Await every writer, then surface the
-    // first failure once nothing is in flight (fail-fast would unpersist
-    // frames under surviving writers).
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      try {
-        val writes = RelJoinKeys.map { case (rel, key) =>
-          Future {
-            BucketedStore.writeBucketed(
-              g.edges.filter(col("rel_type") === rel).select("src", "dst"),
-              s"${prefix}_${rel.toLowerCase}", key, buckets)
-          }
-        } :+ Future {
-          BucketedStore.writeBucketed(g.docs, s"${prefix}_docs", "title",
-            buckets)
-        } :+ Future {
-          BucketedStore.writeBucketed(g.kwMapping, s"${prefix}_kw_alias",
-            "original", buckets)
-        }
-        val settled = Await.result(
-          Future.sequence(writes.map(_.transform(scala.util.Success(_)))),
-          Duration.Inf)
-        settled.collectFirst { case scala.util.Failure(e) => e }
-          .foreach(throw _)
-      } finally pool.shutdown()
-    }
+    // concurrently: sequentially each small write left the executors
+    // ~idle between tiny stages, and the ingest wall time was the SUM of
+    // eight mostly-single-task jobs instead of the longest one.
+    val writes = RelJoinKeys.map { case (rel, key) =>
+      (g.edges.filter(col("rel_type") === rel).select("src", "dst"),
+        rel.toLowerCase, key)
+    } ++ Seq((g.docs, "docs", "title"), (g.kwMapping, "kw_alias", "original"))
+    BucketedStore.concurrently(writes.map { case (df, t, key) =>
+      () => BucketedStore.writeBucketed(df, s"${prefix}_$t", key, buckets)
+    }, threads = 4)
     readBucketedBinding(s, prefix)
   }
 

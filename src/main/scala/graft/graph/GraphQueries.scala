@@ -233,7 +233,7 @@ object GraphQueries {
     val ids = au.select($"author").distinct()
       .select($"author", xxhash64($"author").as("vec_id"))
     val seedId = new XxHash64(Seq(Literal(seed))).eval().asInstanceOf[Long]
-    graft.resolve.EntityResolution
+    graft.resolve.Kernels
       .bfsReach(s, ids.select($"vec_id"), coEdges, seedId, maxHops)
       .join(ids, "vec_id")
       .select($"author", $"hops")
@@ -336,7 +336,7 @@ object GraphQueries {
       val verts = au.select($"author").distinct()
         .select(xxhash64($"author").as("vec_id"), $"author")
       val pairs = e.select(xxhash64($"a").as("u"), xxhash64($"b").as("v"))
-      val cc = graft.resolve.EntityResolution
+      val cc = graft.resolve.Kernels
         .connectedComponents(s, verts.select("vec_id"), pairs)
       val named = cc.join(verts, "vec_id")
       val reps = named.groupBy($"component")

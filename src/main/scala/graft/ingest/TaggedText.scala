@@ -46,19 +46,8 @@ object TaggedText {
     * (`cleaner.py:198-217` — grandparent directory of the file).
     * Output: src_file, area, block_idx, fields: map<string,string>.
     */
-  def parse(spark: SparkSession, dir: String): DataFrame = {
-    // Expand the glob on the driver and read the explicit file list: a
-    // single glob path makes the file source probe it as a directory for
-    // streaming-sink metadata, which fails and logs a stack trace on every
-    // ingest; a multi-path read skips that probe. A glob matching nothing
-    // is read as given, so it still fails with Spark's path-not-found.
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val matched =
-      Option(fs.globStatus(path)).toSeq.flatten.map(_.getPath.toString)
-    val paths = if (matched.isEmpty) Seq(dir) else matched
-    parsedFrom(spark, spark.read.option("wholetext", "true").text(paths: _*))
-  }
+  def parse(spark: SparkSession, dir: String): DataFrame =
+    parsedFrom(spark, graft.Tables.wholeTextFiles(spark, dir))
 
   /** Streaming twin of [[parse]]: a file-source stream over the same
     * layout — each newly arriving export file becomes one micro-batch of

@@ -35,7 +35,7 @@ object QueryText {
   def replayStatements(s: SparkSession, logGlob: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val stmts = s.read.option("wholetext", "true").text(logGlob)
+    val stmts = graft.Tables.wholeTextFiles(s, logGlob)
       .select(input_file_name().as("src_file"),
         posexplode(expr(
           """regexp_extract_all(value, '执行查询时出错:\\s*(.+?;)', 1)"""))

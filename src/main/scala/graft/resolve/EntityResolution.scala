@@ -1,30 +1,20 @@
 package graft.resolve
 
-import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.VectorOps
 
 /** Entity resolution — the reference's flagship operator (SURVEY.md §2.8,
   * `keyword_merger.py:103-266`): embed → DBSCAN(eps, min_samples=2,
   * cosine) → representative = lexicographic min per cluster, noise → self.
+  * The ε-pair and connected-components kernels it composes live in
+  * [[Kernels]]; this object holds the term universes, the incremental
+  * merges, the day-0 snapshots, the serve-cache registry and the
+  * query/oracle registry.
   *
-  * With `min_samples=2` DBSCAN clusters are EXACTLY the connected
-  * components of the ε-neighborhood graph and noise = isolated vertices
-  * (`keyword_merger.py:191-197`), so the faithful Spark implementation is
-  * an ε-neighbor cosine join → GraphX `connectedComponents` (Pregel) →
-  * `groupBy(component).agg(min(id))`. GraphX CC labels every vertex with
-  * the minimum vertex id of its component, which IS the min-representative
-  * rule for numeric ids — one pass, no extra agg.
-  *
-  * Exactness: the ε-join here is the exact all-pairs integer-cosine join
-  * (VectorOps quantization; cos ≥ 0.35 ⟺ dot>0 ∧ 400·dot² ≥ 49·|a|²|b|²)
-  * — the correctness baseline the DuckDB recursive-CTE oracle can verify.
-  * At 100 TB the candidate join swaps to LSH/IVF blocking (the q33/q41
-  * machinery) feeding the same CC — approximate-but-scalable, per the
-  * north star; CC itself is iterative Pregel: spill-capable, shuffle per
-  * superstep on the edge partitioning.
+  * Exactness: the exact all-pairs ε-join is the correctness baseline the
+  * DuckDB recursive-CTE oracle can verify; at 100 TB the candidate join
+  * swaps to IVF blocking feeding the same CC — approximate but scalable.
   *
   * `refinedMapping` models `recorrect_mapping.py:130-213`: regroup
   * clusters (J11), gate on cluster size (A9, `min_cluster_size_for_api`),
@@ -33,318 +23,6 @@ import graft.functions.VectorOps
   * oracles stay hermetic (SURVEY §7.5 risk 5).
   */
 object EntityResolution {
-
-  /** ε-neighbor pairs (u < v) with cos ≥ num/den over any
-    * (vec_id, embedding: array<float>) frame, exact integers:
-    * cos ≥ n/d ⟺ dot>0 ∧ d²·dot² ≥ n²·|a|²|b|².
-    *
-    * Shape: the quantization runs in the existing Column pipeline (bit
-    * parity with every other consumer), then the O(n²) pair loop runs as
-    * a broadcast + `mapPartitions` over primitive long arrays — the same
-    * broadcast one side/stream the other dataflow a
-    * BroadcastNestedLoopJoin plans, minus its per-pair row machinery
-    * (~5× on the 2M-pair fixture kernel). This exact kernel is the
-    * test-scale correctness anchor by design (SURVEY §7.5 risk 1); the
-    * production-scale candidate generation is the blocked q52 path.
-    */
-  /** Ceiling on the exact kernel's input — the broadcast side must fit on
-    * the driver and the pair loop is O(n²); term universes (orgs,
-    * addresses, keywords: ~10²-10⁵ in the reference) sit far below it,
-    * corpora sit far above. */
-  val MaxExactVectors: Long = 1000000L
-
-  /** ONE-JOB bounded collect for the limit-probed guards (round 19,
-    * guide §1.5 — collapse probe actions): `limit(n).collect()` plans
-    * CollectLimitExec, whose executeTake scans partitions in escalating
-    * rounds (1, 4, 16, ...) — and since an IN-CAP input never hits the
-    * limit, every probe paid ~log₄(partitions) job submissions to
-    * collect a frame the next line uses whole (the lifecycle census
-    * measured 5 jobs per probe, ~0.3 s of pure scheduling per CC call
-    * at bench scale). `coalesce(1)` under the limit makes the result
-    * stage a single task, so the collect is exactly one job; upstream
-    * shuffle (map) stages keep their full parallelism — only the final
-    * fetch+filter funnels through one task, which is bounded by the cap
-    * (the same rows the driver was about to hold anyway). Row order is
-    * IDENTICAL to executeTake's: coalesce concatenates parent
-    * partitions in index order. Over-cap inputs stop at `lim` rows via
-    * the per-partition LocalLimit, as before.
-    */
-  private def collectUpTo[T](ds: org.apache.spark.sql.Dataset[T],
-      lim: Int): Array[T] =
-    ds.coalesce(1).limit(lim).collect()
-
-  def epsPairsOf(emb0: DataFrame, num: Int, den: Int,
-                 maxExactVectors: Long = MaxExactVectors): DataFrame = {
-    val s = emb0.sparkSession
-    import s.implicits._
-    val typed = emb0
-      .select(col("vec_id").cast("long"),
-        VectorOps.quantize(col("embedding")).as("e"))
-      .as[(Long, Array[Long])]
-    // self-enforcing contract: nothing STOPPED a future query from
-    // pointing the exact kernel at a corpus-scale frame — the guard fails
-    // loudly, naming the scale path. One limit-probed collect serves as
-    // both the guard and the broadcast build side (a separate count()
-    // would execute the upstream lineage — for the ingested-term callers,
-    // the whole tagged parse — a second time).
-    val cap = math.min(maxExactVectors, Int.MaxValue - 1L).toInt
-    val rows = collectUpTo(typed, cap + 1)
-    require(rows.length <= cap,
-      s"epsPairsOf is the EXACT all-pairs kernel (driver-broadcast build " +
-        s"side, O(n^2) compare loop): input exceeds " +
-        s"maxExactVectors=$maxExactVectors. Use blockedEpsPairs (IVF-cell " +
-        "equi join, fully distributed) for corpus-scale inputs.")
-    // broadcast the quantized corpus (the build side of the pair loop)
-    val side = s.sparkContext.broadcast(rows.sortBy(_._1))
-    val n2 = num.toLong * num
-    val d2 = den.toLong * den
-    // spread the probe side: a small term/embedding frame reads as 1-2
-    // parquet splits, which would serialize the whole O(n²) compare loop
-    // onto as many cores (measured: q89's 40k-term universe at the 100×
-    // bench scale spent 150 s single-threaded; 32-way it is ~5 s). The
-    // shuffle this adds is n skinny rows — noise next to the loop once n
-    // is large, but a measurable tax when it isn't (q50/q51 +22–34% at
-    // sf0.1), so small universes keep their natural splits: below the
-    // threshold the whole loop is ≤ ~32M compares — subsecond either way.
-    val spread =
-      if (rows.length >= 8192) typed.repartition(s.sparkContext.defaultParallelism)
-      else typed
-    spread.mapPartitions { it =>
-      val all = side.value
-      val norms = all.map { case (_, w) =>
-        var s0 = 0L; var i = 0
-        while (i < w.length) { s0 += w(i) * w(i); i += 1 }
-        s0
-      }
-      it.flatMap { case (id, v) =>
-        var nv = 0L
-        var i = 0
-        while (i < v.length) { nv += v(i) * v(i); i += 1 }
-        // binary search: candidates are strictly-greater ids
-        var lo = 0
-        var hi = all.length
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (all(mid)._1 <= id) lo = mid + 1 else hi = mid
-        }
-        (lo until all.length).iterator.flatMap { j =>
-          val w = all(j)._2
-          var dot = 0L
-          var k = 0
-          val len = math.min(v.length, w.length)
-          while (k < len) { dot += v(k) * w(k); k += 1 }
-          // 128-bit exact compare of dot²·den² vs |a|²|b|²·num² — for
-          // unit-norm 1e4-quantized vectors the 64-bit products have only
-          // ~2× headroom and larger-norm embeddings would silently wrap;
-          // the scaled compare keeps the predicate exact at any magnitude
-          // (and agrees with the oracle's HUGEINT arithmetic).
-          if (dot > 0 && cmpScaled(dot, d2, nv, n2, norms(j)) >= 0)
-            Some((id, all(j)._1))
-          else None
-        }
-      }
-    }.toDF("u", "v")
-  }
-
-  /** Exact ε-pairs with one endpoint in `batch` and the other in `probe`
-    * (DISJOINT id sets by contract — the serve split of an update batch
-    * vs its retraction survivors): the BATCH is the collected/broadcast
-    * build side, so the driver transfer and the guard are sized by the
-    * batch, not the term universe, and the probe side streams through in
-    * one pass — for the serve callers a single columnar read of the
-    * stored survivors table. Emits each qualifying pair once, ordered
-    * (u, v) = (least, greatest). Batch×batch pairs are NOT emitted here;
-    * callers union [[epsPairsOf]] over the batch alone, and the two
-    * outputs together equal `epsPairsOf(probe ∪ batch)` restricted to
-    * pairs with a batch endpoint — at O(|probe|·|batch| + |batch|²)
-    * compares instead of O((|probe|+|batch|)²), which is what makes the
-    * serve cost proportional to the affected set (the round-12 verdict's
-    * q157 finding: the unioned form recomputed the full-universe kernel
-    * and collected the whole universe to the driver on EVERY serve
-    * call, inverting the build-once/serve-many premise).
-    */
-  private[resolve] def epsPairsAgainst(probe: DataFrame, batch: DataFrame,
-      num: Int, den: Int,
-      maxExactVectors: Long = MaxExactVectors): DataFrame =
-    crossPairsOf(probe,
-      collectBatchQuantized(batch, "epsPairsAgainst", maxExactVectors),
-      num, den)
-
-  /** The shared batch collect + size guard of the batch-side exact
-    * kernels (the epsPairsOf discipline: one limit-probed collect is
-    * both the guard and the build side). */
-  private def collectBatchQuantized(batch: DataFrame, who: String,
-      maxExactVectors: Long): Array[(Long, Array[Long])] = {
-    val s = batch.sparkSession
-    import s.implicits._
-    val cap = math.min(maxExactVectors, Int.MaxValue - 1L).toInt
-    val bRows = collectUpTo(batch
-      .select(col("vec_id").cast("long"),
-        VectorOps.quantize(col("embedding")).as("e"))
-      .as[(Long, Array[Long])], cap + 1)
-    require(bRows.length <= cap,
-      s"$who broadcasts the BATCH side (exact kernel): batch " +
-        s"exceeds maxExactVectors=$maxExactVectors. Use blockedEpsPairs " +
-        "for corpus-scale batches.")
-    bRows
-  }
-
-  /** The probe×batch cross kernel of [[epsPairsAgainst]] over an
-    * already-collected batch: the batch is the broadcast build side, the
-    * probe streams through in one pass. */
-  private def crossPairsOf(probe: DataFrame,
-      bRows: Array[(Long, Array[Long])], num: Int, den: Int): DataFrame = {
-    val s = probe.sparkSession
-    import s.implicits._
-    val quantP = probe
-      .select(col("vec_id").cast("long"),
-        VectorOps.quantize(col("embedding")).as("e"))
-      .as[(Long, Array[Long])]
-    val side = s.sparkContext.broadcast(bRows)
-    val n2 = num.toLong * num
-    val d2 = den.toLong * den
-    // spread the probe when the per-row compare work is heavy (same
-    // threshold rationale as epsPairsOf: below it the whole loop is
-    // ≤ ~32M compares — subsecond on natural splits)
-    val spreadP =
-      if (bRows.length >= 8192)
-        quantP.repartition(s.sparkContext.defaultParallelism)
-      else quantP
-    spreadP.mapPartitions { it =>
-      val all = side.value
-      val norms = all.map { case (_, w) =>
-        var s0 = 0L; var i = 0
-        while (i < w.length) { s0 += w(i) * w(i); i += 1 }
-        s0
-      }
-      it.flatMap { case (id, v) =>
-        var nv = 0L
-        var i = 0
-        while (i < v.length) { nv += v(i) * v(i); i += 1 }
-        all.indices.iterator.flatMap { j =>
-          val (bid, w) = all(j)
-          var dot = 0L
-          var k = 0
-          val len = math.min(v.length, w.length)
-          while (k < len) { dot += v(k) * w(k); k += 1 }
-          if (dot > 0 && cmpScaled(dot, d2, nv, n2, norms(j)) >= 0)
-            Some((math.min(id, bid), math.max(id, bid)))
-          else None
-        }
-      }
-    }.toDF("u", "v")
-  }
-
-  /** The full serve-batch pair set — every ε-pair with at least one
-    * batch endpoint: (probe×batch cross pairs) ∪ (batch×batch pairs) —
-    * in ONE batch collect (round 19, guide §1.5: the serve/lifecycle
-    * callers previously ran `epsPairsAgainst(probe, batch) ∪
-    * epsPairsOf(batch)`, whose two kernels each collected the identical
-    * quantized batch to the driver — two probe jobs per day where one
-    * suffices). The single collect is guard, broadcast build side AND
-    * the batch×batch input: under the spread threshold the batch×batch
-    * half runs as a driver loop over the collected rows — zero extra
-    * jobs, the identical predicate arithmetic and (u < v) orientation
-    * as [[epsPairsOf]] (pairs emitted only for strictly increasing ids,
-    * so duplicate-id parity holds too); a batch past the threshold
-    * keeps the distributed batch×batch kernel.
-    */
-  private[resolve] def batchEndpointPairs(probe: DataFrame,
-      batch: DataFrame, num: Int, den: Int,
-      maxExactVectors: Long = MaxExactVectors): DataFrame = {
-    val s = probe.sparkSession
-    import s.implicits._
-    val bRows = collectBatchQuantized(batch, "batchEndpointPairs",
-      maxExactVectors)
-    val cross = crossPairsOf(probe, bRows, num, den)
-    val bb =
-      if (bRows.length >= 8192) epsPairsOf(batch, num, den, maxExactVectors)
-      else {
-        val sorted = bRows.sortBy(_._1)
-        val norms = sorted.map { case (_, w) =>
-          var s0 = 0L; var i = 0
-          while (i < w.length) { s0 += w(i) * w(i); i += 1 }
-          s0
-        }
-        val n2 = num.toLong * num
-        val d2 = den.toLong * den
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-        var i = 0
-        while (i < sorted.length) {
-          val (id, v) = sorted(i)
-          var j = i + 1
-          while (j < sorted.length) {
-            val (jd, w) = sorted(j)
-            if (jd > id) {
-              var dot = 0L
-              var k = 0
-              val len = math.min(v.length, w.length)
-              while (k < len) { dot += v(k) * w(k); k += 1 }
-              if (dot > 0 && cmpScaled(dot, d2, norms(i), n2, norms(j)) >= 0)
-                out += ((id, jd))
-            }
-            j += 1
-          }
-          i += 1
-        }
-        s.createDataset(out.toSeq).toDF("u", "v")
-      }
-    cross.unionByName(bb)
-  }
-
-  /** Sign of dot²·d2 − nv·nw·n2, exact at ANY operand magnitude. Fast
-    * path: when the pre-scaled factors (dot·d2, nv·n2) themselves fit in
-    * a Long, [[cmp128]] compares the two 128-bit products with
-    * `multiplyHigh` intrinsics (no allocation). Otherwise — embeddings
-    * whose quantized norms push dot·d2 past 63 bits — fall back to BigInt
-    * (allocates, but only for such extreme inputs; never silently wraps).
-    */
-  private def cmpScaled(dot: Long, d2: Long, nv: Long, n2: Long,
-                        nw: Long): Int =
-    if (dot <= Long.MaxValue / d2 && nv <= Long.MaxValue / n2)
-      cmp128(dot * d2, dot, nv * n2, nw)
-    else
-      (BigInt(dot) * BigInt(dot) * d2).compare(BigInt(nv) * BigInt(nw) * n2)
-
-  /** Compare the 128-bit products a·b vs c·d (all operands non-negative
-    * and within Long range): sign of a·b − c·d. `Math.multiplyHigh` is an
-    * intrinsic — two extra multiplies per pair, no allocation.
-    */
-  private def cmp128(a: Long, b: Long, c: Long, d: Long): Int = {
-    val hi1 = Math.multiplyHigh(a, b)
-    val hi2 = Math.multiplyHigh(c, d)
-    if (hi1 != hi2) java.lang.Long.compare(hi1, hi2)
-    else java.lang.Long.compareUnsigned(a * b, c * d)
-  }
-
-  /** ε-neighbor pairs with the production threshold cos ≥ 0.35 (= 7/20). */
-  def epsPairs(s: SparkSession, d: String): DataFrame =
-    epsPairsOf(Tables.embeddings(s, d), 7, 20)
-
-  /** The 100 TB-scale candidate generation: ε-neighbor pairs restricted to
-    * IVF centroid cells (the q41 coarse assignment) — an equi join on the
-    * bucket id, no all-pairs loop and no driver `collect()` anywhere in
-    * the lineage. Approximate: cross-cell neighbors are missed (standard
-    * IVF recall trade; nprobe>1 narrows it). Every graph-analytics query
-    * (q52 CC, q53 BFS, q54 PageRank) consumes THIS frame; the exact
-    * broadcast kernel above is only the q50 correctness anchor.
-    *
-    * Overflow note: the `dot*dot*400` column math runs under Spark 4 ANSI
-    * mode, which THROWS on Long overflow rather than wrapping — quantized
-    * unit-norm embeddings leave ~2× headroom (|dot| ≤ 1e8, dot²·400 ≤
-    * 4e18 < 2⁶³); larger-norm corpora would fail loudly, not corrupt.
-    */
-  def blockedEpsPairs(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val assigned = graft.similarity.Similarity.ivfAssigned(s, d)
-    val a = assigned.as("a")
-    val b = assigned.as("b")
-    a.join(b, $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")
-      .withColumn("dot", VectorOps.dot($"a.e", $"b.e"))
-      .filter($"dot" > 0 &&
-        $"dot" * $"dot" * 400 >= $"a.nrm" * $"b.nrm" * 49)
-      .select($"a.vec_id".as("u"), $"b.vec_id".as("v"))
-  }
 
   // --------------------------------------------------------------------
   // Organization / Author_Address resolution (the reference applies the
@@ -386,8 +64,8 @@ object EntityResolution {
     */
   def aliasMapping(terms: DataFrame, num: Int, den: Int): DataFrame = {
     val s = terms.sparkSession
-    val comp = connectedComponents(s, terms.select("vec_id"),
-      epsPairsOf(terms, num, den))
+    val comp = Kernels.connectedComponents(s, terms.select("vec_id"),
+      Kernels.epsPairsOf(terms, num, den))
     val named = comp.join(terms.select(col("vec_id"), col("term")), "vec_id")
     val reps = named.groupBy(col("component"))
       .agg(min(col("term")).as("representative"))
@@ -486,531 +164,18 @@ object EntityResolution {
       .distinct()
   }
 
-  /** Connected components over an (u, v) edge frame for the given vertex
-    * frame (one `vec_id` column). Returns (vec_id, component) where
-    * component = min vec_id reachable — DBSCAN(min_samples=2) parity.
-    *
-    * SIZE-ADAPTIVE since round 18 (guide §1.2 "the distributed
-    * algorithm" + §2.4 "remove shuffles outright"): every standing-build
-    * call site paid GraphX Pregel's fixed multi-second floor (graph
-    * build + ~10 superstep job submissions) even when the whole graph
-    * was a few thousand vertices — at the bench scales that floor, not
-    * the data, dominated the entire incremental-ER family (q141/q146/
-    * q151 ~6–11 s each at sf0.1 with 2 000-row inputs). The probe-and-
-    * collect driver kernel that [[connectedComponentsAdaptive]] has
-    * used for the serve paths since round 11 applies unchanged here:
-    * under [[MaxDriverCcEdges]] run union-find on the driver
-    * (bit-identical min-reachable-id labels, spec-pinned by
-    * `IncrementalErSpec`/`AdaptiveCcSpec`), above it take the
-    * distributed Pregel path below — corpus-scale graphs at 100 TB
-    * still iterate in the cluster.
-    */
-  def connectedComponents(s: SparkSession, vertices: DataFrame,
-                          pairs: DataFrame): DataFrame =
-    connectedComponentsAdaptive(s, vertices, pairs)
-
-  /** The distributed (GraphX Pregel) CC kernel — the fallback above
-    * [[MaxDriverCcEdges]], unchanged from rounds 1–17 when it was the
-    * only path.
-    */
-  private[resolve] def connectedComponentsPregel(s: SparkSession,
-      vertices: DataFrame, pairs: DataFrame): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.storage.StorageLevel
-    // GraphX materializes its input RDDs several times while building and
-    // iterating the graph — without persist, the (expensive) ε-join above
-    // would re-execute once per materialization.
-    val vertRdd = vertices.select(col("vec_id").cast("long")).rdd
-      .map(r => (r.getLong(0), ()))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeRdd = pairs.select(col("u").cast("long"), col("v").cast("long")).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val graph = Graph(vertRdd, edgeRdd)
-    val ccGraph = graph.connectedComponents()
-    val out = ccGraph.vertices.toDF("vec_id", "component")
-    out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize once, then release every upstream cache
-    ccGraph.unpersist(blocking = false)
-    graph.unpersist(blocking = false)
-    vertRdd.unpersist(blocking = false)
-    edgeRdd.unpersist(blocking = false)
-    out
-  }
-
-  /** Ceiling on the adaptive CC's driver kernel: the probe collects at
-    * most this many vertices and edges (16 B/edge ⇒ ≤ ~64 MB driver
-    * transfer at the cap), and union-find over 2M edges runs in tens of
-    * milliseconds. Affected-set graphs of the incremental-ER serve paths
-    * sit far below it (the 100× dense fixture peaks near 1.4M edges);
-    * corpus-scale standing builds sit above and take Pregel.
-    */
-  val MaxDriverCcEdges: Int = 2000000
-
-  /** Conf override for [[MaxDriverCcEdges]] — the scale-dependent knob
-    * parameterized (round-18 verdict item 5): a cluster deployment sizes
-    * the driver kernel's ceiling to its driver memory, and a bench cell
-    * sets it to 0 to FORCE the distributed Pregel/RDD kernels at a scale
-    * where every graph would otherwise route to the driver — the
-    * over-cap observation that keeps a Pregel regression from hiding
-    * behind the driver kernel. Only consulted when the caller leaves the
-    * parameter at its default; an explicit argument (the specs' small
-    * caps) always wins.
-    */
-  val MaxDriverCcEdgesConf = "spark.graft.cc.maxDriverEdges"
-
-  private def effectiveMaxDriverEdges(s: SparkSession, param: Int): Int =
-    if (param != MaxDriverCcEdges) param
-    else s.conf.getOption(MaxDriverCcEdgesConf).map(_.toInt).getOrElse(param)
-
-  /** ONE-JOB size probe for the adaptive kernels (round 19, guide §1.5 /
-    * §2.4 — collapse probe actions): the vertex and edge limit-collects
-    * were two job submissions per kernel call, and at bench scale the
-    * fixed submission cost dominated the tiny data. Collect the tagged
-    * union `(0, vec_id, 0) ∪ (1, u, v)` under ONE limit of 2·cap+1
-    * instead: if the limit was hit, some side exceeds cap by pigeonhole
-    * (both ≤ cap ⇒ total ≤ 2·cap) — and when it was not hit every row
-    * was collected, so the per-side counts are exact. Routing is
-    * therefore IDENTICAL to the two-probe version: fall back to the
-    * distributed kernel iff |V| > cap or |E| > cap.
-    *
-    * Returns the collected (vertices, edges) when both fit, None on
-    * fallback.
-    */
-  private def probeGraph(s: SparkSession, vertices: DataFrame,
-      pairs: DataFrame, cap: Int): Option[(Array[Long], Array[(Long, Long)])] = {
-    import s.implicits._
-    if (cap <= 0) return None
-    val lim = math.min(2L * cap + 1, Int.MaxValue - 1L).toInt
-    val rows = collectUpTo(vertices
-      .select(lit(0L).as("t"), col("vec_id").cast("long").as("a"),
-        lit(0L).as("b"))
-      .unionAll(pairs.select(lit(1L).as("t"), col("u").cast("long").as("a"),
-        col("v").cast("long").as("b")))
-      .as[(Long, Long, Long)], lim)
-    if (rows.length >= lim) return None
-    val (v, e) = rows.partition(_._1 == 0L)
-    if (v.length > cap || e.length > cap) None
-    else Some((v.map(_._2), e.map(r => (r._2, r._3))))
-  }
-
-  /** Adaptive CC for the incremental-merge serve paths. The merge
-    * algorithms bound their CC input to the AFFECTED components + batch
-    * — small by design ("serve cost proportional to the affected set")
-    * — yet GraphX Pregel carries a fixed multi-second floor (graph
-    * build, per-superstep job submission) that DOMINATED the sparse
-    * serve points: q156's 0.5%-batch serve cost within 10% of q155's
-    * 10%-batch serve at sf0.1 because both were paying the same Pregel
-    * overhead on near-empty graphs (round-11 verdict item 1). When the
-    * affected graph fits [[MaxDriverCcEdges]], collect it and run
-    * union-find with min-id labeling on the driver — bit-identical to
-    * GraphX's component = min reachable id, including GraphX's implicit
-    * promotion of edge endpoints missing from the vertex frame (the
-    * merge edge sets are closed over their vertex sets, so this is
-    * belt-and-braces parity, not a semantic difference). Larger affected
-    * sets fall back to the distributed [[connectedComponentsPregel]]; the
-    * limit-probed collect doubles as the size guard (the [[epsPairsOf]]
-    * discipline), and its cost on fallback is one extra materialization
-    * of a lineage Pregel was about to materialize several times anyway.
-    */
-  private[resolve] def connectedComponentsAdaptive(s: SparkSession,
-      vertices: DataFrame, pairs: DataFrame,
-      maxDriverEdges: Int = MaxDriverCcEdges): DataFrame = {
-    import s.implicits._
-    val (vrows, erows) =
-      probeGraph(s, vertices, pairs,
-        effectiveMaxDriverEdges(s, maxDriverEdges)) match {
-        case None => return connectedComponentsPregel(s, vertices, pairs)
-        case Some(ve) => ve
-      }
-    // index every id (vertex frame ∪ edge endpoints — GraphX parity)
-    val idx = new scala.collection.mutable.LongMap[Int](vrows.length * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long](vrows.length)
-    def intern(id: Long): Int =
-      idx.getOrElse(id, {
-        val i = ids.length; ids += id; idx.update(id, i); i
-      })
-    vrows.foreach(intern)
-    erows.foreach { case (u, v) => intern(u); intern(v) }
-    val parent = Array.tabulate(ids.length)(identity)
-    def find(x0: Int): Int = {
-      var x = x0
-      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-      x
-    }
-    erows.foreach { case (u, v) =>
-      val ru = find(idx(u)); val rv = find(idx(v))
-      if (ru != rv) parent(ru) = rv
-    }
-    // min id per root, then one labeled row per distinct id
-    val minOf = new Array[Long](ids.length)
-    java.util.Arrays.fill(minOf, Long.MaxValue)
-    var i = 0
-    while (i < ids.length) {
-      val r = find(i)
-      if (ids(i) < minOf(r)) minOf(r) = ids(i)
-      i += 1
-    }
-    val out = new Array[(Long, Long)](ids.length)
-    i = 0
-    while (i < ids.length) { out(i) = (ids(i), minOf(find(i))); i += 1 }
-    // no repartition (round-18 verdict item 4): LocalTableScanExec
-    // already parallelizes a driver-local result to
-    // min(rows, defaultParallelism) slices — the explicit round-robin
-    // repartition only added a gratuitous Exchange to every consumer
-    // (q151's plan carried 48 of them; q54 planned back-to-back
-    // Exchanges under its Sort) and re-shuffled the tiny frame once per
-    // downstream evaluation.
-    s.createDataset(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
-      .toDF("vec_id", "component")
-  }
-
   /** Full resolution: ε-join → CC → (vec_id, component). */
   def resolve(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val verts = Tables.embeddings(s, d).select($"vec_id")
-    connectedComponents(s, verts, epsPairs(s, d))
+    Kernels.connectedComponents(s, verts, Kernels.epsPairs(s, d))
   }
 
-  /** Variable-length traversal (SURVEY §2.3 J10 note: "GraphX/Pregel BFS
-    * when hop count is a parameter"): vertices within `maxHops` of the
-    * seed over an undirected (u, v) edge frame. Pregel with hop-count
-    * messages; state = min hops seen.
-    */
-  def bfsReach(s: SparkSession, vertices: DataFrame, pairs: DataFrame,
-               seed: Long, maxHops: Int,
-               maxDriverEdges: Int = MaxDriverCcEdges): DataFrame = {
-    // SIZE-ADAPTIVE (round 18, the [[connectedComponents]] discipline):
-    // under [[MaxDriverCcEdges]] collect and run a depth-limited BFS on
-    // the driver — bit-identical to the Pregel kernel below (min hops
-    // seen, reachable-within-maxHops rows only; both assume the edge
-    // set is closed over the vertex frame, which every caller
-    // guarantees) — instead of paying maxHops Pregel supersteps of job
-    // submission on a graph of a few thousand vertices. Larger graphs
-    // take the distributed path unchanged. Probe is the shared one-job
-    // [[probeGraph]] (round 19).
-    probeGraph(s, vertices, pairs,
-      effectiveMaxDriverEdges(s, maxDriverEdges)) match {
-      case Some((vrows, erows)) =>
-        bfsReachDriver(s, vrows, erows, seed, maxHops)
-      case None => bfsReachPregel(s, vertices, pairs, seed, maxHops)
-    }
-  }
-
-  /** Driver BFS kernel for [[bfsReach]]'s small-graph branch: frontier
-    * expansion to `maxHops` levels over an interned adjacency, labels =
-    * exact min-hop distances — what Pregel's min-message fixpoint
-    * computes level by level.
-    */
-  private def bfsReachDriver(s: SparkSession, vrows: Array[Long],
-      erows: Array[(Long, Long)], seed: Long, maxHops: Int): DataFrame = {
-    import s.implicits._
-    val idx = new scala.collection.mutable.LongMap[Int](vrows.length * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long](vrows.length)
-    def intern(id: Long): Int =
-      idx.getOrElse(id, {
-        val i = ids.length; ids += id; idx.update(id, i); i
-      })
-    vrows.foreach(intern)
-    erows.foreach { case (u, v) => intern(u); intern(v) }
-    // adjacency as CSR: degree count, prefix offsets, neighbor array
-    val n = ids.length
-    val deg = new Array[Int](n)
-    erows.foreach { case (u, v) => deg(idx(u)) += 1; deg(idx(v)) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val nbr = new Array[Int](off(n))
-    val cursor = java.util.Arrays.copyOf(off, n)
-    erows.foreach { case (u, v) =>
-      val iu = idx(u); val iv = idx(v)
-      nbr(cursor(iu)) = iv; cursor(iu) += 1
-      nbr(cursor(iv)) = iu; cursor(iv) += 1
-    }
-    val dist = new Array[Int](n)
-    java.util.Arrays.fill(dist, Int.MaxValue)
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)]()
-    idx.get(seed).foreach { s0 =>
-      dist(s0) = 0
-      var frontier = Array(s0)
-      var hop = 0
-      while (hop < maxHops && frontier.nonEmpty) {
-        val next = new scala.collection.mutable.ArrayBuffer[Int]()
-        frontier.foreach { u =>
-          var j = off(u)
-          while (j < off(u + 1)) {
-            val w = nbr(j)
-            if (dist(w) == Int.MaxValue) { dist(w) = hop + 1; next += w }
-            j += 1
-          }
-        }
-        frontier = next.toArray
-        hop += 1
-      }
-      i = 0
-      while (i < n) {
-        if (dist(i) != Int.MaxValue) out += ((ids(i), dist(i).toLong))
-        i += 1
-      }
-    }
-    // no repartition — see connectedComponentsAdaptive's note
-    s.createDataset(out.toSeq).toDF("vec_id", "hops")
-  }
-
-  /** The distributed (GraphX Pregel) BFS kernel — the fallback above
-    * [[MaxDriverCcEdges]], unchanged from rounds 1–17 when it was the
-    * only path.
-    */
-  private def bfsReachPregel(s: SparkSession, vertices: DataFrame,
-      pairs: DataFrame, seed: Long, maxHops: Int): DataFrame = {
-    import org.apache.spark.graphx.{EdgeDirection, EdgeTriplet, Graph, VertexId}
-    import s.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val vertRdd = vertices.select(col("vec_id").cast("long")).rdd
-      .map(r => (r.getLong(0), if (r.getLong(0) == seed) 0 else Int.MaxValue))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val edgeRdd = pairs.select(col("u").cast("long"), col("v").cast("long")).rdd
-      .map(r => org.apache.spark.graphx.Edge(r.getLong(0), r.getLong(1), ()))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val graph = Graph(vertRdd, edgeRdd)
-    val bfs = graph.pregel(Int.MaxValue, maxIterations = maxHops,
-      activeDirection = EdgeDirection.Either)(
-      (_: VertexId, cur: Int, msg: Int) => math.min(cur, msg),
-      (t: EdgeTriplet[Int, Unit]) => {
-        val out = Iterator.newBuilder[(VertexId, Int)]
-        if (t.srcAttr != Int.MaxValue && t.srcAttr + 1 < t.dstAttr)
-          out += ((t.dstId, t.srcAttr + 1))
-        if (t.dstAttr != Int.MaxValue && t.dstAttr + 1 < t.srcAttr)
-          out += ((t.srcId, t.dstAttr + 1))
-        out.result()
-      },
-      (a: Int, b: Int) => math.min(a, b))
-    val out = bfs.vertices.filter(_._2 != Int.MaxValue)
-      .map { case (id, hops) => (id, hops.toLong) }
-      .toDF("vec_id", "hops")
-    out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize once, then release the graph's caches
-    bfs.unpersist(blocking = false)
-    graph.unpersist(blocking = false)
-    vertRdd.unpersist(blocking = false)
-    edgeRdd.unpersist(blocking = false)
-    out
-  }
-
-  /** Scale of the exact PageRank fixed-point arithmetic: ranks are
-    * BIGINTs in units of 1e-9. */
-  val PrScale: Long = 1000000000L
-
-  /** Static PageRank over an undirected (u, v) edge frame in EXACT
-    * scaled-integer arithmetic: rank' = 0.15·S + Σ_in (rank·85) div
-    * (100·outdeg), all BIGINT, truncating division. Results are therefore
-    * independent of partitioning, parallelism, and summation order —
-    * unlike a float fixpoint — so q54 carries a full DuckDB hash oracle
-    * (the same integer recurrence unrolled as CTEs) instead of a
-    * rows-only gate + pinned golden.
-    *
-    * Shape: a hash-co-partitioned RDD iteration — GraphX's own layout,
-    * minus its vertex-program machinery. The adjacency (with its
-    * loop-invariant out-degree) is built ONCE with a single shuffle and
-    * persisted co-partitioned with the rank frame, so each round's
-    * adjacency⋈ranks and verts⟕sums joins are NARROW; the only per-round
-    * shuffle is the contribution `reduceByKey`. Because the loop is pure
-    * RDD lineage (no Catalyst re-analysis per round), no mid-loop
-    * materialization is needed: all `iters` rounds are scheduled inside
-    * ONE job when the result is first materialized — the previous
-    * DataFrame formulation paid a localCheckpoint job every third round
-    * plus three tiny shuffles per round and was reproducibly
-    * scheduling-bound (~2-3× drift across boots at bench scale).
-    *
-    * Fault tolerance: intermediate rounds are recomputable from the
-    * persisted adjacency via shuffle files — standard lineage recovery,
-    * unlike the removed `localCheckpoint` (executor-local blocks; an
-    * executor loss mid-loop killed the job on a real cluster). For very
-    * deep iteration counts, pass `checkpointEvery` > 0 and set
-    * `sc.setCheckpointDir` to cut lineage with a RELIABLE checkpoint
-    * every k rounds — each cut materializes eagerly (one job per k
-    * rounds, the standard iterate-vs-lineage trade), since a mark-only
-    * `checkpoint()` would neither truncate the first job's lineage nor
-    * write any but the last marked round.
-    *
-    * Overflow: total mass ≤ n·S, so Longs hold to ~10⁸ vertices at the
-    * ×85 step; `multiplyExact`/`addExact` fail loudly (ArithmeticException)
-    * rather than wrap beyond that — the same loud-fail contract ANSI mode
-    * gave the SQL formulation. Skew: a hot vertex holds its adjacency
-    * array in one partition (the classic Spark PageRank layout); at
-    * extreme degree skew switch the adjacency to (dst, outdeg) pairs and
-    * a pair-join, trading memory for one more shuffle.
-    */
-  def pageRank(s: SparkSession, vertices: DataFrame, pairs: DataFrame,
-               iters: Int, checkpointEvery: Int = 0,
-               maxDriverEdges: Int = MaxDriverCcEdges): DataFrame = {
-    import s.implicits._
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
-    // size the partitioner to the DATA, capped by the session's shuffle
-    // parallelism (which a real cluster sets to thousands) — and to the
-    // right data: the per-round cost is MESSAGE volume (2 endpoints per
-    // edge), not vertex count. The original vertex-only rule planned ONE
-    // partition for the 100× bench graph (200k vertices but 12.5M
-    // replica-dense edges) and every round ran single-task — q54 130 s
-    // (measured, `bench/r07_sf10_run4.json`). A small graph still
-    // iterates in few-task stages instead of paying conf-many
-    // near-empty task launches × rounds; the pairs frame is persisted so
-    // its (expensive) candidate-generation lineage runs once for the
-    // sizing count and is reread for the adjacency build.
-    val edges = pairs
-      .select(col("u").cast("long"), col("v").cast("long"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // SIZE-ADAPTIVE (round 18, the [[connectedComponents]] discipline):
-    // the arithmetic is exact scaled-integer — independent of
-    // partitioning and summation order by design — so under
-    // [[MaxDriverCcEdges]] the same recurrence runs on the driver in
-    // one pass instead of iters joins+reduceByKey rounds of a
-    // multi-task RDD loop. Larger graphs iterate distributed,
-    // unchanged; `checkpointEvery` only concerns that path's lineage.
-    // The guard is the shared one-job [[probeGraph]] (round 19): the
-    // previous shape paid two sizing counts PLUS two collects on the
-    // driver path — four job submissions where one suffices; the
-    // distributed path still counts below (the partitioner needs exact
-    // sizes), reading the edges from the persist the probe populated.
-    probeGraph(s, vertices, edges, effectiveMaxDriverEdges(s, maxDriverEdges)) match {
-      case Some((vrows, erows)) =>
-        edges.unpersist(blocking = false)
-        return pageRankDriver(s, vrows, erows, iters)
-      case None => ()
-    }
-    val nV = vertices.count()
-    val nE = edges.count()
-    val vertsPerPart = 2L * 1000 * 1000
-    val endpointsPerPart = 262144L
-    val part = new HashPartitioner(math.max(1L, math.min(
-      s.sessionState.conf.numShufflePartitions.toLong,
-      math.max((nV + vertsPerPart - 1) / vertsPerPart,
-        (2 * nE + endpointsPerPart - 1) / endpointsPerPart))).toInt)
-    val reset = PrScale * 15 / 100
-    val adj: RDD[(Long, (Array[Long], Long))] = edges.rdd
-      .flatMap(r => Iterator((r.getLong(0), r.getLong(1)),
-                             (r.getLong(1), r.getLong(0))))
-      .groupByKey(part)
-      .mapValues { ds => val a = ds.toArray; (a, a.length.toLong) }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val verts: RDD[(Long, Unit)] = vertices
-      .select(col("vec_id").cast("long")).rdd
-      .map(r => (r.getLong(0), ()))
-      .partitionBy(part)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var ranks: RDD[(Long, Long)] = verts.mapValues(_ => PrScale)
-    // the latest materialized cut, unpersisted once superseded
-    var lastCut: Option[RDD[(Long, Long)]] = None
-    for (i <- 1 to iters) {
-      val contribs = adj.join(ranks, part)
-        .flatMap { case (_, ((dsts, outdeg), rank)) =>
-          // truncating division on non-negative operands — identical to
-          // the oracle's `(rank * 85) DIV (100 * outdeg)`
-          val c = Math.multiplyExact(rank, 85L) / (100L * outdeg)
-          dsts.iterator.map(d => (d, c))
-        }
-      val sums = contribs.reduceByKey(part, (a: Long, b: Long) => Math.addExact(a, b))
-      ranks = verts.leftOuterJoin(sums, part)
-        .mapValues { case (_, m) => Math.addExact(reset, m.getOrElse(0L)) }
-      if (checkpointEvery > 0 && i % checkpointEvery == 0 && i != iters) {
-        ranks.persist(StorageLevel.MEMORY_AND_DISK)
-        if (s.sparkContext.getCheckpointDir.isDefined) ranks.checkpoint()
-        // checkpoint() only MARKS — the write happens at the end of the
-        // next job, and only for the topmost marked RDD. Materializing
-        // here makes the cut real: one extra job per k rounds buys the
-        // bounded lineage this parameter promises (without it, the
-        // single final job would still carry every round AND skip all
-        // but the last marked checkpoint). Without a checkpoint dir the
-        // count still bounds recomputation (cache), not lineage depth.
-        ranks.count()
-        lastCut.foreach(_.unpersist(blocking = false))
-        lastCut = Some(ranks)
-      }
-    }
-    val out = ranks.toDF("vec_id", "rank")
-    out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count() // ONE job runs all (remaining) rounds; release the builders
-    adj.unpersist(blocking = false)
-    verts.unpersist(blocking = false)
-    edges.unpersist(blocking = false)
-    lastCut.foreach(_.unpersist(blocking = false))
-    out
-  }
-
-  /** Driver kernel for [[pageRank]]'s small-graph branch: the identical
-    * scaled-integer recurrence (rank' = 0.15·S + Σ_in (rank·85) div
-    * (100·outdeg), truncating division, loud overflow via
-    * multiplyExact/addExact) over an interned adjacency. The RDD loop's
-    * join semantics are reproduced exactly: outdeg counts EVERY
-    * neighbor, but ranks exist only for frame vertices — an endpoint
-    * outside the vertex frame neither contributes nor receives (the
-    * adj⋈ranks and verts⟕sums joins drop it).
-    */
-  private def pageRankDriver(s: SparkSession, vrows: Array[Long],
-      erows: Array[(Long, Long)], iters: Int): DataFrame = {
-    import s.implicits._
-    val idx = new scala.collection.mutable.LongMap[Int](vrows.length * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long](vrows.length)
-    def intern(id: Long): Int =
-      idx.getOrElse(id, {
-        val i = ids.length; ids += id; idx.update(id, i); i
-      })
-    val inFrame = new scala.collection.mutable.ArrayBuffer[Boolean]()
-    vrows.foreach { id => val i = intern(id)
-      while (inFrame.length <= i) inFrame += false
-      inFrame(i) = true
-    }
-    erows.foreach { case (u, v) =>
-      Seq(intern(u), intern(v)).foreach { i =>
-        while (inFrame.length <= i) inFrame += false
-      }
-    }
-    val n = ids.length
-    val deg = new Array[Int](n)
-    erows.foreach { case (u, v) => deg(idx(u)) += 1; deg(idx(v)) += 1 }
-    val off = new Array[Int](n + 1)
-    var i = 0
-    while (i < n) { off(i + 1) = off(i) + deg(i); i += 1 }
-    val nbr = new Array[Int](off(n))
-    val cursor = java.util.Arrays.copyOf(off, n)
-    erows.foreach { case (u, v) =>
-      val iu = idx(u); val iv = idx(v)
-      nbr(cursor(iu)) = iv; cursor(iu) += 1
-      nbr(cursor(iv)) = iu; cursor(iv) += 1
-    }
-    val reset = PrScale * 15 / 100
-    var ranks = Array.tabulate(n)(i => if (inFrame(i)) PrScale else 0L)
-    var it = 0
-    while (it < iters) {
-      val sums = new Array[Long](n)
-      i = 0
-      while (i < n) {
-        if (inFrame(i) && deg(i) > 0) {
-          val c = Math.multiplyExact(ranks(i), 85L) / (100L * deg(i))
-          var j = off(i)
-          while (j < off(i + 1)) {
-            val w = nbr(j); sums(w) = Math.addExact(sums(w), c); j += 1
-          }
-        }
-        i += 1
-      }
-      val next = new Array[Long](n)
-      i = 0
-      while (i < n) {
-        if (inFrame(i)) next(i) = Math.addExact(reset, sums(i))
-        i += 1
-      }
-      ranks = next
-      it += 1
-    }
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](vrows.length)
-    i = 0
-    while (i < n) { if (inFrame(i)) out += ((ids(i), ranks(i))); i += 1 }
-    // no repartition — see connectedComponentsAdaptive's note
-    s.createDataset(out.toSeq).toDF("vec_id", "rank")
-  }
+  /** The pinned index rule of every synthetic ER path: centroids are
+    * seeded from the `vec_id % 10 <> 9` standing corpus, the class the
+    * insert paths add (the oracles' `pinnedCcSqlWhere` mirrors it). One
+    * value, so the cached pin is one index per source dir. */
+  private[resolve] val standingPin: Column => Column = c => c % 10 =!= 9
 
   /** INCREMENTAL entity resolution — the daily-batch shape the reference
     * lacks (`keyword_merger.py:134-144` recomputes the whole alias
@@ -1047,28 +212,6 @@ object EntityResolution {
     * what the DuckDB oracle computes. A changed index breaks the
     * decomposition; that is the documented full-rebuild trigger.
     */
-  /** ε-pairs (u < v) within shared pinned cells of one assigned frame —
-    * the standing-side pair kernel shared by the incremental family
-    * (q141/q143 standing build, q146/q150 tombstone standing build).
-    */
-  private def epsCellPairsOrdered(assigned: DataFrame): DataFrame = {
-    val s = assigned.sparkSession
-    import s.implicits._
-    assigned.as("a")
-      .join(assigned.as("b"),
-        $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id")
-      .withColumn("dot", VectorOps.dot($"a.e", $"b.e"))
-      .filter($"dot" > 0 &&
-        $"dot" * $"dot" * 400 >= $"a.nrm" * $"b.nrm" * 49)
-      .select($"a.vec_id".as("u"), $"b.vec_id".as("v"))
-  }
-
-  /** The pinned index rule of every synthetic ER path: centroids are
-    * seeded from the `vec_id % 10 <> 9` standing corpus, the class the
-    * insert paths add (the oracles' `pinnedCcSqlWhere` mirrors it). One
-    * value, so the cached pin is one index per source dir. */
-  private[resolve] val standingPin: Column => Column = c => c % 10 =!= 9
-
   def incrementalResolve(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
@@ -1078,16 +221,13 @@ object EntityResolution {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val standing = assigned.filter(!isBatch($"vec_id"))
     val batch = assigned.filter(isBatch($"vec_id"))
-    val standPairs = epsCellPairsOrdered(standing)
+    val standPairs = Kernels.epsCellPairsOrdered(standing)
     val standingMapping =
-      connectedComponents(s, standing.select($"vec_id"), standPairs)
+      Kernels.connectedComponents(s, standing.select($"vec_id"), standPairs)
         .persist(StorageLevel.MEMORY_AND_DISK)
-    val touching = batch.as("a")
+    val touching = Kernels.cellEps(batch.as("a")
       .join(assigned.as("b"),
-        $"a.cid" === $"b.cid" && $"a.vec_id" =!= $"b.vec_id")
-      .withColumn("dot", VectorOps.dot($"a.e", $"b.e"))
-      .filter($"dot" > 0 &&
-        $"dot" * $"dot" * 400 >= $"a.nrm" * $"b.nrm" * 49)
+        $"a.cid" === $"b.cid" && $"a.vec_id" =!= $"b.vec_id"), 7, 20)
       // batch-batch pairs surface in both orientations of this join;
       // normalize and dedup (batch-standing pairs appear once)
       .select(least($"a.vec_id", $"b.vec_id").as("u"),
@@ -1123,7 +263,7 @@ object EntityResolution {
       .select($"component".as("u"), $"vec_id".as("v"))
     val verts = affected.select($"vec_id").unionByName(batchVerts)
     val merged =
-      connectedComponentsAdaptive(s, verts, star.unionByName(touching))
+      Kernels.connectedComponents(s, verts, star.unionByName(touching))
     untouched.select($"vec_id", $"component".as("rep_id"))
       .unionByName(merged.select($"vec_id", $"component".as("rep_id")))
   }
@@ -1288,10 +428,10 @@ object EntityResolution {
     val assigned = graft.similarity.Similarity
       .ivfAssignedPinned(s, d, standingPin)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val allPairs = epsCellPairsOrdered(assigned)
+    val allPairs = Kernels.epsCellPairsOrdered(assigned)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val standingMapping =
-      connectedComponents(s, assigned.select($"vec_id"), allPairs)
+      Kernels.connectedComponents(s, assigned.select($"vec_id"), allPairs)
     mergeTombstones(s, standingMapping, allPairs).orderBy($"vec_id")
   }
 
@@ -1320,7 +460,7 @@ object EntityResolution {
     val survivorPairs = allPairs
       .join(survivors.withColumnRenamed("vec_id", "u"), Seq("u"), "left_semi")
       .join(survivors.withColumnRenamed("vec_id", "v"), Seq("v"), "left_semi")
-    val merged = connectedComponentsAdaptive(s, survivors, survivorPairs)
+    val merged = Kernels.connectedComponents(s, survivors, survivorPairs)
     untouched.select($"vec_id", $"component".as("rep_id"))
       .unionByName(merged.select($"vec_id", $"component".as("rep_id")))
   }
@@ -1347,20 +487,12 @@ object EntityResolution {
     // a-side is always the batch and the b-side is either a survivor
     // (disjoint ids — each pair once) or another batch row (ordered by
     // `<`, each pair once).
-    val eps = (p: DataFrame) => p
-      .withColumn("dot", VectorOps.dot($"a.e", $"b.e"))
-      .filter($"dot" > 0 &&
-        $"dot" * $"dot" * 400 >= $"a.nrm" * $"b.nrm" * 49)
-    val bSurv = eps(updBatch.as("a")
+    val bSurv = Kernels.cellEps(updBatch.as("a")
       .join(survivors.select($"vec_id", $"cid", $"e", $"nrm").as("b"),
-        $"a.cid" === $"b.cid"))
+        $"a.cid" === $"b.cid"), 7, 20)
       .select(least($"a.vec_id", $"b.vec_id").as("u"),
         greatest($"a.vec_id", $"b.vec_id").as("v"))
-    val bBatch = eps(updBatch.as("a")
-      .join(updBatch.as("b"),
-        $"a.cid" === $"b.cid" && $"a.vec_id" < $"b.vec_id"))
-      .select($"a.vec_id".as("u"), $"b.vec_id".as("v"))
-    bSurv.unionByName(bBatch)
+    bSurv.unionByName(Kernels.epsCellPairsOrdered(updBatch))
   }
 
   /** FUSED update merge — retraction and reinsertion in ONE connected-
@@ -1413,7 +545,7 @@ object EntityResolution {
     val survPairs = allPairs
       .join(affSurvivors.withColumnRenamed("vec_id", "u"), Seq("u"), "left_semi")
       .join(affSurvivors.withColumnRenamed("vec_id", "v"), Seq("v"), "left_semi")
-    val merged = connectedComponentsAdaptive(s,
+    val merged = Kernels.connectedComponents(s,
       affSurvivors.unionByName(updVerts), survPairs.unionByName(touching))
     untouched.select($"vec_id", $"component".as("rep_id"))
       .unionByName(merged.select($"vec_id", $"component".as("rep_id")))
@@ -1460,10 +592,10 @@ object EntityResolution {
     val assigned = graft.similarity.Similarity
       .ivfAssignedPinned(s, d, standingPin)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val allPairs = epsCellPairsOrdered(assigned)
+    val allPairs = Kernels.epsCellPairsOrdered(assigned)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val standingMapping =
-      connectedComponents(s, assigned.select($"vec_id"), allPairs)
+      Kernels.connectedComponents(s, assigned.select($"vec_id"), allPairs)
     val postDelete =
       mergeTombstones(s, standingMapping, allPairs, isUpd)
         .select($"vec_id", $"rep_id".as("component"))
@@ -1488,37 +620,35 @@ object EntityResolution {
           .as("vec_id"),
         termEmbedding(col("value")).as("embedding"))
 
-  /** Ensure the shared ingested day-0 snapshot of [[Lifecycle.ingested]]
-    * under `prefix`: the `keep` terms of the ingest, their exact ε-pairs
-    * at cos ≥ num/den and CC mapping, built once per JVM and
-    * `sourceKey`, which must determine everything the build reads.
+  /** Ensure the shared day-0 snapshot `sharedBaseName(kind, key)` and
+    * return its table prefix. `build` gives the day-0 rows (persisted)
+    * and their ε-pairs; the rows land as `<prefix>_<rowStore>` bucketed
+    * on `rowKey`, beside `<prefix>_pairs` and the CC `<prefix>_mapping`.
+    * Built once per JVM and key, so `key` must determine everything the
+    * build reads; the tables are named by it, so every same-parameter
+    * lifecycle or serve reads one build.
     */
-  private[resolve] def ensureIngestedErTables(s: SparkSession,
-      ingested: () => DataFrame, sourceKey: String, num: Int, den: Int,
-      prefix: String,
-      keep: Column => Column = _ => lit(true)): Unit = {
-    import s.implicits._
-    if (erServedFrom.get(prefix) != sourceKey)
+  private[resolve] def ensureSnapshot(s: SparkSession, kind: String,
+      key: String, rowStore: String, rowKey: String)(
+      build: => (DataFrame, DataFrame)): String = {
+    val prefix = sharedBaseName(kind, key)
+    if (erServedFrom.get(prefix) != key)
       erServedFrom.compute(prefix, (_, prev) => {
-        if (prev != sourceKey) {
-          // `keep` selects day 0: the universe minus the inserted classes
-          val terms = embedTermUniverse(ingested())
-            .filter(keep(col("vec_id")))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val pairs = epsPairsOf(terms, num, den)
+        if (prev != key) {
+          val (rows, pairs) = build
           val mapping =
-            connectedComponents(s, terms.select($"vec_id"), pairs)
-          graft.graph.BucketedStore.writeBucketed(
-            terms, s"${prefix}_terms", "vec_id", 16)
-          graft.graph.BucketedStore.writeBucketed(
-            pairs, s"${prefix}_pairs", "u", 16)
-          graft.graph.BucketedStore.writeBucketed(
-            mapping, s"${prefix}_mapping", "vec_id", 16)
-          terms.unpersist(blocking = false)
-          mapping.unpersist(blocking = false) // CC-internal persist, written out
+            Kernels.connectedComponents(s, rows.select(col("vec_id")), pairs)
+          val tables = Seq((rows, rowStore, rowKey), (pairs, "pairs", "u"),
+            (mapping, "mapping", "vec_id"))
+          tables.foreach { case (df, t, k) =>
+            graft.graph.BucketedStore.writeBucketed(df, s"${prefix}_$t", k, 16)
+          }
+          // the mapping's persist is the CC kernel's own, written out
+          tables.foreach(_._1.unpersist(blocking = false))
         }
-        sourceKey
+        key
       })
+    prefix
   }
 
   /** The reference's representative discipline (lexicographic MIN TERM,
@@ -1534,43 +664,6 @@ object EntityResolution {
     named.join(broadcast(reps), "rep_id")
       .select($"term".as("original"), $"representative")
       .orderBy($"original")
-  }
-
-  /** Ensure the shared synthetic day-0 snapshot of [[Lifecycle.synthetic]]
-    * and return its table prefix: the `keep` rows assigned under the
-    * [[standingPin]] index, their blocked ε-pairs and CC mapping. `key`
-    * must determine `keep` (source dir, inserted classes, class rule);
-    * the tables are named by it ([[sharedBaseName]]), so every
-    * same-parameter lifecycle or serve reads one build.
-    */
-  private[resolve] def ensureSyntheticCrudBase(s: SparkSession, d: String,
-      key: String, keep: Column => Column): String = {
-    import s.implicits._
-    import org.apache.spark.storage.StorageLevel
-    val basePrefix = sharedBaseName("syn", key)
-    if (erServedFrom.get(basePrefix) != key)
-      erServedFrom.compute(basePrefix, (_, prev) => {
-        if (prev != key) {
-          val assigned = graft.similarity.Similarity
-            .ivfAssignedPinned(s, d, standingPin, keep)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val pairs = epsCellPairsOrdered(assigned)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-          val mapping =
-            connectedComponents(s, assigned.select($"vec_id"), pairs)
-          graft.graph.BucketedStore.writeBucketed(
-            assigned, s"${basePrefix}_assigned", "cid", 16)
-          graft.graph.BucketedStore.writeBucketed(
-            pairs, s"${basePrefix}_pairs", "u", 16)
-          graft.graph.BucketedStore.writeBucketed(
-            mapping, s"${basePrefix}_mapping", "vec_id", 16)
-          pairs.unpersist(blocking = false)
-          assigned.unpersist(blocking = false)
-          mapping.unpersist(blocking = false) // CC-internal, written out
-        }
-        key
-      })
-    basePrefix
   }
 
   /** The synthetic lifecycles' days: insert class 9, update class 7,
@@ -1687,7 +780,7 @@ object EntityResolution {
     "q54_pagerank" -> ((s, d) => {
       import s.implicits._
       val verts = Tables.embeddings(s, d).select($"vec_id")
-      pageRank(s, verts, blockedEpsPairs(s, d), iters = 10)
+      Kernels.pageRank(s, verts, Kernels.blockedEpsPairs(s, d), iters = 10)
         .orderBy($"vec_id")
     }),
     // §2.8-C1: ε-graph connected components = DBSCAN(min_samples=2)
@@ -1703,7 +796,8 @@ object EntityResolution {
     "q52_er_blocked" -> ((s, d) => {
       import s.implicits._
       val verts = Tables.embeddings(s, d).select($"vec_id")
-      connectedComponents(s, verts, blockedEpsPairs(s, d)).orderBy($"vec_id")
+      Kernels.connectedComponents(s, verts, Kernels.blockedEpsPairs(s, d))
+        .orderBy($"vec_id")
     }),
 
     // Variable-length traversal: vertices within 2 hops of vec_id 0 in
@@ -1713,7 +807,8 @@ object EntityResolution {
     "q53_bfs_reach" -> ((s, d) => {
       import s.implicits._
       val verts = Tables.embeddings(s, d).select($"vec_id")
-      bfsReach(s, verts, blockedEpsPairs(s, d), seed = 0L, maxHops = 2)
+      Kernels.bfsReach(s, verts, Kernels.blockedEpsPairs(s, d), seed = 0L,
+          maxHops = 2)
         .orderBy($"vec_id")
     }),
 
@@ -1769,7 +864,8 @@ object EntityResolution {
     "q124_refined_blocked" -> ((s, d) => {
       import s.implicits._
       val verts = Tables.embeddings(s, d).select($"vec_id")
-      val mapping = connectedComponents(s, verts, blockedEpsPairs(s, d))
+      val mapping =
+        Kernels.connectedComponents(s, verts, Kernels.blockedEpsPairs(s, d))
         .select($"vec_id".cast("string").as("original"),
           $"component".cast("string").as("representative"))
       MappingCorrector

@@ -2,6 +2,7 @@ package graft.resolve
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.graph.BucketedStore
 import graft.similarity.Similarity
 import EntityResolution._
@@ -70,8 +71,14 @@ object Lifecycle {
         val ruleKey =
           if (inserted.isEmpty || rule == clsFingerprint(s, lastDigit)) ""
           else s"|cls=$rule"
-        ensureSyntheticCrudBase(s, d, s"$d|ins=${sorted(inserted)}$ruleKey",
-          keep = notIn(cls, inserted))
+        ensureSnapshot(s, "syn", s"$d|ins=${sorted(inserted)}$ruleKey",
+            "assigned", "cid") {
+          val assigned = Similarity
+            .ivfAssignedPinned(s, d, standingPin, notIn(cls, inserted))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          (assigned, Kernels.epsCellPairsOrdered(assigned)
+            .persist(StorageLevel.MEMORY_AND_DISK))
+        }
       },
       batches = s => (k, reembed) => Similarity.ivfAssignedPinnedCached(
         s, d, standingPin, c => cls(c) === k, reembed),
@@ -104,10 +111,12 @@ object Lifecycle {
         // enters as its structural fingerprint
         val key = s"$sourceKey|eps=$num/$den|cls=${clsFingerprint(s, cls)}" +
           s"|ins=${sorted(inserted)}"
-        val base = sharedBaseName("ing", key)
-        ensureIngestedErTables(s, ingested, key, num, den, base,
-          keep = notIn(cls, inserted))
-        base
+        ensureSnapshot(s, "ing", key, "terms", "vec_id") {
+          val terms = embedTermUniverse(ingested())
+            .filter(notIn(cls, inserted)(col("vec_id")))
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          (terms, Kernels.epsPairsOf(terms, num, den))
+        }
       },
       batches = _ => {
         lazy val universe = persistServe(embedTermUniverse(ingested()))
@@ -119,7 +128,7 @@ object Lifecycle {
         }
       },
       touching = (survivors, batch) =>
-        batchEndpointPairs(survivors, batch, num, den),
+        Kernels.batchEndpointPairs(survivors, batch, num, den),
       result = (mapping, rows) => minTermMapping(mapping, rows))
 
   /** How a day's result is written back to the standing tables. */

@@ -2,7 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.graph.BibGraph
+import graft.graph.{BibGraph, BucketedStore}
 import graft.resolve.EntityResolution
 
 /** The full-graph CSV dump orchestration — `csv_extractor.__main__`
@@ -49,8 +49,6 @@ object GraphDump {
                 addrThreshold: (Int, Int) = (19, 20),
                 literalFiles: Boolean = false): Seq[String] = {
     import org.apache.spark.storage.StorageLevel
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     // the cleaned ingest feeds every writer and all three mappings —
     // persist + force BOTH once, before any concurrent reader: blocked
     // per-block cache locks make concurrent first-computation safe but
@@ -60,16 +58,12 @@ object GraphDump {
       .persist(StorageLevel.MEMORY_AND_DISK)
     edges.count() // forces ingested transitively
 
-    // bounded pool: enough to overlap every independent writer, small
-    // enough not to swamp the driver's job scheduler
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       def entry(base: String): String =
         if (literalFiles) base + ".csv" else base
 
       // 1. document nodes (csv_extractor.py:33-60,101-125)
-      val docsF = Future {
+      val docsTask = () => {
         val name = entry("documents")
         Neo4jCsv.writeDocumentNodes(ingested, s"$outDir/$name",
           dynamicExtra = dynamicExtra, asFile = literalFiles)
@@ -81,8 +75,8 @@ object GraphDump {
       //    (csv_extractor.py:64-97,128-148)
       val byLabel = BibGraph.TaggedEdgeConfig.groupBy(_.nodeLabel).toSeq
         .sortBy(_._1)
-      val labelFs = byLabel.map { case (label, specs) =>
-        Future {
+      val labelTasks = byLabel.map { case (label, specs) =>
+        () => {
           val ids = specs.map { spec =>
             val side = if (spec.fromNew) "src" else "dst"
             edges.filter(col("rel_type") === spec.relType)
@@ -97,8 +91,8 @@ object GraphDump {
 
       // 3. document-linked relationship CSVs, one per rel type
       //    (csv_extractor.py:153-241)
-      val relFs = BibGraph.TaggedEdgeConfig.map { spec =>
-        Future {
+      val relTasks = BibGraph.TaggedEdgeConfig.map { spec =>
+        () => {
           val (startLabel, endLabel) =
             if (spec.fromNew) (spec.nodeLabel, "Document")
             else ("Document", spec.nodeLabel)
@@ -118,8 +112,8 @@ object GraphDump {
         ("Keyword", Seq("keywords"), kwThreshold),
         ("Organization", Seq("publisher", "place_published"), orgThreshold),
         ("Author_Address", Seq("author_address"), addrThreshold))
-      val aliasFs = aliases.map { case (label, cols, (num, den)) =>
-        Future {
+      val aliasTasks = aliases.map { case (label, cols, (num, den)) =>
+        () => {
           val rels = EntityResolution
             .ingestedTermMapping(ingested, cols, num, den)
             .filter(col("original") =!= col("representative"))
@@ -136,21 +130,13 @@ object GraphDump {
         }
       }
 
-      // manifest order is the fixed reference order (futures are listed,
-      // not completion-raced). Future.sequence is fail-fast: on the first
-      // writer failure it would rethrow while surviving writers keep
-      // submitting jobs against frames the finally block is about to
-      // unpersist (each then re-deriving the full ingest uncached).
-      // Await every writer to completion first, then surface the first
-      // failure once nothing is in flight.
-      val settled = Await.result(
-        Future.sequence((Seq(docsF) ++ labelFs ++ relFs ++ aliasFs)
-          .map(_.transform(scala.util.Success(_)))),
-        Duration.Inf)
-      settled.collectFirst { case scala.util.Failure(e) => e }.foreach(throw _)
-      settled.flatMap(_.get)
+      // manifest order is the fixed reference order (tasks are listed,
+      // not completion-raced); every writer settles before the finally
+      // block unpersists the frames they read
+      BucketedStore.concurrently[Option[String]](
+        Seq(docsTask) ++ labelTasks ++ relTasks ++ aliasTasks, threads = 8)
+        .flatten
     } finally {
-      pool.shutdown()
       edges.unpersist(blocking = false)
       ingested.unpersist(blocking = false)
     }

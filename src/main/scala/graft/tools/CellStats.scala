@@ -38,7 +38,7 @@ object CellStats {
     // its edge count is what replica-style scale-up inflates quadratically
     if (sys.env.contains("SPARK_GRAFT_EDGE_COUNT"))
       println(s"blocked_eps_edges=" +
-        graft.resolve.EntityResolution.blockedEpsPairs(spark, sfDir).count())
+        graft.resolve.Kernels.blockedEpsPairs(spark, sfDir).count())
     spark.stop()
   }
 }

@@ -18,7 +18,7 @@ object ProfileER {
       val t0 = System.nanoTime(); val r = f
       println(s"[profile] $n: ${(System.nanoTime() - t0) / 1e9}s"); r
     }
-    val p = resolve.EntityResolution.epsPairs(spark, d)
+    val p = resolve.Kernels.epsPairs(spark, d)
     time("epsPairs count (cold)")(println("pairs=" + p.count()))
     time("epsPairs count (warm)")(p.count())
     time("resolve count")(println("verts=" +

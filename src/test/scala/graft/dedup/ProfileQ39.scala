@@ -52,7 +52,7 @@ object ProfileQ39 {
     }
     val verts = Tables.documents(spark, d).select($"doc_id".as("vec_id"))
     val cc = timed("GraphX CC") {
-      resolve.EntityResolution.connectedComponents(spark, verts, pairs)
+      resolve.Kernels.connectedComponents(spark, verts, pairs)
     }
     timed("rep projection + sort") {
       cc.select($"vec_id".as("doc_id"), $"component".as("rep_id"))

@@ -37,4 +37,19 @@ class QueryTextSpec extends AnyFunSuite {
       2L -> "MATCH (n:Keyword {name: '区块链'}) RETURN n;",
       3L -> "CREATE (x:Keyword {name: 'k1'});"))
   }
+
+  test("q92 reads its log glob as the expanded file list: rows unchanged, " +
+      "a glob matching nothing still fails PATH_NOT_FOUND") {
+    val rows = QueryText.queries("q92_error_replay")(spark, "")
+      .as[(Long, String)].collect().toSeq
+    assert(rows === Seq(
+      1L -> "MERGE (p:Patent {title: 'T1'});",
+      2L -> "MATCH (n:Keyword {name: '区块链'}) RETURN n;",
+      3L -> "CREATE (x:Keyword {name: 'k1'});"))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      QueryText.replayStatements(spark,
+        QueryText.LogGlob.stripSuffix(".txt") + ".nomatch")
+    }
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+  }
 }

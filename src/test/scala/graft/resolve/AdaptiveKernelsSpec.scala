@@ -3,14 +3,12 @@ package graft.resolve
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** Round-18 optimization pins: the size-adaptive graph kernels
-  * ([[EntityResolution.connectedComponents]]/[[EntityResolution.bfsReach]]/
-  * [[EntityResolution.pageRank]] route small graphs to a driver kernel
-  * instead of GraphX Pregel / the RDD loop) must be BIT-IDENTICAL to the
-  * distributed paths they replace — same rows, same labels, same exact
-  * integer ranks. Each test runs the same graph through both branches by
-  * forcing the cap (`maxDriverEdges`), the same seam
-  * `connectedComponentsAdaptive` has carried since round 11.
+/** The size-adaptive graph kernels ([[Kernels.connectedComponents]],
+  * [[Kernels.bfsReach]], [[Kernels.pageRank]]) route small graphs to a
+  * driver kernel instead of GraphX Pregel / the RDD loop, and must be
+  * BIT-IDENTICAL to the distributed paths — same rows, same labels, same
+  * exact integer ranks. Each test runs the same graph through both
+  * branches by forcing the cap (`maxDriverEdges`).
   */
 class AdaptiveKernelsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -26,26 +24,27 @@ class AdaptiveKernelsSpec extends AnyFunSuite {
     .toDF("u", "v")
 
   test("connected components: driver union-find ≡ Pregel labels") {
-    val driver = EntityResolution
-      .connectedComponentsAdaptive(spark, verts, pairs)
+    val driver = Kernels
+      .connectedComponents(spark, verts, pairs)
       .as[(Long, Long)].collect().toMap
-    val pregel = EntityResolution
+    val pregel = Kernels
       .connectedComponentsPregel(spark, verts, pairs)
       .as[(Long, Long)].collect().toMap
     assert(driver === pregel)
     assert(driver.nonEmpty)
-    // the public entry point routes this small graph to the driver form
-    val routed = EntityResolution.connectedComponents(spark, verts, pairs)
+    // a zero cap routes the public entry point to the Pregel form
+    val routed = Kernels
+      .connectedComponents(spark, verts, pairs, maxDriverEdges = 0)
       .as[(Long, Long)].collect().toMap
     assert(routed === pregel)
   }
 
   test("bfsReach: driver frontier BFS ≡ Pregel min-hops, per maxHops") {
     for (hops <- Seq(1, 2, 4)) {
-      val driver = EntityResolution
+      val driver = Kernels
         .bfsReach(spark, verts, pairs, seed = 0L, maxHops = hops)
         .as[(Long, Long)].collect().toMap
-      val pregel = EntityResolution
+      val pregel = Kernels
         .bfsReach(spark, verts, pairs, seed = 0L, maxHops = hops,
           maxDriverEdges = 0) // force the distributed branch
         .as[(Long, Long)].collect().toMap
@@ -55,10 +54,10 @@ class AdaptiveKernelsSpec extends AnyFunSuite {
   }
 
   test("bfsReach: absent seed reaches nothing on both paths") {
-    val driver = EntityResolution
+    val driver = Kernels
       .bfsReach(spark, verts, pairs, seed = 999999L, maxHops = 3)
       .collect()
-    val pregel = EntityResolution
+    val pregel = Kernels
       .bfsReach(spark, verts, pairs, seed = 999999L, maxHops = 3,
         maxDriverEdges = 0)
       .collect()
@@ -66,14 +65,14 @@ class AdaptiveKernelsSpec extends AnyFunSuite {
   }
 
   test("pageRank: driver loop ≡ distributed RDD loop, exact integers") {
-    val driver = EntityResolution
+    val driver = Kernels
       .pageRank(spark, verts, pairs, iters = 10)
       .as[(Long, Long)].collect().toMap
-    val dist = EntityResolution
+    val dist = Kernels
       .pageRank(spark, verts, pairs, iters = 10, maxDriverEdges = 0)
       .as[(Long, Long)].collect().toMap
     assert(driver === dist)
     // isolated vertex holds exactly the reset mass on the driver path too
-    assert(driver(199L) === EntityResolution.PrScale * 15 / 100)
+    assert(driver(199L) === Kernels.PrScale * 15 / 100)
   }
 }

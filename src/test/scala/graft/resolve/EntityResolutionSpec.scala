@@ -24,7 +24,7 @@ class EntityResolutionSpec extends AnyFunSuite {
 
   test("epsPairs finds exactly the cos>=0.35 neighbor edges") {
     val emb = vecs.toDF("vec_id", "embedding")
-    val pairs = EntityResolution.epsPairsOf(emb, 7, 20)
+    val pairs = Kernels.epsPairsOf(emb, 7, 20)
       .as[(Long, Long)].collect().toSet
     // cos(0,1)=.994, cos(0,3)=.973, cos(1,3)=.993 — all >= .35;
     // v2 has negative dot with 0/1/3; cos(4,1)=.110, cos(4,3)=.229 < .35.
@@ -33,8 +33,8 @@ class EntityResolutionSpec extends AnyFunSuite {
 
   test("connected components = DBSCAN(min_samples=2) clusters; noise maps to self") {
     val emb = vecs.toDF("vec_id", "embedding")
-    val comp = EntityResolution.connectedComponents(spark,
-        emb.select($"vec_id"), EntityResolution.epsPairsOf(emb, 7, 20))
+    val comp = Kernels.connectedComponents(spark,
+        emb.select($"vec_id"), Kernels.epsPairsOf(emb, 7, 20))
       .as[(Long, Long)].collect().toMap
     assert(comp === Map(0L -> 0L, 1L -> 0L, 3L -> 0L, 2L -> 2L, 4L -> 4L))
   }
@@ -42,8 +42,8 @@ class EntityResolutionSpec extends AnyFunSuite {
   test("min-representative is the component label (numeric-min rule)") {
     // representative = min member id == component id by construction.
     val emb = vecs.toDF("vec_id", "embedding")
-    val comp = EntityResolution.connectedComponents(spark,
-        emb.select($"vec_id"), EntityResolution.epsPairsOf(emb, 7, 20))
+    val comp = Kernels.connectedComponents(spark,
+        emb.select($"vec_id"), Kernels.epsPairsOf(emb, 7, 20))
       .as[(Long, Long)].collect()
     comp.groupBy(_._2).foreach { case (label, members) =>
       assert(members.map(_._1).min === label)
@@ -71,11 +71,11 @@ class EntityResolutionSpec extends AnyFunSuite {
     val big = Seq.tabulate(6)(i => (i.toLong, Array(1.0f, i.toFloat)))
       .toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      EntityResolution.epsPairsOf(big, 7, 20, maxExactVectors = 5L)
+      Kernels.epsPairsOf(big, 7, 20, maxExactVectors = 5L)
     }
     assert(e.getMessage.contains("blockedEpsPairs"))
     // at-or-below the ceiling still runs
-    assert(EntityResolution.epsPairsOf(big, 7, 20, maxExactVectors = 6L)
+    assert(Kernels.epsPairsOf(big, 7, 20, maxExactVectors = 6L)
       .count() >= 0L)
   }
 

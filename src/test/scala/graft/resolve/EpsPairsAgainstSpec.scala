@@ -4,14 +4,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
 
-/** Kernel-level pin for the r13 serve split: for DISJOINT probe/batch id
-  * sets, `epsPairsAgainst(probe, batch) ∪ epsPairsOf(batch)` must equal
+/** Kernel-level pin for the serve split: for DISJOINT probe/batch id
+  * sets, `batchEndpointPairs(probe, batch)` must equal
   * `epsPairsOf(probe ∪ batch)` restricted to pairs with a batch
   * endpoint — the exact substitution the q157/q158/q159 serve paths make
   * (IngestedErSpec pins it end-to-end at the 7-term fixture; this spec
   * pins the kernels directly on deterministic pseudo-random frames where
   * the ε-graph is dense enough to exercise cross, batch-batch, and
-  * below-threshold pairs).
+  * below-threshold pairs, with the batch×batch pairs on the driver and,
+  * for a batch past the spread threshold, distributed).
   */
 class EpsPairsAgainstSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -39,19 +40,15 @@ class EpsPairsAgainstSpec extends AnyFunSuite {
       .withColumn("embedding", reverse(col("embedding")))
     for ((num, den) <- Seq((7, 20), (24, 25), (1, 2))) {
       val whole = pairSet(
-        EntityResolution.epsPairsOf(probe.unionByName(batch), num, den)
+        Kernels.epsPairsOf(probe.unionByName(batch), num, den)
           .filter(isB(col("u")) || isB(col("v"))))
-      val split = pairSet(
-        EntityResolution.epsPairsAgainst(probe, batch, num, den)
-          .unionByName(EntityResolution.epsPairsOf(batch, num, den)))
-      assert(split === whole, s"mismatch at theta^2=$num/$den")
+      val split = Kernels.batchEndpointPairs(probe, batch, num, den)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(split.toSet === whole, s"mismatch at theta^2=$num/$den")
       assert(whole.nonEmpty, s"degenerate fixture at theta^2=$num/$den")
-      // the split's two parts are disjoint: cross pairs have exactly one
-      // batch endpoint, batch pairs two
-      val cross = pairSet(
-        EntityResolution.epsPairsAgainst(probe, batch, num, den))
-      val bb = pairSet(EntityResolution.epsPairsOf(batch, num, den))
-      assert((cross & bb).isEmpty)
+      // the cross and batch×batch parts are disjoint: cross pairs have
+      // exactly one batch endpoint, batch pairs two
+      assert(split.length === split.toSet.size)
     }
     terms.unpersist(blocking = false)
   }
@@ -59,7 +56,7 @@ class EpsPairsAgainstSpec extends AnyFunSuite {
   test("pairs are emitted once, ordered u < v") {
     val terms = randFrame(300)
     val isB = (c: org.apache.spark.sql.Column) => c % 2 === 0
-    val cross = EntityResolution.epsPairsAgainst(
+    val cross = Kernels.batchEndpointPairs(
       terms.filter(!isB(col("vec_id"))), terms.filter(isB(col("vec_id"))),
       1, 2)
     val rows = cross.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -70,9 +67,30 @@ class EpsPairsAgainstSpec extends AnyFunSuite {
   test("batch-side guard fails loudly past the cap") {
     val terms = randFrame(64)
     val e = intercept[IllegalArgumentException] {
-      EntityResolution.epsPairsAgainst(
+      Kernels.batchEndpointPairs(
         terms.limit(8), terms, 1, 2, maxExactVectors = 32).count()
     }
-    assert(e.getMessage.contains("epsPairsAgainst"))
+    assert(e.getMessage.contains("batchEndpointPairs"))
+    assert(e.getMessage.contains("Use blockedEpsPairs"))
+  }
+
+  test("a batch past the spread threshold pairs distributed, same set") {
+    val terms = randFrame(9000).cache()
+    val isB = (c: org.apache.spark.sql.Column) => c % 30 =!= 0
+    val probe = terms.filter(!isB(col("vec_id")))
+    val batch = terms.filter(isB(col("vec_id")))
+    assert(batch.count() >= 8192, "batch below the spread threshold")
+    for ((num, den) <- Seq((24, 25), (9, 10))) {
+      val whole = pairSet(
+        Kernels.epsPairsOf(probe.unionByName(batch), num, den)
+          .filter(isB(col("u")) || isB(col("v"))))
+      val split = Kernels.batchEndpointPairs(probe, batch, num, den)
+        .collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(split.toSet === whole, s"mismatch at theta^2=$num/$den")
+      assert(split.length === split.toSet.size)
+      assert(whole.exists { case (u, v) => u % 30 != 0 && v % 30 != 0 },
+        s"no batch×batch pair at theta^2=$num/$den")
+    }
+    terms.unpersist(blocking = false)
   }
 }

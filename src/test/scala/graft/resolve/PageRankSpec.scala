@@ -17,7 +17,7 @@ class PageRankSpec extends AnyFunSuite {
     // star: 0 is the hub of 1,2,3; 9 is isolated.
     val verts = Seq(0L, 1L, 2L, 3L, 9L).toDF("vec_id")
     val pairs = Seq((0L, 1L), (0L, 2L), (0L, 3L)).toDF("u", "v")
-    val ranks = EntityResolution.pageRank(spark, verts, pairs, iters = 20)
+    val ranks = Kernels.pageRank(spark, verts, pairs, iters = 20)
       .as[(Long, Long)].collect().toMap
     assert(ranks.keySet === Set(0L, 1L, 2L, 3L, 9L))
     assert(ranks.values.forall(_ > 0))
@@ -26,7 +26,7 @@ class PageRankSpec extends AnyFunSuite {
     // symmetric leaves agree EXACTLY — integer arithmetic, no ulp jitter
     assert(ranks(1L) === ranks(2L) && ranks(2L) === ranks(3L))
     // isolated vertex receives no messages: rank = 0.15 * S exactly
-    assert(ranks(9L) === EntityResolution.PrScale * 15 / 100)
+    assert(ranks(9L) === Kernels.PrScale * 15 / 100)
   }
 
   test("ranks are identical under different partitionings") {
@@ -35,7 +35,7 @@ class PageRankSpec extends AnyFunSuite {
       ((i * 7 % 40).toLong, (i * 13 % 40).toLong))
       .filter { case (u, v) => u != v }.toDF("u", "v")
     def run(parts: Int): Map[Long, Long] =
-      EntityResolution.pageRank(spark, verts.repartition(parts),
+      Kernels.pageRank(spark, verts.repartition(parts),
         pairs.repartition(parts), iters = 10)
         .as[(Long, Long)].collect().toMap
     val a = run(1)
@@ -54,9 +54,9 @@ class PageRankSpec extends AnyFunSuite {
     val pairs = Seq.tabulate(45)(i =>
       ((i * 11 % 30).toLong, (i * 17 % 30).toLong))
       .filter { case (u, v) => u != v }.toDF("u", "v")
-    val base = EntityResolution.pageRank(spark, verts, pairs, iters = 9)
+    val base = Kernels.pageRank(spark, verts, pairs, iters = 9)
       .as[(Long, Long)].collect().toMap
-    val ckpt = EntityResolution.pageRank(spark, verts, pairs, iters = 9,
+    val ckpt = Kernels.pageRank(spark, verts, pairs, iters = 9,
       checkpointEvery = 3).as[(Long, Long)].collect().toMap
     assert(base === ckpt)
   }
@@ -79,7 +79,7 @@ class PageRankSpec extends AnyFunSuite {
       val pairs = Seq.tabulate(60)(i =>
         ((i * 7 % 40).toLong, (i * 13 % 40).toLong))
         .filter { case (u, v) => u != v }.toDF("u", "v")
-      EntityResolution.pageRank(spark, verts, pairs, iters = 10)
+      Kernels.pageRank(spark, verts, pairs, iters = 10)
       // listener bus is async; give it a moment to drain
       val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
       while (jobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
