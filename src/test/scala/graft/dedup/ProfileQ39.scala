@@ -14,11 +14,12 @@ import org.apache.spark.sql.functions._
 object ProfileQ39 {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/repo/bench_sf10")
-    val builder = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val builder = SparkSession.builder().master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes",
-        (8L * 1024 * 1024).toString)
+      .config("spark.sql.files.maxPartitionBytes", graft.Bench.SplitBytes.toString)
       .config("spark.ui.enabled", "false")
     sys.env.get("SPARK_GRAFT_IVF_SPACING")
       .foreach(v => builder.config(similarity.Similarity.SpacingConf, v))
