@@ -30,14 +30,12 @@ object BucketedStore {
     val s = df.sparkSession
     dropManagedPurging(s, table)
     // pre-partition on the bucket hash so each write task owns exactly
-    // one bucket → ONE sorted file per bucket (round 19 — the
-    // compactBucketed discipline promoted to the write choke point,
-    // guide §6 output file sizing). A bucketed write otherwise emits a
-    // file per (task, bucket) pair: an unsorted 32-partition input wrote
-    // 32×16 files PER ADVANCE into the lifecycle mapping tables (822
-    // files after one replay — measured), and every next-day read paid
-    // the footer/open storm. The repartition's HashPartitioning is the
-    // same murmur3-pmod the bucket layout uses, so the write stays
+    // one bucket → ONE sorted file per bucket. A bucketed write otherwise
+    // emits a file per (task, bucket) pair: an unsorted 32-partition
+    // input wrote 32×16 files PER ADVANCE into the lifecycle mapping
+    // tables (822 files after one replay — measured), and every next-day
+    // read paid the footer/open storm. The repartition's HashPartitioning
+    // is the same murmur3-pmod the bucket layout uses, so the write stays
     // bucket-aligned; the shuffle it adds carries exactly the table's
     // rows once.
     df.repartition(buckets, org.apache.spark.sql.functions.col(key))
@@ -135,12 +133,11 @@ object BucketedStore {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
       .location.toString
     val raw = s.read.parquet(loc)
-    // writeBucketed itself pre-partitions on the bucket hash (round 19)
+    // writeBucketed itself pre-partitions on the bucket hash
     writeBucketed(raw, tmp, key, buckets)
     // same managed-only drop+purge and reader contract as
     // ExactlyOnceSink.foldIntoBucketed's swap (resolve-per-request)
-    dropManagedPurging(s, table)
-    s.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
+    swapIn(s, tmp, table)
   }
 
   /** Replace a bucketed table with a frame whose plan may READ the table
@@ -156,16 +153,15 @@ object BucketedStore {
   def replaceBucketed(df: DataFrame, table: String, key: String,
                       buckets: Int = 16): Unit = {
     val s = df.sparkSession
-    // recover any swap a previous crash stranded (round-17 ADVICE 5,
-    // generalized from the sidecar landing): if the last replace died
-    // between its drop and rename, the only complete copy is `_next` —
-    // restore it BEFORE this write clobbers the temp name, so the new
-    // frame replaces a recovered table instead of burying the copy
+    // recover any swap a previous crash stranded: if the last replace
+    // died between its drop and rename, the only complete copy is
+    // `_next` — restore it BEFORE this write clobbers the temp name, so
+    // the new frame replaces a recovered table instead of burying the
+    // copy
     recoverStrandedNext(s, table)
     val tmp = table + "_next"
     writeBucketed(df, tmp, key, buckets)
-    dropManagedPurging(s, table)
-    s.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
+    swapIn(s, tmp, table)
   }
 
   /** [[replaceBucketed]] for SEVERAL independent tables in one advance —
@@ -196,10 +192,20 @@ object BucketedStore {
       concurrently(many.map { case (df, t, k) =>
         () => writeBucketed(df, s"${t}_next", k, buckets)
       })
-      many.foreach { case (_, t, _) =>
-        dropManagedPurging(s, t)
-        s.sql(s"ALTER TABLE `${t}_next` RENAME TO `$t`")
-      }
+      many.foreach { case (_, t, _) => swapIn(s, s"${t}_next", t) }
+  }
+
+  /** Publish the fully written `tmp` as `table`: carry `table`'s
+    * `graft.*` properties over (a rewrite is the same table advanced, so
+    * the facts stored on it still hold), drop and purge `table`, rename.
+    * The properties land on `tmp` before the drop, so a crash between
+    * the drop and the rename strands a complete copy, properties
+    * included, for [[recoverStrandedNext]].
+    */
+  private[graft] def swapIn(s: SparkSession, tmp: String, table: String): Unit = {
+    properties(s, table).foreach { case (k, v) => setProperty(s, tmp, k, Some(v)) }
+    dropManagedPurging(s, table)
+    s.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
   }
 
   /** Run independent driver-side tasks concurrently from a pool of at
@@ -238,9 +244,9 @@ object BucketedStore {
     * `<table>_next` — and a missing table can read CLEAN downstream
     * ([[readMor]] folds a missing sidecar to the base alone), so the
     * loss is silent. Called by every reader/writer that touches a
-    * swap target (round-17 ADVICE 5: recovery only at the next
-    * landing left the crash-to-reland window serving base-only
-    * state):
+    * swap target, so no read between the crash and the next write
+    * serves base-only state. Table properties move with the rename,
+    * so a recovered sidecar keeps its epoch set:
     *  - `_next` present, target missing → the drop landed but the
     *    rename did not: rename `_next` back (the copy is complete by
     *    construction — fully written before the drop);
@@ -261,8 +267,43 @@ object BucketedStore {
   }
 
   // ---------------------------------------------------------------------
-  // MERGE-ON-READ sidecars (round-13 verdict item 4) — the update/delete
-  // advance alternative to [[replaceBucketed]]'s merge-on-write rewrite.
+  // Table properties: a fact about a stored table (the source a binding
+  // was built from, a snapshot's parameter key, a sidecar's epoch set)
+  // is stored ON that table by the step that publishes its data, and
+  // read back from the catalog, which runs no Spark job. It moves with
+  // a rename and goes with a drop, so it can never describe data the
+  // table no longer holds, and every session sharing the catalog reads
+  // the same answer.
+  // ---------------------------------------------------------------------
+
+  /** `table`'s `graft.*` properties; empty when the table is absent. */
+  private def properties(s: SparkSession, table: String): Map[String, String] = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val cat = s.sessionState.catalog
+    val ident = TableIdentifier(table)
+    if (!cat.tableExists(ident)) Map.empty
+    else cat.getTableMetadata(ident).properties.filter(_._1.startsWith("graft."))
+  }
+
+  /** `key`'s value on `table`; None when the table or the key is absent. */
+  private[graft] def property(s: SparkSession, table: String,
+      key: String): Option[String] = properties(s, table).get(key)
+
+  /** Set (Some) or remove (None) `key` on the existing `table`. */
+  private[graft] def setProperty(s: SparkSession, table: String, key: String,
+      value: Option[String]): Unit = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val cat = s.sessionState.catalog
+    val ident = TableIdentifier(table)
+    val meta = cat.getTableMetadata(ident)
+    cat.alterTable(meta.copy(properties =
+      value.fold(meta.properties - key)(v => meta.properties + (key -> v))))
+    cat.invalidateCachedTable(ident)
+  }
+
+  // ---------------------------------------------------------------------
+  // MERGE-ON-READ sidecars — the update/delete advance alternative to
+  // [[replaceBucketed]]'s merge-on-write rewrite.
   //
   // replaceBucketed is correct but its write cost is the CORPUS: a 100 TB
   // tenant whose days are update/delete-dominant rewrites the standing
@@ -280,7 +321,10 @@ object BucketedStore {
   //    epoch. Strict comparison is what makes an update one atomic op:
   //    day d tombstones the updated ids (killing their epoch-0/older
   //    rows) and appends their re-embedded rows AT epoch d — which the
-  //    d-epoch tombstone does not cover.
+  //    d-epoch tombstone does not cover;
+  //  - each sidecar carries the epochs appended to it as its
+  //    [[EpochsKey]] property, so the depth [[compactDue]] reads is a
+  //    catalog lookup, and a drop or a fold retires it with the table.
   //
   // The trade, stated for the planner: the merged view is a union + one
   // broadcast anti-join per endpoint column, so it no longer advertises
@@ -290,6 +334,18 @@ object BucketedStore {
   // day). Tombstones are day-batch-sized by contract, hence the
   // broadcast: the anti-joins never shuffle the corpus side.
   // ---------------------------------------------------------------------
+
+  /** Property listing the epochs appended to a sidecar, comma-separated. */
+  private val EpochsKey = "graft.epochs"
+
+  /** The epochs `table` (a sidecar) carries; empty when it is absent. */
+  private[graft] def epochsOf(s: SparkSession, table: String): Set[Int] =
+    property(s, table, EpochsKey).toSet[String]
+      .flatMap(_.split(',').filter(_.nonEmpty).map(_.toInt))
+
+  private def appendedEpoch(s: SparkSession, table: String, epoch: Int): Unit =
+    setProperty(s, table, EpochsKey,
+      Some((epochsOf(s, table) + epoch).toSeq.sorted.mkString(",")))
 
   /** Append a day's new/re-embedded rows to `base`'s delta sidecar,
     * tagged with the day's `epoch` (> 0; the base is epoch 0). The
@@ -301,7 +357,7 @@ object BucketedStore {
     appendBucketed(
       df.withColumn("_epoch", org.apache.spark.sql.functions.lit(epoch)),
       s"${base}_delta", key, buckets)
-    recordSidecarEpoch(df.sparkSession, base, epoch)
+    appendedEpoch(df.sparkSession, s"${base}_delta", epoch)
   }
 
   /** Append a day's dead endpoint ids to `base`'s tombstone sidecar. A
@@ -320,21 +376,8 @@ object BucketedStore {
       .withColumn("_epoch", org.apache.spark.sql.functions.lit(epoch))
       .write.mode(SaveMode.Append).format("parquet")
       .saveAsTable(s"${base}_tomb")
-    recordSidecarEpoch(ids.sparkSession, base, epoch)
-    invalidateTombRows(base)
+    appendedEpoch(ids.sparkSession, s"${base}_tomb", epoch)
   }
-
-  /** Conf'd cap on the tombstone rows [[readMor]] will broadcast
-    * (default comfortably above any fixture). "Tombstones are
-    * day-batch-sized by contract" was previously unenforced — a tenant
-    * that accumulates tombstones past broadcast size got an executor
-    * OOM instead of a message (round-14 ADVICE 2). Over the cap the
-    * anti-joins switch to a shuffle join (slow but correct) and a
-    * warning names [[compactMor]] as the fix; the `MaxExactVectors`
-    * discipline applied to this layer.
-    */
-  val MaxTombstoneRowsConf = "spark.graft.mor.maxTombstoneRows"
-  val MaxTombstoneRowsDefault = 4000000L
 
   /** The merged MOR view of `base` + its sidecars: (base ∪ deltas) minus
     * every row one of whose `endpoints` ids is tombstoned at a strictly
@@ -343,17 +386,15 @@ object BucketedStore {
     *
     * `sidecarsOf` names the table the sidecars hang off (default: the
     * base itself). A caller whose base is a SHARED immutable snapshot
-    * (the round-16 shared day-0 snapshot: several lifecycle queries
-    * read one `_base_*` build) passes its own working name here, so its
-    * day advances land on tables it owns and can never leak into
-    * another reader of the same snapshot.
+    * (several lifecycle queries read one `_base_*` build) passes its own
+    * working name here, so its day advances land on tables it owns and
+    * can never leak into another reader of the same snapshot.
     *
-    * When a tombstone sidecar exists, its row count is probed once per
-    * call (a zero-column parquet scan — milliseconds at the batch sizes
-    * the contract allows): at or under [[MaxTombstoneRowsConf]] the
-    * anti-joins broadcast the tombstones (the corpus side never
-    * shuffles); over it they fall back to a shuffle anti-join with a
-    * loud warning naming [[compactMor]] — correct at any size, never a
+    * The anti-joins broadcast the tombstones while the sidecar's on-disk
+    * size (plan statistics: a file listing, no job) is within
+    * `spark.sql.autoBroadcastJoinThreshold`, so the corpus side never
+    * shuffles. Past it they fall back to a shuffle anti-join with a
+    * warning naming [[compactMor]] — correct at any size, never a
     * driver/executor OOM.
     */
   def readMor(s: SparkSession, base: String,
@@ -362,14 +403,10 @@ object BucketedStore {
     import org.apache.spark.sql.functions.{broadcast, lit}
     val host = Option(sidecarsOf).getOrElse(base)
     // recover sidecars a crashed rewrite stranded under `_next` BEFORE
-    // the existence checks below (round-17 ADVICE 5: recovery only at
-    // the next landing meant a read in the crash-to-reland window
-    // silently served base-only state — a missing sidecar reads clean
-    // here by design). Two catalog lookups per sidecar when clean. A
-    // recovery that actually moved the tombstone sidecar invalidates
-    // its cached row count.
-    recoverStrandedNext(s, s"${host}_delta")
-    if (recoverStrandedNext(s, s"${host}_tomb")) invalidateTombRows(host)
+    // the existence checks below: a missing sidecar reads clean here by
+    // design, so a read in the crash-to-reland window would otherwise
+    // serve base-only state. Two catalog lookups per sidecar when clean.
+    Seq("_delta", "_tomb").foreach(suf => recoverStrandedNext(s, host + suf))
     val b = s.table(base).withColumn("_epoch", lit(0))
     val withDelta =
       if (s.catalog.tableExists(s"${host}_delta"))
@@ -377,30 +414,19 @@ object BucketedStore {
       else b
     val merged =
       if (s.catalog.tableExists(s"${host}_tomb")) {
-        val cap = s.conf.getOption(MaxTombstoneRowsConf)
-          .map(_.toLong).getOrElse(MaxTombstoneRowsDefault)
-        // writer-side bookkeeping (the sidecarEpochs discipline, round
-        // 19): the count only picks the broadcast-vs-shuffle hint, yet
-        // it ran as a fresh job on EVERY readMor call — several per
-        // lifecycle day over an unchanged sidecar. Cache it per host;
-        // every write path that can change the row count (tombstone
-        // append, sidecar drop/fold, a stranded-`_next` recovery)
-        // invalidates, so a stale entry is unrepresentable and the
-        // chosen plan is identical to the always-count version.
-        val tombRows: Long = Option(tombRowCache.get(host))
-          .map(_.longValue).getOrElse {
-            val n = s.table(s"${host}_tomb").count()
-            tombRowCache.put(host, n)
-            n
-          }
+        val bytes = s.table(s"${host}_tomb")
+          .queryExecution.optimizedPlan.stats.sizeInBytes
+        val threshold = s.sessionState.conf.autoBroadcastJoinThreshold
         val hint: DataFrame => DataFrame =
-          if (tombRows <= cap) broadcast
+          if (bytes <= threshold) broadcast
           else {
-            org.apache.log4j.Logger.getLogger(getClass)
-              .warn(s"readMor($base): tombstone sidecar has $tombRows rows " +
-                s"> $MaxTombstoneRowsConf=$cap — anti-joins fall back to a " +
-                "shuffle join. Run BucketedStore.compactMor to fold the " +
-                "sidecars and restore broadcast-sized tombstones.")
+            if (threshold >= 0)
+              org.apache.log4j.Logger.getLogger(getClass)
+                .warn(s"readMor($base): tombstone sidecar is $bytes bytes > " +
+                  s"spark.sql.autoBroadcastJoinThreshold=$threshold — " +
+                  "anti-joins fall back to a shuffle join. Run " +
+                  "BucketedStore.compactMor to fold the sidecars and " +
+                  "restore broadcast-sized tombstones.")
             identity
           }
         endpoints.foldLeft(withDelta) { (acc, ep) =>
@@ -413,19 +439,17 @@ object BucketedStore {
     merged.drop("_epoch")
   }
 
-  /** Drop `base`'s sidecars (not the base). A lifecycle replay calls
-    * this at reset; compaction calls it after folding. Unconditional
-    * [[dropManagedPurging]] — NOT gated on `tableExists` — because a
-    * previous JVM's sidecars survive on disk while the in-memory
-    * catalog forgets them; a gated drop would skip the orphaned
-    * directories and the next create-on-append would fail
+  /** Drop `base`'s sidecars (not the base), their epoch sets with them.
+    * A lifecycle replay calls this at reset; compaction calls it after
+    * folding. Unconditional [[dropManagedPurging]] — NOT gated on
+    * `tableExists` — because a previous JVM's sidecars survive on disk
+    * while the in-memory catalog forgets them; a gated drop would skip
+    * the orphaned directories and the next create-on-append would fail
     * LOCATION_ALREADY_EXISTS (the same orphan case writeBucketed
     * handles).
     */
-  def dropSidecars(s: SparkSession, base: String): Unit = {
+  def dropSidecars(s: SparkSession, base: String): Unit =
     Seq("_delta", "_tomb").foreach(suf => dropManagedPurging(s, base + suf))
-    resetSidecarEpochs(base) // dropped = known empty, not cold-start
-  }
 
   /** Scheduled MOR maintenance: materialize [[readMor]] as a fresh
     * bucketed+sorted base (temp-write + drop + rename — the merged plan
@@ -434,26 +458,22 @@ object BucketedStore {
     * write per compaction cycle instead of per update/delete day; after
     * it, reads are plain bucketed scans again (co-located joins).
     *
-    * Crash discipline (round-14 ADVICE 1): the sidecars are RENAMED
-    * aside (a cheap catalog/directory move) before the base swap and
-    * deleted only after the `ALTER TABLE ... RENAME` lands — a crash in
-    * the swap window previously left the old pre-fold base live and
-    * readable with the day's advances silently gone (the sidecar data
-    * had already been purged). Now every window fails loud-or-
-    * recoverable: pre-swap the original base+sidecars are intact;
-    * between base-drop and rename the reader fails on a missing table
-    * while BOTH the folded `_mor_next` copy and the `_folded` sidecars
-    * survive as recovery copies.
+    * Crash discipline: the sidecars are RENAMED aside (a cheap
+    * catalog/directory move) before the base swap and deleted only
+    * after the `ALTER TABLE ... RENAME` lands, so no window leaves the
+    * pre-fold base live with the day's advances gone. Pre-swap the
+    * original base+sidecars are intact; between base-drop and rename
+    * the reader fails on a missing table while BOTH the folded
+    * `_mor_next` copy and the `_folded` sidecars survive as recovery
+    * copies.
     */
   def compactMor(s: SparkSession, base: String, key: String,
                  endpoints: Seq[String], buckets: Int = 16): Unit = {
     val tmp = base + "_mor_next"
     writeBucketed(readMor(s, base, endpoints), tmp, key, buckets)
     val aside = setSidecarsAside(s, base)
-    dropManagedPurging(s, base)
-    s.sql(s"ALTER TABLE `$tmp` RENAME TO `$base`")
+    swapIn(s, tmp, base)
     aside.foreach(t => dropManagedPurging(s, t))
-    resetSidecarEpochs(base) // the fold retired them — known empty
   }
 
   /** Move `base`'s sidecars to `*_folded` names (catalog rename — no
@@ -484,9 +504,9 @@ object BucketedStore {
     * fixtures): the fold lands under a working name, subsequent sidecar
     * appends attach to THAT name, and the snapshot stays pristine for
     * the next replay's reset. No swap window at all — the write is to a
-    * fresh name. With the round-16 shared snapshot, `sidecarsOf` is the
-    * caller's working name (where its [[readMor]] reads attached them),
-    * so the fold consumes exactly the advances this caller made and the
+    * fresh name. With a shared snapshot, `sidecarsOf` is the caller's
+    * working name (where its [[readMor]] reads attached them), so the
+    * fold consumes exactly the advances this caller made and the
     * retired sidecars are its own, never another snapshot-sharer's.
     */
   def compactMorInto(s: SparkSession, base: String, into: String,
@@ -501,9 +521,9 @@ object BucketedStore {
   }
 
   // ---------------------------------------------------------------------
-  // Compaction POLICY (round-15 verdict item 4): `compactAfterOps` made
-  // the schedule a manual parameter; the per-day pricing in
-  // bench/r15_profile_mor_compaction.txt says what should DRIVE it —
+  // Compaction POLICY: instead of a manual `compactAfterOps` schedule,
+  // the fold can be driven by what the per-day pricing
+  // (bench/r15_profile_mor_compaction.txt) says drives its value —
   // sidecar depth (every accumulated epoch adds a union branch + its
   // anti-join work to each read until the next fold) and tombstone
   // growth (the broadcast the anti-joins ship with every read). Both are
@@ -519,10 +539,9 @@ object BucketedStore {
     * tombstone generation in every [[readMor]] until compaction. */
   val CompactDepthConf = "spark.graft.mor.compactDepth"
 
-  /** The MEASURED depth default for a policy-driven deployment
-    * (round-16 verdict item 5): at the 100× fixture's corpus:batch
-    * ratio the fold prices at ~5.3–16.7 s for the pair store and
-    * ~1.4–5.1 s for the assigned store at depth 3
+  /** The MEASURED depth default for a policy-driven deployment: at the
+    * 100× fixture's corpus:batch ratio the fold prices at ~5.3–16.7 s
+    * for the pair store and ~1.4–5.1 s for the assigned store at depth 3
     * (`bench/r{15,16}_profile_mor_compaction.txt`), against a ~10 s/day
     * merge-on-write rewrite it replaces and the per-read union/anti-join
     * amplification each uncompacted epoch adds — the break-even band is
@@ -536,101 +555,18 @@ object BucketedStore {
   val RecommendedCompactDepth = 2
 
   /** Fold when the tombstone sidecar holds at least this many rows
-    * (0/unset = leg disabled) — the same quantity [[MaxTombstoneRowsConf]]
-    * caps at read time, triggered here BEFORE accumulation degrades
-    * reads to shuffle anti-joins. */
+    * (0/unset = leg disabled), before accumulation outgrows the
+    * broadcast [[readMor]] gives the anti-joins. */
   val CompactTombRowsConf = "spark.graft.mor.compactTombstoneRows"
-
-  /** Writer-side sidecar bookkeeping: the distinct epochs appended to
-    * each host's sidecars since the last fold/drop in THIS JVM. The
-    * depth leg of [[compactDue]] reads this set instead of running a
-    * distinct-count job over the sidecars — the first focused 100×
-    * cell priced the scanning version at ~8 s/replay (4 probe points ×
-    * 2 stores, each a Spark job), which is the wrong cost for a
-    * bookkeeping question the writer can answer from memory. A fresh
-    * JVM facing on-disk sidecars it never wrote (the maintenance-daemon
-    * shape) has no entry and falls back to the one-off scan — correct
-    * either way, the cache only removes repeated jobs from the hot
-    * path. Single-writer-per-host is already the store's contract
-    * (appends are not transactional across processes).
-    */
-  private val sidecarEpochs =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[Integer]]()
-
-  /** One-off scan of `host`'s EXISTING sidecars' distinct epochs — the
-    * cold-start seed (round-16 ADVICE 2: seeding the set with just the
-    * first post-restart append's epoch masked older on-disk epochs, so
-    * the depth policy under-triggered until the next fold). Runs only
-    * when this JVM first touches a host it has no entry for; a host
-    * whose entry was RESET by a fold ([[resetSidecarEpochs]]) is a
-    * known-empty state and never rescans.
-    */
-  private def scanSidecarEpochs(s: SparkSession,
-      host: String): java.util.Set[Integer] = {
-    val set = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
-    Seq("_delta", "_tomb").map(host + _).filter(s.catalog.tableExists)
-      .foreach { t =>
-        s.table(t).select("_epoch").distinct().collect()
-          .foreach(r => set.add(Int.box(r.getInt(0))))
-      }
-    set
-  }
-
-  private def recordSidecarEpoch(s: SparkSession, host: String,
-      epoch: Int): Unit = {
-    sidecarEpochs.computeIfAbsent(host,
-      // no entry at all = cold start (this JVM never wrote OR folded
-      // this host's sidecars): seed from what is already on disk, so a
-      // maintenance daemon restarted mid-accumulation sees the true
-      // depth instead of only its own post-restart epochs
-      _ => scanSidecarEpochs(s, host))
-      .add(Int.box(epoch))
-    ()
-  }
-
-  /** A fold/drop retires every accumulated epoch: reset the host's
-    * entry to a KNOWN-EMPTY set (distinct from no-entry, which means
-    * cold start and triggers the seed scan on the next append). The
-    * tombstone sidecar is gone with the fold/drop, so its cached row
-    * count goes too. */
-  private def resetSidecarEpochs(host: String): Unit = {
-    sidecarEpochs.put(host,
-      java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]())
-    invalidateTombRows(host)
-  }
-
-  /** Cached [[readMor]] tombstone row counts per host — writer-side
-    * bookkeeping like [[sidecarEpochs]]: the count only selects the
-    * broadcast-vs-shuffle hint, so re-running it as a Spark job on every
-    * read of an unchanged sidecar was pure fixed overhead (several reads
-    * per lifecycle day). Invalidated by every path that can change the
-    * sidecar's row count; a cold JVM (or a host another process wrote)
-    * simply recounts once.
-    */
-  private val tombRowCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def invalidateTombRows(host: String): Unit = {
-    tombRowCache.remove(host)
-    ()
-  }
-
-  /** Test seam: forget a host's writer-side epoch set entirely so
-    * [[compactDue]] and [[recordSidecarEpoch]] exercise their
-    * cold-start scan paths. */
-  private[graft] def forgetSidecarEpochs(host: String): Unit = {
-    sidecarEpochs.remove(host); ()
-  }
 
   /** The conf'd compaction trigger over `host`'s sidecars: true when
     * the distinct-epoch depth across both sidecars reaches
     * [[CompactDepthConf]] or the tombstone row count reaches
-    * [[CompactTombRowsConf]]. The depth leg reads the writer-side
-    * [[sidecarEpochs]] set (no job) and scans the sidecars' `_epoch`
-    * column only on a cold start (this JVM never wrote them); the rows
-    * leg is a parquet count (footer metadata, no data scan). With both
-    * confs unset/0 this is constant-false without touching anything,
-    * so lifecycles that schedule explicitly are unaffected.
+    * [[CompactTombRowsConf]]. The depth leg reads the sidecars'
+    * [[EpochsKey]] properties (no job); the rows leg is a parquet count
+    * (footer metadata, no data scan). With both confs unset/0 this is
+    * constant-false without touching anything, so lifecycles that
+    * schedule explicitly are unaffected.
     */
   def compactDue(s: SparkSession, host: String): Boolean = {
     def confAtLeast(conf: String, measure: => Long): Boolean = {
@@ -639,15 +575,13 @@ object BucketedStore {
     }
     val sidecars = Seq("_delta", "_tomb").map(host + _)
       .filter(s.catalog.tableExists)
-    if (sidecars.isEmpty) false
-    else confAtLeast(CompactDepthConf,
-      Option(sidecarEpochs.get(host)).map(_.size.toLong).getOrElse(
-        sidecars.map(t => s.table(t).select("_epoch"))
-          .reduce(_ unionByName _).distinct().count())) ||
+    sidecars.nonEmpty && (
+      confAtLeast(CompactDepthConf,
+        sidecars.flatMap(epochsOf(s, _)).toSet.size.toLong) ||
       confAtLeast(CompactTombRowsConf,
         if (s.catalog.tableExists(s"${host}_tomb"))
           s.table(s"${host}_tomb").count()
-        else 0L)
+        else 0L))
   }
 
   /** Hive-style partitioned layout — the OTHER write-time pruning lever:

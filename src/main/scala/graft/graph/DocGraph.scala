@@ -71,6 +71,8 @@ final case class DocGraph(docs: DataFrame, edges: DataFrame,
 
 object DocGraph {
 
+  private val buildLock = new Object
+
   /** Binding 1: the deterministic fixture-derived graph (every q6x/q7x/q8x
     * oracle row rides this).
     */
@@ -207,41 +209,41 @@ object DocGraph {
       BucketedStore.table(s, s"${prefix}_kw_alias"))
   }
 
-  /** Tracks which source dir each served prefix's tables were built from
-    * in THIS JVM. The session catalog is in-memory, so a fresh process
-    * always rebuilds; within a process this guard both skips redundant
-    * rebuilds (build-once/serve-many) and — critically — forces a rebuild
-    * when the same prefix is requested for a DIFFERENT source dir (tests
-    * and multi-SF runs would otherwise serve stale tables).
-    */
-  private val servedFrom =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Property naming the source dir a [[bucketedServed]] binding's
+    * tables were built from. */
+  private val SourceKey = "graft.source"
+
+  private def bindingTables(prefix: String): Seq[String] =
+    (RelJoinKeys.map(_._1.toLowerCase) ++ Seq("docs", "kw_alias"))
+      .map(t => s"${prefix}_$t")
 
   /** Build-once/serve-many form of [[bucketed]] over the synthetic
-    * binding: the first call in a JVM (per prefix+source) pays the
-    * ingest writes; every later call reads the existing bucketed tables
-    * and plans the serve path alone. This is the honest serving-cost
+    * binding: the first call per prefix and source pays the ingest
+    * writes; every later call reads the existing bucketed tables and
+    * plans the serve path alone. This is the honest serving-cost
     * attribution the all-in-one form (q129) cannot give: there, every
     * benchmark run re-buys the ingest shuffle that production pays once
-    * per corpus build. Correctness is unaffected — a fresh JVM (every
-    * Verify run) rebuilds from the requested dir.
+    * per corpus build.
+    *
+    * The tables record their source as a [[SourceKey]] property: a
+    * rebuild clears it on every table before its first write and sets
+    * it only after all eight writes have settled, so a build that
+    * throws part-way, a table dropped under the binding or a request
+    * for another source all find an unmarked table and rebuild instead
+    * of serving mixed or stale tables. The lock serializes builds, so a
+    * concurrent caller waits for the tables rather than racing them.
     */
   def bucketedServed(s: SparkSession, d: String, prefix: String,
                      buckets: Int = 16): DocGraph = {
-    // Record the source dir only AFTER the build succeeds: a put-before-
-    // build would let a partial build (exception after some per-rel table
-    // writes) or a concurrent caller arriving mid-build observe prev == d
-    // and silently serve stale/partial tables — exactly the wrong-results
-    // mode this guard exists to prevent. compute() holds the per-prefix
-    // map lock across the build, so a concurrent second caller blocks
-    // until the tables exist, and a build that throws leaves the mapping
-    // UNCHANGED (ConcurrentHashMap.compute's contract), so the next
-    // caller rebuilds from scratch instead of serving the partial write.
-    if (servedFrom.get(prefix) != d)
-      servedFrom.compute(prefix, (_, prev) => {
-        if (prev != d) bucketed(synthetic(s, d), prefix, buckets)
-        d
-      })
+    val tables = bindingTables(prefix)
+    buildLock.synchronized {
+      if (!tables.forall(BucketedStore.property(s, _, SourceKey).contains(d))) {
+        tables.filter(s.catalog.tableExists)
+          .foreach(BucketedStore.setProperty(s, _, SourceKey, None))
+        bucketed(synthetic(s, d), prefix, buckets)
+        tables.foreach(BucketedStore.setProperty(s, _, SourceKey, Some(d)))
+      }
+    }
     readBucketedBinding(s, prefix)
   }
 }

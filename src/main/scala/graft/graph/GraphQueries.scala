@@ -420,7 +420,7 @@ object GraphQueries {
     }),
 
     // q129 with the ingest/serve attribution SPLIT: the bucketed tables
-    // build once per JVM+source (DocGraph.bucketedServed) and every
+    // build once per prefix+source (DocGraph.bucketedServed) and every
     // later call — including Bench's run 2..n, whose per-query median
     // therefore reflects the serve path — reads the existing co-located
     // buckets and pays ONLY the routed 2-hop self-join. q129 stays in

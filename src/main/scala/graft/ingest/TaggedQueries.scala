@@ -161,7 +161,7 @@ object TaggedQueries {
         .orderBy(col("original"))),
 
     // The tagged lifecycle's days served alone from its shared day-0
-    // snapshots (built once per JVM), min-TERM representatives
+    // snapshots (built once per key), min-TERM representatives
     // (`keyword_merger.py:222`) over the merged components — the
     // real-ingest twins of q155/q150/q143.
     // UPDATE: re-embed the md5-id ≡ 1 (mod 3) batch (dimension reversal)

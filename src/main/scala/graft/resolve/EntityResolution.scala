@@ -3,6 +3,7 @@ package graft.resolve
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.graph.BucketedStore
 
 /** Entity resolution — the reference's flagship operator (SURVEY.md §2.8,
   * `keyword_merger.py:103-266`): embed → DBSCAN(eps, min_samples=2,
@@ -268,22 +269,11 @@ object EntityResolution {
       .unionByName(merged.select($"vec_id", $"component".as("rep_id")))
   }
 
-  /** Tracks which parameter key each day-0 snapshot was built from in
-    * this JVM (same guard discipline as `DocGraph.bucketedServed`).
-    */
-  private val erServedFrom =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Catalog name for a SHARED day-0 snapshot (round-15 verdict item 6):
-    * the lifecycle families' immutable `_base_*` builds were keyed by
-    * query prefix, so q162/q163/q166 each built an identical snapshot
-    * per JVM (~3× the build cost per sweep boot) — and a same-prefix
-    * call with different ε/class parameters relied on the caller
-    * remembering to fold them into its guard key (round-15 ADVICE 1).
-    * Deriving the table name from the FULL parameter key solves both:
-    * identical parameters share one build, and any parameter change IS
-    * a different snapshot name — reuse-under-different-parameters is
-    * unrepresentable. `key` must carry everything the build reads
+  /** Catalog name for a SHARED day-0 snapshot, derived from the FULL
+    * parameter key: identical parameters share one build (q162/q163/q166
+    * read one snapshot instead of three identical ones), and any
+    * parameter change IS a different snapshot name, so reuse under
+    * different parameters is unrepresentable. `key` must carry everything the build reads
     * (source, ε num/den, class rule tag, day-0 membership); the name is
     * `graft_base_<kind>_<sha1-12 of key>` (hex — a valid catalog
     * identifier; the raw key contains path separators).
@@ -304,15 +294,14 @@ object EntityResolution {
   /** Structural fingerprint of a class rule: the canonical SQL (or, for
     * expressions without a SQL form, the tree string) of the Column the
     * rule produces over a probe attribute. Snapshot keys fold this in
-    * instead of a caller-supplied tag (round-16 ADVICE 3: the `clsTag`
-    * string default let a caller pass a custom `cls` and forget the
-    * tag, silently sharing a day-0 snapshot built under another rule —
-    * the doc said MUST, nothing enforced it). Two rules with the same
+    * instead of a caller-supplied tag, which a caller passing a custom
+    * `cls` could forget, silently sharing a day-0 snapshot built under
+    * another rule. Two rules with the same
     * expression tree ARE the same rule, so sharing under an equal
     * fingerprint is correct by construction; a structurally different
     * rule is a different key, hence a different snapshot name.
     *
-    * CONTRACT (round-17 ADVICE 4): `cls` must be a pure function of
+    * CONTRACT: `cls` must be a pure function of
     * the probe column. A rule that closes over RESOLVED columns from a
     * live plan would embed per-JVM expression ids (`#N`) in the
     * fingerprint — a key that silently differs across JVMs, defeating
@@ -324,14 +313,13 @@ object EntityResolution {
   private[resolve] def clsFingerprint(s: SparkSession,
       cls: Column => Column): String = {
     // ANALYZE the rule over a literal one-column probe frame and
-    // fingerprint the analyzed expression's canonical SQL. This is the
-    // round-18 repair of the r17 fingerprint, which read the UNRESOLVED
-    // Column's lazy bridge expression — under Spark 4's ColumnNode
-    // indirection that rendered as the same opaque placeholder for
-    // EVERY rule ("columnnodeexpression()"), i.e. the r16 no-aliasing
-    // fix was silently vacuous: any two class rules shared one
-    // fingerprint, so a custom rule could still reuse another rule's
-    // day-0 snapshot. Analysis also IS the purity enforcement: a rule
+    // fingerprint the analyzed expression's canonical SQL. The
+    // UNRESOLVED Column's lazy bridge expression cannot serve: under
+    // Spark 4's ColumnNode indirection it renders as the same opaque
+    // placeholder for EVERY rule ("columnnodeexpression()"), so any two
+    // class rules would share one fingerprint and a custom rule could
+    // reuse another rule's day-0 snapshot. Analysis also IS the purity
+    // enforcement: a rule
     // that references any column but the probe — by name or by a
     // captured resolved Column from a live plan — fails to resolve
     // against the probe frame and throws here, at the call that would
@@ -504,8 +492,8 @@ object EntityResolution {
     * pull its inputs from the standing DISK tables — the serve path's
     * shape — the same dirty region is read and iterated twice:
     * stage-profiling the served path at 100× read retract 34.8 s +
-    * reinsert 6.1 s vs 19.8 s for this fused form (ProfileUpdate,
-    * round 11; the committed serve went 40.8 → 20.3 s) — CC cost here
+    * reinsert 6.1 s vs 19.8 s for this fused form (the committed serve
+    * went 40.8 → 20.3 s) — CC cost here
     * is Pregel-ROUND-bound, so the second full iteration is the single
     * largest line in the query.
     *
@@ -620,34 +608,49 @@ object EntityResolution {
           .as("vec_id"),
         termEmbedding(col("value")).as("embedding"))
 
+  /** Property holding the full parameter key a snapshot was built from. */
+  private val SnapshotKey = "graft.key"
+
+  private val snapshotLock = new Object
+
   /** Ensure the shared day-0 snapshot `sharedBaseName(kind, key)` and
-    * return its table prefix. `build` gives the day-0 rows (persisted)
-    * and their ε-pairs; the rows land as `<prefix>_<rowStore>` bucketed
-    * on `rowKey`, beside `<prefix>_pairs` and the CC `<prefix>_mapping`.
-    * Built once per JVM and key, so `key` must determine everything the
-    * build reads; the tables are named by it, so every same-parameter
-    * lifecycle or serve reads one build.
+    * return its table prefix. `build` gives the day-0 rows (persisted),
+    * their ε-pairs and any small side tables by name (one file each,
+    * such as the synthetic binding's pinned index); the rows land as
+    * `<prefix>_<rowStore>` bucketed on `rowKey`, beside `<prefix>_pairs`
+    * and, written last, the CC `<prefix>_mapping`. The snapshot is
+    * complete exactly when the mapping carries `key` as its
+    * [[SnapshotKey]] property, which is set after every write has
+    * landed: a build that throws part-way, or tables dropped under the
+    * snapshot, rebuild on the next call, in this session or any other
+    * on the same catalog. `key` must determine everything the build
+    * reads; the tables are named by it, so every same-parameter
+    * lifecycle or serve reads one build. The lock serializes builds.
     */
   private[resolve] def ensureSnapshot(s: SparkSession, kind: String,
       key: String, rowStore: String, rowKey: String)(
-      build: => (DataFrame, DataFrame)): String = {
+      build: => (DataFrame, DataFrame, Map[String, DataFrame])): String = {
     val prefix = sharedBaseName(kind, key)
-    if (erServedFrom.get(prefix) != key)
-      erServedFrom.compute(prefix, (_, prev) => {
-        if (prev != key) {
-          val (rows, pairs) = build
-          val mapping =
-            Kernels.connectedComponents(s, rows.select(col("vec_id")), pairs)
-          val tables = Seq((rows, rowStore, rowKey), (pairs, "pairs", "u"),
-            (mapping, "mapping", "vec_id"))
-          tables.foreach { case (df, t, k) =>
-            graft.graph.BucketedStore.writeBucketed(df, s"${prefix}_$t", k, 16)
-          }
-          // the mapping's persist is the CC kernel's own, written out
-          tables.foreach(_._1.unpersist(blocking = false))
+    val complete = s"${prefix}_mapping"
+    snapshotLock.synchronized {
+      if (!BucketedStore.property(s, complete, SnapshotKey).contains(key)) {
+        val (rows, pairs, sides) = build
+        sides.foreach { case (t, df) =>
+          BucketedStore.dropManagedPurging(s, s"${prefix}_$t")
+          df.coalesce(1).write.format("parquet").saveAsTable(s"${prefix}_$t")
         }
-        key
-      })
+        val mapping =
+          Kernels.connectedComponents(s, rows.select(col("vec_id")), pairs)
+        val tables = Seq((rows, rowStore, rowKey), (pairs, "pairs", "u"),
+          (mapping, "mapping", "vec_id"))
+        tables.foreach { case (df, t, k) =>
+          BucketedStore.writeBucketed(df, s"${prefix}_$t", k, 16)
+        }
+        BucketedStore.setProperty(s, complete, SnapshotKey, Some(key))
+        // the mapping's persist is the CC kernel's own, written out
+        tables.foreach(_._1.unpersist(blocking = false))
+      }
+    }
     prefix
   }
 
@@ -682,7 +685,7 @@ object EntityResolution {
     // survivor lost with its component all hash-mismatch.
     "q146_er_tombstones" -> ((s, d) => tombstoneResolve(s, d)),
     // q146's delete day served alone from the shared day-0 snapshot
-    // (`ins=`, built once per JVM): the measured call is the tombstone
+    // (`ins=`, built once per key): the measured call is the tombstone
     // merge. Same oracle as q146.
     "q150_er_tombstones_served" -> ((s, d) =>
       Lifecycle.serve(s, Lifecycle.synthetic(d), ("delete", 5))),
@@ -746,14 +749,14 @@ object EntityResolution {
     // oracle as q162/q163/q166: what TRIGGERS the maintenance fold must
     // be as invisible in the mapping as the fold itself.
     "q169_er_mor_compact_policy" -> ((s, d) => {
-      val conf = graft.graph.BucketedStore.CompactDepthConf
+      val conf = BucketedStore.CompactDepthConf
       val prev = s.conf.getOption(conf)
       // the measured break-even depth (bench/r{15,16}_profile_mor_
       // compaction.txt → RecommendedCompactDepth): after the update day
       // the stores carry epochs {1,2}, so the policy fires exactly
       // where q166's manual Set(1) schedule folds
       s.conf.set(conf,
-        graft.graph.BucketedStore.RecommendedCompactDepth.toString)
+        BucketedStore.RecommendedCompactDepth.toString)
       try Lifecycle.run(s, Lifecycle.synthetic(d), Lifecycle.MergeOnRead,
         "graft_q169", syntheticCrud)
       finally prev match {
@@ -769,7 +772,7 @@ object EntityResolution {
     "q141_er_incremental" -> ((s, d) => incrementalResolve(s, d)),
 
     // q141's insert day served alone from the `ins=9` snapshot the
-    // q162 family replays (built once per JVM): the measured call is
+    // q162 family replays (built once per key): the measured call is
     // the increment. Same oracle as q141.
     "q143_er_incremental_served" -> ((s, d) =>
       Lifecycle.serve(s, Lifecycle.synthetic(d), ("insert", 9))),

@@ -28,9 +28,9 @@ import EntityResolution._
   *    induction the final mapping is from-scratch ER over the net rows,
   *    bit-identical under either policy and any day order of disjoint
   *    classes.
-  *  - the day-0 snapshot is immutable. It is built once per JVM and
-  *    parameter key, named by that key ([[EntityResolution.sharedBaseName]])
-  *    and shared by every lifecycle and [[serve]] with equal parameters.
+  *  - the day-0 snapshot is immutable. It is built once per parameter
+  *    key, named by that key ([[EntityResolution.sharedBaseName]]) and
+  *    shared by every lifecycle and [[serve]] with equal parameters.
   *    A run resets by dropping its own working tables; reads fall back
   *    to the snapshot until an advance or a fold writes the working
   *    name. A serve writes nothing.
@@ -43,23 +43,25 @@ object Lifecycle {
   /** Where a lifecycle's rows come from and how its day kernels read
     * them: the row store and its bucket key, the class rule the ops
     * select by, the day-0 snapshot (given the inserted classes; returns
-    * its table prefix), the day batches (class, re-embedded?), the
-    * touching-pair kernel (survivors, batch) and the result shape
-    * (mapping as `(vec_id, rep_id)`, rows — by name: reading a
-    * merge-on-read store can cost a job, and only some shapes need it).
+    * its table prefix), the day batches (class, re-embedded?) given the
+    * snapshot prefix and the classes it lacks, the touching-pair kernel
+    * (survivors, batch) and the result shape (mapping as
+    * `(vec_id, rep_id)`, rows — by name: reading a merge-on-read store
+    * can cost a job, and only some shapes need it).
     */
   final class Binding private[resolve] (
       val rowStore: String, val rowKey: String,
       val cls: Column => Column,
       val snapshot: (SparkSession, Set[Int]) => String,
-      val batches: SparkSession => (Int, Boolean) => DataFrame,
+      val batches: (SparkSession, String, Set[Int]) => (Int, Boolean) => DataFrame,
       val touching: (DataFrame, DataFrame) => DataFrame,
       val result: (DataFrame, => DataFrame) => DataFrame)
 
   /** The embeddings corpus under the [[EntityResolution.standingPin]]
     * IVF index, classes by `cls` (default `vec_id % 10`): rows are cell
-    * assignments bucketed by `cid`, batches are assigned against the
-    * cached pin, and a day re-embeds by reversing the dimensions before
+    * assignments bucketed by `cid`, the snapshot stores the pinned index
+    * as `<snapshot>_index`, batches are assigned against that stored
+    * index, and a day re-embeds by reversing the dimensions before
     * assignment. The pin is fixed, so the snapshot with no inserted
     * class is the whole corpus under any rule; the snapshot key names
     * the rule only when a non-default rule selects inserted classes.
@@ -73,15 +75,20 @@ object Lifecycle {
           else s"|cls=$rule"
         ensureSnapshot(s, "syn", s"$d|ins=${sorted(inserted)}$ruleKey",
             "assigned", "cid") {
+          val pin = Similarity.pinnedCentroids(s, d, standingPin)
           val assigned = Similarity
-            .ivfAssignedPinned(s, d, standingPin, notIn(cls, inserted))
+            .assignPinned(s, d, pin, notIn(cls, inserted))
             .persist(StorageLevel.MEMORY_AND_DISK)
           (assigned, Kernels.epsCellPairsOrdered(assigned)
-            .persist(StorageLevel.MEMORY_AND_DISK))
+            .persist(StorageLevel.MEMORY_AND_DISK),
+            Map("index" -> Similarity.indexFrame(s, pin)))
         }
       },
-      batches = s => (k, reembed) => Similarity.ivfAssignedPinnedCached(
-        s, d, standingPin, c => cls(c) === k, reembed),
+      batches = (s, base, _) => {
+        lazy val pin = Similarity.indexOf(s.table(s"${base}_index"))
+        (k, reembed) =>
+          Similarity.assignPinned(s, d, pin, c => cls(c) === k, reembed)
+      },
       touching = updateTouchingPairs,
       result = (mapping, _) => mapping.orderBy(col("vec_id")))
 
@@ -97,10 +104,12 @@ object Lifecycle {
   /** The tagged ingest's keyword universe under the exact kernel at
     * cos ≥ num/den: rows are embedded terms bucketed by `vec_id`, and
     * the result names each term's representative by the component's
-    * lexicographically minimal term. Batches always derive from the
-    * ingest — `daySource(k)` when given (the day's arriving documents
-    * only), else the full parse — never from the term store, so a
-    * recompute after an advance cannot re-embed a re-embedded row.
+    * lexicographically minimal term. A day's batch is `daySource(k)`'s
+    * terms when given (the day's arriving documents only); otherwise a
+    * class the snapshot holds reads the snapshot's terms and only an
+    * inserted class parses the ingest. Never the working term store:
+    * the snapshot is immutable, so a recompute after an advance cannot
+    * re-embed a re-embedded row.
     */
   def ingested(ingested: () => DataFrame, sourceKey: String, num: Int,
       den: Int, cls: Column => Column = c => c % 3,
@@ -115,14 +124,20 @@ object Lifecycle {
           val terms = embedTermUniverse(ingested())
             .filter(notIn(cls, inserted)(col("vec_id")))
             .persist(StorageLevel.MEMORY_AND_DISK)
-          (terms, Kernels.epsPairsOf(terms, num, den))
+          (terms, Kernels.epsPairsOf(terms, num, den), Map.empty)
         }
       },
-      batches = _ => {
-        lazy val universe = persistServe(embedTermUniverse(ingested()))
+      batches = (s, base, inserted) => {
+        // a parse that several insert days read is cached once; a single
+        // day's batch is cached by the day kernel alone
+        lazy val parsed = {
+          val terms = embedTermUniverse(ingested())
+          if (inserted.size > 1) persistServe(terms) else terms
+        }
         (k, reembed) => {
           val batch = daySource.map(f => embedTermUniverse(f(k)))
-            .getOrElse(universe).filter(cls(col("vec_id")) === k)
+            .getOrElse(if (inserted(k)) parsed else s.table(s"${base}_terms"))
+            .filter(cls(col("vec_id")) === k)
           if (reembed) batch.withColumn("embedding", reverse(col("embedding")))
           else batch
         }
@@ -191,16 +206,16 @@ object Lifecycle {
   /** Serve one op — `(insert|update|delete, class)` — against the day-0
     * snapshot that holds every class but an inserted one, and return
     * the binding's result over the day's merged mapping and its live
-    * rows. Nothing is written: the snapshot is built once per JVM and
-    * parameter key, so a repeated serve pays only the day's kernel.
+    * rows. Nothing is written: the snapshot is built once per parameter
+    * key, so a repeated serve pays only the day's kernel.
     */
   def serve(s: SparkSession, binding: Binding, op: (String, Int)): DataFrame = {
     val inserted = Set(op).collect { case ("insert", k) => k }
     val base = binding.snapshot(s, inserted)
     def table(t: String) = BucketedStore.table(s, s"${base}_$t")
     val rows = table(binding.rowStore)
-    val served = day(s, binding, binding.batches(s), rows, table("pairs"),
-      table("mapping"), op)
+    val served = day(s, binding, binding.batches(s, base, inserted), rows,
+      table("pairs"), table("mapping"), op)
     binding.result(served.merged,
       plus(served.alive(rows, "vec_id"), served.newRows))
   }
@@ -246,7 +261,7 @@ object Lifecycle {
     def rows = store(rowStore, "vec_id")
     def pairs = store("pairs", "u", "v")
     def mapping = BucketedStore.table(s, current("mapping"))
-    val batchOf = binding.batches(s)
+    val batchOf = binding.batches(s, base, inserted)
 
     def write(day: Day, epoch: Int): Unit = {
       val merged = day.merged.select($"vec_id", $"rep_id".as("component"))

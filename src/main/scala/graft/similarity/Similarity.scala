@@ -49,23 +49,6 @@ object Similarity {
   private[graft] val HierThresholdConf = "spark.graft.ivf.hierThreshold"
   private val HierThresholdDefault = 256
 
-  /** Boundary-adaptive SemDeDup probe knobs as RUNTIME conf (round-13
-    * verdict item 5): `lo` cells are probed unconditionally, ranks
-    * lo+1..`hi` only within `margin` of the vector's best cell in
-    * signed-cos² key space. Compile-time defaults (4 / 6 / 0.1) are the
-    * shipped design point every oracle gate and committed number was
-    * taken at — the q152 DuckDB mirror interpolates EXACTLY these, so
-    * like [[SpacingConf]] these must never be set under the correctness
-    * gate. A 100 TB deployment tunes recall against its own embedding
-    * geometry instead of recompiling: the committed retune grid
-    * (`bench/r13_recall_boundary_sf1_ext.txt`) maps the frontier — e.g.
-    * lo=4 hi=10 margin=0.2 reads 0.939 pair / 0.998 drop recall at 10×
-    * for ~3.5× the candidate work of the default point.
-    */
-  private[graft] val SemLoConf = "spark.graft.semdedup.lo"
-  private[graft] val SemHiConf = "spark.graft.semdedup.hi"
-  private[graft] val SemMarginConf = "spark.graft.semdedup.margin"
-
   /** Centroid spacing: every `m`-th vector is a centroid, with
     * m = max(50, floor(sqrt(n))). At the oracle SFs (n ≤ 2500) this is
     * exactly the fixed 50 of rounds 1–5, so gated results are unchanged;
@@ -90,7 +73,7 @@ object Similarity {
     * k ≈ sqrt(n) of these; at any scale this is the small side that IVF
     * exists to keep broadcastable.
     */
-  private type Cent = (Long, Seq[Long], Long)
+  private[graft] type Cent = (Long, Seq[Long], Long)
 
   private def quantized(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -294,21 +277,27 @@ object Similarity {
     * query serving, the blocked near-dup joins) loads the index and pays
     * only the assignment scan. Parquet keeps the exact BIGINT lattice.
     */
-  private def writeIndex(s: SparkSession, cents: Seq[Cent], dir: String): Unit = {
-    import s.implicits._
+  private def writeIndex(s: SparkSession, cents: Seq[Cent], dir: String): Unit =
     // k rows: a single file is the right layout for a broadcast artifact
-    cents.toDF("cid", "ce", "cnrm").coalesce(1)
-      .write.mode("overwrite").parquet(dir)
+    indexFrame(s, cents).coalesce(1).write.mode("overwrite").parquet(dir)
+
+  /** An index as the `(cid, ce, cnrm)` frame it is stored as. */
+  private[graft] def indexFrame(s: SparkSession, cents: Seq[Cent]): DataFrame = {
+    import s.implicits._
+    cents.toDF("cid", "ce", "cnrm")
   }
 
   /** Load a persisted index back into the driver-held form the
     * assignment expressions consume; cid-sorted so downstream grouping
     * ([[hierGroups]]) is layout-independent.
     */
-  private def readIndex(s: SparkSession, dir: String): Seq[Cent] = {
-    import s.implicits._
-    s.read.parquet(dir).as[(Long, Seq[Long], Long)]
-      .collect().sortBy(_._1).toSeq
+  private def readIndex(s: SparkSession, dir: String): Seq[Cent] =
+    indexOf(s.read.parquet(dir))
+
+  /** Collect a stored [[indexFrame]] back into the driver-held form. */
+  private[graft] def indexOf(stored: DataFrame): Seq[Cent] = {
+    import stored.sparkSession.implicits._
+    stored.as[(Long, Seq[Long], Long)].collect().sortBy(_._1).toSeq
   }
 
   /** Nearest-cell assignment of a quantized frame `(vec_id, e, nrm)` to
@@ -339,36 +328,23 @@ object Similarity {
       indexSubset: Column => Column,
       rowSubset: Column => Column = _ => lit(true),
       reembed: Boolean = false): DataFrame =
-    assignRows(s, d, rowSubset, reembed, pinnedCentroids(s, d, indexSubset))
+    assignPinned(s, d, pinnedCentroids(s, d, indexSubset), rowSubset, reembed)
 
-  /** [[ivfAssignedPinned]] with the centroid collect cached per source
-    * dir in this JVM — a serve call assigns only its batch rows against
-    * the reused index instead of re-deriving it. The production analog
-    * is the persisted index table (q49's write/readIndex). An entry is
-    * reused only for the same `indexSubset` instance; any other rule
-    * recomputes and replaces it.
+  /** Assign the `rowSubset` rows of `d` (reversed first when `reembed`)
+    * to the pinned index `cents` — a serve that stored its index
+    * assigns only its batch rows against it instead of re-deriving it.
     */
-  private[graft] def ivfAssignedPinnedCached(s: SparkSession, d: String,
-      indexSubset: Column => Column, rowSubset: Column => Column,
-      reembed: Boolean): DataFrame = {
-    val cents = pinnedCache.compute(d, (_, prev) =>
-      if (prev != null && (prev._1 eq indexSubset)) prev
-      else (indexSubset, pinnedCentroids(s, d, indexSubset)))._2
-    assignRows(s, d, rowSubset, reembed, cents)
-  }
-
-  private def assignRows(s: SparkSession, d: String,
-      rowSubset: Column => Column, reembed: Boolean,
-      cents: Seq[Cent]): DataFrame = {
+  private[graft] def assignPinned(s: SparkSession, d: String,
+      cents: Seq[Cent], rowSubset: Column => Column = _ => lit(true),
+      reembed: Boolean = false): DataFrame = {
     val rows = quantized(s, d).filter(rowSubset(col("vec_id")))
     assignToCells(
       if (reembed) rows.withColumn("e", reverse(col("e"))) else rows, cents)
   }
 
-  private val pinnedCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Column => Column, Seq[Cent])]()
-
-  private def pinnedCentroids(s: SparkSession, d: String,
+  /** The index [[ivfAssignedPinned]] pins: every m-th vec_id of the
+    * `indexSubset` rows, m = max(50, floor(sqrt(n_subset))). */
+  private[graft] def pinnedCentroids(s: SparkSession, d: String,
       indexSubset: Column => Column): Seq[Cent] = {
     import s.implicits._
     val q = quantized(s, d)
@@ -434,7 +410,7 @@ object Similarity {
       .orderBy($"vec_id")
   }
 
-  /** The ADAPTIVE-nprobe SemDeDup rung (round-10 verdict item 6): every
+  /** The ADAPTIVE-nprobe SemDeDup rung: every
     * vector probes its `lo` nearest cells unconditionally, and cells of
     * rank lo+1..`hi` only while they sit within `margin` of the vector's
     * BEST cell in signed-cos² key space — i.e. extra probes go exactly
@@ -456,14 +432,13 @@ object Similarity {
     * scan-until-break. The keep rule is [[semanticDedupNprobe]]'s
     * left-semi short-circuit, unchanged.
     */
-  private def semanticDedupBoundary(s: SparkSession, d: String,
+  private[similarity] def semanticDedupBoundary(s: SparkSession, d: String,
       lo: Int = 4, hi: Int = 6, margin: Double = 0.1): DataFrame = {
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
     require(lo >= 1 && hi >= lo && margin >= 0,
       s"semdedup knobs out of range: lo=$lo hi=$hi margin=$margin " +
-        s"(need 1 <= lo <= hi, margin >= 0; set via $SemLoConf/" +
-        s"$SemHiConf/$SemMarginConf)")
+        "(need 1 <= lo <= hi, margin >= 0)")
     val cents = kmeansCentroids(s, d, 2)
     val centDf = cents.toDF("cid", "ce", "cnrm")
     val keyed = quantized(s, d)
@@ -713,7 +688,7 @@ object Similarity {
     // recall 0.38 → 0.69, drop recall 0.44 → 0.75 vs the all-pairs
     // truth, for 2× the assignment rows and ~2–4× the within-cell pair
     // work — the standard IVF price curve applied to dedup (PERF.md
-    // round-8 recall table).
+    // recall table).
     "q136_semantic_dedup_nprobe2" -> ((s, d) => semanticDedupNprobe(s, d, 2)),
 
     // The production point on the same recall curve: nprobe=4 multi-cell
@@ -728,7 +703,7 @@ object Similarity {
     // `tools/recall_semdedup.py`; PERF.md carries the table.
     "q139_semantic_dedup_nprobe4" -> ((s, d) => semanticDedupNprobe(s, d, 4)),
 
-    // The rung that closes the round-9 recall residual: on the DIFFUSE
+    // The rung that clears the recall bar at every gated SF: on the DIFFUSE
     // sf0.1 fixture (n=2000, k=40 cells) nprobe=4 reads pair recall
     // 0.786 — under the ≥0.85 operational bar even though the compact
     // sf0.001/sf0.01 fixtures sit at 0.98–1.00. nprobe=5 measures
@@ -744,11 +719,7 @@ object Similarity {
     // pair recall at every gated SF for less pair work than the uniform
     // rung that clears it — extra probes spent only on vectors whose
     // best-cell key is within 0.1 of further cells (the boundary set).
-    "q152_semantic_dedup_boundary" -> ((s, d) => semanticDedupBoundary(s, d,
-      lo = s.conf.getOption(SemLoConf).map(_.toInt).getOrElse(4),
-      hi = s.conf.getOption(SemHiConf).map(_.toInt).getOrElse(6),
-      margin = s.conf.getOption(SemMarginConf).map(_.toDouble)
-        .getOrElse(0.1))),
+    "q152_semantic_dedup_boundary" -> ((s, d) => semanticDedupBoundary(s, d)),
 
     "q133_semantic_dedup" -> ((s, d) => {
       import s.implicits._

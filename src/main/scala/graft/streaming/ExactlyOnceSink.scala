@@ -161,17 +161,15 @@ object ExactlyOnceSink {
     // close even that window with a versioned-name + view repoint swap;
     // the local in-memory catalog has no atomic repoint, so the seam is
     // documented and spec-pinned instead.
-    BucketedStore.dropManagedPurging(s, table)
-    s.sql(s"ALTER TABLE `$tmp` RENAME TO `$table`")
+    BucketedStore.swapIn(s, tmp, table)
   }
 
   /** Idempotently land one micro-batch as MERGE-ON-READ sidecars on the
-    * bucketed serving table `host` (round-15 verdict item 3: the serving
-    * store previously had TWO write paths — this fold's base-layered
-    * latest-wins merge and the lifecycle families' delta/tombstone
-    * sidecars. Now a streamed batch lands in the SAME sidecar layout the
-    * batch-maintenance lifecycles advance through, with
-    * [[graft.graph.BucketedStore.compactMor]] as the one fold).
+    * bucketed serving table `host`: a streamed batch lands in the SAME
+    * sidecar layout the batch-maintenance lifecycles advance through,
+    * with [[graft.graph.BucketedStore.compactMor]] as the one fold, so
+    * the serving store has one write path, not a second base-layered
+    * latest-wins merge beside the lifecycle sidecars.
     *
     * Layering mirrors [[landBatch]]/[[foldIntoBucketed]]:
     * `BucketedStore` owns the LAYOUT (epoch-tagged sidecars, strict-
@@ -196,37 +194,14 @@ object ExactlyOnceSink {
     * An update batch passes both (`deltas` = the new rows, `tombstoneIds`
     * = their keys); an insert-only batch passes only `deltas`; a delete
     * batch only `tombstoneIds`.
-    */
-  /** Crash-window recovery for the sidecar rewrites' `_next` swap
-    * (round-16 ADVICE 1): [[landMorSidecars]]' per-epoch cleanup goes
-    * through a temp-write → drop → rename swap; a crash between the
-    * drop and the rename leaves the sidecar MISSING with the only
-    * complete copy stranded under `<sidecar>_next` — and a missing
-    * sidecar reads clean ([[graft.graph.BucketedStore.readMor]] folds
-    * to the base alone), so the next re-land would recreate it with
-    * only its own epoch, silently losing every earlier checkpointed
-    * epoch. Called before a landing touches the sidecar:
-    *  - `_next` present, sidecar missing → the drop landed but the
-    *    rename did not: rename `_next` back (the copy is complete by
-    *    construction — it was fully written before the drop);
-    *  - both present → the crash hit before the drop: the original is
-    *    intact and `_next` is a stale temp — purge it.
-    * Every window of the rewrite now recovers or leaves the pre-rewrite
-    * state intact — compactMor's loud-or-recoverable discipline, where
-    * this path previously read clean through a silent loss. (The local
-    * in-memory catalog forgets both names across JVMs; the recovery
-    * covers in-process failures here and the metastore-backed
-    * deployment the crash discipline is written for. Pinned by
-    * `ExactlyOnceSinkSpec`.)
     *
-    * Round-17 ADVICE 5 generalized the recovery into
-    * [[graft.graph.BucketedStore.recoverStrandedNext]]: `readMor` and
-    * `replaceBucketed` now run it too, closing the crash-to-reland
-    * window in which a read here would have served base-only state.
+    * The rewrite minus an epoch goes through the `_next` swap
+    * ([[graft.graph.BucketedStore.swapIn]]), which carries the
+    * sidecar's epoch set; a crash between its drop and rename strands
+    * the only complete copy, so every stranded `_next` is recovered
+    * before a landing looks at the sidecar — otherwise the re-land would
+    * recreate it with only its own epoch and lose every earlier one.
     */
-  private def recoverStrandedNext(s: SparkSession, sidecar: String): Unit =
-    graft.graph.BucketedStore.recoverStrandedNext(s, sidecar)
-
   def landMorSidecars(s: SparkSession, host: String, key: String,
       epoch: Int, deltas: Option[DataFrame] = None,
       tombstoneIds: Option[DataFrame] = None, buckets: Int = 16): Unit = {
@@ -234,8 +209,8 @@ object ExactlyOnceSink {
     // recover (or clear) any swap stranded by a previous crash BEFORE
     // the hasEpoch checks: a stranded delta would otherwise read as
     // epoch-absent and the append below would bury the only copy
-    recoverStrandedNext(s, s"${host}_delta")
-    recoverStrandedNext(s, s"${host}_tomb")
+    Seq("_delta", "_tomb").foreach(suf =>
+      BucketedStore.recoverStrandedNext(s, host + suf))
     def hasEpoch(table: String): Boolean =
       s.catalog.tableExists(table) &&
         !s.table(table).filter(col("_epoch") === epoch).isEmpty
@@ -259,17 +234,16 @@ object ExactlyOnceSink {
         s.table(t).filter(col("_epoch") =!= epoch)
           .write.mode(SaveMode.Overwrite).format("parquet")
           .saveAsTable(tmp)
-        BucketedStore.dropManagedPurging(s, t)
-        s.sql(s"ALTER TABLE `$tmp` RENAME TO `$t`")
+        BucketedStore.swapIn(s, tmp, t)
       }
       BucketedStore.appendTombstoneSidecar(ids, host, epoch)
     }
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // The full exactly-once lineage under the DRIVER's oracle gate (the
-    // round-9 residual: this surface was spec-only): batch 0 lands the
-    // corpus projection, batch 1 lands updates (doc_id%10=3 rewritten)
+    // The full exactly-once lineage under the oracle gate, so the
+    // surface is not pinned by specs alone: batch 0 lands the corpus
+    // projection, batch 1 lands updates (doc_id%10=3 rewritten)
     // plus inserts (doc_id%10=7 re-keyed above the corpus) — then batch
     // 1 is REPLAYED (at-least-once delivery), folded, replayed again and
     // re-folded. The gated frame is the bucketed serving table: any
@@ -327,11 +301,11 @@ object ExactlyOnceSink {
       graft.query.Router.route(g, 7, Map("org" -> "Org_77"))
     }),
 
-    // The streaming↔serving splice through the MERGE-ON-READ layout
-    // (round-15 verdict item 3): the same re-publication micro-batch as
-    // q147, but landed as epoch-tagged MOR sidecars on the serving
-    // table — tombstones kill the old PUBLISHED_BY rows, same-epoch
-    // deltas carry the new org — with `compactMor` as the single fold
+    // The streaming↔serving splice through the MERGE-ON-READ layout:
+    // the same re-publication micro-batch as q147, but landed as
+    // epoch-tagged MOR sidecars on the serving table — tombstones kill
+    // the old PUBLISHED_BY rows, same-epoch deltas carry the new org —
+    // with `compactMor` as the single fold
     // and the routed family-7 query serving the post-fold bucketed
     // state. Replay discipline exercised at BOTH seams: the batch is
     // re-landed before the first fold (sidecar-level idempotence) and

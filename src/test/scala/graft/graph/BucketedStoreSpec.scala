@@ -136,11 +136,11 @@ class BucketedStoreSpec extends AnyFunSuite {
       s"post-compact MOR base join shuffles:\n$plan")
   }
 
-  /** Round-14 ADVICE 2: the "tombstones are day-batch-sized" contract is
-    * now enforced — under the conf'd cap the anti-joins broadcast the
-    * tombstone table; over it they fall back to a shuffle anti-join
-    * (identical rows, never an OOM). Auto-broadcast is disabled inside
-    * the over-cap assertion so the plan shape reflects the hint alone.
+  /** The "tombstones are day-batch-sized" contract is enforced by
+    * size: while the tombstone sidecar's on-disk bytes are within
+    * `spark.sql.autoBroadcastJoinThreshold` the anti-joins broadcast it;
+    * past it they fall back to a shuffle anti-join (identical rows,
+    * never an OOM).
     */
   test("readMor tombstone cap: broadcast under, shuffle fallback over") {
     val base = Seq((1L, 2L, "a"), (3L, 4L, "b"), (5L, 6L, "c"))
@@ -151,26 +151,23 @@ class BucketedStoreSpec extends AnyFunSuite {
     val want = Set((5L, 6L, "c"))
     def view() = BucketedStore.readMor(spark, "mor_cap", Seq("u", "v"))
     def rows() = view().as[(Long, Long, String)].collect().toSet
-    val auto = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val auto = spark.conf.get(threshold)
     try {
-      // isolate the explicit hint from Spark's size-based auto-broadcast
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // under the cap (default): hinted broadcast anti-join
+      // under the threshold (default 10 MB): broadcast anti-join
       val under = view().queryExecution.executedPlan.toString
       assert(under.contains("BroadcastHashJoin") ||
         under.contains("BroadcastNestedLoopJoin"),
-        s"under-cap tombstone anti-join did not broadcast:\n$under")
+        s"under-threshold tombstone anti-join did not broadcast:\n$under")
       assert(rows() === want)
-      // over the cap: the hint is dropped → shuffle anti-join, same rows
-      spark.conf.set(BucketedStore.MaxTombstoneRowsConf, "1")
+      // a threshold below the sidecar's file bytes: shuffle, same rows
+      spark.conf.set(threshold, "1")
       val over = view().queryExecution.executedPlan.toString
-      assert(!over.contains("BroadcastHashJoin"),
-        s"over-cap tombstone anti-join still broadcasts:\n$over")
+      assert(!over.contains("BroadcastHashJoin") &&
+        !over.contains("BroadcastNestedLoopJoin"),
+        s"over-threshold tombstone anti-join still broadcasts:\n$over")
       assert(rows() === want)
-    } finally {
-      spark.conf.unset(BucketedStore.MaxTombstoneRowsConf)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", auto)
-    }
+    } finally spark.conf.set(threshold, auto)
   }
 
   /** compactMorInto (the mid-lifecycle shape): folds the merged view
@@ -211,7 +208,7 @@ class BucketedStoreSpec extends AnyFunSuite {
       s"compactMorInto result join shuffles:\n$plan")
   }
 
-  /** Round-15 verdict item 6: with a SHARED day-0 snapshot, each
+  /** With a SHARED day-0 snapshot, each
     * lifecycle's sidecars host under its OWN name (readMor's
     * `sidecarsOf`) — two readers of one base see only their own
     * advances, the base never carries sidecars, and compactMorInto
@@ -254,9 +251,9 @@ class BucketedStoreSpec extends AnyFunSuite {
     assert(view("mor_host_y") === baseSet)
   }
 
-  /** Round-15 verdict item 4: the conf'd compaction policy. Both legs
-    * read the SIDECARS only (depth = distinct epochs across delta+tomb;
-    * rows = tombstone count); unset/0 confs are constant-false, so
+  /** The conf'd compaction policy. Both legs read the SIDECARS only
+    * (depth = distinct epochs across delta+tomb, from their stored epoch
+    * sets; rows = tombstone count); unset/0 confs are constant-false, so
     * explicit-schedule callers are untouched.
     */
   test("compactDue: conf'd depth/tombstone-rows triggers, off by default") {
@@ -276,14 +273,13 @@ class BucketedStoreSpec extends AnyFunSuite {
       assert(!BucketedStore.compactDue(spark, "mor_policy"))
       spark.conf.set(BucketedStore.CompactDepthConf, "2")
       assert(BucketedStore.compactDue(spark, "mor_policy"))
-      // cold start (a JVM that never wrote these sidecars): the
-      // writer-side epoch set is gone, the depth leg falls back to
-      // scanning the sidecars' _epoch column — same verdicts
-      BucketedStore.forgetSidecarEpochs("mor_policy")
-      assert(BucketedStore.compactDue(spark, "mor_policy"))
-      spark.conf.set(BucketedStore.CompactDepthConf, "3")
-      assert(!BucketedStore.compactDue(spark, "mor_policy"))
-      spark.conf.set(BucketedStore.CompactDepthConf, "2")
+      // a session that never wrote these sidecars reads the same depth
+      // from the catalog
+      val fresh = spark.newSession()
+      fresh.conf.set(BucketedStore.CompactDepthConf, "2")
+      assert(BucketedStore.compactDue(fresh, "mor_policy"))
+      fresh.conf.set(BucketedStore.CompactDepthConf, "3")
+      assert(!BucketedStore.compactDue(fresh, "mor_policy"))
       spark.conf.set(BucketedStore.CompactDepthConf, "0")
       assert(!BucketedStore.compactDue(spark, "mor_policy"))
       spark.conf.set(BucketedStore.CompactTombRowsConf, "1")
@@ -301,7 +297,7 @@ class BucketedStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("cold-start append re-seeds the epoch cache from disk (r16 ADVICE 2)") {
+  test("an append from a fresh session extends the stored epoch set") {
     val base = Seq((1L, 2L, "a")).toDF("u", "v", "tag")
     BucketedStore.writeBucketed(base, "mor_seed", "u", buckets = 2)
     BucketedStore.dropSidecars(spark, "mor_seed")
@@ -309,20 +305,19 @@ class BucketedStoreSpec extends AnyFunSuite {
       Seq((3L, 4L, "d1")).toDF("u", "v", "tag"), "mor_seed", "u", epoch = 1)
     BucketedStore.appendDeltaSidecar(
       Seq((5L, 6L, "d2")).toDF("u", "v", "tag"), "mor_seed", "u", epoch = 2)
-    // simulate a JVM restart mid-accumulation: the writer-side set is
-    // gone while the sidecars survive on disk
-    BucketedStore.forgetSidecarEpochs("mor_seed")
-    // the first post-restart append previously seeded the cache with
-    // just its own epoch, masking {1,2} — the depth policy then
-    // under-triggered until the next fold. It must seed from a scan.
+    // a restarted writer (a session that holds nothing of the first
+    // two appends) appends epoch 3: depth counts all three
+    val fresh = spark.newSession()
     BucketedStore.appendDeltaSidecar(
-      Seq((7L, 8L, "d3")).toDF("u", "v", "tag"), "mor_seed", "u", epoch = 3)
+      fresh.createDataFrame(Seq((7L, 8L, "d3"))).toDF("u", "v", "tag"),
+      "mor_seed", "u", epoch = 3)
+    assert(BucketedStore.epochsOf(fresh, "mor_seed_delta") === Set(1, 2, 3))
     try {
       spark.conf.set(BucketedStore.CompactDepthConf, "3")
       assert(BucketedStore.compactDue(spark, "mor_seed"),
-        "depth must count the pre-restart epochs, not only the post-restart append")
-      // a fold retires the epochs to a KNOWN-EMPTY state (no rescan):
-      // a single fresh epoch after it reads depth 1, not 4
+        "depth must count the earlier epochs, not only the latest append")
+      // a fold retires the epochs with the sidecars: a single fresh
+      // epoch after it reads depth 1, not 4
       BucketedStore.compactMor(spark, "mor_seed", "u", Seq("u", "v"),
         buckets = 2)
       BucketedStore.appendDeltaSidecar(
@@ -333,6 +328,46 @@ class BucketedStoreSpec extends AnyFunSuite {
       spark.conf.set(BucketedStore.CompactDepthConf, "1")
       assert(BucketedStore.compactDue(spark, "mor_seed"))
     } finally spark.conf.unset(BucketedStore.CompactDepthConf)
+  }
+
+  test("a sidecar dropped with a plain DROP TABLE restarts at depth 1") {
+    val base = Seq((1L, 2L, "a")).toDF("u", "v", "tag")
+    BucketedStore.writeBucketed(base, "mor_plain", "u", buckets = 2)
+    BucketedStore.dropSidecars(spark, "mor_plain")
+    Seq(1, 2).foreach(e => BucketedStore.appendDeltaSidecar(
+      Seq((3L + e, 4L, "d")).toDF("u", "v", "tag"), "mor_plain", "u",
+      epoch = e))
+    spark.sql("DROP TABLE `mor_plain_delta`")
+    BucketedStore.appendDeltaSidecar(
+      Seq((9L, 10L, "d3")).toDF("u", "v", "tag"), "mor_plain", "u", epoch = 3)
+    try {
+      spark.conf.set(BucketedStore.CompactDepthConf, "2")
+      assert(!BucketedStore.compactDue(spark, "mor_plain"),
+        "the dropped sidecar's epochs must go with it")
+      spark.conf.set(BucketedStore.CompactDepthConf, "1")
+      assert(BucketedStore.compactDue(spark, "mor_plain"))
+    } finally spark.conf.unset(BucketedStore.CompactDepthConf)
+  }
+
+  test("a writer failing inside replaceBucketedAll lands no swap") {
+    val old = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
+    val names = Seq("rep_all_x", "rep_all_y", "rep_all_z")
+    names.foreach(BucketedStore.writeBucketed(old, _, "k", buckets = 2))
+    val boom = org.apache.spark.sql.functions.udf { (k: Long) =>
+      if (k == 2L) throw new IllegalStateException("injected write failure")
+      k
+    }
+    val fresh = Seq((7L, "x"), (8L, "y")).toDF("k", "v")
+    val failing = old.withColumn("k", boom($"k"))
+    intercept[Exception] {
+      BucketedStore.replaceBucketedAll(Seq((fresh, names(0), "k"),
+        (failing, names(1), "k"), (fresh, names(2), "k")), buckets = 2)
+    }
+    // the two good writers settled, but none of the three swaps landed
+    names.foreach { t =>
+      assert(spark.table(t).as[(Long, String)].collect().toSet ===
+        Set((1L, "a"), (2L, "b")), s"$t was swapped")
+    }
   }
 
   test("readMor and replaceBucketed recover a crash-stranded _next (r17 ADVICE 5)") {

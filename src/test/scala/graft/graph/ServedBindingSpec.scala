@@ -33,8 +33,9 @@ class ServedBindingSpec extends AnyFunSuite {
     * mapping was rebuilt with the docs: it lives in the prefix's tables
     * too, so a stale serve would answer families 6/10 from the old corpus.
     */
-  private def served(d: String): DocGraph = {
-    val g = DocGraph.bucketedServed(spark, d, "graft_served_spec", 8)
+  private def served(d: String,
+      prefix: String = "graft_served_spec"): DocGraph = {
+    val g = DocGraph.bucketedServed(spark, d, prefix, 8)
     assert(mapping(g.kwMapping) === mapping(BibGraph.keywordMapping(spark, d)),
       s"stored alias mapping is not $d's")
     g
@@ -64,5 +65,35 @@ class ServedBindingSpec extends AnyFunSuite {
       mapping(BibGraph.keywordMapping(spark, d1)))
     served(d3)
     served(d1)
+  }
+
+  test("a rebuild that fails part-way leaves no table marked, so the next serve rebuilds") {
+    val prefix = "graft_served_fail"
+    val d1 = TestSpark.TinySf
+    val fp1 = fp(served(d1, prefix))
+    // inject a failure into one of the eight writes: an EXTERNAL table
+    // under the alias-mapping name, which the swap refuses to purge,
+    // while the other seven writes land d2's rows
+    val ext = java.nio.file.Files.createTempDirectory("served_ext").toString
+    spark.sql(s"DROP TABLE `${prefix}_kw_alias`")
+    spark.sql(s"CREATE TABLE `${prefix}_kw_alias` " +
+      s"(original STRING, representative STRING) USING parquet LOCATION '$ext'")
+    intercept[IllegalArgumentException] {
+      DocGraph.bucketedServed(spark, "/root/testdata/sf0.01", prefix, 8)
+    }
+    spark.sql(s"DROP TABLE `${prefix}_kw_alias`")
+    // the previous source again: its marker is gone from every table,
+    // so this rebuilds instead of serving d2's docs beside d1's mapping
+    assert(fp(served(d1, prefix)) === fp1)
+  }
+
+  test("a fresh session serves the stored binding without rebuilding it") {
+    val d = TestSpark.TinySf
+    val fp0 = fp(served(d))
+    val fresh = spark.newSession()
+    val (g, jobs) = TestSpark.countJobs(
+      DocGraph.bucketedServed(fresh, d, "graft_served_spec", 8))
+    assert(jobs === 0, s"a fresh session rebuilt the binding ($jobs jobs)")
+    assert(fp(g) === fp0)
   }
 }

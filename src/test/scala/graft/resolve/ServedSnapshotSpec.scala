@@ -71,4 +71,22 @@ class ServedSnapshotSpec extends AnyFunSuite {
     val leaked = tables.filter(t => own.exists(t.startsWith))
     assert(leaked.isEmpty, s"per-query standing tables: ${leaked.mkString(", ")}")
   }
+
+  test("a serve rebuilds a day-0 snapshot whose tables were dropped") {
+    val d = TestSpark.TinySf
+    def q150(): Seq[String] = {
+      val rows = graft.SparkEntry.queries("q150_er_tombstones_served")(spark, d)
+        .collect().map(_.toString).toSeq
+      EntityResolution.releaseServeCaches()
+      rows
+    }
+    val first = q150()
+    val syn = EntityResolution.sharedBaseName("syn", s"$d|ins=")
+    val dropped = spark.catalog.listTables().collect().map(_.name)
+      .filter(_.startsWith(syn + "_"))
+    assert(dropped.nonEmpty)
+    dropped.foreach(t => spark.sql(s"DROP TABLE `$t`"))
+    assert(q150() === first)
+    assert(dropped.forall(spark.catalog.tableExists))
+  }
 }

@@ -4,15 +4,13 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
-/** The runtime SemDeDup probe knobs (round-13 verdict item 5):
-  * `spark.graft.semdedup.{lo,hi,margin}` must (a) default to the shipped
-  * design point so every oracle gate and committed number is unchanged —
-  * pinned here as bit-for-bit equality between the unset session and an
-  * explicitly-set 4/6/0.1 session — and (b) actually steer the probe
-  * ladder, pinned on the cross-cell fixture where a single-cell probe
-  * provably misses the near-dup pair and a forced two-cell probe
-  * provably catches it (the deterministic unit case of the recall/work
-  * trade the knobs exist to tune).
+/** The boundary-adaptive SemDeDup probe parameters `lo`/`hi`/`margin`
+  * of [[Similarity.semanticDedupBoundary]] (q152 runs its 4/6/0.1
+  * defaults): they must actually steer the probe ladder, pinned on the
+  * cross-cell fixture where a single-cell probe provably misses the
+  * near-dup pair and a forced two-cell probe provably catches it (the
+  * deterministic unit case of the recall/work trade they tune), and
+  * out-of-range values must fail loudly.
   */
 class SemDedupConfSpec extends AnyFunSuite {
 
@@ -40,49 +38,31 @@ class SemDedupConfSpec extends AnyFunSuite {
     d
   }
 
-  private def withKnobs[A](lo: Option[String], hi: Option[String],
-      margin: Option[String])(body: => A): A = {
-    val knobs = Seq(Similarity.SemLoConf -> lo, Similarity.SemHiConf -> hi,
-      Similarity.SemMarginConf -> margin)
-    try {
-      knobs.foreach { case (k, v) => v.foreach(spark.conf.set(k, _)) }
-      body
-    } finally knobs.foreach { case (k, _) => spark.conf.unset(k) }
-  }
-
-  private def q152(d: String): Seq[(Long, Long)] = {
+  private def boundary(d: String, lo: Int, hi: Int,
+      margin: Double): Seq[(Long, Long)] = {
     import spark.implicits._
-    graft.SparkEntry.queries("q152_semantic_dedup_boundary")(spark, d)
+    Similarity.semanticDedupBoundary(spark, d, lo, hi, margin)
       .as[(Long, Long)].collect().toSeq
-  }
-
-  test("default confs reproduce the unset q152 bit-for-bit") {
-    val d = "/root/testdata/sf0.001"
-    val unset = q152(d)
-    val explicit = withKnobs(Some("4"), Some("6"), Some("0.1"))(q152(d))
-    assert(explicit === unset && unset.nonEmpty,
-      "explicitly setting the shipped defaults must be a no-op")
   }
 
   test("the knobs steer the probe ladder: lo=hi=1 misses the cross-cell pair, a forced 2-cell probe catches it") {
     val d = fixtureDir()
     // single-cell probe ≡ nprobe=1: different primary cells → both kept
-    val np1 = withKnobs(Some("1"), Some("1"), Some("0"))(q152(d)).toMap
+    val np1 = boundary(d, 1, 1, 0.0).toMap
     assert(np1(7L) === 1L && np1(57L) === 1L,
       "lo=hi=1 must behave like nprobe=1 and keep both halves")
     // margin 2.0 covers the whole signed-cos² key range → every vector
     // probes both cells (≡ nprobe=2): pair caught, higher id dropped
-    val np2 = withKnobs(Some("1"), Some("2"), Some("2.0"))(q152(d)).toMap
+    val np2 = boundary(d, 1, 2, 2.0).toMap
     assert(np2(7L) === 1L && np2(57L) === 0L,
       "a forced 2-cell probe must catch the cross-cell pair")
     assert(np1.keySet === np2.keySet && np1.size === 100)
   }
 
-  test("out-of-range knobs fail loudly, naming the confs") {
-    val d = "/root/testdata/sf0.001"
+  test("out-of-range knobs fail loudly") {
     val e = intercept[IllegalArgumentException] {
-      withKnobs(Some("3"), Some("2"), Some("0.1"))(q152(d))
+      boundary("/root/testdata/sf0.001", 3, 2, 0.1)
     }
-    assert(e.getMessage.contains(Similarity.SemLoConf))
+    assert(e.getMessage.contains("lo=3 hi=2"))
   }
 }

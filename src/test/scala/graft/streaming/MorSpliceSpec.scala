@@ -5,7 +5,7 @@ import graft.TestSpark
 import graft.TestSpark.TinySf
 import graft.graph.BucketedStore
 
-/** The streaming→MOR splice (round-15 verdict item 3): a micro-batch
+/** The streaming→MOR splice: a micro-batch
   * lands as epoch-tagged sidecars on the bucketed serving table through
   * [[ExactlyOnceSink.landMorSidecars]], with `compactMor` as the one
   * fold — so streaming ingest and batch maintenance share a single
@@ -129,6 +129,28 @@ class MorSpliceSpec extends AnyFunSuite {
     assert(BucketedStore.readMor(spark, "splice_r", Seq("k"))
       .as[(Long, String)].collect().toSet ===
       Set((1L, "a"), (2L, "b2"), (3L, "c"), (4L, "d")))
+  }
+
+  test("a replayed landing keeps the epoch set, and a fresh session reads it") {
+    val base = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
+    BucketedStore.writeBucketed(base, "splice_e", "k", buckets = 4)
+    BucketedStore.dropSidecars(spark, "splice_e")
+    def land(epoch: Int, k: Long): Unit = ExactlyOnceSink.landMorSidecars(
+      spark, "splice_e", "k", epoch, deltas = Some(Seq((k, s"e$epoch"))
+        .toDF("k", "v")), tombstoneIds = Some(Seq(k).toDF("k")), buckets = 4)
+    land(1, 2L)
+    land(2, 3L)
+    land(2, 3L) // replay: both sidecars are rewritten minus epoch 2
+    val fresh = spark.newSession()
+    Seq("splice_e_delta", "splice_e_tomb").foreach { t =>
+      assert(BucketedStore.epochsOf(fresh, t) === Set(1, 2),
+        s"$t lost epochs in the replay rewrite")
+    }
+    fresh.conf.set(BucketedStore.CompactDepthConf, "2")
+    assert(BucketedStore.compactDue(fresh, "splice_e"))
+    assert(BucketedStore.readMor(fresh, "splice_e", Seq("k"))
+      .as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "e1"), (3L, "e2")))
   }
 
   test("q168: the MOR-landed splice serves the same answer as q147's fold") {
