@@ -71,6 +71,11 @@ class ServedBindingSpec extends AnyFunSuite {
     val prefix = "graft_served_fail"
     val d1 = TestSpark.TinySf
     val fp1 = fp(served(d1, prefix))
+    // a second source with d1's documents in upper case
+    val d2 = java.nio.file.Files.createTempDirectory("served_fail").toString
+    graft.Tables.documents(spark, d1)
+      .withColumn("text", upper(col("text")))
+      .write.parquet(s"$d2/documents.parquet")
     // inject a failure into one of the eight writes: an EXTERNAL table
     // under the alias-mapping name, which the swap refuses to purge,
     // while the other seven writes land d2's rows
@@ -79,7 +84,7 @@ class ServedBindingSpec extends AnyFunSuite {
     spark.sql(s"CREATE TABLE `${prefix}_kw_alias` " +
       s"(original STRING, representative STRING) USING parquet LOCATION '$ext'")
     intercept[IllegalArgumentException] {
-      DocGraph.bucketedServed(spark, "/root/testdata/sf0.01", prefix, 8)
+      DocGraph.bucketedServed(spark, d2, prefix, 8)
     }
     spark.sql(s"DROP TABLE `${prefix}_kw_alias`")
     // the previous source again: its marker is gone from every table,

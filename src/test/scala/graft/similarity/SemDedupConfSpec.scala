@@ -61,7 +61,7 @@ class SemDedupConfSpec extends AnyFunSuite {
 
   test("out-of-range knobs fail loudly") {
     val e = intercept[IllegalArgumentException] {
-      boundary("/root/testdata/sf0.001", 3, 2, 0.1)
+      boundary(TestSpark.TinySf, 3, 2, 0.1)
     }
     assert(e.getMessage.contains("lo=3 hi=2"))
   }
