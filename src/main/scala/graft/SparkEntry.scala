@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Aggregates the per-module query registries. Every SQL-expressible
+  * Aggregates the families of [[graft.registry.Registry]]: one package
+  * owns every "name → plan + oracle" decision, and the engine packages
+  * hold only the operators those entries call. Every SQL-expressible
   * operator has a matching DuckDB oracle entry; non-SQL-expressible ones
   * (GraphX connected components, streaming) are registered queries with a
   * rows-only check and get ScalaTest coverage instead.
@@ -20,26 +22,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  private def registries: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] = Seq(
-    (relational.TpchQueries.queries, relational.TpchQueries.oracles),
-    (text.TextAnalysis.queries, text.TextAnalysis.oracles),
-    (text.Curation.queries, text.Curation.oracles),
-    (dedup.Dedup.queries, dedup.Dedup.oracles),
-    (similarity.Similarity.queries, similarity.Similarity.oracles),
-    (graph.GraphQueries.queries, graph.GraphQueries.oracles),
-    (resolve.EntityResolution.queries, resolve.EntityResolution.oracles),
-    (streaming.Events.queries, streaming.Events.oracles),
-    (streaming.DocsStream.queries, streaming.DocsStream.oracles),
-    (streaming.ExactlyOnceSink.queries, streaming.ExactlyOnceSink.oracles),
-    (enrich.TopicEnrichment.queries, enrich.TopicEnrichment.oracles),
-    (enrich.TermEncoding.queries, enrich.TermEncoding.oracles),
-    (ingest.TaggedQueries.queries, ingest.TaggedQueries.oracles),
-    (query.QueryText.queries, query.QueryText.oracles),
-    (query.ChatStore.queries, query.ChatStore.oracles),
-    (sinks.SinkQueries.queries, sinks.SinkQueries.oracles),
-    (multimodal.Multimodal.queries, multimodal.Multimodal.oracles)
-  )
-
   /** The full oracle-gated registry: every SURVEY.md §2 operator has at
     * least one entry, and most have several (a direct gate plus the
     * composed queries that ride it — e.g. the ER serve matrix gates one
@@ -48,12 +30,12 @@ object SparkEntry {
     * design: 150+ gates over the ~59-operator surface.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registries.iterator.map(_._1).reduce(_ ++ _)
+    registry.Registry.families.iterator.map(_.queries).reduce(_ ++ _)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    registries.iterator.map(_._2).reduce(_ ++ _)
+    registry.Registry.families.iterator.map(_.oracles).reduce(_ ++ _)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Q.txt family 10 (SURVEY §7.3): per-year document counts for an

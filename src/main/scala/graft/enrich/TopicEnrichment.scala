@@ -142,57 +142,4 @@ object TopicEnrichment {
   /** S8: success/error partitioned JSON sink for classification output. */
   def writePartitioned(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").partitionBy("status").json(path)
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // L3 validating join with error split (counts by status + topic).
-    "q81_topic_classify" -> ((s, d) => {
-      import s.implicits._
-      classified(s, d)
-        .select($"title", $"topic_id", $"status", $"topic")
-        .orderBy($"title")
-    }),
-
-    // TopicTocsv.py:43-79: P11 incomplete-row filter + P9 label map with
-    // Other_Article default + P10 paren strip → (paperTitle, paperLabel,
-    // topicName) relationship rows.
-    "q82_topic_rels" -> ((s, d) => {
-      import s.implicits._
-      classified(s, d)
-        .filter($"status" === "ok" && $"title".isNotNull &&
-          $"ref_type".isNotNull && $"topic".isNotNull && $"topic" =!= "")
-        .select($"title".as("paperTitle"), $"label".as("paperLabel"),
-          $"topic".as("topicName"))
-        .orderBy($"paperTitle")
-    })
-  )
-
-  private def P = BibGraph.sqlPrelude
-
-  /** Shared oracle mirror of [[classified]] (stub formula + validating
-    * join + paren strip) — one definition for both q81 and q82.
-    */
-  private val clsSql = """cls AS (
-  SELECT title, ref_type, label,
-    CASE WHEN doc_id % 37 = 0 THEN 99 ELSE doc_id % 22 + 1 END AS topic_id
-  FROM docs),
-j AS (
-  SELECT c.title, c.ref_type, c.label, c.topic_id,
-    CASE WHEN t.id IS NULL THEN 'error' ELSE 'ok' END AS status,
-    trim(regexp_replace(t.topic_name, '\s*\(.*?\)', '', 'g')) AS topic
-  FROM cls c LEFT JOIN topics t ON t.id = CAST(c.topic_id AS INTEGER))"""
-
-  def oracles: Map[String, String] = Map(
-    "q81_topic_classify" ->
-      s"""WITH $P,
-         $clsSql
-         SELECT title, topic_id, status, topic FROM j ORDER BY title""",
-    "q82_topic_rels" ->
-      s"""WITH $P,
-         $clsSql
-         SELECT title AS paperTitle, label AS paperLabel, topic AS topicName
-         FROM j
-         WHERE status = 'ok' AND title IS NOT NULL
-           AND ref_type IS NOT NULL AND topic IS NOT NULL AND topic <> ''
-         ORDER BY paperTitle"""
-  )
 }

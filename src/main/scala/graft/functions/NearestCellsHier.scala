@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * The flat scan is O(k·dim) per row. With constant per-cell population m
   * (the setting that keeps within-cell pair generation linear in n for the
   * blocked near-dup join), k = n/m grows linearly, so the flat assignment
-  * becomes O(n²·dim/m) — the exact cliff the round-6 fixed-modulus sizing
-  * hit. Here the centroids are pre-partitioned (driver-side) into ~sqrt(k)
+  * becomes O(n²·dim/m) — the cliff any fixed-modulus centroid sizing
+  * hits. Here the centroids are pre-partitioned (driver-side) into ~sqrt(k)
   * super-cells, each holding the centroids whose nearest super-centroid it
   * is; a row first scans the sqrt(k) super-centroids, picks the best one
   * (signed-cos² DESC, group index ASC), then scans only that group's

@@ -20,15 +20,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * }}}
   * i.e. the reference's lookaround pattern — "a digit run of EXACTLY
   * six, whatever borders it as long as it is not a seventh digit" —
-  * followed by the whitespace pass. The round-16 fidelity port paid for
-  * the lookarounds: a JVM microbench over address-shaped strings
+  * followed by the whitespace pass. The lookarounds have a price: a JVM microbench over address-shaped strings
   * (`tools/PostalBench.java`) prices the lookaround pattern at ~1.6-1.8×
   * the old `\b` form and ~2-3× this scan, and the scan additionally
   * replaces THREE passes (two `regexp_replace` + trim) with one. This is
   * the same structural shape the DuckDB oracle mirror already uses
   * (tokenize into digit/non-digit runs, blank the exactly-6 runs —
-  * `TaggedQueries.cleanSql`), now on the Scala side too (round-16
-  * verdict item 4).
+  * `OracleSql.taggedPipeline`), now on the Scala side too.
   *
   * Dialect contract (COVERAGE.md "known dialect divergence"): digits are
   * ASCII `[0-9]` and whitespace is Java regex `\s` = ASCII

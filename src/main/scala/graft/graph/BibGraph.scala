@@ -13,7 +13,8 @@ import graft.enrich.Taxonomy
   * DETERMINISTICALLY from the driver's `documents` fixture so every graph
   * query has an exact DuckDB oracle over the same parquet.
   *
-  * Derivation rules (mirrored 1:1 in [[sqlPrelude]] for the oracles):
+  * Derivation rules (mirrored 1:1 in
+  * [[graft.registry.OracleSql.bibGraph]] for the oracles):
   *  - title `D<doc_id>`; ref_type cycles 6 reference types with a
   *    `Preprint` override every 31st doc (exercises the P9 label-map
   *    default `Other_Article`, `TopicTocsv.py:25`);
@@ -187,60 +188,4 @@ object BibGraph {
         trim(regexp_replace($"topic_name", "\\s*\\(.*?\\)", "")).as("topic"))
   }
 
-  // --------------------------------------------------------------------
-  // DuckDB oracle prelude — the SAME derivation in SQL. Every graph-query
-  // oracle is "WITH <sqlPrelude> SELECT ...". Unreferenced CTEs cost
-  // nothing (DuckDB materializes CTEs on demand).
-  // --------------------------------------------------------------------
-  def sqlPrelude: String = s"""
-docs AS (
-  SELECT doc_id,
-         'D' || doc_id AS title,
-         CASE WHEN doc_id % 31 = 0 THEN 'Preprint'
-              ELSE CASE doc_id % 6 WHEN 0 THEN 'Journal Article' WHEN 1 THEN 'Patent'
-                   WHEN 2 THEN 'Conference Proceedings' WHEN 3 THEN 'Thesis'
-                   WHEN 4 THEN 'Newspaper Article' ELSE 'Book' END END AS ref_type,
-         CASE WHEN doc_id % 31 = 0 THEN 'Other_Article'
-              ELSE CASE doc_id % 6 WHEN 0 THEN 'Journal_Article' WHEN 1 THEN 'Patent'
-                   WHEN 2 THEN 'Conference_Proceedings' WHEN 3 THEN 'Thesis'
-                   WHEN 4 THEN 'Newspaper_Article' ELSE 'Book' END END AS label,
-         2000 + doc_id % 25 AS year,
-         text AS abstract,
-         'J' || (doc_id % 7) AS journal,
-         'Org_' || (doc_id % 13) AS org,
-         'Addr_' || ((doc_id * 5) % 29) AS addr,
-         list_sort(list_distinct(list_filter(string_split(text, ' '), t -> length(t) >= 5))) AS kws
-  FROM documents
-),
-authored AS (
-  SELECT DISTINCT author, title FROM (
-    SELECT unnest(list_transform(range(doc_id % 3 + 1),
-             j -> 'Author_' || ((doc_id * (j + 3)) % 97))) AS author, title
-    FROM docs) t
-),
-tertiary_authored AS (
-  SELECT DISTINCT 'Author_' || ((doc_id * 11) % 97) AS author, title
-  FROM docs WHERE doc_id % 4 = 0
-),
-authored_all AS (
-  SELECT author, title, 'AUTHORED' AS rel FROM authored
-  UNION ALL
-  SELECT author, title, 'TERTIARY_AUTHORED' AS rel FROM tertiary_authored
-),
-has_keyword AS (
-  SELECT DISTINCT title, kw FROM (SELECT title, unnest(kws) AS kw FROM docs) t
-),
-kmap AS (
-  SELECT kw AS original,
-         min(kw) OVER (PARTITION BY substring(md5(kw), 1, 1)) AS representative
-  FROM (SELECT DISTINCT unnest(kws) AS kw FROM docs) t
-),
-topics(id, category_code, topic_name) AS (VALUES
-  ${Taxonomy.sqlValues}
-),
-has_topic AS (
-  SELECT d.title, d.label,
-         trim(regexp_replace(t.topic_name, '\\s*\\(.*?\\)', '', 'g')) AS topic
-  FROM docs d JOIN topics t ON t.id = CAST(d.doc_id % 22 + 1 AS INTEGER)
-)"""
 }

@@ -83,18 +83,18 @@ object TaggedText {
     * word/non-word transition, and letter→digit is word→word). The
     * DuckDB oracle mirror cannot use lookbehind (RE2), so it expresses
     * the same semantics structurally — tokenize into digit/non-digit
-    * runs and blank the exactly-6 digit runs (`TaggedQueries.cleanSql`).
+    * runs and blank the exactly-6 digit runs (`OracleSql.taggedPipeline`).
     * One pinned dialect choice: `[0-9]`, not `\d` — Python's `\d`
     * matches Unicode digits (e.g. full-width １２３), Java's and RE2's
     * default to ASCII; the corpus's postal codes are ASCII, and the
     * ASCII class keeps all three engines aligned. `TaggedTextSpec` pins
     * the letter-adjacent, 7-digit, and digit-run-adjacency cases.
     *
-    * Since round 17 the implementation is the fused single-pass scan
+    * The implementation is the fused single-pass scan
     * [[graft.functions.StripPostal]] (strip + collapse + trim in one
     * char walk — the oracle's own digit-run-tokenize shape): the
     * lookaround pattern microbenched at ~1.6-1.8× the old `\b` form
-    * (`tools/PostalBench.java`, round-16 verdict item 4), and the scan
+    * (`tools/PostalBench.java`), and the scan
     * beats both while replacing three expression passes with one.
     * Semantics are UNCHANGED — a scalacheck property (`PropertySpec`)
     * pins the scan byte-identical to the regex pipeline it replaced.

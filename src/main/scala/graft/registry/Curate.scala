@@ -1,9 +1,10 @@
-package graft.text
+package graft.registry
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import OracleSql._
 
 /** Training-corpus curation operators beyond filtering/dedup — the two
   * standard steps between "clean corpus" and "training batches" that the
@@ -31,7 +32,7 @@ import graft.Tables
   * shard count is the parallelism knob (32 here ≡ local core count; at
   * 100 TB pick shards ≈ cores so each packs ~corpus/shards tokens).
   */
-object Curation {
+object Curate extends Family {
 
   private val EvalMod = 100L   // doc_id % EvalMod == 0 → held-out eval doc
   private val Budget = 512L    // tokens per packed training sequence
@@ -191,7 +192,7 @@ object Curation {
         .orderBy($"doc_id")
     }),
 
-    // PII breadth (round-10 item 6): CN resident-ID handling on top of
+    // PII breadth: CN resident-ID handling on top of
     // q144's email/mobile pass. The SCRUB redacts every ID-like
     // 18-char run (`<IDNUM>`) — the safe production default: an
     // id-shaped number is removed whether or not its checksum verifies
@@ -262,15 +263,6 @@ object Curation {
         .orderBy($"doc_id")
     })
   )
-
-  private val shingleSql =
-    """t AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-       sh AS (SELECT doc_id, unnest(list_distinct(
-                CASE WHEN len(tk) >= 3 THEN
-                  list_transform(range(1, len(tk) - 1),
-                    j -> tk[j] || ' ' || tk[j+1] || ' ' || tk[j+2])
-                ELSE [] END)) AS shingle
-              FROM t)"""
 
   def oracles: Map[String, String] = Map(
     "q125_decontaminate" ->

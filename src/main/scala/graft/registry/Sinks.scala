@@ -1,9 +1,11 @@
-package graft.sinks
+package graft.registry
 
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ingest.{TaggedQueries, TaggedText}
+import graft.ingest.TaggedText
+import graft.sinks._
+import OracleSql._
 
 /** Oracle-gated write→read-back round trips for the Neo4j CSV / JSON
   * sinks (SURVEY.md §2.1 S5-S7): each query WRITES the sink format to a
@@ -19,17 +21,13 @@ import graft.ingest.{TaggedQueries, TaggedText}
   * dir per invocation. The read-back frame is small (node/edge frames of
   * the tagged fixture or the kmap dimension).
   */
-object SinkQueries {
+object Sinks extends Family {
 
   private def rmTree(f: java.io.File): Unit = {
     if (Files.isDirectory(f.toPath, java.nio.file.LinkOption.NOFOLLOW_LINKS))
       Option(f.listFiles()).toSeq.flatten.foreach(rmTree)
     f.delete(); ()
   }
-
-  /** Remove a directory tree by path — shared with the cross-module
-    * maintenance jobs (ChatStore compaction's temp dir). */
-  private[graft] def rmTreePath(p: String): Unit = rmTree(new java.io.File(p))
 
   // one JVM shutdown hook per application dir: per-run namespacing means
   // nothing ELSE ever deletes this run's tree, so without the hook every
@@ -65,7 +63,7 @@ object SinkQueries {
       import s.implicits._
       val dir = tmp(s, "q96_nodes")
       Neo4jCsv.writeDocumentNodes(
-        TaggedText.ingest(s, TaggedQueries.FixtureGlob), dir)
+        TaggedText.ingest(s, Fixtures.TaggedGlob), dir)
       s.read.option("header", "true").option("escape", "\"").csv(dir)
         .toDF("id", "label", "title", "year", "abstract", "journal",
           "volume", "issue", "pages", "doi", "url", "isbn_issn")
@@ -79,7 +77,7 @@ object SinkQueries {
       val dir = tmp(s, "q97_rels")
       Neo4jCsv.writeRels(
         graft.graph.BibGraph.taggedEdges(
-          TaggedText.ingest(s, TaggedQueries.FixtureGlob)),
+          TaggedText.ingest(s, Fixtures.TaggedGlob)),
         "AUTHORED", "Author", "Document", dir)
       s.read.option("header", "true").option("escape", "\"").csv(dir)
         .toDF("author", "title", "rel_type")
@@ -101,7 +99,7 @@ object SinkQueries {
     // alias CSV; the gate reads the Keyword ALIAS_OF file back — its
     // rows are the non-identity entries of the ingest-derived keyword
     // mapping (gloss variant → canonical spelling).
-    // S5 dynamic-header passthrough (round-5 verdict task 5): an unknown
+    // S5 dynamic-header passthrough: an unknown
     // `{Custom Tag}:` survives ingest → dumpDocumentNodes(dynamicExtra)
     // → CSV → read-back as a trailing column — the long-tail
     // dynamic-header semantics of `csv_extractor.py:127-140`, previously
@@ -110,7 +108,7 @@ object SinkQueries {
       import s.implicits._
       val dir = tmp(s, "q119_extra")
       Neo4jCsv.writeDocumentNodes(
-        TaggedText.ingest(s, TaggedQueries.FixtureGlob), dir,
+        TaggedText.ingest(s, Fixtures.TaggedGlob), dir,
         dynamicExtra = true)
       s.read.option("header", "true").option("escape", "\"").csv(dir)
         .select(col(":ID").as("id"), col("Custom Tag").as("custom_tag"))
@@ -121,7 +119,7 @@ object SinkQueries {
       import s.implicits._
       val dir = tmp(s, "q99_dump")
       GraphDump.dumpGraph(
-        TaggedText.ingest(s, TaggedQueries.ErFixtureGlob), dir)
+        TaggedText.ingest(s, Fixtures.TaggedErGlob), dir)
       s.read.option("header", "true").option("escape", "\"")
         .csv(dir + "/keyword_alias_of_rels")
         .toDF("src", "dst", "rel_type")
@@ -129,28 +127,26 @@ object SinkQueries {
     })
   )
 
-  private def P = TaggedQueries.pipelineSql
-
   def oracles: Map[String, String] = Map(
     "q96_node_csv_roundtrip" ->
-      s"""WITH $P
+      s"""WITH $tagged
          SELECT title AS id, label,
            CAST(TRY_CAST(year_raw AS INTEGER) AS VARCHAR) AS year,
            journal, doi
          FROM dedup WHERE rn = 1 ORDER BY id""",
     "q97_rel_csv_roundtrip" ->
-      s"""WITH $P
+      s"""WITH $tagged
          SELECT DISTINCT author, title, 'AUTHORED' AS rel_type
          FROM (SELECT unnest(author) AS author, title
                FROM dedup WHERE rn = 1) t
          ORDER BY author, title""",
     "q98_mapping_json_roundtrip" ->
-      s"""WITH ${graft.graph.BibGraph.sqlPrelude}
+      s"""WITH $bibGraph
          SELECT original, representative FROM kmap ORDER BY original""",
     // the raw-tag extraction mirrors the ingest's last-occurrence-wins +
     // trim on the unknown field; docs without the tag read back NULL
     "q119_dynamic_extra_roundtrip" ->
-      s"""WITH $P
+      s"""WITH $tagged
          SELECT d.title AS id,
            trim(list_extract(regexp_extract_all(r.block,
              '(?m)^\\{Custom Tag\\}:[ \\t]*([^\\n]*)$$', 1), -1)) AS custom_tag
@@ -160,7 +156,7 @@ object SinkQueries {
     // the dump derives the keyword mapping at the reference threshold
     // θ=0.95 = 19/20 → numSq=361, denSq=400
     "q99_dump_alias_readback" ->
-      s"""WITH RECURSIVE ${TaggedQueries.erSqlAt(361, 400)}
+      s"""WITH RECURSIVE ${taggedEr(361, 400)}
          SELECT original AS src, representative AS dst,
                 'ALIAS_OF' AS rel_type
          FROM tmap WHERE original <> representative

@@ -1,7 +1,10 @@
-package graft.ingest
+package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ingest._
+import Fixtures.{TaggedErGlob, TaggedGlob}
+import OracleSql._
 
 /** Oracle-gated queries over the checked-in tagged-text fixture
   * (`src/test/resources/tagged/` — FIXTURES.md A1 edge cases: duplicate
@@ -16,22 +19,13 @@ import org.apache.spark.sql.functions._
   * fields NULL on both sides — so S1-S3/P1-P3/P7/A1 are hash-gated like
   * every other operator.
   */
-object TaggedQueries {
-
-  val FixtureGlob = "/root/repo/src/test/resources/tagged/*/*/*.txt"
-
-  /** A second, ER-focused tagged fixture whose keywords carry spelling
-    * variants (a parenthetical gloss) that the term-encoder stub maps to
-    * identical embeddings — the merge case the keyword resolution exists
-    * for.
-    */
-  val ErFixtureGlob = "/root/repo/src/test/resources/tagged_er/*/*/*.txt"
+object Tagged extends Family {
 
   /** The tagged lifecycles' binding: the ER fixture's keyword universe
     * at θ = 24/25, classes by md5-id mod 3. */
   def erLifecycle(s: SparkSession): graft.resolve.Lifecycle.Binding =
-    graft.resolve.Lifecycle.ingested(() => TaggedText.ingest(s, ErFixtureGlob),
-      ErFixtureGlob, 24, 25)
+    graft.resolve.Lifecycle.ingested(() => TaggedText.ingest(s, TaggedErGlob),
+      TaggedErGlob, 24, 25)
 
   /** The mixed-CRUD days of q161/q165/q167: insert class 1, update
     * class 2, delete class 0. */
@@ -42,7 +36,7 @@ object TaggedQueries {
     // to scalar-only columns (arrays rendered as joined strings).
     "q90_tagged_ingest" -> ((s, _) => {
       import s.implicits._
-      TaggedText.ingest(s, FixtureGlob)
+      TaggedText.ingest(s, TaggedGlob)
         .select($"title", $"label",
           $"year".cast("long").as("year"), $"year_raw",
           size($"author").cast("long").as("n_authors"),
@@ -55,7 +49,7 @@ object TaggedQueries {
     // Label distribution after dedup (P7 sanitize + A1 first-wins).
     "q91_tagged_labels" -> ((s, _) => {
       import s.implicits._
-      TaggedText.ingest(s, FixtureGlob)
+      TaggedText.ingest(s, TaggedGlob)
         .groupBy($"label").agg(count(lit(1)).as("n"))
         .orderBy($"label")
     }),
@@ -63,7 +57,7 @@ object TaggedQueries {
     // S3: per-area record counts from the two-level directory layout.
     "q93_area_counts" -> ((s, _) => {
       import s.implicits._
-      TaggedText.ingest(s, FixtureGlob)
+      TaggedText.ingest(s, TaggedGlob)
         .groupBy($"area").agg(count(lit(1)).as("n"))
         .orderBy($"area")
     }),
@@ -76,7 +70,7 @@ object TaggedQueries {
     // family 5 in one lineage.
     "q94_tagged_author_docs" -> ((s, _) => {
       import s.implicits._
-      val ingested = TaggedText.ingest(s, FixtureGlob)
+      val ingested = TaggedText.ingest(s, TaggedGlob)
       graft.graph.BibGraph.taggedEdges(ingested)
         .filter($"rel_type" === "AUTHORED" && $"src" === "王芳")
         .select($"dst".as("title"))
@@ -90,7 +84,7 @@ object TaggedQueries {
     // the Place Published fallback) plus the no-edge case (both absent).
     "q95_tagged_published_by" -> ((s, _) => {
       import s.implicits._
-      graft.graph.BibGraph.taggedEdges(TaggedText.ingest(s, FixtureGlob))
+      graft.graph.BibGraph.taggedEdges(TaggedText.ingest(s, TaggedGlob))
         .filter($"rel_type" === "PUBLISHED_BY")
         .select($"src".as("title"), $"dst".as("org"))
         .orderBy($"title")
@@ -108,20 +102,20 @@ object TaggedQueries {
     // mapping derived from the INGESTED keywords (keywordMappingOf).
     "q100_tagged_keyword_docs" -> ((s, _) =>
       graft.graph.GraphQueries.keywordDocs(
-        graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, FixtureGlob)),
+        graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, TaggedGlob)),
         "知识图谱")),
 
     // Family 10 (A7, the flagship slice) over the ingest path.
     "q101_tagged_keyword_per_year" -> ((s, _) =>
       graft.graph.GraphQueries.keywordPerYear(
-        graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, FixtureGlob)),
+        graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, TaggedGlob)),
         "深度学习")),
 
     // Family 13 (J7): 2-hop co-author self-join over ingest-derived
     // AUTHORED edges.
     "q102_tagged_coauthors" -> ((s, _) =>
       graft.graph.GraphQueries.coauthors(
-        graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, FixtureGlob)),
+        graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, TaggedGlob)),
         "王芳")),
 
     // Family 16 (J10): 3-hop collaborator-topics + abstract property —
@@ -129,7 +123,7 @@ object TaggedQueries {
     // nullable abstract column.
     "q103_tagged_collab_topics" -> ((s, _) =>
       graft.graph.GraphQueries.collabTopics(
-        graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, FixtureGlob)),
+        graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, TaggedGlob)),
         "王芳")),
 
     // ----------------------------------------------------------------
@@ -148,7 +142,7 @@ object TaggedQueries {
     // may merge in the q99 dump yet not in this mapping.
     "q104_tagged_er_mapping" -> ((s, _) =>
       graft.resolve.EntityResolution.ingestedKeywordMapping(
-        TaggedText.ingest(s, ErFixtureGlob), 24, 25)
+        TaggedText.ingest(s, TaggedErGlob), 24, 25)
         .orderBy(col("original"))),
 
     // The SAME lifecycle with the encode step in operator shape — the
@@ -157,7 +151,7 @@ object TaggedQueries {
     // construction, so q104's oracle gates this path too.
     "q128_tagged_er_encoded" -> ((s, _) =>
       graft.resolve.EntityResolution.ingestedKeywordMappingEncoded(
-        TaggedText.ingest(s, ErFixtureGlob), 24, 25)
+        TaggedText.ingest(s, TaggedErGlob), 24, 25)
         .orderBy(col("original"))),
 
     // The tagged lifecycle's days served alone from its shared day-0
@@ -229,7 +223,7 @@ object TaggedQueries {
         compactAfterOps = Set(1))),
 
     "q105_tagged_er_alias_docs" -> ((s, _) => {
-      val ingested = TaggedText.ingest(s, ErFixtureGlob)
+      val ingested = TaggedText.ingest(s, TaggedErGlob)
       val mapping = graft.resolve.EntityResolution
         .ingestedKeywordMapping(ingested, 24, 25)
       val g = graft.graph.DocGraph.ofIngested(ingested)
@@ -311,15 +305,15 @@ object TaggedQueries {
     // cannot silently drift from the dispatch table.
     "q117_family_catalog" -> ((s, _) => routed(s, 17, Map.empty)),
 
-    // Streaming tagged ingest, batch-equivalence leg (round-5 verdict
-    // task 8): the SAME flatMapGroupsWithState dedup operator that runs
+    // Streaming tagged ingest, batch-equivalence leg: the SAME
+    // flatMapGroupsWithState dedup operator that runs
     // on the file-source stream (TaggedStreamSpec replays files
     // incrementally) executed in batch mode, where it must equal the
     // window-based dedup unconditionally — hash-gated here.
     "q123_tagged_stream_dedup" -> ((s, _) => {
       import s.implicits._
       TaggedText.dedupByTitleStream(
-        TaggedText.formatRecords(TaggedText.parse(s, FixtureGlob)))
+        TaggedText.formatRecords(TaggedText.parse(s, TaggedGlob)))
         .toDF()
         .select($"title", $"label", $"year_raw", $"journal")
         .orderBy($"title")
@@ -332,261 +326,56 @@ object TaggedQueries {
   private def routed(s: SparkSession, family: Int,
                      params: Map[String, String]): DataFrame =
     graft.query.Router.route(
-      graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, FixtureGlob)),
+      graft.graph.DocGraph.ofIngested(TaggedText.ingest(s, TaggedGlob)),
       family, params)
 
-  /** The same pipeline in DuckDB: read_text → blank-line block split
-    * (the same `\\n\\s*\\n` regex the parser uses) → per-field extraction
-    * anchored to line starts, LAST occurrence winning (dict-overwrite
-    * parity with `parseEntries`) → the P1-P3 cleaning chains → P7
-    * sanitize → A1 first-wins window. An absent field is NULL on both
-    * sides (`list_extract` of an empty match list is NULL); `size(NULL)`
-    * is NULL on both sides.
-    */
-  private[graft] def pipelineSqlFor(glob: String): String = s"""f AS (
-  SELECT filename, string_split_regex(content, '\\n\\s*\\n') AS blocks
-  FROM read_text('$glob')),
-bx AS (
-  SELECT filename, unnest(range(len(blocks))) AS block_idx, blocks FROM f),
-blk AS (
-  SELECT filename, block_idx, blocks[CAST(block_idx + 1 AS INTEGER)] AS block
-  FROM bx),
-rec0 AS (
-  SELECT filename, block_idx, block FROM blk
-  WHERE regexp_matches(block, '(?m)^\\{[^}]+\\}:')),
-raw AS (
-  SELECT filename, block_idx,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Title\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS title_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Reference Type\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS rt_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Year\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS year_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Author\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS author_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Tertiary Author\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS tert_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Keywords\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS kw_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Publisher\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS pub_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Place Published\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS place_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Journal\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS journal_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{DOI\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS doi_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Author Address\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS addr_r,
-    list_extract(regexp_extract_all(block, '(?m)^\\{Abstract\\}:[ \\t]*([^\\n]*)$$', 1), -1) AS abs_r
-  FROM rec0),
-clean AS (
-  SELECT filename, block_idx,
-    trim(regexp_replace(regexp_replace(title_r, ';\\s*$$', ''), '\\s+', ' ', 'g')) AS title,
-    trim(regexp_replace(regexp_replace(rt_r, ';\\s*$$', ''), '\\s+', ' ', 'g')) AS ref_type,
-    trim(regexp_replace(regexp_replace(year_r, ';\\s*$$', ''), '\\s+', ' ', 'g')) AS year_raw,
-    trim(regexp_replace(regexp_replace(pub_r, ';\\s*$$', ''), '\\s+', ' ', 'g')) AS publisher,
-    trim(regexp_replace(regexp_replace(place_r, ';\\s*$$', ''), '\\s+', ' ', 'g')) AS place_published,
-    trim(regexp_replace(regexp_replace(journal_r, ';\\s*$$', ''), '\\s+', ' ', 'g')) AS journal,
-    trim(regexp_replace(regexp_replace(doi_r, ';\\s*$$', ''), '\\s+', ' ', 'g')) AS doi,
-    trim(regexp_replace(regexp_replace(abs_r, ';\\s*$$', ''), '\\s+', ' ', 'g')) AS abstract,
-    list_filter(list_transform(string_split(author_r, ';'),
-      x -> trim(regexp_replace(x, '\\s+', ' ', 'g'))), x -> x <> '') AS author,
-    list_filter(list_transform(string_split(tert_r, ';'),
-      x -> trim(regexp_replace(x, '\\s+', ' ', 'g'))), x -> x <> '') AS tertiary_author,
-    list_filter(list_transform(string_split(kw_r, ';'),
-      x -> trim(regexp_replace(x, '\\s+', ' ', 'g'))), x -> x <> '') AS keywords,
-    list_filter(list_transform(
-      flatten(list_transform(string_split(addr_r, ';'),
-        p -> string_split_regex(p, '[.,/·]'))),
-      -- the reference's postal strip is lookaround-based ("exactly six
-      -- digits, not bordered by a seventh"); RE2 has no lookbehind, so
-      -- the mirror is structural: tokenize into digit/non-digit runs
-      -- and blank the exactly-6 digit runs — letter-adjacent codes
-      -- ("Xuyong646400") strip here exactly as Python's non-digit
-      -- lookarounds strip them (TaggedText.stripPostalCodes)
-      x -> trim(regexp_replace(coalesce(list_aggregate(
-             list_transform(regexp_extract_all(x, '[0-9]+|[^0-9]+'),
-               t -> CASE WHEN regexp_full_match(t, '[0-9]{6}')
-                         THEN ' ' ELSE t END),
-             'string_agg', ''), ''), '\\s+', ' ', 'g'))),
-      x -> x <> '') AS author_address
-  FROM raw),
-lab AS (
-  SELECT *,
-    CASE WHEN ref_type IS NULL OR regexp_replace(regexp_replace(ref_type, '\\s+', '_', 'g'), '[^A-Za-z0-9_]', '', 'g') = ''
-         THEN 'UnknownDocument'
-         WHEN regexp_matches(regexp_replace(regexp_replace(ref_type, '\\s+', '_', 'g'), '[^A-Za-z0-9_]', '', 'g'), '^[0-9]')
-         THEN '_' || regexp_replace(regexp_replace(ref_type, '\\s+', '_', 'g'), '[^A-Za-z0-9_]', '', 'g')
-         ELSE regexp_replace(regexp_replace(ref_type, '\\s+', '_', 'g'), '[^A-Za-z0-9_]', '', 'g') END AS label
-  FROM clean),
-dedup AS (
-  SELECT *, row_number() OVER (PARTITION BY title ORDER BY filename, block_idx) AS rn
-  FROM lab WHERE title IS NOT NULL AND title <> '')"""
-
-  private[graft] val pipelineSql = pipelineSqlFor(FixtureGlob)
-
-  /** [[pipelineSql]] extended with the graph-side CTEs DocGraph.ofIngested
-    * derives: deduped docs, AUTHORED pairs, HAS_KEYWORD pairs, the
-    * keyword alias mapping (md5-bucket min-rep over INGESTED keywords),
-    * and the HAS_TOPIC stub (md5-prefix topic id → taxonomy join →
-    * paren-gloss strip) — same arithmetic as the Spark side.
-    */
-  private[graft] val graphSql = s"""$pipelineSql,
-ded AS (SELECT * FROM dedup WHERE rn = 1),
-topics(id, category_code, topic_name) AS (VALUES
-  ${graft.enrich.Taxonomy.sqlValues}),
-tauth AS (
-  SELECT DISTINCT a AS author, title
-  FROM (SELECT title, unnest(author) AS a FROM ded) t),
-thk AS (
-  SELECT DISTINCT title, kw
-  FROM (SELECT title, unnest(keywords) AS kw FROM ded) t),
-tkmap AS (
-  SELECT kw AS original,
-         min(kw) OVER (PARTITION BY substring(md5(kw), 1, 1)) AS representative
-  FROM (SELECT DISTINCT unnest(keywords) AS kw FROM ded) t),
-ttop AS (
-  SELECT d.title,
-         trim(regexp_replace(t.topic_name, '\\s*\\(.*?\\)', '', 'g')) AS topic
-  FROM ded d JOIN topics t
-    ON t.id = CAST(CAST('0x' || substring(md5(d.title), 1, 6) AS BIGINT)
-                   % 22 + 1 AS INTEGER)),
-tauthall AS (
-  SELECT author, title, 'AUTHORED' AS rel FROM tauth
-  UNION ALL
-  SELECT DISTINCT a AS author, title, 'TERTIARY_AUTHORED' AS rel
-  FROM (SELECT title, unnest(tertiary_author) AS a FROM ded) t),
-torg AS (
-  SELECT title,
-         coalesce(nullif(publisher, ''), nullif(place_published, '')) AS org
-  FROM ded
-  WHERE coalesce(nullif(publisher, ''), nullif(place_published, ''))
-        IS NOT NULL)"""
-
-  /** Oracle mirror of the ER lifecycle over the ER fixture: the same
-    * parse→format→dedup pipeline, then distinct keywords → the md5-based
-    * encoder stub (quantized directly to the 1e-4 integer lattice —
-    * every dim is dyadic so Spark's float→double→round chain agrees
-    * exactly) → ε-join at θ=24/25 in HUGEINT arithmetic → min-label CC
-    * walk → min-term representative.
-    */
-  private[graft] def erSqlAt(numSq: Int, denSq: Int,
-      eExpr: String = "e", tnWhere: String = ""): String =
-    s"""${pipelineSqlFor(ErFixtureGlob)},
-ded AS (SELECT * FROM dedup WHERE rn = 1),
-kws AS (
-  SELECT DISTINCT kw FROM (SELECT title, unnest(keywords) AS kw FROM ded) t
-  WHERE kw IS NOT NULL AND kw <> ''),
-terms AS (
-  SELECT kw AS term,
-         CAST('0x' || substring(md5(kw), 1, 15) AS BIGINT) AS tid,
-         list_transform([0, 1, 2, 3, 4, 5, 6, 7], i ->
-           CAST(round(
-             (CAST('0x' || substring(
-                md5(trim(regexp_replace(kw, '\\s*\\(.*?\\)', '', 'g'))),
-                CAST(i * 4 + 1 AS INTEGER), 4) AS BIGINT) - 32768)
-             / 32768.0 * 10000) AS BIGINT)) AS e
-  FROM kws),
-tn AS (SELECT term, tid, $eExpr AS e,
-         CAST(list_sum(list_transform($eExpr, x -> x*x)) AS BIGINT) AS nrm
-       FROM terms $tnWhere),
-ted AS (SELECT u, v FROM (
-          SELECT a.tid AS u, b.tid AS v,
-            CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT) AS dot,
-            a.nrm AS na, b.nrm AS nb
-          FROM tn a JOIN tn b ON a.tid < b.tid) p
-        WHERE dot > 0
-          AND $denSq*CAST(dot AS HUGEINT)*dot >= $numSq*CAST(na AS HUGEINT)*nb),
-tee AS (SELECT u, v FROM ted UNION SELECT v, u FROM ted),
-twalk(node, lab) AS (
-  SELECT tid, tid FROM tn
-  UNION
-  SELECT tee.v, twalk.lab FROM twalk JOIN tee ON twalk.node = tee.u),
-tcomp AS (SELECT node AS tid, min(lab) AS component FROM twalk GROUP BY node),
-treps AS (SELECT c.component, min(t.term) AS representative
-          FROM tcomp c JOIN tn t ON c.tid = t.tid GROUP BY c.component),
-tmap AS (SELECT t.term AS original, r.representative
-         FROM tn t JOIN tcomp c ON t.tid = c.tid
-         JOIN treps r ON c.component = r.component),
-thk2 AS (SELECT DISTINCT title, kw
-         FROM (SELECT title, unnest(keywords) AS kw FROM ded) t)"""
-
-  private[graft] val erSql = erSqlAt(576, 625)
-
-  /** [[erSql]] with the q157 update applied in `tn`: terms in the batch
-    * (md5 term id ≡ 1 mod 3 — the Spark side's `isUpd`) are re-embedded
-    * by the deterministic dimension reversal before the ε-join, so the
-    * oracle computes FROM-SCRATCH ER over the updated universe that the
-    * served fused merge must reproduce bit-for-bit.
-    */
-  private[graft] val erUpdateSql = erSqlAt(576, 625,
-    "CASE WHEN tid % 3 = 1 THEN list_reverse(e) ELSE e END")
-
-  /** [[erSql]] with the q158 delete applied in `tn`: terms in the batch
-    * (md5 term id ≡ 2 mod 3 — the Spark side's `isDel`) are removed from
-    * the universe before the ε-join, so the oracle computes FROM-SCRATCH
-    * ER over the post-delete universe the served tombstone merge must
-    * reproduce bit-for-bit.
-    */
-  private[graft] val erDeleteSql = erSqlAt(576, 625,
-    tnWhere = "WHERE tid % 3 <> 2")
-
-  /** [[erSql]] with the q161 lifecycle's NET effect applied in `tn`:
-    * the ≡ 0 (mod 3) class deleted, the ≡ 2 class re-embedded by the
-    * dimension reversal, the ≡ 1 class inserted verbatim — so the
-    * oracle computes from-scratch ER over the post-lifecycle universe
-    * that the three folded advances must converge to bit-for-bit.
-    */
-  private[graft] val erCrudSql = erSqlAt(576, 625,
-    "CASE WHEN tid % 3 = 2 THEN list_reverse(e) ELSE e END",
-    tnWhere = "WHERE tid % 3 <> 0")
+  /** The keyword mapping at θ = 24/25 as a whole statement, over `tn`
+    * with the batch's re-embedding and deletion applied: from-scratch ER
+    * over the universe the served merges and the folded advances must
+    * reproduce bit-for-bit. */
+  private def erMapping(eExpr: String = "e", tnWhere: String = ""): String =
+    s"""WITH RECURSIVE ${taggedEr(576, 625, eExpr, tnWhere)}
+         SELECT original, representative FROM tmap ORDER BY original"""
+  private val erBase = erMapping()
+  // the q157 update: md5 term id ≡ 1 mod 3 (the Spark side's `isUpd`)
+  // re-embedded by the dimension reversal
+  private val erUpdated = erMapping("CASE WHEN tid % 3 = 1 THEN list_reverse(e) ELSE e END")
+  // the q158 delete: md5 term id ≡ 2 mod 3 (the Spark side's `isDel`)
+  private val erDeleted = erMapping(tnWhere = "WHERE tid % 3 <> 2")
+  // the q161 lifecycle's NET effect: class 0 deleted, class 2
+  // re-embedded, class 1 inserted verbatim
+  private val erCrudNet = erMapping(
+    "CASE WHEN tid % 3 = 2 THEN list_reverse(e) ELSE e END", "WHERE tid % 3 <> 0")
 
   def oracles: Map[String, String] = Map(
     "q123_tagged_stream_dedup" ->
-      s"""WITH $pipelineSql
+      s"""WITH $tagged
          SELECT title, label, year_raw, journal
          FROM dedup WHERE rn = 1 ORDER BY title""",
-    "q104_tagged_er_mapping" ->
-      s"""WITH RECURSIVE $erSql
-         SELECT original, representative FROM tmap ORDER BY original""",
-    "q128_tagged_er_encoded" ->
-      s"""WITH RECURSIVE $erSql
-         SELECT original, representative FROM tmap ORDER BY original""",
-    "q157_tagged_er_updates_served" ->
-      s"""WITH RECURSIVE $erUpdateSql
-         SELECT original, representative FROM tmap ORDER BY original""",
-    "q158_tagged_er_tombstones_served" ->
-      s"""WITH RECURSIVE $erDeleteSql
-         SELECT original, representative FROM tmap ORDER BY original""",
-    "q159_tagged_er_inserts_served" ->
-      s"""WITH RECURSIVE $erSql
-         SELECT original, representative FROM tmap ORDER BY original""",
-    "q160_tagged_er_multiday" ->
-      s"""WITH RECURSIVE $erSql
-         SELECT original, representative FROM tmap ORDER BY original""",
-    "q161_tagged_er_crud_lifecycle" ->
-      s"""WITH RECURSIVE $erCrudSql
-         SELECT original, representative FROM tmap ORDER BY original""",
+    "q104_tagged_er_mapping" -> erBase,
+    "q128_tagged_er_encoded" -> erBase,
+    "q157_tagged_er_updates_served" -> erUpdated,
+    "q158_tagged_er_tombstones_served" -> erDeleted,
+    "q159_tagged_er_inserts_served" -> erBase,
+    "q160_tagged_er_multiday" -> erBase,
+    "q161_tagged_er_crud_lifecycle" -> erCrudNet,
     // merge-on-read advance layout: same net state, same oracle as q161
-    "q165_tagged_er_crud_lifecycle_mor" ->
-      s"""WITH RECURSIVE $erCrudSql
-         SELECT original, representative FROM tmap ORDER BY original""",
+    "q165_tagged_er_crud_lifecycle_mor" -> erCrudNet,
     // mid-lifecycle compaction on the real-ingest stores: same oracle
-    "q167_tagged_er_mor_compact" ->
-      s"""WITH RECURSIVE $erCrudSql
-         SELECT original, representative FROM tmap ORDER BY original""",
+    "q167_tagged_er_mor_compact" -> erCrudNet,
     "q105_tagged_er_alias_docs" ->
-      s"""WITH RECURSIVE $erSql,
-         exp AS (
-           SELECT representative AS kw FROM tmap
-           WHERE original = '知识图谱 (KG)'
-           UNION SELECT '知识图谱 (KG)')
+      s"""WITH RECURSIVE ${taggedEr(576, 625)},
+         ${aliasExpansion("exp", "tmap", "知识图谱 (KG)")}
          SELECT DISTINCT h.title AS title
          FROM thk2 h JOIN exp e ON h.kw = e.kw
          ORDER BY title""",
     "q100_tagged_keyword_docs" ->
-      s"""WITH $graphSql,
-         exp AS (
-           SELECT representative AS kw FROM tkmap WHERE original = '知识图谱'
-           UNION SELECT '知识图谱')
+      s"""WITH $taggedGraph, ${aliasExpansion("exp", "tkmap", "知识图谱")}
          SELECT DISTINCT h.title AS title
          FROM thk h JOIN exp e ON h.kw = e.kw
          ORDER BY title""",
     "q101_tagged_keyword_per_year" ->
-      s"""WITH $graphSql,
-         exp AS (
-           SELECT representative AS kw FROM tkmap WHERE original = '深度学习'
-           UNION SELECT '深度学习'),
+      s"""WITH $taggedGraph, ${aliasExpansion("exp", "tkmap", "深度学习")},
          matched AS (
            SELECT DISTINCT h.title FROM thk h JOIN exp e ON h.kw = e.kw)
          SELECT CAST(TRY_CAST(d.year_raw AS INTEGER) AS BIGINT) AS year,
@@ -594,29 +383,12 @@ thk2 AS (SELECT DISTINCT title, kw
          FROM matched m JOIN ded d ON m.title = d.title
          GROUP BY 1 ORDER BY year NULLS FIRST""",
     "q102_tagged_coauthors" ->
-      s"""WITH $graphSql
-         SELECT DISTINCT b.author AS coauthor
-         FROM tauth a JOIN tauth b
-           ON a.title = b.title AND b.author <> a.author
-         WHERE a.author = '王芳' ORDER BY coauthor""",
+      s"""WITH $taggedGraph
+         ${coauthorsOf("tauth", "王芳")} ORDER BY coauthor""",
     "q103_tagged_collab_topics" ->
-      s"""WITH $graphSql,
-         coa AS (
-           SELECT DISTINCT b.author AS coauthor
-           FROM tauth a JOIN tauth b
-             ON a.title = b.title AND b.author <> a.author
-           WHERE a.author = '王芳'),
-         cdocs AS (
-           SELECT DISTINCT c.title FROM coa JOIN tauth c
-             ON coa.coauthor = c.author)
-         SELECT DISTINCT t.topic AS topic, cd.title AS title,
-                d.abstract AS abstract
-         FROM cdocs cd
-         JOIN ttop t ON t.title = cd.title
-         JOIN ded d ON d.title = cd.title
-         ORDER BY topic, title""",
+      s"""WITH $taggedGraph, ${collabTopicsSql("tauth", "ttop", "ded", "王芳")}""",
     "q90_tagged_ingest" ->
-      s"""WITH $pipelineSql
+      s"""WITH $tagged
          SELECT title, label,
            CAST(TRY_CAST(year_raw AS INTEGER) AS BIGINT) AS year, year_raw,
            CAST(len(author) AS BIGINT) AS n_authors,
@@ -624,11 +396,11 @@ thk2 AS (SELECT DISTINCT title, kw
            publisher, array_to_string(author_address, '|') AS addr_csv
          FROM dedup WHERE rn = 1 ORDER BY title""",
     "q91_tagged_labels" ->
-      s"""WITH $pipelineSql
+      s"""WITH $tagged
          SELECT label, count(*) AS n FROM dedup WHERE rn = 1
          GROUP BY label ORDER BY label""",
     "q93_area_counts" ->
-      s"""WITH $pipelineSql
+      s"""WITH $tagged
          SELECT regexp_extract(filename, '([^/]+)/[^/]+/[^/]+$$', 1) AS area,
                 count(*) AS n
          FROM dedup WHERE rn = 1
@@ -638,7 +410,7 @@ thk2 AS (SELECT DISTINCT title, kw
     // property — title is unique after the first-wins dedup, so the edge
     // dst join is 1:1.
     "q94_tagged_author_docs" ->
-      s"""WITH $pipelineSql
+      s"""WITH $tagged
          SELECT DISTINCT t.title,
            CAST(TRY_CAST(t.year_raw AS INTEGER) AS BIGINT) AS year
          FROM (SELECT title, year_raw, unnest(author) AS a
@@ -649,7 +421,7 @@ thk2 AS (SELECT DISTINCT title, kw
     // Place Published (Hype.py:38-44); records with neither produce no
     // edge (edgesFor's missing-entity skip).
     "q95_tagged_published_by" ->
-      s"""WITH $pipelineSql
+      s"""WITH $tagged
          SELECT title,
            coalesce(nullif(publisher, ''), nullif(place_published, '')) AS org
          FROM dedup
@@ -658,69 +430,57 @@ thk2 AS (SELECT DISTINCT title, kw
                IS NOT NULL
          ORDER BY title""",
     "q106_tagged_doc_authors" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT author FROM tauth
          WHERE title = '面向领域知识图谱构建的关键技术研究'
          ORDER BY author""",
     "q107_tagged_doc_keywords" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT kw FROM thk
          WHERE title = '面向领域知识图谱构建的关键技术研究'
          ORDER BY kw""",
     "q108_tagged_doc_org" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT title, org FROM torg
          WHERE title = '面向领域知识图谱构建的关键技术研究'""",
     "q109_tagged_doc_topic" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT title, topic FROM ttop
          WHERE title = '面向领域知识图谱构建的关键技术研究'""",
     "q110_tagged_doc_properties" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT title, label,
            CAST(TRY_CAST(year_raw AS INTEGER) AS BIGINT) AS year,
            journal, abstract
          FROM ded WHERE title = '面向领域知识图谱构建的关键技术研究'""",
     "q111_tagged_authored_check" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT title, rel FROM tauthall
          WHERE author = '张三'
            AND title IN ('面向领域知识图谱构建的关键技术研究',
                          '一种量子通信装置')
          ORDER BY title, rel""",
     "q112_tagged_keyword_cooccur" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT b.kw AS kw, count(*) AS n
          FROM thk a JOIN thk b
            ON a.title = b.title AND b.kw <> a.kw
          WHERE a.kw = '知识图谱'
          GROUP BY b.kw ORDER BY n DESC, kw LIMIT 10""",
     "q113_tagged_org_topics" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT DISTINCT t.topic AS topic
          FROM torg o JOIN ttop t ON o.title = t.title
          WHERE o.org = '北京'
          ORDER BY topic""",
     "q114_tagged_coauthor_reach" ->
-      s"""WITH RECURSIVE $graphSql,
-         ce0 AS (
-           SELECT DISTINCT a.author AS u, b.author AS v
-           FROM tauth a JOIN tauth b
-             ON a.title = b.title AND a.author < b.author),
-         ce AS (SELECT u, v FROM ce0 UNION SELECT v, u FROM ce0),
-         bfs(node, hops) AS (
-           SELECT '王芳', 0
-           UNION
-           SELECT ce.v, bfs.hops + 1 FROM bfs JOIN ce ON bfs.node = ce.u
-           WHERE bfs.hops < 2)
-         SELECT node AS author, CAST(min(hops) AS BIGINT) AS hops
-         FROM bfs GROUP BY node ORDER BY author""",
+      s"""WITH RECURSIVE $taggedGraph, ${coauthorReachSql("tauth", "'王芳'")}""",
     "q115_tagged_doc_has_keyword" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT count(*) > 0 AS has_kw FROM thk
          WHERE title = '会议论文示例' AND kw = '深度学习'""",
     "q116_tagged_doc_properties_nulls" ->
-      s"""WITH $graphSql
+      s"""WITH $taggedGraph
          SELECT title, label,
            CAST(TRY_CAST(year_raw AS INTEGER) AS BIGINT) AS year,
            journal, abstract

@@ -1,4 +1,4 @@
-package graft.text
+package graft.registry
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -19,7 +19,7 @@ import graft.Tables
   * (token, partial_count) pairs — the map-side combine keeps that bounded
   * by vocabulary size per partition, not corpus size.
   */
-object TextAnalysis {
+object TextStats extends Family {
 
   /** Integer ratio in permille — exact in both engines (floor division). */
   private val permille = "CAST(%s * 1000 DIV %s AS BIGINT)"

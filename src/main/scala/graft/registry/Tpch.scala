@@ -1,4 +1,4 @@
-package graft.relational
+package graft.registry
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import graft.Tables
   *
   * These re-express the reference's join/agg surface (SURVEY.md §2.3-§2.6 —
   * J3-J10 equi joins, A7 count-per-group+top-k, A1 first-occurrence dedup,
-  * §2.6 unions) on the driver's TPC-H-ish fixtures so every shape has a
+  * §2.6 unions) on the TPC-H-ish fixtures so every shape has a
   * DuckDB oracle.
   *
   * Determinism contract: money/discount columns are 2-decimal-quantized
@@ -37,7 +37,7 @@ import graft.Tables
   *    heap, no full sort), with an integer sort key so ordering is total
   *    and stable.
   */
-object TpchQueries {
+object Tpch extends Family {
 
   /** Exact integer cents from a 2-decimal-quantized double column. */
   private def cents(c: Column): Column = round(c * 100, 0).cast("long")

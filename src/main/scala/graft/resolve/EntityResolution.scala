@@ -668,499 +668,4 @@ object EntityResolution {
       .select($"term".as("original"), $"representative")
       .orderBy($"original")
   }
-
-  /** The synthetic lifecycles' days: insert class 9, update class 7,
-    * delete class 5. */
-  private val syntheticCrud = Seq(("insert", 9), ("update", 7), ("delete", 5))
-
-  /** The sparse serves' class rule (q153/q156): replica family of
-    * `vec_id % 10M`, 1 in 200 base ids per class. */
-  private val sparseCls: Column => Column = c => c % 10000000L % 200
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Tombstone-batch ER: delete vec_id%10=5 from the standing state,
-    // recompute only the components a tombstone touches. The oracle is
-    // FROM-SCRATCH blocked ER over the post-delete corpus under the
-    // pinned index, so a missed split, a stale representative, or a
-    // survivor lost with its component all hash-mismatch.
-    "q146_er_tombstones" -> ((s, d) => tombstoneResolve(s, d)),
-    // q146's delete day served alone from the shared day-0 snapshot
-    // (`ins=`, built once per key): the measured call is the tombstone
-    // merge. Same oracle as q146.
-    "q150_er_tombstones_served" -> ((s, d) =>
-      Lifecycle.serve(s, Lifecycle.synthetic(d), ("delete", 5))),
-    // The tombstone serve at its DESIGN POINT: the batch deletes every
-    // replica family of 1 in 200 base ids ((vec_id % 10M) % 200 = 5 —
-    // replica ids are base + r·10M, so the class rule selects whole
-    // families), dirtying a small fraction of components, so the cost
-    // is proportional to the dirty set, not the corpus. Same `ins=`
-    // snapshot as q150. Oracle: from-scratch ER over the post-delete
-    // corpus under the same pinned index.
-    "q153_er_tombstones_sparse" -> ((s, d) =>
-      Lifecycle.serve(s, Lifecycle.synthetic(d, sparseCls), ("delete", 5))),
-    // Update-batch ER: retract + re-insert composition over the pinned
-    // index; oracle is from-scratch ER on the re-embedded corpus.
-    "q151_er_updates" -> ((s, d) => updateResolve(s, d)),
-    // q151's update day served alone from the `ins=` snapshot: assign
-    // only the re-embedded batch against the cached pin, then the fused
-    // retract+reinsert merge. Same oracle as q151.
-    "q155_er_updates_served" -> ((s, d) =>
-      Lifecycle.serve(s, Lifecycle.synthetic(d), ("update", 7))),
-    // The update serve at its SPARSE design point (q153's analog for
-    // updates): whole-family re-embeddings confined to (vec%10M)%200=7 —
-    // ~0.5% of rows — so the fused merge's affected set (dirty ∪
-    // touched components) is a small fraction of the corpus and the
-    // serve cost is proportional to it, not to the standing state.
-    "q156_er_updates_sparse" -> ((s, d) =>
-      Lifecycle.serve(s, Lifecycle.synthetic(d, sparseCls), ("update", 7))),
-
-    // The SYNTHETIC mixed-CRUD lifecycle (q161's scale twin): insert,
-    // update, and delete days folded into standing state over the
-    // SF-scaled corpus under the pinned index — the sweeps' measure of
-    // the advance machinery where the data actually grows. Oracle:
-    // from-scratch blocked ER over the net corpus (class 5 deleted,
-    // class 7 reversed), index pinned to the pre-insert rule.
-    "q162_er_crud_lifecycle" -> ((s, d) => Lifecycle.run(s,
-      Lifecycle.synthetic(d), Lifecycle.Rewrite, "graft_q162", syntheticCrud)),
-    // q162 with MERGE-ON-READ advances: identical day kernels, but
-    // update/delete days append tombstone/delta sidecars instead of
-    // rewriting the corpus-sized pair/assigned stores — the
-    // update-dominant 100 TB advance shape. Same oracle as q162 (the
-    // advance layout must be invisible in the mapping).
-    "q163_er_crud_lifecycle_mor" -> ((s, d) => Lifecycle.run(s,
-      Lifecycle.synthetic(d), Lifecycle.MergeOnRead, "graft_q163",
-      syntheticCrud)),
-    // q163 with a MID-LIFECYCLE COMPACTION:
-    // after the update day (op index 1 — both delta AND tombstone
-    // sidecars live) the sidecars fold into a fresh bucketed working
-    // base, and the delete day runs against the compacted store. Same
-    // oracle as q162/q163 — the maintenance schedule must be invisible
-    // in the mapping, pinned THROUGH a compaction.
-    "q166_er_crud_lifecycle_mor_compact" ->
-      ((s, d) => Lifecycle.run(s, Lifecycle.synthetic(d),
-        Lifecycle.MergeOnRead, "graft_q166", syntheticCrud,
-        compactAfterOps = Set(1))),
-    // q163 with the compaction POLICY driving
-    // the fold instead of an explicit schedule: sidecar depth ≥ 2
-    // distinct epochs (spark.graft.mor.compactDepth=2). After the
-    // update day the stores carry epochs {1,2}, so the policy fires
-    // exactly where q166's manual Set(1) schedule folds — and NOT after
-    // the single-epoch insert day or the post-fold delete day. Same
-    // oracle as q162/q163/q166: what TRIGGERS the maintenance fold must
-    // be as invisible in the mapping as the fold itself.
-    "q169_er_mor_compact_policy" -> ((s, d) => {
-      val conf = BucketedStore.CompactDepthConf
-      val prev = s.conf.getOption(conf)
-      // the measured break-even depth (bench/r{15,16}_profile_mor_
-      // compaction.txt → RecommendedCompactDepth): after the update day
-      // the stores carry epochs {1,2}, so the policy fires exactly
-      // where q166's manual Set(1) schedule folds
-      s.conf.set(conf,
-        BucketedStore.RecommendedCompactDepth.toString)
-      try Lifecycle.run(s, Lifecycle.synthetic(d), Lifecycle.MergeOnRead,
-        "graft_q169", syntheticCrud)
-      finally prev match {
-        case Some(v) => s.conf.set(conf, v)
-        case None => s.conf.unset(conf)
-      }
-    }),
-    // Incremental ER gated against the from-scratch union mapping — the
-    // oracle recomputes blocked ER over ALL vectors under the
-    // standing-pinned index, so any divergence in the incremental
-    // composition (missed touching pair, wrong affected set, star-edge
-    // connectivity loss, rep drift) hash-mismatches.
-    "q141_er_incremental" -> ((s, d) => incrementalResolve(s, d)),
-
-    // q141's insert day served alone from the `ins=9` snapshot the
-    // q162 family replays (built once per key): the measured call is
-    // the increment. Same oracle as q141.
-    "q143_er_incremental_served" -> ((s, d) =>
-      Lifecycle.serve(s, Lifecycle.synthetic(d), ("insert", 9))),
-    // Graph-analytics extension: PageRank over the blocked ε-similarity
-    // graph (same scale-safe candidate pairs as q52/q53), in exact
-    // scaled-integer arithmetic — partitioning-independent, so it is
-    // FULLY hash-gated against the DuckDB unrolled-recurrence oracle.
-    "q54_pagerank" -> ((s, d) => {
-      import s.implicits._
-      val verts = Tables.embeddings(s, d).select($"vec_id")
-      Kernels.pageRank(s, verts, Kernels.blockedEpsPairs(s, d), iters = 10)
-        .orderBy($"vec_id")
-    }),
-    // §2.8-C1: ε-graph connected components = DBSCAN(min_samples=2)
-    // clusters; representative = component = min member id.
-    "q50_entity_resolution" -> ((s, d) => {
-      import s.implicits._
-      resolve(s, d).orderBy($"vec_id")
-    }),
-
-    // The 100 TB scale path: ε-join blocked by IVF centroid cell (equi
-    // join on the bucket id — no all-pairs), then the same CC + min-rep.
-    // Exact q50 is the correctness anchor.
-    "q52_er_blocked" -> ((s, d) => {
-      import s.implicits._
-      val verts = Tables.embeddings(s, d).select($"vec_id")
-      Kernels.connectedComponents(s, verts, Kernels.blockedEpsPairs(s, d))
-        .orderBy($"vec_id")
-    }),
-
-    // Variable-length traversal: vertices within 2 hops of vec_id 0 in
-    // the blocked ε-similarity graph, with hop distance (Pregel BFS).
-    // Consumes the IVF-cell candidate pairs, NOT the exact broadcast
-    // kernel — no whole-corpus collect() in any analytics lineage.
-    "q53_bfs_reach" -> ((s, d) => {
-      import s.implicits._
-      val verts = Tables.embeddings(s, d).select($"vec_id")
-      Kernels.bfsReach(s, verts, Kernels.blockedEpsPairs(s, d), seed = 0L,
-          maxHops = 2)
-        .orderBy($"vec_id")
-    }),
-
-    // Organization resolution at the reference threshold θ=0.96
-    // (`Hype.py:81-82`): exact ε-join over the org term universe → CC →
-    // lexicographic-min-term representative. The `_alt` spelling variants
-    // (identical embeddings) merge; nothing else on this fixture reaches
-    // 0.96 — the real-data shape (the reference's own org mapping has 6
-    // non-identity entries out of 597).
-    "q88_org_mapping" -> ((s, d) => {
-      import s.implicits._
-      orgMapping(s, d).orderBy($"original")
-    }),
-
-    // Author_Address resolution at θ=0.95 (`keyword_merger.py:286-287`),
-    // projected to its non-identity ALIAS_OF edges
-    // (`csv_extractor.py:269-273` — one edge per merged spelling).
-    "q89_addr_alias_edges" -> ((s, d) => {
-      import s.implicits._
-      addressMapping(s, d)
-        .filter($"original" =!= $"representative")
-        .select($"original".as("src"), $"representative".as("dst"),
-          lit("ALIAS_OF").as("rel_type"))
-        .orderBy($"src")
-    }),
-
-    // §2.8-C2 + J11/A9: the full refinement pipeline through the
-    // pluggable MappingCorrector trait — regroup by representative, size
-    // gate (≥3), per-cluster corrector call (the deterministic
-    // promote-second stub), response parse with self-map fill-in, merge
-    // of untouched entries. Same result as the r3 inline formulation
-    // (second-smallest member promoted), now via the reference's actual
-    // text contract (`recorrect_mapping.py:33-67,197-204`).
-    "q51_er_refined_mapping" -> ((s, d) => {
-      import s.implicits._
-      val mapping = resolve(s, d)
-        .select($"vec_id".cast("string").as("original"),
-          $"component".cast("string").as("representative"))
-      MappingCorrector
-        .refineMapping(mapping, PromoteSecondCorrector, minClusterSize = 3)
-        .select(col("original").cast("long").as("vec_id"),
-          col("representative").cast("long").as("rep_id"))
-        .orderBy($"vec_id")
-    }),
-
-    // q51's scale path: the SAME refinement pipeline over the
-    // IVF-blocked ε-graph's clusters (q52's linear-shuffle kernel)
-    // instead of the exact all-pairs anchor — together q51/q124 mirror
-    // the q50/q52 exact-anchor/blocked-path pairing for the full
-    // §2.8-C1→C2 lifecycle. At sf1 the exact kernel is ~26× its sf0.1
-    // cost (quadratic by design); this composition scales with the
-    // blocked pair volume instead.
-    "q124_refined_blocked" -> ((s, d) => {
-      import s.implicits._
-      val verts = Tables.embeddings(s, d).select($"vec_id")
-      val mapping =
-        Kernels.connectedComponents(s, verts, Kernels.blockedEpsPairs(s, d))
-        .select($"vec_id".cast("string").as("original"),
-          $"component".cast("string").as("representative"))
-      MappingCorrector
-        .refineMapping(mapping, PromoteSecondCorrector, minClusterSize = 3)
-        .select(col("original").cast("long").as("vec_id"),
-          col("representative").cast("long").as("rep_id"))
-        .orderBy($"vec_id")
-    })
-  )
-
-  /** Shared oracle prelude: ε-edges + min-label-propagation CC as a
-    * recursive CTE (terminates because UNION dedups the (node, label)
-    * walk set; exact for the 500-vector verify fixture).
-    */
-  private val ccSql = """q0 AS (
-  SELECT vec_id, list_transform(embedding,
-    x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-  FROM embeddings),
-n AS (SELECT vec_id, e,
-        CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-      FROM q0),
-ed AS (SELECT u, v FROM (
-         SELECT a.vec_id AS u, b.vec_id AS v,
-           CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT) AS dot,
-           a.nrm AS na, b.nrm AS nb
-         FROM n a JOIN n b ON a.vec_id < b.vec_id) p
-       WHERE dot > 0
-         AND 400*CAST(dot AS HUGEINT)*dot >= 49*CAST(na AS HUGEINT)*nb),
-ee AS (SELECT u, v FROM ed UNION SELECT v, u FROM ed),
-walk(node, lab) AS (
-  SELECT vec_id, vec_id FROM n
-  UNION
-  SELECT ee.v, walk.lab FROM walk JOIN ee ON walk.node = ee.u
-),
-comp AS (SELECT node AS vec_id, min(lab) AS component FROM walk GROUP BY node)"""
-
-  /** Oracle mirror of the IVF-blocked ε-graph (q36's assignment chain +
-    * the ε predicate within cells) + the same CC walk.
-    */
-  private val blockedCcSql = s"""q0 AS (
-  SELECT vec_id, list_transform(embedding,
-    x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-  FROM embeddings),
-n AS (SELECT vec_id, e,
-        CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-      FROM q0),
-cent AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm
-         FROM n WHERE vec_id % ${graft.similarity.Similarity.modulusSql} = 0),
-ap AS (SELECT n.vec_id, cent.cid,
-        CAST(list_sum(list_transform(n.e, (x,i) -> x * cent.ce[i])) AS BIGINT) AS dot,
-        n.nrm, cent.cnrm
-      FROM n CROSS JOIN cent),
-assigned AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-      row_number() OVER (PARTITION BY vec_id ORDER BY
-        CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-          * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-    FROM ap) t WHERE rn = 1),
-full0 AS (SELECT a.vec_id, a.cid, n.e, n.nrm
-          FROM assigned a JOIN n ON a.vec_id = n.vec_id),
-ed AS (SELECT u, v FROM (
-         SELECT a.vec_id AS u, b.vec_id AS v,
-           CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT) AS dot,
-           a.nrm AS na, b.nrm AS nb
-         FROM full0 a JOIN full0 b
-           ON a.cid = b.cid AND a.vec_id < b.vec_id) p
-       WHERE dot > 0 AND 400*dot*dot >= 49*na*nb),
-ee AS (SELECT u, v FROM ed UNION SELECT v, u FROM ed),
-walk(node, lab) AS (
-  SELECT vec_id, vec_id FROM n
-  UNION
-  SELECT ee.v, walk.lab FROM walk JOIN ee ON walk.node = ee.u
-),
-comp AS (SELECT node AS vec_id, min(lab) AS component FROM walk GROUP BY node)"""
-
-  /** [[blockedCcSql]] with the centroid set PINNED to the standing
-    * corpus (`vec_id % 10 <> 9`, modulus from the standing count) — the
-    * from-scratch mirror of [[incrementalResolve]]'s index rule. Every
-    * other CTE is identical: assignment, ε-predicate, CC walk.
-    * `memberWhere` restricts the RESOLVED corpus (the `m` CTE: what is
-    * assigned, paired, and labeled) WITHOUT touching the centroid set —
-    * the index stays pinned to the pre-restriction standing corpus,
-    * which is exactly the tombstone contract (q146): deleting members
-    * does not move the index. `memberExpr` likewise transforms the
-    * member EMBEDDINGS without touching the index — the update
-    * contract (q151): re-embedding members does not move it either.
-    */
-  private def pinnedCcSqlWhere(memberWhere: String,
-      memberExpr: String = "e") = s"""q0 AS (
-  SELECT vec_id, list_transform(embedding,
-    x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-  FROM embeddings),
-n AS (SELECT vec_id, e,
-        CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-      FROM q0),
-cent AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm
-         FROM n WHERE vec_id % 10 <> 9 AND vec_id % (
-           SELECT greatest(50, CAST(floor(sqrt(count(*))) AS BIGINT))
-           FROM embeddings WHERE vec_id % 10 <> 9) = 0),
-m AS (SELECT vec_id, $memberExpr AS e, nrm FROM n WHERE $memberWhere),
-ap AS (SELECT m.vec_id, cent.cid,
-        CAST(list_sum(list_transform(m.e, (x,i) -> x * cent.ce[i])) AS BIGINT) AS dot,
-        m.nrm, cent.cnrm
-      FROM m CROSS JOIN cent),
-assigned AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-      row_number() OVER (PARTITION BY vec_id ORDER BY
-        CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-          * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-    FROM ap) t WHERE rn = 1),
-full0 AS (SELECT a.vec_id, a.cid, m.e, m.nrm
-          FROM assigned a JOIN m ON a.vec_id = m.vec_id),
-ed AS (SELECT u, v FROM (
-         SELECT a.vec_id AS u, b.vec_id AS v,
-           CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT) AS dot,
-           a.nrm AS na, b.nrm AS nb
-         FROM full0 a JOIN full0 b
-           ON a.cid = b.cid AND a.vec_id < b.vec_id) p
-       WHERE dot > 0 AND 400*dot*dot >= 49*na*nb),
-ee AS (SELECT u, v FROM ed UNION SELECT v, u FROM ed),
-walk(node, lab) AS (
-  SELECT vec_id, vec_id FROM m
-  UNION
-  SELECT ee.v, walk.lab FROM walk JOIN ee ON walk.node = ee.u
-),
-comp AS (SELECT node AS vec_id, min(lab) AS component FROM walk GROUP BY node)"""
-
-  private val pinnedCcSql = pinnedCcSqlWhere("TRUE")
-
-  /** Oracle mirror of [[variantTerms]] + [[aliasMapping]]: the o-prefixed
-    * CTE chain ends in `omap(original, representative)`. All names are
-    * collision-free with [[graft.graph.BibGraph.sqlPrelude]] so the two
-    * preludes compose in one WITH (the alias-expanded org query).
-    */
-  def termCcSql(prefix: String, numSq: Int, denSq: Int): String = s"""oq0 AS (
-  SELECT vec_id, list_transform(embedding,
-    x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-  FROM embeddings WHERE vec_id % 10 = 0),
-on0 AS (SELECT vec_id, e,
-          CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-        FROM oq0),
-oterms AS (
-  SELECT '$prefix' || CAST(vec_id // 10 AS BIGINT) AS term,
-         (vec_id // 10) * 2 AS tid, e, nrm FROM on0
-  UNION ALL
-  SELECT '$prefix' || CAST(vec_id // 10 AS BIGINT) || '_alt',
-         (vec_id // 10) * 2 + 1, e, nrm FROM on0),
-oed AS (SELECT u, v FROM (
-          SELECT a.tid AS u, b.tid AS v,
-            CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT) AS dot,
-            a.nrm AS na, b.nrm AS nb
-          FROM oterms a JOIN oterms b ON a.tid < b.tid) p
-        WHERE dot > 0
-          AND $denSq*CAST(dot AS HUGEINT)*dot >= $numSq*CAST(na AS HUGEINT)*nb),
-oee AS (SELECT u, v FROM oed UNION SELECT v, u FROM oed),
-owalk(node, lab) AS (
-  SELECT tid, tid FROM oterms
-  UNION
-  SELECT oee.v, owalk.lab FROM owalk JOIN oee ON owalk.node = oee.u),
-ocomp AS (SELECT node AS tid, min(lab) AS component FROM owalk GROUP BY node),
-oreps AS (SELECT c.component, min(t.term) AS representative
-          FROM ocomp c JOIN oterms t ON c.tid = t.tid GROUP BY c.component),
-omap AS (SELECT t.term AS original, r.representative
-         FROM oterms t JOIN ocomp c ON t.tid = c.tid
-         JOIN oreps r ON c.component = r.component)"""
-
-  /** The exact PageRank recurrence unrolled: pr0 = S, pr_i = 0.15·S +
-    * Σ_in (rank·85) // (100·outdeg) — integer-for-integer the Spark loop
-    * (DuckDB `//` and Spark `DIV` agree on non-negative operands).
-    */
-  private def prChainSql(iters: Int): String =
-    """deg AS (SELECT u AS src, count(*) AS outdeg FROM ee GROUP BY u),
-pr0 AS (SELECT vec_id, CAST(1000000000 AS BIGINT) AS rank FROM n),
-""" + (1 to iters).map { i =>
-      s"""pr$i AS (
-  SELECT vt.vec_id,
-         CAST(150000000 AS BIGINT) + coalesce(c.s, CAST(0 AS BIGINT)) AS rank
-  FROM n vt LEFT JOIN (
-    SELECT e.v AS vec_id,
-           CAST(sum((p.rank * 85) // (100 * d.outdeg)) AS BIGINT) AS s
-    FROM ee e JOIN pr${i - 1} p ON e.u = p.vec_id
-              JOIN deg d ON e.u = d.src
-    GROUP BY e.v) c ON vt.vec_id = c.vec_id)"""
-    }.mkString(",\n")
-
-  def oracles: Map[String, String] = Map(
-    "q141_er_incremental" ->
-      s"""WITH RECURSIVE $pinnedCcSql
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // from-scratch ER over the post-delete corpus, index still pinned
-    // to the pre-delete standing rule
-    "q146_er_tombstones" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("vec_id % 10 <> 5")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // the serve split must be a pure cost-attribution change
-    "q150_er_tombstones_served" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("vec_id % 10 <> 5")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // sparse design point: same from-scratch truth, sparse predicate
-    "q153_er_tombstones_sparse" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("(vec_id % 10000000) % 200 <> 5")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // from-scratch ER over the corpus with the update batch re-embedded
-    // (reversed), index still pinned to the original standing rule
-    "q151_er_updates" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("TRUE",
-        "CASE WHEN vec_id % 10 = 7 THEN list_reverse(e) ELSE e END")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // the serve split must be a pure cost-attribution change
-    "q143_er_incremental_served" ->
-      s"""WITH RECURSIVE $pinnedCcSql
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // the serve split must be a pure cost-attribution change
-    "q155_er_updates_served" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("TRUE",
-        "CASE WHEN vec_id % 10 = 7 THEN list_reverse(e) ELSE e END")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    "q156_er_updates_sparse" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("TRUE",
-        "CASE WHEN (vec_id % 10000000) % 200 = 7 THEN list_reverse(e) ELSE e END")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // the lifecycle's NET effect: class 5 deleted, class 7 re-embedded,
-    // class 9 inserted (present) — index pinned to the pre-insert rule
-    "q162_er_crud_lifecycle" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("vec_id % 10 <> 5",
-        "CASE WHEN vec_id % 10 = 7 THEN list_reverse(e) ELSE e END")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // merge-on-read advance layout: same net state, same oracle as q162
-    "q163_er_crud_lifecycle_mor" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("vec_id % 10 <> 5",
-        "CASE WHEN vec_id % 10 = 7 THEN list_reverse(e) ELSE e END")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // mid-lifecycle compaction: the maintenance fold must be invisible
-    // in the mapping — same oracle as q162/q163
-    "q166_er_crud_lifecycle_mor_compact" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("vec_id % 10 <> 5",
-        "CASE WHEN vec_id % 10 = 7 THEN list_reverse(e) ELSE e END")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    // policy-TRIGGERED compaction (sidecar-depth conf): same oracle —
-    // the trigger mechanism must be invisible in the mapping
-    "q169_er_mor_compact_policy" ->
-      s"""WITH RECURSIVE ${pinnedCcSqlWhere("vec_id % 10 <> 5",
-        "CASE WHEN vec_id % 10 = 7 THEN list_reverse(e) ELSE e END")}
-         SELECT vec_id, component AS rep_id FROM comp ORDER BY vec_id""",
-    "q54_pagerank" ->
-      s"""WITH RECURSIVE $blockedCcSql,
-         ${prChainSql(10)}
-         SELECT vec_id, rank FROM pr10 ORDER BY vec_id""",
-    "q88_org_mapping" ->
-      s"""WITH RECURSIVE ${termCcSql("Org_", 576, 625)}
-         SELECT original, representative FROM omap ORDER BY original""",
-    "q89_addr_alias_edges" ->
-      s"""WITH RECURSIVE ${termCcSql("Addr_", 361, 400)}
-         SELECT original AS src, representative AS dst,
-                'ALIAS_OF' AS rel_type
-         FROM omap WHERE original <> representative ORDER BY src""",
-    "q50_entity_resolution" ->
-      s"""WITH RECURSIVE $ccSql
-         SELECT vec_id, component FROM comp ORDER BY vec_id""",
-    "q52_er_blocked" ->
-      s"""WITH RECURSIVE $blockedCcSql
-         SELECT vec_id, component FROM comp ORDER BY vec_id""",
-    "q53_bfs_reach" ->
-      s"""WITH RECURSIVE $blockedCcSql,
-         bfs(node, hops) AS (
-           SELECT CAST(0 AS BIGINT) AS node, 0 AS hops
-           UNION
-           SELECT ee.v, bfs.hops + 1 FROM bfs JOIN ee ON bfs.node = ee.u
-           WHERE bfs.hops < 2)
-         SELECT node AS vec_id, CAST(min(hops) AS BIGINT) AS hops
-         FROM bfs GROUP BY node ORDER BY vec_id""",
-    "q51_er_refined_mapping" ->
-      s"""WITH RECURSIVE $ccSql,
-         stats AS (
-           SELECT component, count(*) AS cnt,
-                  min(CASE WHEN vec_id > component THEN vec_id END) AS second
-           FROM comp GROUP BY component)
-         SELECT c.vec_id AS vec_id,
-                CASE WHEN st.cnt >= 3 THEN st.second ELSE c.component END AS rep_id
-         FROM comp c JOIN stats st ON c.component = st.component
-         ORDER BY vec_id""",
-    "q124_refined_blocked" ->
-      s"""WITH RECURSIVE $blockedCcSql,
-         stats AS (
-           SELECT component, count(*) AS cnt,
-                  min(CASE WHEN vec_id > component THEN vec_id END) AS second
-           FROM comp GROUP BY component)
-         SELECT c.vec_id AS vec_id,
-                CASE WHEN st.cnt >= 3 THEN st.second ELSE c.component END AS rep_id
-         FROM comp c JOIN stats st ON c.component = st.component
-         ORDER BY vec_id"""
-  )
 }

@@ -37,7 +37,7 @@ object Similarity {
     * ([[graft.functions.NearestCellsHier]], O(n·sqrt(k)) total). Setting
     * it changes IVF blocking (the standard recall trade), so it must
     * never be set under the correctness gate — the DuckDB mirror
-    * ([[modulusSql]]) interpolates the sqrt rule only.
+    * ([[graft.registry.OracleSql.modulus]]) states the sqrt rule only.
     */
   private[graft] val SpacingConf = "spark.graft.ivf.spacing"
 
@@ -63,19 +63,13 @@ object Similarity {
     s.conf.getOption(SpacingConf).map(v => math.max(50L, v.toLong))
       .getOrElse(math.max(50L, math.floor(math.sqrt(n.toDouble)).toLong))
 
-  /** DuckDB mirror of [[centroidModulus]] — interpolate where the oracle
-    * selects its centroid rows.
-    */
-  private[graft] val modulusSql =
-    "(SELECT greatest(50, CAST(floor(sqrt(count(*))) AS BIGINT)) FROM embeddings)"
-
   /** A collected centroid row: (cid, quantized vector, squared norm).
     * k ≈ sqrt(n) of these; at any scale this is the small side that IVF
     * exists to keep broadcastable.
     */
   private[graft] type Cent = (Long, Seq[Long], Long)
 
-  private def quantized(s: SparkSession, d: String): DataFrame = {
+  private[graft] def quantized(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     Tables.embeddings(s, d)
       .select($"vec_id", quantize($"embedding").as("e"))
@@ -277,7 +271,7 @@ object Similarity {
     * query serving, the blocked near-dup joins) loads the index and pays
     * only the assignment scan. Parquet keeps the exact BIGINT lattice.
     */
-  private def writeIndex(s: SparkSession, cents: Seq[Cent], dir: String): Unit =
+  private[graft] def writeIndex(s: SparkSession, cents: Seq[Cent], dir: String): Unit =
     // k rows: a single file is the right layout for a broadcast artifact
     indexFrame(s, cents).coalesce(1).write.mode("overwrite").parquet(dir)
 
@@ -291,7 +285,7 @@ object Similarity {
     * assignment expressions consume; cid-sorted so downstream grouping
     * ([[hierGroups]]) is layout-independent.
     */
-  private def readIndex(s: SparkSession, dir: String): Seq[Cent] =
+  private[graft] def readIndex(s: SparkSession, dir: String): Seq[Cent] =
     indexOf(s.read.parquet(dir))
 
   /** Collect a stored [[indexFrame]] back into the driver-held form. */
@@ -304,7 +298,7 @@ object Similarity {
     * driver-held centroids: [[topCells]] rank-1 cell per vector, ties on
     * cid — the same rule as [[ivfAssignedN]].
     */
-  private def assignToCells(emb: DataFrame, cents: Seq[Cent]): DataFrame =
+  private[graft] def assignToCells(emb: DataFrame, cents: Seq[Cent]): DataFrame =
     emb.withColumn("cid",
       element_at(topCells(emb.sparkSession, cents, col("e"), col("nrm"), 1), 1))
 
@@ -373,7 +367,7 @@ object Similarity {
     * work grows ~nprobe² but stays blocked (cell-keyed equi-join), so
     * the recall knob never reopens the all-pairs path.
     */
-  private def semanticDedupNprobe(s: SparkSession, d: String,
+  private[graft] def semanticDedupNprobe(s: SparkSession, d: String,
       nprobe: Int): DataFrame = {
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
@@ -432,7 +426,7 @@ object Similarity {
     * scan-until-break. The keep rule is [[semanticDedupNprobe]]'s
     * left-semi short-circuit, unchanged.
     */
-  private[similarity] def semanticDedupBoundary(s: SparkSession, d: String,
+  private[graft] def semanticDedupBoundary(s: SparkSession, d: String,
       lo: Int = 4, hi: Int = 6, margin: Double = 0.1): DataFrame = {
     import s.implicits._
     import org.apache.spark.storage.StorageLevel
@@ -470,678 +464,4 @@ object Similarity {
         when($"dup".isNull, 1L).otherwise(0L).as("keep"))
       .orderBy($"vec_id")
   }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Brute-force cosine top-5 for the first 10 query vectors.
-    "q40_ann_bruteforce_topk" -> ((s, d) => {
-      import s.implicits._
-      val emb = Tables.embeddings(s, d)
-        .select($"vec_id", quantize($"embedding").as("e"))
-        .withColumn("nrm", norm2($"e"))
-      val q = emb.filter($"vec_id" < 10).as("q")
-      val c = emb.as("c")
-      val w = Window.partitionBy($"qid").orderBy($"key".desc, $"nid")
-      q.join(c, $"q.vec_id" =!= $"c.vec_id")
-        .withColumn("dot", dot($"q.e", $"c.e"))
-        .select($"q.vec_id".as("qid"), $"c.vec_id".as("nid"),
-          cos2Key($"dot", $"q.nrm", $"c.nrm").as("key"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= 5)
-        .select($"qid", $"rank", $"nid",
-          floor($"key" * 1000000.0).cast("long").as("cos2_x1e6"))
-        .orderBy($"qid", $"rank")
-    }),
-
-    // IVF coarse assignment: nearest deterministic centroid per vector.
-    "q41_ivf_assign" -> ((s, d) => {
-      import s.implicits._
-      ivfAssigned(s, d)
-        .select($"vec_id", $"cid".as("centroid_id"))
-        .orderBy($"vec_id")
-    }),
-
-    // IVF search: queries probe only their own centroid bucket (nprobe=1).
-    "q42_ivf_topk" -> ((s, d) => {
-      import s.implicits._
-      val assigned = ivfAssigned(s, d)
-      val q = assigned.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"e".as("qe"), $"nrm".as("qnrm"), $"cid")
-      val wTop = Window.partitionBy($"qid").orderBy($"key".desc, $"nid")
-      // |Q| = 10 rows: broadcast the query side so the corpus never
-      // shuffles — each corpus partition streams past a tiny hash table.
-      q.hint("broadcast").join(assigned.as("c"), Seq("cid"))
-        .filter($"qid" =!= $"c.vec_id")
-        .withColumn("dot", dot($"qe", $"c.e"))
-        .withColumn("key", cos2Key($"dot", $"qnrm", $"c.nrm"))
-        .select($"qid", $"c.vec_id".as("nid"), $"key")
-        .withColumn("rank", row_number().over(wTop).cast("long"))
-        .filter($"rank" <= 3)
-        .select($"qid", $"rank", $"nid",
-          floor($"key" * 1000000.0).cast("long").as("cos2_x1e6"))
-        .orderBy($"qid", $"rank")
-    }),
-
-    // IVF search with nprobe=2: queries probe their TWO nearest centroid
-    // cells (the recall extension named on q42) — same shuffle shape, 2×
-    // the probed candidates, recall strictly ≥ nprobe=1.
-    "q43_ivf_topk_nprobe2" -> ((s, d) => {
-      import s.implicits._
-      // ONE nprobe=2 assignment serves both sides: the corpus is exactly
-      // its probe_rank==1 subset, the queries keep both probed cells —
-      // assigning separately would run the O(n·k) centroid scan twice.
-      val both = ivfAssignedN(s, d, 2)
-      val corpus = both.filter($"probe_rank" === 1).drop("probe_rank")
-      val q = both.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"e".as("qe"), $"nrm".as("qnrm"), $"cid")
-      val wTop = Window.partitionBy($"qid").orderBy($"key".desc, $"nid")
-      q.hint("broadcast").join(corpus.as("c"), Seq("cid"))
-        .filter($"qid" =!= $"c.vec_id")
-        .withColumn("dot", dot($"qe", $"c.e"))
-        .withColumn("key", cos2Key($"dot", $"qnrm", $"c.nrm"))
-        .select($"qid", $"c.vec_id".as("nid"), $"key")
-        .withColumn("rank", row_number().over(wTop).cast("long"))
-        .filter($"rank" <= 3)
-        .select($"qid", $"rank", $"nid",
-          floor($"key" * 1000000.0).cast("long").as("cos2_x1e6"))
-        .orderBy($"qid", $"rank")
-    }),
-
-    // SQ8 compressed-domain brute-force top-5: embeddings int8-quantized
-    // at the data-derived scale (127 / global max|x| — the SQ "training"
-    // step, one tiny aggregate broadcast back), packed to a `binary`
-    // column (64 B/vector vs 256+ B as array<float> — the 4× at-rest and
-    // in-shuffle cut), and scored DIRECTLY on the packed bytes via the
-    // codegen'd Int8DotProduct. Same query set as q40, so Int8OpsSpec's
-    // recall check and PERF.md's table read q48-vs-q40 top-5 overlap.
-    "q48_sq8_topk" -> ((s, d) => {
-      import s.implicits._
-      import graft.functions.Int8Ops._
-      val emb = Tables.embeddings(s, d).select($"vec_id", $"embedding")
-      val scale = emb
-        .agg((lit(127.0) /
-          max(array_max(transform($"embedding",
-            x => abs(x.cast("double")))))).as("s"))
-      // Deliberately NOT materialized: the q/c self-join re-derives this
-      // frame per side (scale aggregate + pack twice). Both alternatives
-      // were measured (isolated single-query runs, sf0.1): lineage 2.9s,
-      // localCheckpoint 2.9s (LogicalRDD also drops size stats for the
-      // planner), persist+count 3.3s (cache churn ≥ the duplicated
-      // scan+pack) — no win, so the simplest form with full planner
-      // stats stays. At 100 TB the answer is different: write `sq` once
-      // as a packed table (BucketedStore shape) and query THAT —
-      // re-deriving per query is the local-bench trade only.
-      val sq = emb.crossJoin(broadcast(scale))
-        .select($"vec_id",
-          packInt8(transform($"embedding", x =>
-            greatest(lit(-127L), least(lit(127L),
-              round(x.cast("double") * $"s", 0).cast("long"))))).as("b"))
-        .withColumn("nrm", int8Dot($"b", $"b"))
-      val q = sq.filter($"vec_id" < 10).as("q")
-      val c = sq.as("c")
-      val w = Window.partitionBy($"qid").orderBy($"key".desc, $"nid")
-      q.join(c, $"q.vec_id" =!= $"c.vec_id")
-        .withColumn("dot", int8Dot($"q.b", $"c.b"))
-        .select($"q.vec_id".as("qid"), $"c.vec_id".as("nid"),
-          cos2Key($"dot", $"q.nrm", $"c.nrm").as("key"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= 5)
-        .select($"qid", $"rank", $"nid",
-          floor($"key" * 1000000.0).cast("long").as("cos2_x1e6"))
-        .orderBy($"qid", $"rank")
-    }),
-
-    // IVF × SQ8 — the standard billion-scale ANN layout: the coarse
-    // quantizer (q41's cells) shards the corpus, and the in-cell scan
-    // reads the int8-PACKED bytes (4× fewer than float, q48's codegen'd
-    // Int8DotProduct loop). Composition of the two gated paths; recall
-    // vs exact q40 in PERF.md.
-    "q120_ivf_sq8_topk" -> ((s, d) => {
-      import s.implicits._
-      import graft.functions.Int8Ops._
-      val assigned = ivfAssigned(s, d).select($"vec_id", $"cid")
-      val emb = Tables.embeddings(s, d).select($"vec_id", $"embedding")
-      val scale = emb
-        .agg((lit(127.0) /
-          max(array_max(transform($"embedding",
-            x => abs(x.cast("double")))))).as("s"))
-      val sq = emb.crossJoin(broadcast(scale))
-        .select($"vec_id",
-          packInt8(transform($"embedding", x =>
-            greatest(lit(-127L), least(lit(127L),
-              round(x.cast("double") * $"s", 0).cast("long"))))).as("b"))
-        .withColumn("nrm", int8Dot($"b", $"b"))
-      val cell = sq.join(assigned, "vec_id")
-      val q = cell.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"b".as("qb"), $"nrm".as("qnrm"), $"cid")
-      val wTop = Window.partitionBy($"qid").orderBy($"key".desc, $"nid")
-      q.hint("broadcast").join(cell.as("c"), Seq("cid"))
-        .filter($"qid" =!= $"c.vec_id")
-        .withColumn("dot", int8Dot($"qb", $"c.b"))
-        .withColumn("key", cos2Key($"dot", $"qnrm", $"c.nrm"))
-        .select($"qid", $"c.vec_id".as("nid"), $"key")
-        .withColumn("rank", row_number().over(wTop).cast("long"))
-        .filter($"rank" <= 3)
-        .select($"qid", $"rank", $"nid",
-          floor($"key" * 1000000.0).cast("long").as("cos2_x1e6"))
-        .orderBy($"qid", $"rank")
-    }),
-
-    // Trained-IVF index build: 2 Lloyd's rounds from the fixture seeds,
-    // then the full-corpus assignment to the TRAINED cells — q41's
-    // fixture-assigned quantizer upgraded to a real k-means index.
-    "q121_kmeans_assign" -> ((s, d) => {
-      import s.implicits._
-      assignToCells(quantized(s, d), kmeansCentroids(s, d, 2))
-        .select($"vec_id", $"cid".as("centroid_id"))
-        .orderBy($"vec_id")
-    }),
-
-    // IVF top-3 over the TRAINED cells (q42's probe against the q121
-    // index): better-centered cells → better recall at the same nprobe.
-    "q122_ivf_trained_topk" -> ((s, d) => {
-      import s.implicits._
-      val cell = assignToCells(quantized(s, d), kmeansCentroids(s, d, 2))
-      val q = cell.filter($"vec_id" < 10)
-        .select($"vec_id".as("qid"), $"e".as("qe"), $"nrm".as("qnrm"), $"cid")
-      val wTop = Window.partitionBy($"qid").orderBy($"key".desc, $"nid")
-      q.hint("broadcast").join(cell.as("c"), Seq("cid"))
-        .filter($"qid" =!= $"c.vec_id")
-        .withColumn("dot", dot($"qe", $"c.e"))
-        .withColumn("key", cos2Key($"dot", $"qnrm", $"c.nrm"))
-        .select($"qid", $"c.vec_id".as("nid"), $"key")
-        .withColumn("rank", row_number().over(wTop).cast("long"))
-        .filter($"rank" <= 3)
-        .select($"qid", $"rank", $"nid",
-          floor($"key" * 1000000.0).cast("long").as("cos2_x1e6"))
-        .orderBy($"qid", $"rank")
-    }),
-
-    // Semantic dedup in the SemDeDup shape (Abbas et al. 2023,
-    // arXiv:2303.09540): k-means-cluster the embedding space, then
-    // within each cluster drop every vector that has a lower-id
-    // cluster-mate above the similarity bar — "keep lowest id" is the
-    // deterministic stand-in for the paper's keep-one-per-ball rule.
-    // The trained cells (q121's index) turn the O(n²) cosine matrix
-    // into per-cell blocks — q36's trade, but over TRAINED cells, which
-    // is what SemDeDup actually prescribes. Bar: cos ≥ 1/√8 ≈ 0.354 ⟺
-    // dot > 0 ∧ 8·dot² ≥ |a|²|b|², exact BIGINTs (max quantized nrm
-    // ~1e8 ⟹ 8·dot² ≤ 8e16 ≪ 2^63 — no overflow on either engine).
-    // Index-persistence round trip: train (q121's k-means) → write the
-    // index → load it in place of the in-memory centroids → assign the
-    // corpus. Gated against q121's exact oracle, so ANY serialization
-    // loss (column order, lattice precision, a dropped cell) diffs the
-    // assignment. Build-once/probe-many is the IVF economics at 100 TB;
-    // this is the "probe-many" path's loading contract.
-    "q49_ivf_index_roundtrip" -> ((s, d) => {
-      import s.implicits._
-      val dir = graft.sinks.SinkQueries.tmp(s, "q49_index")
-      writeIndex(s, kmeansCentroids(s, d, 2), dir)
-      assignToCells(quantized(s, d), readIndex(s, dir))
-        .select($"vec_id", $"cid".as("centroid_id"))
-        .orderBy($"vec_id")
-    }),
-
-    // q133's recall knob made concrete: each vector joins its TWO
-    // nearest trained cells (the IVF nprobe=2 rule over the q121 index),
-    // pairs form within ANY shared cell (distinct-ed — a pair can share
-    // both), and the keep rule is q133's. Measured at sf0.01: pair
-    // recall 0.38 → 0.69, drop recall 0.44 → 0.75 vs the all-pairs
-    // truth, for 2× the assignment rows and ~2–4× the within-cell pair
-    // work — the standard IVF price curve applied to dedup (PERF.md
-    // recall table).
-    "q136_semantic_dedup_nprobe2" -> ((s, d) => semanticDedupNprobe(s, d, 2)),
-
-    // The production point on the same recall curve: nprobe=4 multi-cell
-    // assignment measures pair recall 0.98 / drop recall 0.98 at sf0.01
-    // (1.00/1.00 at sf0.001) vs the all-pairs truth — past the ≥0.85 bar
-    // a dedup stage needs to actually remove most duplicates, where
-    // nprobe≤2 (0.38/0.69) leaves the majority alive. Cost is the
-    // standard IVF price: assignment rows scale linearly in nprobe and
-    // candidate pairs ~quadratically (sf0.01: 50k → 200k candidate pairs
-    // from nprobe 2 → 4), both still blocked per cell — never all-pairs.
-    // The recall/cost ladder is measurable with
-    // `tools/recall_semdedup.py`; PERF.md carries the table.
-    "q139_semantic_dedup_nprobe4" -> ((s, d) => semanticDedupNprobe(s, d, 4)),
-
-    // The rung that clears the recall bar at every gated SF: on the DIFFUSE
-    // sf0.1 fixture (n=2000, k=40 cells) nprobe=4 reads pair recall
-    // 0.786 — under the ≥0.85 operational bar even though the compact
-    // sf0.001/sf0.01 fixtures sit at 0.98–1.00. nprobe=5 measures
-    // 0.890 / 0.965 (pair/drop) at sf0.1 and 1.00/1.00 at the other
-    // gated SFs (`tools/recall_semdedup.py`; PERF.md table), so the
-    // ladder now clears the bar at EVERY gated SF. Cost follows the
-    // same blocked curve: assignment rows 5n, candidate pairs ~25/16 of
-    // nprobe=4's (sf0.1: 798k → 1.25M), all cell-keyed — never
-    // all-pairs; the left-semi short-circuit keeps the decision cheap.
-    "q148_semantic_dedup_nprobe5" -> ((s, d) => semanticDedupNprobe(s, d, 5)),
-
-    // The boundary-adaptive rung (see [[semanticDedupBoundary]]): ≥0.9
-    // pair recall at every gated SF for less pair work than the uniform
-    // rung that clears it — extra probes spent only on vectors whose
-    // best-cell key is within 0.1 of further cells (the boundary set).
-    "q152_semantic_dedup_boundary" -> ((s, d) => semanticDedupBoundary(s, d)),
-
-    "q133_semantic_dedup" -> ((s, d) => {
-      import s.implicits._
-      import org.apache.spark.storage.StorageLevel
-      // the assigned frame feeds the self-join's BOTH sides plus the
-      // final keep projection — persist or pay the O(n·k) assignment
-      // scan three times (same rationale as kmeansCentroids' train
-      // cache; Bench clears caches between queries). Drop detection is
-      // the short-circuiting LEFT SEMI form (see semanticDedupNprobe).
-      val cell = assignToCells(quantized(s, d), kmeansCentroids(s, d, 2))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val dropped = cell.as("a")
-        .join(cell.as("b"),
-          $"a.cid" === $"b.cid" && $"b.vec_id" < $"a.vec_id" &&
-            dot($"a.e", $"b.e") > 0 &&
-            dot($"a.e", $"b.e") * dot($"a.e", $"b.e") * 8 >=
-              $"a.nrm" * $"b.nrm",
-          "left_semi")
-        .select($"vec_id").distinct()
-        .withColumn("dup", lit(1L))
-      cell.select($"vec_id", $"cid")
-        .join(dropped, Seq("vec_id"), "left")
-        .select($"vec_id", $"cid",
-          when($"dup".isNull, 1L).otherwise(0L).as("keep"))
-        .orderBy($"vec_id")
-    })
-  )
-
-  private val quantSql =
-    """SELECT vec_id,
-         list_transform(embedding,
-           x -> CAST(round(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS e
-       FROM embeddings"""
-
-  /** CTE chain mirroring [[kmeansCentroids]]: seeds `c0` (every
-    * [[modulusSql]]-th vector), then per round an assignment (`a$i`, rank-1 cell, cid
-    * tiebreak) and the FLOOR-mean update (`m$i` → `c$i`). Ends at
-    * `c$iters`, the trained centroid set. The floor of `1.0*sum/count`
-    * divides exactly-representable integers in IEEE double — identical
-    * to the Spark side's BIGINT `floor(sx / n)`.
-    */
-  private def kmeansSql(iters: Int): String = {
-    val sb = new StringBuilder(
-      s"""q0 AS ($quantSql),
-         n AS (SELECT vec_id, e,
-                 CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-               FROM q0),
-         c0 AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm
-                FROM n WHERE vec_id % $modulusSql = 0)""")
-    for (i <- 1 to iters) {
-      sb ++= s""",
-         ap$i AS (SELECT n.vec_id, c.cid,
-                 CAST(list_sum(list_transform(n.e, (x,j) -> x * c.ce[j])) AS BIGINT) AS dot,
-                 n.nrm, c.cnrm
-               FROM n CROSS JOIN c${i - 1} c),
-         a$i AS (SELECT vec_id, cid FROM (
-               SELECT vec_id, cid,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY
-                   CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                     * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-               FROM ap$i) t WHERE rn = 1),
-         m$i AS (SELECT cid, pos,
-                 CAST(floor(1.0 * sum(x) / count(*)) AS BIGINT) AS v
-               FROM (SELECT a.cid, generate_subscripts(n.e, 1) AS pos,
-                            unnest(n.e) AS x
-                     FROM a$i a JOIN n ON a.vec_id = n.vec_id) t
-               GROUP BY cid, pos),
-         c$i AS (SELECT cid, list(v ORDER BY pos) AS ce,
-                 CAST(list_sum(list_transform(list(v ORDER BY pos),
-                   x -> x*x)) AS BIGINT) AS cnrm
-               FROM m$i GROUP BY cid)"""
-    }
-    sb.toString
-  }
-
-  /** DuckDB mirror of [[semanticDedupNprobe]], parameterized on the
-    * probe count (`rn <= nprobe` is the only knob).
-    */
-  private def semanticDedupNprobeSql(nprobe: Int): String =
-    s"""WITH ${kmeansSql(2)},
-         apf AS (SELECT n.vec_id, c.cid,
-                 CAST(list_sum(list_transform(n.e, (x,j) -> x * c.ce[j])) AS BIGINT) AS dot,
-                 n.nrm, c.cnrm
-               FROM n CROSS JOIN c2 c),
-         af AS (SELECT vec_id, cid FROM (
-               SELECT vec_id, cid,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY
-                   CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                     * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-               FROM apf) t WHERE rn <= $nprobe),
-         full0 AS (SELECT a.vec_id, a.cid, n.e, n.nrm
-                   FROM af a JOIN n ON a.vec_id = n.vec_id),
-         p AS (SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-               FROM full0 a JOIN full0 b
-                 ON a.cid = b.cid AND b.vec_id < a.vec_id
-               WHERE list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) > 0
-                 AND 8 * CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT)
-                       * CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT)
-                     >= a.nrm * b.nrm),
-         dup AS (SELECT DISTINCT va AS vec_id FROM p)
-         SELECT v.vec_id,
-           CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
-         FROM n v LEFT JOIN dup d ON v.vec_id = d.vec_id
-         ORDER BY v.vec_id"""
-
-  def oracles: Map[String, String] = Map(
-    "q40_ann_bruteforce_topk" ->
-      s"""WITH q0 AS ($quantSql),
-         n AS (SELECT vec_id, e,
-                 CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-               FROM q0),
-         p AS (SELECT q.vec_id AS qid, c.vec_id AS nid,
-                 CAST(list_sum(list_transform(q.e, (x,i) -> x * c.e[i])) AS BIGINT) AS dot,
-                 q.nrm AS qn, c.nrm AS cn
-               FROM n q JOIN n c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-         k AS (SELECT qid, nid,
-                 CAST(dot*dot AS DOUBLE) / CAST(qn*cn AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) AS key
-               FROM p),
-         r AS (SELECT qid, nid, key,
-                 CAST(row_number() OVER (PARTITION BY qid
-                        ORDER BY key DESC, nid) AS BIGINT) AS rank
-               FROM k)
-         SELECT qid, rank, nid,
-           CAST(floor(key * 1000000.0) AS BIGINT) AS cos2_x1e6
-         FROM r WHERE rank <= 5 ORDER BY qid, rank""",
-    "q41_ivf_assign" ->
-      s"""WITH q0 AS ($quantSql),
-         n AS (SELECT vec_id, e,
-                 CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-               FROM q0),
-         cent AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm
-                  FROM n WHERE vec_id % $modulusSql = 0),
-         p AS (SELECT n.vec_id, cent.cid,
-                 CAST(list_sum(list_transform(n.e, (x,i) -> x * cent.ce[i])) AS BIGINT) AS dot,
-                 n.nrm, cent.cnrm
-               FROM n CROSS JOIN cent),
-         k AS (SELECT vec_id, cid,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY
-                   CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                     * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-               FROM p)
-         SELECT vec_id, cid AS centroid_id FROM k WHERE rn = 1
-         ORDER BY vec_id""",
-    "q42_ivf_topk" ->
-      s"""WITH q0 AS ($quantSql),
-         n AS (SELECT vec_id, e,
-                 CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-               FROM q0),
-         cent AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm
-                  FROM n WHERE vec_id % $modulusSql = 0),
-         ap AS (SELECT n.vec_id, cent.cid,
-                 CAST(list_sum(list_transform(n.e, (x,i) -> x * cent.ce[i])) AS BIGINT) AS dot,
-                 n.nrm, cent.cnrm
-               FROM n CROSS JOIN cent),
-         assigned AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY
-                 CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-             FROM ap) t WHERE rn = 1),
-         full0 AS (SELECT a.vec_id, a.cid, n.e, n.nrm
-                   FROM assigned a JOIN n ON a.vec_id = n.vec_id),
-         p AS (SELECT q.vec_id AS qid, c.vec_id AS nid,
-                 CAST(list_sum(list_transform(q.e, (x,i) -> x * c.e[i])) AS BIGINT) AS dot,
-                 q.nrm AS qn, c.nrm AS cn
-               FROM full0 q JOIN full0 c
-                 ON q.cid = c.cid AND q.vec_id < 10 AND q.vec_id <> c.vec_id),
-         k AS (SELECT qid, nid,
-                 CAST(dot*dot AS DOUBLE) / CAST(qn*cn AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) AS key
-               FROM p),
-         r AS (SELECT qid, nid, key,
-                 CAST(row_number() OVER (PARTITION BY qid
-                        ORDER BY key DESC, nid) AS BIGINT) AS rank
-               FROM k)
-         SELECT qid, rank, nid,
-           CAST(floor(key * 1000000.0) AS BIGINT) AS cos2_x1e6
-         FROM r WHERE rank <= 3 ORDER BY qid, rank""",
-    "q43_ivf_topk_nprobe2" ->
-      s"""WITH q0 AS ($quantSql),
-         n AS (SELECT vec_id, e,
-                 CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-               FROM q0),
-         cent AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm
-                  FROM n WHERE vec_id % $modulusSql = 0),
-         ap AS (SELECT n.vec_id, cent.cid,
-                 CAST(list_sum(list_transform(n.e, (x,i) -> x * cent.ce[i])) AS BIGINT) AS dot,
-                 n.nrm, cent.cnrm
-               FROM n CROSS JOIN cent),
-         ranked AS (
-           SELECT vec_id, cid,
-             row_number() OVER (PARTITION BY vec_id ORDER BY
-               CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                 * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-           FROM ap),
-         corpus AS (SELECT r.vec_id, r.cid, n.e, n.nrm
-                    FROM ranked r JOIN n ON r.vec_id = n.vec_id
-                    WHERE r.rn = 1),
-         probes AS (SELECT r.vec_id, r.cid, n.e, n.nrm
-                    FROM ranked r JOIN n ON r.vec_id = n.vec_id
-                    WHERE r.rn <= 2 AND r.vec_id < 10),
-         p AS (SELECT q.vec_id AS qid, c.vec_id AS nid,
-                 CAST(list_sum(list_transform(q.e, (x,i) -> x * c.e[i])) AS BIGINT) AS dot,
-                 q.nrm AS qn, c.nrm AS cn
-               FROM probes q JOIN corpus c
-                 ON q.cid = c.cid AND q.vec_id <> c.vec_id),
-         k AS (SELECT qid, nid,
-                 CAST(dot*dot AS DOUBLE) / CAST(qn*cn AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) AS key
-               FROM p),
-         r AS (SELECT qid, nid, key,
-                 CAST(row_number() OVER (PARTITION BY qid
-                        ORDER BY key DESC, nid) AS BIGINT) AS rank
-               FROM k)
-         SELECT qid, rank, nid,
-           CAST(floor(key * 1000000.0) AS BIGINT) AS cos2_x1e6
-         FROM r WHERE rank <= 3 ORDER BY qid, rank""",
-    // SQ8 mirror: the same data-derived scale (127 / global max|x| in
-    // DOUBLE), the same clamp+round to BIGINT (both engines round ties
-    // away from zero), then the q40 machinery over the quantized ints —
-    // the binary packing is internal to the Spark side and arithmetic-
-    // neutral by construction.
-    "q48_sq8_topk" ->
-      """WITH sc AS (
-           SELECT 127.0 / max(list_max(list_transform(embedding,
-                    x -> abs(CAST(x AS DOUBLE))))) AS s
-           FROM embeddings),
-         q8 AS (SELECT vec_id,
-                  list_transform(embedding, x ->
-                    CAST(greatest(-127, least(127,
-                      round(CAST(x AS DOUBLE) * sc.s)))
-                      AS BIGINT)) AS e
-                FROM embeddings CROSS JOIN sc),
-         n AS (SELECT vec_id, e,
-                 CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-               FROM q8),
-         p AS (SELECT q.vec_id AS qid, c.vec_id AS nid,
-                 CAST(list_sum(list_transform(q.e, (x,i) -> x * c.e[i])) AS BIGINT) AS dot,
-                 q.nrm AS qn, c.nrm AS cn
-               FROM n q JOIN n c ON q.vec_id < 10 AND q.vec_id <> c.vec_id),
-         k AS (SELECT qid, nid,
-                 CAST(dot*dot AS DOUBLE) / CAST(qn*cn AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) AS key
-               FROM p),
-         r AS (SELECT qid, nid, key,
-                 CAST(row_number() OVER (PARTITION BY qid
-                        ORDER BY key DESC, nid) AS BIGINT) AS rank
-               FROM k)
-         SELECT qid, rank, nid,
-           CAST(floor(key * 1000000.0) AS BIGINT) AS cos2_x1e6
-         FROM r WHERE rank <= 5 ORDER BY qid, rank""",
-    // IVF × SQ8: q42's coarse assignment (quantize-lattice cells) +
-    // q48's int8 lattice for the in-cell scoring.
-    "q120_ivf_sq8_topk" ->
-      s"""WITH q0 AS ($quantSql),
-         n AS (SELECT vec_id, e,
-                 CAST(list_sum(list_transform(e, x -> x*x)) AS BIGINT) AS nrm
-               FROM q0),
-         cent AS (SELECT vec_id AS cid, e AS ce, nrm AS cnrm
-                  FROM n WHERE vec_id % $modulusSql = 0),
-         ap AS (SELECT n.vec_id, cent.cid,
-                 CAST(list_sum(list_transform(n.e, (x,i) -> x * cent.ce[i])) AS BIGINT) AS dot,
-                 n.nrm, cent.cnrm
-               FROM n CROSS JOIN cent),
-         assigned AS (
-           SELECT vec_id, cid FROM (
-             SELECT vec_id, cid,
-               row_number() OVER (PARTITION BY vec_id ORDER BY
-                 CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-             FROM ap) t WHERE rn = 1),
-         sc AS (
-           SELECT 127.0 / max(list_max(list_transform(embedding,
-                    x -> abs(CAST(x AS DOUBLE))))) AS s
-           FROM embeddings),
-         q8 AS (SELECT vec_id,
-                  list_transform(embedding, x ->
-                    CAST(greatest(-127, least(127,
-                      round(CAST(x AS DOUBLE) * sc.s)))
-                      AS BIGINT)) AS e8
-                FROM embeddings CROSS JOIN sc),
-         n8 AS (SELECT vec_id, e8,
-                 CAST(list_sum(list_transform(e8, x -> x*x)) AS BIGINT) AS nrm
-               FROM q8),
-         full0 AS (SELECT a.vec_id, a.cid, n8.e8, n8.nrm
-                   FROM assigned a JOIN n8 ON a.vec_id = n8.vec_id),
-         p AS (SELECT q.vec_id AS qid, c.vec_id AS nid,
-                 CAST(list_sum(list_transform(q.e8, (x,i) -> x * c.e8[i])) AS BIGINT) AS dot,
-                 q.nrm AS qn, c.nrm AS cn
-               FROM full0 q JOIN full0 c
-                 ON q.cid = c.cid AND q.vec_id < 10 AND q.vec_id <> c.vec_id),
-         k AS (SELECT qid, nid,
-                 CAST(dot*dot AS DOUBLE) / CAST(qn*cn AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) AS key
-               FROM p),
-         r AS (SELECT qid, nid, key,
-                 CAST(row_number() OVER (PARTITION BY qid
-                        ORDER BY key DESC, nid) AS BIGINT) AS rank
-               FROM k)
-         SELECT qid, rank, nid,
-           CAST(floor(key * 1000000.0) AS BIGINT) AS cos2_x1e6
-         FROM r WHERE rank <= 3 ORDER BY qid, rank""",
-    "q121_kmeans_assign" ->
-      s"""WITH ${kmeansSql(2)},
-         apf AS (SELECT n.vec_id, c.cid,
-                 CAST(list_sum(list_transform(n.e, (x,j) -> x * c.ce[j])) AS BIGINT) AS dot,
-                 n.nrm, c.cnrm
-               FROM n CROSS JOIN c2 c)
-         SELECT vec_id, cid AS centroid_id FROM (
-           SELECT vec_id, cid,
-             row_number() OVER (PARTITION BY vec_id ORDER BY
-               CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                 * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-           FROM apf) t WHERE rn = 1
-         ORDER BY vec_id""",
-    "q122_ivf_trained_topk" ->
-      s"""WITH ${kmeansSql(2)},
-         apf AS (SELECT n.vec_id, c.cid,
-                 CAST(list_sum(list_transform(n.e, (x,j) -> x * c.ce[j])) AS BIGINT) AS dot,
-                 n.nrm, c.cnrm
-               FROM n CROSS JOIN c2 c),
-         af AS (SELECT vec_id, cid FROM (
-               SELECT vec_id, cid,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY
-                   CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                     * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-               FROM apf) t WHERE rn = 1),
-         full0 AS (SELECT a.vec_id, a.cid, n.e, n.nrm
-                   FROM af a JOIN n ON a.vec_id = n.vec_id),
-         p AS (SELECT q.vec_id AS qid, c.vec_id AS nid,
-                 CAST(list_sum(list_transform(q.e, (x,i) -> x * c.e[i])) AS BIGINT) AS dot,
-                 q.nrm AS qn, c.nrm AS cn
-               FROM full0 q JOIN full0 c
-                 ON q.cid = c.cid AND q.vec_id < 10 AND q.vec_id <> c.vec_id),
-         k AS (SELECT qid, nid,
-                 CAST(dot*dot AS DOUBLE) / CAST(qn*cn AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) AS key
-               FROM p),
-         r AS (SELECT qid, nid, key,
-                 CAST(row_number() OVER (PARTITION BY qid
-                        ORDER BY key DESC, nid) AS BIGINT) AS rank
-               FROM k)
-         SELECT qid, rank, nid,
-           CAST(floor(key * 1000000.0) AS BIGINT) AS cos2_x1e6
-         FROM r WHERE rank <= 3 ORDER BY qid, rank""",
-    "q49_ivf_index_roundtrip" ->
-      s"""WITH ${kmeansSql(2)},
-         apf AS (SELECT n.vec_id, c.cid,
-                 CAST(list_sum(list_transform(n.e, (x,j) -> x * c.ce[j])) AS BIGINT) AS dot,
-                 n.nrm, c.cnrm
-               FROM n CROSS JOIN c2 c)
-         SELECT vec_id, cid AS centroid_id FROM (
-           SELECT vec_id, cid,
-             row_number() OVER (PARTITION BY vec_id ORDER BY
-               CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                 * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-           FROM apf) t WHERE rn = 1
-         ORDER BY vec_id""",
-    "q136_semantic_dedup_nprobe2" -> semanticDedupNprobeSql(2),
-    "q139_semantic_dedup_nprobe4" -> semanticDedupNprobeSql(4),
-    "q148_semantic_dedup_nprobe5" -> semanticDedupNprobeSql(5),
-    // adaptive rule: rank ≤ 4 always; ranks 5..6 while the signed-cos²
-    // key sits within 0.1 of the vector's best key (key1 is the max
-    // over the rank ≤ 6 subset = the global max, since rank 1 is in it)
-    "q152_semantic_dedup_boundary" ->
-      s"""WITH ${kmeansSql(2)},
-         apf AS (SELECT n.vec_id, c.cid,
-                 CAST(list_sum(list_transform(n.e, (x,j) -> x * c.ce[j])) AS BIGINT) AS dot,
-                 n.nrm, c.cnrm
-               FROM n CROSS JOIN c2 c),
-         rk AS (SELECT vec_id, cid,
-                 CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                   * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) AS key,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY
-                   CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                     * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-               FROM apf),
-         af AS (SELECT vec_id, cid FROM (
-                 SELECT vec_id, cid, key, rn,
-                   max(key) OVER (PARTITION BY vec_id) AS key1
-                 FROM rk WHERE rn <= 6) t
-               WHERE rn <= 4 OR key1 - key <= 0.1),
-         full0 AS (SELECT a.vec_id, a.cid, n.e, n.nrm
-                   FROM af a JOIN n ON a.vec_id = n.vec_id),
-         p AS (SELECT DISTINCT a.vec_id AS va, b.vec_id AS vb
-               FROM full0 a JOIN full0 b
-                 ON a.cid = b.cid AND b.vec_id < a.vec_id
-               WHERE list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) > 0
-                 AND 8 * CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT)
-                       * CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT)
-                     >= a.nrm * b.nrm),
-         dup AS (SELECT DISTINCT va AS vec_id FROM p)
-         SELECT v.vec_id,
-           CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
-         FROM n v LEFT JOIN dup d ON v.vec_id = d.vec_id
-         ORDER BY v.vec_id""",
-    "q133_semantic_dedup" ->
-      s"""WITH ${kmeansSql(2)},
-         apf AS (SELECT n.vec_id, c.cid,
-                 CAST(list_sum(list_transform(n.e, (x,j) -> x * c.ce[j])) AS BIGINT) AS dot,
-                 n.nrm, c.cnrm
-               FROM n CROSS JOIN c2 c),
-         af AS (SELECT vec_id, cid FROM (
-               SELECT vec_id, cid,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY
-                   CAST(dot*dot AS DOUBLE) / CAST(nrm*cnrm AS DOUBLE)
-                     * (CASE WHEN dot < 0 THEN -1 ELSE 1 END) DESC, cid) AS rn
-               FROM apf) t WHERE rn = 1),
-         full0 AS (SELECT a.vec_id, a.cid, n.e, n.nrm
-                   FROM af a JOIN n ON a.vec_id = n.vec_id),
-         p AS (SELECT a.vec_id,
-                 CAST(list_sum(list_transform(a.e, (x,i) -> x * b.e[i])) AS BIGINT) AS dot,
-                 a.nrm AS an, b.nrm AS bn
-               FROM full0 a JOIN full0 b
-                 ON a.cid = b.cid AND b.vec_id < a.vec_id),
-         dup AS (SELECT DISTINCT vec_id FROM p
-                 WHERE dot > 0 AND 8*dot*dot >= an*bn)
-         SELECT f.vec_id, f.cid,
-           CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
-         FROM full0 f LEFT JOIN dup d ON f.vec_id = d.vec_id
-         ORDER BY f.vec_id"""
-  )
 }

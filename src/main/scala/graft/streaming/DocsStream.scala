@@ -163,40 +163,4 @@ object DocsStream {
         when($"n_dups".isNull, 1L).otherwise(0L).as("keep"))
       .orderBy($"doc_id")
   }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q137_stream_neardup_batch" -> ((s, d) => nearDedupVerdicts(s, d))
-  )
-
-  def oracles: Map[String, String] = Map(
-    // Mirror of the batch-mode state rule: within a bucket, the first
-    // MaxBucket docs (by doc_id) hold it; any later doc matches against
-    // holders only. Pairs distinct-ed across bands.
-    "q137_stream_neardup_batch" ->
-      s"""WITH ${Dedup.simhashSql},
-         banded AS (
-           SELECT doc_id, sh, b,
-             CASE WHEN b = 0 THEN substring(sh, 1, 8)
-                  ELSE substring(sh, 9, 8) END AS bits
-           FROM (SELECT doc_id, sh, unnest([0, 1]) AS b FROM sh0) t),
-         r AS (SELECT doc_id, sh, b, bits,
-                 row_number() OVER (PARTITION BY b, bits
-                                    ORDER BY doc_id) AS rn
-               FROM banded),
-         hits AS (
-           SELECT DISTINCT l.doc_id, h.doc_id AS dup_of
-           FROM r l JOIN r h
-             ON l.b = h.b AND l.bits = h.bits
-             AND h.doc_id < l.doc_id AND h.rn <= ${Dedup.MaxBucket}
-           WHERE list_sum(list_transform(range(1, 17), p ->
-             CASE WHEN substring(l.sh, p, 1) = substring(h.sh, p, 1)
-                  THEN 0 ELSE 1 END)) <= 3),
-         agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_dups
-                 FROM hits GROUP BY 1)
-         SELECT d.doc_id,
-                CAST(coalesce(a.n_dups, 0) AS BIGINT) AS n_dups,
-                CAST(CASE WHEN a.doc_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS keep
-         FROM documents d LEFT JOIN agg a USING (doc_id)
-         ORDER BY d.doc_id"""
-  )
 }

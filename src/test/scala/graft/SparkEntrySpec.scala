@@ -18,18 +18,7 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("module registries do not shadow each other's query names") {
-    val perModule = Seq(
-      relational.TpchQueries.queries, text.TextAnalysis.queries,
-      text.Curation.queries,
-      dedup.Dedup.queries, similarity.Similarity.queries,
-      graph.GraphQueries.queries, resolve.EntityResolution.queries,
-      streaming.Events.queries, streaming.DocsStream.queries,
-      streaming.ExactlyOnceSink.queries,
-      enrich.TopicEnrichment.queries,
-      enrich.TermEncoding.queries,
-      ingest.TaggedQueries.queries, query.QueryText.queries,
-      query.ChatStore.queries,
-      sinks.SinkQueries.queries, multimodal.Multimodal.queries)
+    val perModule = registry.Registry.families.map(_.queries)
     val names = perModule.flatMap(_.keys)
     val dups = names.groupBy(identity).filter(_._2.size > 1).keys
     assert(dups.isEmpty, s"duplicate query names: $dups")

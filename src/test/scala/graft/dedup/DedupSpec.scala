@@ -20,7 +20,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("q37 simhash near-dup equals the brute-force capped-band semantics") {
     import spark.implicits._
-    val sigs = Dedup.queries("q35_simhash")(spark, dir)
+    val sigs = graft.SparkEntry.queries("q35_simhash")(spark, dir)
       .as[(Long, String)].collect()
 
     val bucketSize: Map[(Int, String), Int] = sigs
@@ -45,7 +45,7 @@ class DedupSpec extends AnyFunSuite {
       h = hamming(sa, sb) if h <= 3
     } yield (math.min(da, db), math.max(da, db)) -> h).toMap
 
-    val got = Dedup.queries("q37_simhash_neardup")(spark, dir)
+    val got = graft.SparkEntry.queries("q37_simhash_neardup")(spark, dir)
       .as[(Long, Long, Int)].collect()
       .map { case (d1, d2, h) => (d1, d2) -> h }.toMap
 
@@ -69,7 +69,7 @@ class DedupSpec extends AnyFunSuite {
       .selectExpr("doc_id", "text", "'zh' AS lang", "'test' AS source",
         "CAST(length(text) AS BIGINT) AS n_chars")
       .write.mode("overwrite").parquet(s"$d/documents.parquet")
-    val got = Dedup.queries("q38_incremental_dedup")(spark, d)
+    val got = graft.SparkEntry.queries("q38_incremental_dedup")(spark, d)
       .as[(Long, Long, Long)].collect().toSeq
     assert(got === Seq(
       (19L, 1L, 0L), (29L, 0L, 1L), (39L, 0L, 1L), (49L, 1L, 0L)))

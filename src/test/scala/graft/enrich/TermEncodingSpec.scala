@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.enrich.TermEncoding.{GlossStripEncoder, StubTermEncoder, TermEncoder, encodeTerms}
+import graft.registry.Fixtures
 
 /** The batched encoder operator: batch shape (≤64 per call, partial last
   * batch), batch-boundary invariance (a term's vector is independent of
@@ -89,7 +90,7 @@ class TermEncodingSpec extends AnyFunSuite {
   test("the encoded ER lifecycle equals the Column-stub path (q128 ≡ q104)") {
     import graft.resolve.EntityResolution
     val ingested = graft.ingest.TaggedText.ingest(spark,
-      graft.ingest.TaggedQueries.ErFixtureGlob)
+      Fixtures.TaggedErGlob)
     val viaColumn = EntityResolution
       .ingestedKeywordMapping(ingested, 24, 25)
       .collect().map(r => (r.getString(0), r.getString(1))).toSet

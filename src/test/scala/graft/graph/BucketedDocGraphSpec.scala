@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.ingest.{TaggedQueries, TaggedText}
+import graft.ingest.TaggedText
+import graft.registry.Fixtures
 
 /** Binding 3: the bucketed DocGraph. Proves the PERF.md claim end-to-end
   * on the REAL template code (not a synthetic two-table join): the q71/q72
@@ -22,7 +23,7 @@ class BucketedDocGraphSpec extends AnyFunSuite {
   private lazy val base = DocGraph.synthetic(spark, TestSpark.TinySf)
   private lazy val bucketedG = DocGraph.bucketed(base, "bdg_spec", 4)
   private lazy val ingested =
-    DocGraph.ofIngested(TaggedText.ingest(spark, TaggedQueries.FixtureGlob))
+    DocGraph.ofIngested(TaggedText.ingest(spark, Fixtures.TaggedGlob))
 
   /** Sorted (original, representative) rows of an alias mapping. */
   private def mappingRows(df: DataFrame): Seq[(String, String)] =

@@ -2,8 +2,9 @@ package graft.graph
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.ingest.{TaggedQueries, TaggedText}
+import graft.ingest.TaggedText
 import graft.query.Router
+import graft.registry.Fixtures
 
 /** The DocGraph parameterization: every one of the 17 Q.txt families runs
   * over BOTH bindings — the synthetic fixture graph (gated per-family by
@@ -16,7 +17,7 @@ class DocGraphSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val tagged: DocGraph =
-    DocGraph.ofIngested(TaggedText.ingest(spark, TaggedQueries.FixtureGlob))
+    DocGraph.ofIngested(TaggedText.ingest(spark, Fixtures.TaggedGlob))
 
   // Fixture-grounded parameters per family (1-17); families whose seed
   // exists in the fixture must return rows.

@@ -3,6 +3,7 @@ package graft.ingest
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.TestSpark
+import graft.registry.Fixtures
 
 /** Unit + fixture tests for the tagged-text ingest pipeline (SURVEY.md §5
   * strategy item 2: parsing, cleaning, first-wins dedup, label hygiene).
@@ -71,7 +72,7 @@ class TaggedTextSpec extends AnyFunSuite {
 
   test("parse reads a glob as its expanded file list: same provenance " +
       "and blocks; a glob matching nothing still fails path-not-found") {
-    val glob = TaggedQueries.ErFixtureGlob
+    val glob = Fixtures.TaggedErGlob
     // what a plain glob read sees: each file's name, area and block count
     val want = spark.read.option("wholetext", "true").text(glob)
       .select(input_file_name(), $"value").as[(String, String)].collect()
@@ -91,7 +92,7 @@ class TaggedTextSpec extends AnyFunSuite {
 
   test("ingest output round-trips through the typed Dataset[DocRecord]") {
     val ds = graft.model.DocRecord.typed(
-      TaggedText.ingest(spark, TaggedQueries.FixtureGlob))
+      TaggedText.ingest(spark, Fixtures.TaggedGlob))
     val recs = ds.collect()
     assert(recs.length === 5)
     val weird = recs.find(_.year_raw.contains("2022a")).get
@@ -101,7 +102,7 @@ class TaggedTextSpec extends AnyFunSuite {
   }
 
   test("ingest fixture: first-wins dedup, int-or-raw year, extra map") {
-    val df = TaggedText.ingest(spark, TaggedQueries.FixtureGlob).cache()
+    val df = TaggedText.ingest(spark, Fixtures.TaggedGlob).cache()
     assert(df.count() === 5)
 
     // duplicate title appears in two files: the lexicographically-first

@@ -2,6 +2,7 @@ package graft.query
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.registry.Fixtures
 
 class QueryTextSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -30,7 +31,7 @@ class QueryTextSpec extends AnyFunSuite {
   }
 
   test("replayStatements: first-seen ordered dedup across log files") {
-    val rows = QueryText.replayStatements(spark, QueryText.LogGlob)
+    val rows = QueryText.replayStatements(spark, Fixtures.LogGlob)
       .orderBy("ord").as[(Long, String)].collect().toSeq
     assert(rows === Seq(
       1L -> "MERGE (p:Patent {title: 'T1'});",
@@ -40,7 +41,7 @@ class QueryTextSpec extends AnyFunSuite {
 
   test("q92 reads its log glob as the expanded file list: rows unchanged, " +
       "a glob matching nothing still fails PATH_NOT_FOUND") {
-    val rows = QueryText.queries("q92_error_replay")(spark, "")
+    val rows = graft.SparkEntry.queries("q92_error_replay")(spark, "")
       .as[(Long, String)].collect().toSeq
     assert(rows === Seq(
       1L -> "MERGE (p:Patent {title: 'T1'});",
@@ -48,7 +49,7 @@ class QueryTextSpec extends AnyFunSuite {
       3L -> "CREATE (x:Keyword {name: 'k1'});"))
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       QueryText.replayStatements(spark,
-        QueryText.LogGlob.stripSuffix(".txt") + ".nomatch")
+        Fixtures.LogGlob.stripSuffix(".txt") + ".nomatch")
     }
     assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
   }

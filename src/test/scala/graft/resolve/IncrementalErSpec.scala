@@ -435,7 +435,7 @@ class IncrementalErSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSet
     // the policy-driven MOR lifecycle (the registered q169 closure sets
     // spark.graft.mor.compactDepth=2 and restores it)
-    val got = EntityResolution.queries("q169_er_mor_compact_policy")(
+    val got = graft.SparkEntry.queries("q169_er_mor_compact_policy")(
       spark, d).as[(Long, Long)].collect().toSeq
     assert(got === want,
       "the policy trigger must be invisible in the mapping")

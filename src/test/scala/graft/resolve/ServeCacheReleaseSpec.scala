@@ -2,7 +2,6 @@ package graft.resolve
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.ingest.TaggedQueries
 
 /** Round-12 verdict item 4: `releaseServeCaches()` existed with zero call
   * sites, so a long-lived serve JVM accumulated MEMORY_AND_DISK blocks per

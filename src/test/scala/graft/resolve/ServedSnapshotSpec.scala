@@ -2,7 +2,7 @@ package graft.resolve
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.ingest.TaggedQueries
+import graft.registry.{Fixtures, Tagged}
 
 /** The single-day ER serves (q143, q150, q153, q155–q159) are
   * [[Lifecycle.serve]] calls: each reads the shared day-0 snapshot its
@@ -30,13 +30,13 @@ class ServedSnapshotSpec extends AnyFunSuite {
 
     val syn9 = EntityResolution.sharedBaseName("syn", s"$d|ins=9")
     val syn = EntityResolution.sharedBaseName("syn", s"$d|ins=")
-    val ingKey = s"${TaggedQueries.ErFixtureGlob}|eps=24/25" +
+    val ingKey = s"${Fixtures.TaggedErGlob}|eps=24/25" +
       s"|cls=${EntityResolution.clsFingerprint(spark, c => c % 3)}"
     val ing1 = EntityResolution.sharedBaseName("ing", s"$ingKey|ins=1")
     val ing = EntityResolution.sharedBaseName("ing", s"$ingKey|ins=")
     // the insert serves read the snapshots the lifecycles replay from
     assert(Lifecycle.synthetic(d).snapshot(spark, Set(9)) === syn9)
-    assert(TaggedQueries.erLifecycle(spark).snapshot(spark, Set(1)) === ing1)
+    assert(Tagged.erLifecycle(spark).snapshot(spark, Set(1)) === ing1)
 
     def files(t: String): Set[String] = spark.table(t).inputFiles.toSet
     def reads(name: String, base: String): Unit =

@@ -106,9 +106,9 @@ class Int8OpsSpec extends AnyFunSuite {
   }
 
   test("q48 SQ8 top-5: 64B binary vs 256B+ floats, recall>=0.8 vs exact q40") {
-    val q40 = Similarity.queries("q40_ann_bruteforce_topk")(spark, TestSpark.TinySf)
+    val q40 = graft.SparkEntry.queries("q40_ann_bruteforce_topk")(spark, TestSpark.TinySf)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
-    val q48 = Similarity.queries("q48_sq8_topk")(spark, TestSpark.TinySf)
+    val q48 = graft.SparkEntry.queries("q48_sq8_topk")(spark, TestSpark.TinySf)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
     val exact = q40.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     val sq8 = q48.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap

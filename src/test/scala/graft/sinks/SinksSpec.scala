@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.registry.Fixtures
 
 /** Golden-file checks for the Neo4j bulk-import CSV contract (headers,
   * quote-doubling, CJK passthrough — FIXTURES.md A4) and the JSON mapping
@@ -62,7 +63,7 @@ class SinksSpec extends AnyFunSuite {
   test("document node CSV golden over the real ingest (CJK, quotes, commas)") {
     val dir = Files.createTempDirectory("docsgold").toString
     val ingested = graft.ingest.TaggedText
-      .ingest(spark, graft.ingest.TaggedQueries.FixtureGlob)
+      .ingest(spark, Fixtures.TaggedGlob)
     Neo4jCsv.writeDocumentNodes(ingested, dir)
     val lines = readCsvLines(dir)
     assert(lines.head ===
@@ -83,7 +84,7 @@ class SinksSpec extends AnyFunSuite {
   test("dynamic header: unknown {Field}: tags survive ingest -> CSV as trailing columns") {
     val dir = Files.createTempDirectory("docsextra").toString
     val ingested = graft.ingest.TaggedText
-      .ingest(spark, graft.ingest.TaggedQueries.FixtureGlob)
+      .ingest(spark, Fixtures.TaggedGlob)
     Neo4jCsv.writeDocumentNodes(ingested, dir, dynamicExtra = true)
     val lines = readCsvLines(dir)
     // the fixture's unknown tags ({Custom Tag}, {Subject}, {Date} are

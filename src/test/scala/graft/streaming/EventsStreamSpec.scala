@@ -180,7 +180,7 @@ class EventsStreamSpec extends AnyFunSuite {
       .collect()
       .map(o => (o.purchase_id, o.user_id, o.purchase_ts_us, o.click_id,
         o.gap_us)).toSet
-    val want = Events.queries("q44_asof_join")(spark, dir)
+    val want = graft.SparkEntry.queries("q44_asof_join")(spark, dir)
       .as[(Long, Long, Long, Option[Long], Option[Long])].collect().toSet
     assert(got === want)
     assert(want.nonEmpty && want.exists(_._4.isEmpty) && want.exists(_._4.nonEmpty))
@@ -232,7 +232,7 @@ class EventsStreamSpec extends AnyFunSuite {
         .select(unix_micros($"window_start").as("window_start_us"),
           $"event_type", $"n")
         .as[(Long, String, Long)].collect().toSet
-      val want = Events.queries("q55_tumbling_windows")(
+      val want = graft.SparkEntry.queries("q55_tumbling_windows")(
           spark, "/root/testdata/sf0.001")
         .select($"window_start_us", $"event_type", $"n")
         .as[(Long, String, Long)].collect().toSet
@@ -261,7 +261,7 @@ class EventsStreamSpec extends AnyFunSuite {
         .select($"user_id", unix_micros($"session_start").as("start_us"),
           $"n_events")
         .as[(Long, Long, Long)].collect().toSet
-      val want = Events.queries("q56_sessionization")(
+      val want = graft.SparkEntry.queries("q56_sessionization")(
           spark, "/root/testdata/sf0.001")
         .select($"user_id", $"start_us", $"n_events")
         .as[(Long, Long, Long)].collect().toSet

@@ -154,16 +154,16 @@ class MorSpliceSpec extends AnyFunSuite {
   }
 
   test("q168: the MOR-landed splice serves the same answer as q147's fold") {
-    val viaMor = ExactlyOnceSink.queries("q168_stream_mor_splice")(
+    val viaMor = graft.SparkEntry.queries("q168_stream_mor_splice")(
       spark, TinySf)
       .collect().map(_.toString).toSeq
-    val viaFold = ExactlyOnceSink.queries("q147_stream_to_serve")(
+    val viaFold = graft.SparkEntry.queries("q147_stream_to_serve")(
       spark, TinySf)
       .collect().map(_.toString).toSeq
     assert(viaMor.nonEmpty && viaMor === viaFold,
       "the landing layout must be invisible in the served answer")
     // re-running the gate (same JVM: base already folded once) converges
-    val again = ExactlyOnceSink.queries("q168_stream_mor_splice")(
+    val again = graft.SparkEntry.queries("q168_stream_mor_splice")(
       spark, TinySf)
       .collect().map(_.toString).toSeq
     assert(again === viaMor)

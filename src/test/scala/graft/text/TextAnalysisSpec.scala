@@ -15,7 +15,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     // sf0.01's doc_ids (500) are a subset of sf0.1's (5000) — a
     // document's split must not change when 10x more documents arrive.
     def splits(d: String) =
-      TextAnalysis.queries("q26_split_assign")(spark, d)
+      graft.SparkEntry.queries("q26_split_assign")(spark, d)
         .select($"doc_id", $"split").as[(Long, String)].collect().toMap
     val small = splits("/root/testdata/sf0.01")
     val big = splits("/root/testdata/sf0.1")
