@@ -107,16 +107,18 @@ object BibGraph {
     * so single-relation queries read only their own branch.
     */
   def edgesFor(docsDF: DataFrame, config: Seq[EdgeSpec]): DataFrame =
-    config.map { spec =>
-      val entity = if (spec.isArray) explode(col(spec.colName)) else col(spec.colName)
-      val withEnt = docsDF.select(col("title"), entity.as("entity"))
-        .filter(col("entity").isNotNull && col("entity") =!= "")
-      val (src, dst) =
-        if (spec.fromNew) (col("entity"), col("title"))
-        else (col("title"), col("entity"))
-      withEnt.select(src.as("src"), dst.as("dst"), lit(spec.relType).as("rel_type"))
-        .distinct()
-    }.reduce(_ unionAll _)
+    config.map(specEdges(docsDF, _).distinct()).reduce(_ unionAll _)
+
+  /** One spec's (src, dst, rel_type) rows, before the per-type dedup. */
+  private def specEdges(docsDF: DataFrame, spec: EdgeSpec): DataFrame = {
+    val entity = if (spec.isArray) explode(col(spec.colName)) else col(spec.colName)
+    val withEnt = docsDF.select(col("title"), entity.as("entity"))
+      .filter(col("entity").isNotNull && col("entity") =!= "")
+    val (src, dst) =
+      if (spec.fromNew) (col("entity"), col("title"))
+      else (col("title"), col("entity"))
+    withEnt.select(src.as("src"), dst.as("dst"), lit(spec.relType).as("rel_type"))
+  }
 
   def edges(docsDF: DataFrame): DataFrame = edgesFor(docsDF, EdgeConfig)
 
@@ -137,11 +139,18 @@ object BibGraph {
     EdgeSpec("author_address", isArray = true, "Author_Address", "AUTHOR_ADDRESS", fromNew = false))
 
   def taggedEdges(ingested: DataFrame): DataFrame =
-    edgesFor(
-      ingested.withColumn("publisher_key",
-        coalesce(nullif(col("publisher"), lit("")),
-          nullif(col("place_published"), lit("")))),
-      TaggedEdgeConfig)
+    edgesFor(withPublisherKey(ingested), TaggedEdgeConfig)
+
+  /** [[taggedEdges]] without the per-type dedup, for a consumer whose
+    * own output is deduplicated (the graph dump's one write). */
+  def taggedEdgeRows(ingested: DataFrame): DataFrame =
+    TaggedEdgeConfig.map(specEdges(withPublisherKey(ingested), _))
+      .reduce(_ unionAll _)
+
+  private def withPublisherKey(ingested: DataFrame): DataFrame =
+    ingested.withColumn("publisher_key",
+      coalesce(nullif(col("publisher"), lit("")),
+        nullif(col("place_published"), lit(""))))
 
   /** (author, title) pairs for AUTHORED. */
   def authored(s: SparkSession, d: String): DataFrame =

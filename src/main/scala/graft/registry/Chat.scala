@@ -9,85 +9,63 @@ import graft.query.ChatStore._
 /** The chat-store round trips of [[graft.query.ChatStore]]. */
 object Chat extends Family {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Round trip of the whole L6 surface, driven by fixture-derived
-    // events so the DuckDB oracle can recompute the expected state from
-    // `documents` alone: one chat per source (created at min(doc_id)·10,
-    // titled by the source), one message per doc (seq doc_id·10+5),
-    // then a SECOND append batch (exercising log append, not overwrite)
-    // renaming src1 and deleting every source ending in '0'. The gated
-    // frame is the folded chats listing read back from disk.
-    "q138_chat_state_roundtrip" -> ((s, d) => {
-      import s.implicits._
-      val dir = Sinks.tmp(s, "q138_chatlog")
-      val docs = Tables.documents(s, d).select($"doc_id", $"source", $"text")
-      val creates = docs.groupBy($"source")
-        .agg((min($"doc_id") * 10).as("seq"))
-        .select($"seq", lit("create").as("op"), $"source".as("chat_id"),
-          $"source".as("title"),
-          lit(null).cast("string").as("role"),
-          lit(null).cast("string").as("content"))
-      val msgs = docs.select(($"doc_id" * 10 + 5).as("seq"),
-        lit("message").as("op"), $"source".as("chat_id"),
-        lit(null).cast("string").as("title"),
-        when($"doc_id" % 2 === 0, "user").otherwise("assistant").as("role"),
-        substring($"text", 1, 30).as("content"))
-      ChatStore.append(creates.unionByName(msgs), dir)
-      val maxSeq = docs.agg(max($"doc_id") * 10).as[Long].head()
-      val renames = s.range(1).select(lit(maxSeq + 6).as("seq"),
-        lit("rename").as("op"), lit("src1").as("chat_id"),
-        lit("src1-renamed").as("title"),
+  /** The fixture-derived event history of q138 and q154, appended to a
+    * fresh scratch log whose dir is returned: one chat per source
+    * (created at min(doc_id)·10, titled by the source), one message per
+    * doc (seq doc_id·10+5), then a SECOND append batch (exercising log
+    * append, not overwrite) renaming src1 and deleting every source
+    * ending in '0'.
+    */
+  private def eventHistory(s: SparkSession, d: String, name: String): String = {
+    import s.implicits._
+    val dir = Sinks.tmp(s, name)
+    val docs = Tables.documents(s, d).select($"doc_id", $"source", $"text")
+    val creates = docs.groupBy($"source")
+      .agg((min($"doc_id") * 10).as("seq"))
+      .select($"seq", lit("create").as("op"), $"source".as("chat_id"),
+        $"source".as("title"),
         lit(null).cast("string").as("role"),
         lit(null).cast("string").as("content"))
-      val deletes = docs.select($"source").distinct()
-        .filter($"source".endsWith("0"))
-        .select(lit(maxSeq + 7).as("seq"), lit("delete").as("op"),
-          $"source".as("chat_id"),
-          lit(null).cast("string").as("title"),
-          lit(null).cast("string").as("role"),
-          lit(null).cast("string").as("content"))
-      ChatStore.append(renames.unionByName(deletes), dir)
-      chats(load(s, dir))
-    }),
+    val msgs = docs.select(($"doc_id" * 10 + 5).as("seq"),
+      lit("message").as("op"), $"source".as("chat_id"),
+      lit(null).cast("string").as("title"),
+      when($"doc_id" % 2 === 0, "user").otherwise("assistant").as("role"),
+      substring($"text", 1, 30).as("content"))
+    ChatStore.append(creates.unionByName(msgs), dir)
+    val maxSeq = docs.agg(max($"doc_id") * 10).as[Long].head()
+    val renames = s.range(1).select(lit(maxSeq + 6).as("seq"),
+      lit("rename").as("op"), lit("src1").as("chat_id"),
+      lit("src1-renamed").as("title"),
+      lit(null).cast("string").as("role"),
+      lit(null).cast("string").as("content"))
+    val deletes = docs.select($"source").distinct()
+      .filter($"source".endsWith("0"))
+      .select(lit(maxSeq + 7).as("seq"), lit("delete").as("op"),
+        $"source".as("chat_id"),
+        lit(null).cast("string").as("title"),
+        lit(null).cast("string").as("role"),
+        lit(null).cast("string").as("content"))
+    ChatStore.append(renames.unionByName(deletes), dir)
+    dir
+  }
 
-    // Retention under the hash gate: the q138 event history (creates +
-    // messages + the src1 rename + deletes of every source ending in
-    // '0') is PRUNED, and the gated frame is the surviving log's per-op
-    // row counts — dead epochs must be PHYSICALLY gone (deleted chats
-    // contribute zero creates/messages; the delete markers themselves
-    // vanish), which the folded listing alone could never prove (the
-    // folds read identically before and after by construction —
-    // `ChatStoreSpec` pins that half).
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // Round trip of the whole L6 surface, driven by the fixture-derived
+    // [[eventHistory]] so the DuckDB oracle can recompute the expected
+    // state from `documents` alone. The gated frame is the folded chats
+    // listing read back from disk.
+    "q138_chat_state_roundtrip" -> ((s, d) =>
+      chats(load(s, eventHistory(s, d, "q138_chatlog")))),
+
+    // Retention under the hash gate: the [[eventHistory]] is PRUNED, and
+    // the gated frame is the surviving log's per-op row counts — dead
+    // epochs must be PHYSICALLY gone (deleted chats contribute zero
+    // creates/messages; the delete markers themselves vanish), which the
+    // folded listing alone could never prove (the folds read identically
+    // before and after by construction — `ChatStoreSpec` pins that half).
     "q154_chat_prune_retention" -> ((s, d) => {
       import s.implicits._
-      val dir = Sinks.tmp(s, "q154_chatlog")
-      val docs = Tables.documents(s, d).select($"doc_id", $"source", $"text")
-      val creates = docs.groupBy($"source")
-        .agg((min($"doc_id") * 10).as("seq"))
-        .select($"seq", lit("create").as("op"), $"source".as("chat_id"),
-          $"source".as("title"),
-          lit(null).cast("string").as("role"),
-          lit(null).cast("string").as("content"))
-      val msgs = docs.select(($"doc_id" * 10 + 5).as("seq"),
-        lit("message").as("op"), $"source".as("chat_id"),
-        lit(null).cast("string").as("title"),
-        when($"doc_id" % 2 === 0, "user").otherwise("assistant").as("role"),
-        substring($"text", 1, 30).as("content"))
-      ChatStore.append(creates.unionByName(msgs), dir)
-      val maxSeq = docs.agg(max($"doc_id") * 10).as[Long].head()
-      val renames = s.range(1).select(lit(maxSeq + 6).as("seq"),
-        lit("rename").as("op"), lit("src1").as("chat_id"),
-        lit("src1-renamed").as("title"),
-        lit(null).cast("string").as("role"),
-        lit(null).cast("string").as("content"))
-      val deletes = docs.select($"source").distinct()
-        .filter($"source".endsWith("0"))
-        .select(lit(maxSeq + 7).as("seq"), lit("delete").as("op"),
-          $"source".as("chat_id"),
-          lit(null).cast("string").as("title"),
-          lit(null).cast("string").as("role"),
-          lit(null).cast("string").as("content"))
-      ChatStore.append(renames.unionByName(deletes), dir)
+      val dir = eventHistory(s, d, "q154_chatlog")
       prune(s, dir)
       load(s, dir).groupBy($"op").agg(count(lit(1)).as("cnt"))
         .orderBy($"op")

@@ -28,14 +28,14 @@ object Registry {
   * starts elsewhere (the perfbench harness) can still load the registry.
   */
 object Fixtures {
-  private val root = s"${System.getProperty("user.dir")}/src/test/resources"
-  val TaggedGlob = s"$root/tagged/*/*/*.txt"
+  val Root = s"${System.getProperty("user.dir")}/src/test/resources"
+  val TaggedGlob = s"$Root/tagged/*/*/*.txt"
 
   /** A second, ER-focused tagged fixture whose keywords carry spelling
     * variants (a parenthetical gloss) that the term-encoder stub maps to
     * identical embeddings — the merge case the keyword resolution exists
     * for.
     */
-  val TaggedErGlob = s"$root/tagged_er/*/*/*.txt"
-  val LogGlob = s"$root/logs/*.txt"
+  val TaggedErGlob = s"$Root/tagged_er/*/*/*.txt"
+  val LogGlob = s"$Root/logs/*.txt"
 }

@@ -61,17 +61,54 @@ object EntityResolution {
   /** §2.8 applied to a named term universe: exact ε-join at cos ≥ num/den
     * → CC → representative = LEXICOGRAPHIC MIN TERM per cluster (the
     * reference's Python `min(group)`, `keyword_merger.py:222` — not the
-    * min id), noise → identity. Returns (original, representative).
+    * min id), noise → identity. Returns (original, representative), one
+    * row per `terms` row.
+    *
+    * The universe is collected once, under the exact kernel's size guard,
+    * as (vec_id, term, quantized embedding). Below
+    * [[Kernels.SpreadRows]] rows, with the pairs inside the driver cap,
+    * the ε loop, the components and the min term all run on the driver
+    * and the mapping is a local frame — no further job. Otherwise the
+    * collected rows are the broadcast build side of the distributed ε
+    * loop and CC. Both routes take the min in UTF-8 byte order, Spark's
+    * and DuckDB's string order (`String.compareTo`'s UTF-16 order differs
+    * above the BMP).
     */
   def aliasMapping(terms: DataFrame, num: Int, den: Int): DataFrame = {
+    import org.apache.spark.unsafe.types.UTF8String
     val s = terms.sparkSession
-    val comp = Kernels.connectedComponents(s, terms.select("vec_id"),
-      Kernels.epsPairsOf(terms, num, den))
-    val named = comp.join(terms.select(col("vec_id"), col("term")), "vec_id")
-    val reps = named.groupBy(col("component"))
-      .agg(min(col("term")).as("representative"))
-    named.join(broadcast(reps), "component")
-      .select(col("term").as("original"), col("representative"))
+    import s.implicits._
+    val rows = Kernels.collectExact(
+      terms.select(col("vec_id").cast("long"), col("term"),
+          graft.functions.VectorOps.quantize(col("embedding")))
+        .as[(Long, String, Array[Long])],
+      "aliasMapping", Kernels.MaxExactVectors)(_._1)
+    val build = rows.map(r => (r._1, r._3))
+    Kernels.driverEpsComponents(s, build, num, den) match {
+      case Some(comp) =>
+        val component = comp.toMap
+        val rep = scala.collection.mutable.HashMap.empty[Long, UTF8String]
+        for ((id, term, _) <- rows if term != null) {
+          val t = UTF8String.fromString(term)
+          rep.updateWith(component(id)) {
+            case Some(r) if r.compareTo(t) <= 0 => Some(r)
+            case _ => Some(t)
+          }
+        }
+        rows.toSeq.map { case (id, term, _) =>
+          (term, rep.get(component(id)).map(_.toString).orNull)
+        }.toDF("original", "representative")
+      case None =>
+        val comp = Kernels.connectedComponents(s, terms.select("vec_id"),
+          Kernels.epsNearDistributed(Kernels.quantized(terms), build, num,
+            den, upper = true))
+        val named = comp.join(terms.select(col("vec_id"), col("term")),
+          "vec_id")
+        val reps = named.groupBy(col("component"))
+          .agg(min(col("term")).as("representative"))
+        named.join(broadcast(reps), "component")
+          .select(col("term").as("original"), col("representative"))
+    }
   }
 
   /** Organization mapping at the reference threshold θ=0.96 (= 24/25). */
@@ -112,14 +149,16 @@ object EntityResolution {
     * carrier only; the representative is the min STRING).
     */
   def ingestedTermMapping(ingested: DataFrame, cols: Seq[String], num: Int,
-                          den: Int): DataFrame = {
-    val terms = distinctValues(ingested, cols)
-      .select(col("value").as("term"),
-        conv(substring(md5(col("value")), 1, 15), 16, 10).cast("long")
-          .as("vec_id"),
-        termEmbedding(col("value")).as("embedding"))
-    aliasMapping(terms, num, den)
-  }
+                          den: Int): DataFrame =
+    aliasMapping(termUniverse(distinctValues(ingested, cols)), num, den)
+
+  /** (term, vec_id, embedding) over a `value` column: the md5-prefix id
+    * and the [[termEmbedding]] stub. */
+  private[resolve] def termUniverse(values: DataFrame): DataFrame =
+    values.select(col("value").as("term"),
+      conv(substring(md5(col("value")), 1, 15), 16, 10).cast("long")
+        .as("vec_id"),
+      termEmbedding(col("value")).as("embedding"))
 
   def ingestedKeywordMapping(ingested: DataFrame, num: Int,
                              den: Int): DataFrame =

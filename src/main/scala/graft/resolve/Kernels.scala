@@ -48,7 +48,7 @@ object Kernels {
     * compare loop on as many cores; below this size a self-pair loop is
     * at most ~32M compares, subsecond on the natural splits, and the
     * extra shuffle costs more than it saves. */
-  private val SpreadRows = 8192
+  private[resolve] val SpreadRows = 8192
 
   /** One-job bounded collect: `limit(n).collect()` alone plans
     * CollectLimitExec, whose executeTake scans partitions in escalating
@@ -65,7 +65,7 @@ object Kernels {
 
   /** (vec_id, quantized embedding) — the quantization runs in the Column
     * pipeline, bit-identical to every other consumer of `embedding`. */
-  private def quantized(df: DataFrame): Dataset[(Long, Array[Long])] = {
+  private[resolve] def quantized(df: DataFrame): Dataset[(Long, Array[Long])] = {
     val s = df.sparkSession
     import s.implicits._
     df.select(col("vec_id").cast("long"),
@@ -74,13 +74,13 @@ object Kernels {
   }
 
   /** The exact kernel's size guard and build side in one job: a
-    * limit-probed collect of at most `maxExactVectors` quantized rows,
-    * sorted by id. A separate count() would run the upstream lineage —
-    * for the ingested-term callers the whole tagged parse — twice. The
-    * guard fails loudly, naming `who` and the scale path.
+    * limit-probed collect of at most `maxExactVectors` rows, sorted by
+    * `id`. A separate count() would run the upstream lineage — for the
+    * ingested-term callers the whole tagged parse — twice. The guard
+    * fails loudly, naming `who` and the scale path.
     */
-  private def collectQuantized(rows: Dataset[(Long, Array[Long])],
-      who: String, maxExactVectors: Long): Array[(Long, Array[Long])] = {
+  private[resolve] def collectExact[T](rows: Dataset[T], who: String,
+      maxExactVectors: Long)(id: T => Long): Array[T] = {
     val cap = math.min(maxExactVectors, Int.MaxValue - 1L).toInt
     val got = collectUpTo(rows, cap + 1)
     require(got.length <= cap,
@@ -88,7 +88,7 @@ object Kernels {
         s"O(n^2) compare loop): input exceeds " +
         s"maxExactVectors=$maxExactVectors. Use blockedEpsPairs (IVF-cell " +
         "equi join, fully distributed) for corpus-scale inputs.")
-    got.sortBy(_._1)
+    got.sortBy(id)
   }
 
   private def sqNorm(w: Array[Long]): Long = {
@@ -139,7 +139,7 @@ object Kernels {
   /** [[epsNear]] on the executors: `build` is broadcast, `probe` streams
     * through once — the dataflow a BroadcastNestedLoopJoin plans, minus
     * its per-pair row machinery. */
-  private def epsNearDistributed(probe: Dataset[(Long, Array[Long])],
+  private[resolve] def epsNearDistributed(probe: Dataset[(Long, Array[Long])],
       build: Array[(Long, Array[Long])], num: Int, den: Int,
       upper: Boolean): DataFrame = {
     val s = probe.sparkSession
@@ -162,7 +162,7 @@ object Kernels {
                  maxExactVectors: Long = MaxExactVectors): DataFrame = {
     val rows = quantized(emb0)
     epsNearDistributed(rows,
-      collectQuantized(rows, "epsPairsOf", maxExactVectors), num, den,
+      collectExact(rows, "epsPairsOf", maxExactVectors)(_._1), num, den,
       upper = true)
   }
 
@@ -181,8 +181,8 @@ object Kernels {
     val s = probe.sparkSession
     import s.implicits._
     val batchRows = quantized(batch)
-    val bRows = collectQuantized(batchRows, "batchEndpointPairs",
-      maxExactVectors)
+    val bRows = collectExact(batchRows, "batchEndpointPairs",
+      maxExactVectors)(_._1)
     val cross = epsNearDistributed(quantized(probe), bRows, num, den,
       upper = false)
     val bb =
@@ -461,6 +461,27 @@ object Kernels {
       case Some(g) => local(s, g.components, "vec_id", "component")
       case None => connectedComponentsPregel(s, vertices, pairs)
     }
+
+  /** Connected components of the ε-graph over an already-collected,
+    * id-sorted `build` side, solved on the driver with no job: the
+    * [[epsNear]] self-pair loop feeding union-find. `None` — take the
+    * distributed kernels — at or above [[SpreadRows]] rows (the O(n²)
+    * loop belongs on the executors there) or when the vertices or pairs
+    * exceed the driver cap. Same (vec_id, component) rows as
+    * [[connectedComponents]] over [[epsPairsOf]] of the same rows.
+    */
+  private[resolve] def driverEpsComponents(s: SparkSession,
+      build: Array[(Long, Array[Long])], num: Int,
+      den: Int): Option[Array[(Long, Long)]] = {
+    val cap = effectiveMaxDriverEdges(s, MaxDriverCcEdges)
+    if (cap <= 0 || build.length >= SpreadRows || build.length > cap) None
+    else {
+      val pairs = epsNear(build.iterator, build, num, den, upper = true)
+        .take(cap + 1).toArray
+      if (pairs.length > cap) None
+      else Some(new DriverGraph(build.map(_._1), pairs).components)
+    }
+  }
 
   /** The distributed (GraphX Pregel) CC kernel, the route above the
     * driver cap. */

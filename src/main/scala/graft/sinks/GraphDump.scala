@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.graph.{BibGraph, BucketedStore}
 import graft.resolve.EntityResolution
 
@@ -18,29 +19,30 @@ import graft.resolve.EntityResolution
   * `<rel_type>_rels`, `<label>_alias_of_rels` (each a Spark CSV
   * directory). Alias files with no non-identity entries are skipped, as
   * the reference skips empty files. Returns the manifest of written
-  * entries for callers/tests — in the fixed reference order, regardless
-  * of write completion order.
+  * entries for callers/tests — in the fixed reference order.
   *
-  * Scale notes: the cleaned ingest and the edge frame are persisted and
-  * FORCED once, then every writer — each a narrow projection + per-key
-  * dedup, one shuffle — and the three independent alias-mapping
-  * lifecycles are submitted CONCURRENTLY from a bounded driver pool.
-  * Spark's scheduler multiplexes the jobs across executors; the dump's
-  * wall time is the longest single lifecycle instead of the sum of ~16
-  * sequential mostly-single-task jobs (which left a 32-slot cluster
-  * ~97% idle between tiny stages). PUBLISHED_BY uses the documented
-  * first-non-empty Publisher/Place-Published key (`Hype.py:38-44`),
-  * consistent with the engine's taggedEdges everywhere else.
+  * Design: the cleaned ingest is persisted, the three alias mappings are
+  * derived concurrently (each collects its term universe once and, at
+  * term-universe sizes, resolves it on the driver —
+  * [[EntityResolution.aliasMapping]]), and then every entry goes to disk
+  * in ONE partitioned text write ([[Neo4jCsv.write]]) under
+  * `<outDir>/_graft_dump_tmp`, whose `entry=<name>` directories the
+  * driver moves into place. Node and relationship lines come straight
+  * from the exploded ingest: the write's distinct over lines is their
+  * only dedup. Scale: one writer task per entry, as the reference's
+  * one-file-per-label layout requires; the dedup keeps shuffle
+  * parallelism. PUBLISHED_BY uses the documented first-non-empty
+  * Publisher/Place-Published key (`Hype.py:38-44`), consistent with the
+  * engine's taggedEdges everywhere else.
   */
 object GraphDump {
 
   /** `literalFiles = true` reproduces the reference's exact on-disk
     * layout: each entry is a LITERAL `<name>.csv` file (`documents.csv`,
     * `keyword_nodes.csv`, ... as `csv_extractor.py:102,134,230,284` open
-    * them), promoted from the single-part Spark write by one driver-side
+    * them), its single part file moved into place by one driver-side
     * rename — so `neo4j-admin database import` runs against the manifest
-    * verbatim, no globbing. Default keeps Spark part-file directories
-    * (the 100 TB layout).
+    * verbatim, no globbing. Default keeps Spark part-file directories.
     */
   def dumpGraph(ingested0: DataFrame, outDir: String,
                 dynamicExtra: Boolean = false,
@@ -48,97 +50,71 @@ object GraphDump {
                 orgThreshold: (Int, Int) = (24, 25),
                 addrThreshold: (Int, Int) = (19, 20),
                 literalFiles: Boolean = false): Seq[String] = {
-    import org.apache.spark.storage.StorageLevel
-    // the cleaned ingest feeds every writer and all three mappings —
-    // persist + force BOTH once, before any concurrent reader: blocked
-    // per-block cache locks make concurrent first-computation safe but
-    // serialized; a single up-front materialization is strictly cheaper
+    // the cleaned ingest feeds the three mappings and every entry: persist
+    // and fill it once, so the concurrent mappings do not each submit a
+    // job to build the same cache
     val ingested = ingested0.persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = BibGraph.taggedEdges(ingested)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count() // forces ingested transitively
-
     try {
-      def entry(base: String): String =
-        if (literalFiles) base + ".csv" else base
+      ingested.foreachPartition((_: Iterator[Row]) => ())
+
+      // the three ALIAS_OF mappings (csv_extractor.py:246-313), each an
+      // independent ε-join → CC → min-term lifecycle
+      val aliases = Seq(
+        ("Keyword", Seq("keywords"), kwThreshold),
+        ("Organization", Seq("publisher", "place_published"), orgThreshold),
+        ("Author_Address", Seq("author_address"), addrThreshold))
+      val mappings = BucketedStore.concurrently(
+        aliases.map { case (_, cols, (num, den)) =>
+          () => EntityResolution.ingestedTermMapping(ingested, cols, num, den)
+        })
 
       // 1. document nodes (csv_extractor.py:33-60,101-125)
-      val docsTask = () => {
-        val name = entry("documents")
-        Neo4jCsv.writeDocumentNodes(ingested, s"$outDir/$name",
-          dynamicExtra = dynamicExtra, asFile = literalFiles)
-        Some(name)
-      }
+      val docs = Seq("documents" -> Neo4jCsv.entry("documents",
+        Neo4jCsv.documentNodes(ingested, dynamicExtra)))
 
       // 2. linked-entity nodes, one CSV per label; a label fed by several
       //    rel types (Author via AUTHORED + TERTIARY_AUTHORED) unions them
       //    (csv_extractor.py:64-97,128-148)
-      val byLabel = BibGraph.TaggedEdgeConfig.groupBy(_.nodeLabel).toSeq
-        .sortBy(_._1)
-      val labelTasks = byLabel.map { case (label, specs) =>
-        () => {
+      val edges = BibGraph.taggedEdgeRows(ingested)
+      val nodes = BibGraph.TaggedEdgeConfig.groupBy(_.nodeLabel).toSeq
+        .sortBy(_._1).map { case (label, specs) =>
           val ids = specs.map { spec =>
             val side = if (spec.fromNew) "src" else "dst"
             edges.filter(col("rel_type") === spec.relType)
               .select(col(side).as("id"))
           }.reduce(_ unionAll _)
-          val name = entry(s"${label.toLowerCase}_nodes")
-          Neo4jCsv.writeEntityNodes(ids, label, s"$outDir/$name",
-            asFile = literalFiles)
-          Some(name)
+          val name = s"${label.toLowerCase}_nodes"
+          name -> Neo4jCsv.entry(name, Neo4jCsv.entityNodes(ids, label))
         }
-      }
 
       // 3. document-linked relationship CSVs, one per rel type
       //    (csv_extractor.py:153-241)
-      val relTasks = BibGraph.TaggedEdgeConfig.map { spec =>
-        () => {
-          val (startLabel, endLabel) =
-            if (spec.fromNew) (spec.nodeLabel, "Document")
-            else ("Document", spec.nodeLabel)
-          val name = entry(s"${spec.relType.toLowerCase}_rels")
-          Neo4jCsv.writeRels(edges, spec.relType, startLabel, endLabel,
-            s"$outDir/$name", asFile = literalFiles)
-          Some(name)
-        }
+      val rels = BibGraph.TaggedEdgeConfig.map { spec =>
+        val (startLabel, endLabel) =
+          if (spec.fromNew) (spec.nodeLabel, "Document")
+          else ("Document", spec.nodeLabel)
+        val name = s"${spec.relType.toLowerCase}_rels"
+        name -> Neo4jCsv.entry(name,
+          Neo4jCsv.rels(edges, spec.relType, startLabel, endLabel))
       }
 
-      // 4. the three ALIAS_OF files (csv_extractor.py:246-313) from the
-      //    ingest-derived mappings at the reference thresholds; empty
-      //    mappings are skipped like the reference's empty files. Each
-      //    lifecycle (ε-join → CC → min-rep) is independent — they
-      //    overlap each other's many small GraphX stages.
-      val aliases = Seq(
-        ("Keyword", Seq("keywords"), kwThreshold),
-        ("Organization", Seq("publisher", "place_published"), orgThreshold),
-        ("Author_Address", Seq("author_address"), addrThreshold))
-      val aliasTasks = aliases.map { case (label, cols, (num, den)) =>
-        () => {
-          val rels = EntityResolution
-            .ingestedTermMapping(ingested, cols, num, den)
-            .filter(col("original") =!= col("representative"))
+      // 4. the ALIAS_OF files, skipped when the mapping has no
+      //    non-identity entry like the reference's empty files
+      val aliasOf = aliases.zip(mappings).map { case ((label, _, _), m) =>
+        val name = s"${label.toLowerCase}_alias_of_rels"
+        name -> Neo4jCsv.entry(name, Neo4jCsv.rels(
+          m.filter(col("original") =!= col("representative"))
             .select(col("original").as("src"),
               col("representative").as("dst"),
-              lit("ALIAS_OF").as("rel_type"))
-            .localCheckpoint() // probe + write read the same materialization
-          if (!rels.isEmpty) {
-            val name = entry(s"${label.toLowerCase}_alias_of_rels")
-            Neo4jCsv.writeRels(rels, "ALIAS_OF", label, label,
-              s"$outDir/$name", asFile = literalFiles)
-            Some(name)
-          } else None
-        }
+              lit("ALIAS_OF").as("rel_type")),
+          "ALIAS_OF", label, label), skipEmpty = true)
       }
 
-      // manifest order is the fixed reference order (tasks are listed,
-      // not completion-raced); every writer settles before the finally
-      // block unpersists the frames they read
-      BucketedStore.concurrently[Option[String]](
-        Seq(docsTask) ++ labelTasks ++ relTasks ++ aliasTasks, threads = 8)
-        .flatten
-    } finally {
-      edges.unpersist(blocking = false)
-      ingested.unpersist(blocking = false)
-    }
+      val entries = docs ++ nodes ++ rels ++ aliasOf
+      def file(name: String) = if (literalFiles) name + ".csv" else name
+      val written = Neo4jCsv.write(entries.map(_._2).reduce(_ unionAll _),
+        s"$outDir/_graft_dump_tmp", literalFiles)(n => s"$outDir/${file(n)}")
+      entries.map(_._1).filter(written).map(file)
+    } finally ingested.unpersist(blocking = false)
   }
 }

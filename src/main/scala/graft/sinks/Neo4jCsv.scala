@@ -1,7 +1,8 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Neo4j bulk-import CSV sinks (SURVEY.md §2.1 S5-S7; headers verified
@@ -15,63 +16,103 @@ import org.apache.spark.sql.functions._
   * when needed, embedded quotes doubled (`escape` = `"` — Spark's default
   * backslash-escape would diverge), UTF-8 (CJK passes through unquoted).
   *
-  * `coalesce(1)` mirrors the reference's one-file-per-label layout for
-  * import parity; at 100 TB you drop it and let neo4j-admin take the
-  * part-files — the header/escaping contract is unchanged. `asFile = true`
-  * goes one step further and leaves a LITERAL `<path>` file (not a Spark
-  * directory) via [[promoteSingleFile]] — full filename parity with
-  * `csv_extractor.py`'s `open(...csv)` outputs.
+  * One rendering path: every CSV entry is a frame of `(entry, ord, line)`
+  * rows — the header at `ord` 0, rendered by `to_csv` from the column
+  * names exactly as the rows are rendered from their values, the rows at
+  * `ord` 1 — and any number of entries go to disk in ONE partitioned
+  * text write ([[write]]): `distinct` (the only dedup of entity nodes and
+  * relationships), `repartition(entry)`, header first within each
+  * partition, `partitionBy("entry")`. The driver then moves each
+  * `entry=<name>` directory's part file into place as `<name>/part-*.csv`
+  * with a `_SUCCESS` marker, or, as a literal `<name>.csv` file, the
+  * layout `csv_extractor.py` opens.
+  *
+  * Scale note: each entry is written by one task, as the reference's
+  * one-file-per-label layout (and the former `coalesce(1)` per label)
+  * requires; the dedup before it runs at full shuffle parallelism. At
+  * 100 TB you would drop the per-entry repartition and let neo4j-admin
+  * take several part files per entry — the header/escaping contract is
+  * unchanged.
   */
 object Neo4jCsv {
 
-  private def write(df: DataFrame, path: String, singleFile: Boolean,
-                    asFile: Boolean = false): Unit = {
-    val out = if (singleFile || asFile) df.coalesce(1) else df
-    val target = if (asFile) path + ".__spark_tmp" else path
-    out.write.mode("overwrite")
-      .option("header", "true")
-      .option("escape", "\"")
-      .option("emptyValue", "")
-      .csv(target)
-    if (asFile) promoteSingleFile(df.sparkSession, target, path)
-  }
+  private val Options = Map("escape" -> "\"", "emptyValue" -> "").asJava
 
-  /** Promote a single-part Spark CSV directory to a LITERAL file at
-    * `filePath` — the reference's exact on-disk layout (`csv_extractor.py:
-    * 101-148` opens `documents.csv` / `<label>_nodes.csv` directly), so
-    * `neo4j-admin database import --nodes=documents.csv` works without
-    * globbing. The promotion is one driver-side metadata `rename` plus a
-    * directory delete on the target FileSystem (no data movement on local
-    * or HDFS). Import-parity mode only: it implies `coalesce(1)`; at
-    * 100 TB keep the part-file directory and glob.
+  private def line(fields: Column*): Column =
+    to_csv(struct(fields: _*), Options)
+
+  /** The `(entry, ord, line)` rows of one CSV named `name` holding
+    * `table`. With `skipEmpty` the header rides on every data row (the
+    * write's distinct keeps one), so an empty table writes no entry — the
+    * reference skips empty alias files the same way.
     */
-  private def promoteSingleFile(spark: SparkSession, tmpDir: String,
-                                filePath: String): Unit = {
-    val dir = new Path(tmpDir)
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("part-"))
-    require(parts.length == 1,
-      s"expected exactly one part file in $tmpDir, found ${parts.length}")
-    val dst = new Path(filePath)
-    fs.delete(dst, false)
-    if (!fs.rename(parts(0), dst))
-      throw new java.io.IOException(s"rename ${parts(0)} -> $dst failed")
-    fs.delete(dir, true)
+  private[sinks] def entry(name: String, table: DataFrame,
+            skipEmpty: Boolean = false): DataFrame = {
+    val headerRows = if (skipEmpty) table else table.sparkSession.range(1).toDF()
+    headerRows.select(lit(name).as("entry"), lit(0).as("ord"),
+        line(table.columns.toSeq.map(lit): _*).as("line"))
+      .unionAll(table.select(lit(name).as("entry"), lit(1).as("ord"),
+        line(col("*")).as("line")))
   }
 
-  /** Entity node CSV: unique ids under one label (A4 first-writer-wins ≡
-    * dropDuplicates on the id).
+  /** The one write of any number of [[entry]] frames, through `tmpDir`
+    * (removed afterwards): each entry lands at `target(name)` — a
+    * directory holding one `part-*.csv` and `_SUCCESS`, or with
+    * `asFiles` the part file itself. Returns the names written.
     */
-  def writeEntityNodes(nodes: DataFrame, label: String, path: String,
-                       singleFile: Boolean = true,
-                       asFile: Boolean = false): Unit = {
-    val out = nodes.select(col("id").as(":ID"), lit(label).as(":LABEL"),
-      col("id").as("name")).dropDuplicates(":ID")
-    write(out, path, singleFile, asFile)
+  private[sinks] def write(lines: DataFrame, tmpDir: String,
+      asFiles: Boolean)(target: String => String): Set[String] = {
+    // the union has a partition per entry branch and input partition;
+    // one task per core runs the map side instead of one per branch
+    lines.coalesce(lines.sparkSession.sparkContext.defaultParallelism)
+      .distinct().repartition(col("entry"))
+      .sortWithinPartitions("entry", "ord")
+      .select("entry", "line")
+      .write.mode("overwrite").partitionBy("entry").text(tmpDir)
+    val tmp = new Path(tmpDir)
+    val fs = tmp.getFileSystem(lines.sparkSession.sessionState.newHadoopConf())
+    try fs.listStatus(tmp).map(_.getPath)
+      .filter(_.getName.startsWith("entry=")).map { dir =>
+        val name = dir.getName.stripPrefix("entry=")
+        val parts = fs.listStatus(dir).map(_.getPath)
+          .filter(_.getName.startsWith("part-"))
+        require(parts.length == 1,
+          s"expected exactly one part file in $dir, found ${parts.length}")
+        val dst = new Path(target(name))
+        fs.delete(dst, true)
+        if (asFiles) rename(fs, parts(0), dst)
+        else {
+          fs.mkdirs(dst)
+          rename(fs, parts(0),
+            new Path(dst, parts(0).getName.stripSuffix(".txt") + ".csv"))
+          fs.create(new Path(dst, "_SUCCESS")).close()
+        }
+        name
+      }.toSet
+    finally fs.delete(tmp, true)
   }
 
-  /** Document node CSV with the reference's FULL 12-column property set
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(s"rename $from -> $to failed")
+
+  /** One CSV directory at `path`. */
+  private def writeOne(table: DataFrame, path: String): Unit = {
+    write(entry("csv", table), s"$path._graft_dump_tmp", asFiles = false)(
+      _ => path)
+    ()
+  }
+
+  /** Entity node rows under one label; the write's distinct is the A4
+    * first-writer-wins dedup (every column is a function of the id). */
+  private[sinks] def entityNodes(ids: DataFrame, label: String): DataFrame =
+    ids.select(col("id").as(":ID"), lit(label).as(":LABEL"),
+      col("id").as("name"))
+
+  def writeEntityNodes(nodes: DataFrame, label: String, path: String): Unit =
+    writeOne(entityNodes(nodes, label), path)
+
+  /** Document node rows with the reference's FULL 12-column property set
     * (`csv_extractor.py:45-59`): `:ID,:LABEL,title,year,abstract,journal,
     * volume,issue,pages,doi,url,isbn_issn`. A property column absent from
     * the input frame is written empty — the reference's missing-key
@@ -84,10 +125,8 @@ object Neo4jCsv {
     * derivation is a driver-side distinct over map keys (the reference
     * reads its header off the collected dict the same way).
     */
-  def writeDocumentNodes(docs: DataFrame, path: String,
-                         singleFile: Boolean = true,
-                         dynamicExtra: Boolean = false,
-                         asFile: Boolean = false): Unit = {
+  private[sinks] def documentNodes(docs: DataFrame,
+                                   dynamicExtra: Boolean = false): DataFrame = {
     val have = docs.columns.toSet
     def c(name: String) =
       (if (have(name)) col(name) else lit(null).cast("string")).as(name)
@@ -113,22 +152,24 @@ object Neo4jCsv {
       val name = if (fixedNames(k)) s"extra_$k" else k
       col("extra").getItem(k).as(name)
     }
-    val out = docs.select(base ++ extras: _*).dropDuplicates(":ID")
-    write(out, path, singleFile, asFile)
+    docs.select(base ++ extras: _*).dropDuplicates(":ID")
   }
 
-  /** Relationship CSV: `(src, dst, rel_type)` rows under one type. */
-  def writeRels(edges: DataFrame, relType: String, startLabel: String,
-                endLabel: String, path: String,
-                singleFile: Boolean = true,
-                asFile: Boolean = false): Unit = {
-    val out = edges.filter(col("rel_type") === relType)
+  def writeDocumentNodes(docs: DataFrame, path: String,
+                         dynamicExtra: Boolean = false): Unit =
+    writeOne(documentNodes(docs, dynamicExtra), path)
+
+  /** Relationship rows `(src, dst, rel_type)` under one type. */
+  private[sinks] def rels(edges: DataFrame, relType: String,
+                          startLabel: String, endLabel: String): DataFrame =
+    edges.filter(col("rel_type") === relType)
       .select(col("src").as(s":START_ID($startLabel)"),
         col("dst").as(s":END_ID($endLabel)"),
         col("rel_type").as(":TYPE"))
-      .distinct()
-    write(out, path, singleFile, asFile)
-  }
+
+  def writeRels(edges: DataFrame, relType: String, startLabel: String,
+                endLabel: String, path: String): Unit =
+    writeOne(rels(edges, relType, startLabel, endLabel), path)
 }
 
 /** JSON sinks (SURVEY.md §2.1 S7): the alias-mapping persistence of

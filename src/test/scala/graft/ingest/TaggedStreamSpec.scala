@@ -3,6 +3,7 @@ package graft.ingest
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
+import graft.registry.Fixtures
 
 /** Streaming tagged ingest (S4 over the flagship corpus): the fixture's
   * export files are replayed one-by-one into a watched directory — each
@@ -15,7 +16,7 @@ class TaggedStreamSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private val fixtureRoot = Paths.get("/root/repo/src/test/resources/tagged")
+  private val fixtureRoot = Paths.get(Fixtures.Root, "tagged")
 
   private def fixtureFiles(): Seq[Path] = {
     val s = Files.walk(fixtureRoot)

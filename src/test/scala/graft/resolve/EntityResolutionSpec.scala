@@ -1,5 +1,6 @@
 package graft.resolve
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -89,6 +90,69 @@ class EntityResolutionSpec extends AnyFunSuite {
     val m = EntityResolution.aliasMapping(terms, 24, 25)
       .as[(String, String)].collect().toMap
     assert(m === Map("Zeta" -> "Alpha", "Alpha" -> "Alpha"))
+  }
+
+  /** The formula [[EntityResolution.aliasMapping]] replaced, kept as the
+    * reference: exact ε-pairs → CC → joined back to the terms → Spark's
+    * `min(term)` per component. */
+  private def referenceMapping(terms: DataFrame, num: Int,
+                               den: Int): Seq[(String, String)] = {
+    import org.apache.spark.sql.functions.min
+    val comp = Kernels.connectedComponents(spark, terms.select($"vec_id"),
+      Kernels.epsPairsOf(terms, num, den))
+    val named = comp.join(terms.select($"vec_id", $"term"), "vec_id")
+    val reps = named.groupBy($"component").agg(min($"term").as("representative"))
+    named.join(reps, "component")
+      .select($"term".as("original"), $"representative")
+      .as[(String, String)].collect().toSeq.sorted
+  }
+
+  private def mapped(terms: DataFrame, num: Int,
+                     den: Int): Seq[(String, String)] =
+    EntityResolution.aliasMapping(terms, num, den)
+      .as[(String, String)].collect().toSeq.sorted
+
+  // two gloss variants of one term: `ｱ` (U+FF71) precedes `𠀀` (U+20000)
+  // in UTF-8 byte order, but its UTF-16 unit 0xFF71 follows the high
+  // surrogate 0xD840 in `String.compareTo` order
+  private val glossPair = Seq("(ｱ)Z", "(𠀀)Z")
+
+  test("aliasMapping equals the reference formula on the ER fixture terms (driver route)") {
+    val ingested = graft.ingest.TaggedText.ingest(spark,
+      graft.registry.Fixtures.TaggedErGlob)
+    for (cols <- Seq(Seq("keywords"), Seq("publisher", "place_published"),
+                     Seq("author_address"));
+         (num, den) <- Seq((19, 20), (24, 25))) {
+      val terms = EntityResolution.termUniverse(
+        EntityResolution.distinctValues(ingested, cols)).cache()
+      assert(terms.count() < Kernels.SpreadRows)
+      val m = EntityResolution.aliasMapping(terms, num, den)
+      val (got, jobs) = TestSpark.countJobs(
+        m.as[(String, String)].collect().toSeq.sorted)
+      assert(got === referenceMapping(terms, num, den), s"$cols at $num/$den")
+      assert(jobs === 0, "the driver route returns a local frame")
+      terms.unpersist()
+    }
+  }
+
+  test("aliasMapping equals the reference formula above SpreadRows (distributed route)") {
+    val n = Kernels.SpreadRows / 2 + 64
+    val values = (0 until n).flatMap(i => Seq(s"t$i", s"t$i (g$i)")) ++ glossPair
+    val terms = EntityResolution.termUniverse(values.toDF("value")).cache()
+    assert(terms.count() > Kernels.SpreadRows)
+    val got = mapped(terms, 19, 20)
+    assert(got === referenceMapping(terms, 19, 20))
+    assert(got.filter(r => glossPair.contains(r._1)).map(_._2).distinct ===
+      Seq("(ｱ)Z"))
+    terms.unpersist()
+  }
+
+  test("aliasMapping representative is the UTF-8 byte-order minimum") {
+    assert(glossPair(1) < glossPair(0), "String.compareTo disagrees")
+    val terms = EntityResolution.termUniverse(glossPair.toDF("value"))
+    val want = glossPair.map(_ -> "(ｱ)Z").sorted
+    assert(mapped(terms, 24, 25) === want)
+    assert(referenceMapping(terms, 24, 25) === want)
   }
 
   test("clsFingerprint: stable keys for pure rules; exprId capture throws (r17 ADVICE 4)") {

@@ -14,6 +14,16 @@ class SinksSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  // keyword variants from the ER fixture, org/addr variants from er3, plus
+  // the main fixture's publisher/address docs
+  private val bothFixtures = s"${Fixtures.Root}/{tagged,tagged_er}/*/*/*.txt"
+
+  /** Non-hidden names in `dir` (the local filesystem's `.crc` files are
+    * hidden), sorted. */
+  private def listed(dir: String): Seq[String] =
+    Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString)
+      .filterNot(_.startsWith(".")).toSeq.sorted
+
   private def readCsvLines(dir: String): Seq[String] = {
     val part = Files.list(Paths.get(dir)).iterator().asScala
       .find(_.getFileName.toString.startsWith("part-")).get
@@ -30,6 +40,17 @@ class SinksSpec extends AnyFunSuite {
       "区块链,Keyword,区块链",
       "\"含,逗号\",Keyword,\"含,逗号\"",
       "\"带\"\"引号\"\"的词\",Keyword,\"带\"\"引号\"\"的词\""))
+  }
+
+  test("an entry of many rows still starts with its header") {
+    val dir = Files.createTempDirectory("bignodes").toString
+    Neo4jCsv.writeEntityNodes(
+      spark.range(200000).select($"id".cast("string").as("id")),
+      "Keyword", dir)
+    val lines = readCsvLines(dir)
+    assert(lines.head === ":ID,:LABEL,name")
+    assert(lines.size === 200001)
+    assert(listed(dir).size === 2)
   }
 
   test("relationship CSV: START/END label header and per-type dedup") {
@@ -100,11 +121,9 @@ class SinksSpec extends AnyFunSuite {
 
   test("full-graph dump writes the complete manifest with reference naming") {
     val dir = Files.createTempDirectory("dump").toString
-    // combined fixtures: keyword variants from the ER fixture, org/addr
-    // variants from er3, plus the main fixture's publisher/address docs
-    val ingested = graft.ingest.TaggedText.ingest(spark,
-      "/root/repo/src/test/resources/{tagged,tagged_er}/*/*/*.txt")
-    val manifest = GraphDump.dumpGraph(ingested, dir)
+    val ingested = graft.ingest.TaggedText.ingest(spark, bothFixtures)
+    val (manifest, jobs) =
+      TestSpark.countJobs(GraphDump.dumpGraph(ingested, dir))
     assert(manifest === Seq(
       "documents",
       "author_nodes", "author_address_nodes", "keyword_nodes",
@@ -113,8 +132,21 @@ class SinksSpec extends AnyFunSuite {
       "published_by_rels", "author_address_rels",
       "keyword_alias_of_rels", "organization_alias_of_rels",
       "author_address_alias_of_rels"))
-    for (name <- manifest)
-      assert(Files.exists(Paths.get(s"$dir/$name")), s"missing $name")
+    // the mappings' universe collects plus the one write, not a writer per
+    // entry; no temporary directory is left behind
+    assert(jobs <= 12, s"dumpGraph ran $jobs jobs")
+    assert(listed(dir) === manifest.sorted)
+    // each entry: one part file plus the marker, header first
+    for (name <- manifest) {
+      val files = listed(s"$dir/$name")
+      assert(files.size === 2 && files.contains("_SUCCESS") &&
+        files.exists(f => f.startsWith("part-") && f.endsWith(".csv")),
+        s"$name holds $files")
+      val header = readCsvLines(s"$dir/$name").head
+      assert(header.startsWith(":ID,:LABEL,") ||
+        (header.startsWith(":START_ID(") && header.endsWith(",:TYPE")),
+        s"$name starts with $header")
+    }
     // header spot-checks per file family
     assert(readCsvLines(s"$dir/documents").head.startsWith(":ID,:LABEL,title"))
     assert(readCsvLines(s"$dir/author_nodes").head === ":ID,:LABEL,name")
@@ -131,8 +163,7 @@ class SinksSpec extends AnyFunSuite {
 
   test("literalFiles dump leaves real <name>.csv files, not Spark directories") {
     val dir = Files.createTempDirectory("dumpfile").toString
-    val ingested = graft.ingest.TaggedText.ingest(spark,
-      "/root/repo/src/test/resources/{tagged,tagged_er}/*/*/*.txt")
+    val ingested = graft.ingest.TaggedText.ingest(spark, bothFixtures)
     val manifest = GraphDump.dumpGraph(ingested, dir, literalFiles = true)
     // every manifest entry carries the reference's literal filename...
     assert(manifest.head === "documents.csv")
@@ -147,6 +178,7 @@ class SinksSpec extends AnyFunSuite {
     val leftovers = Files.list(Paths.get(dir)).iterator().asScala
       .filter(p => !Files.isRegularFile(p)).toSeq
     assert(leftovers.isEmpty, s"unexpected directories: $leftovers")
+    assert(listed(dir) === manifest.sorted)
     // content identical contract: same header + rows as the directory mode
     val lines = Files.readAllLines(
       Paths.get(s"$dir/keyword_alias_of_rels.csv")).asScala
